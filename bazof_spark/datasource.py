@@ -1806,7 +1806,8 @@ def _bytes_conf(value: str) -> int | None:
         return None
 
 
-def broadcast_hint_if_small(spark, table_path: str, df, version=None):
+def broadcast_hint_if_small(spark, table_path: str, df, version=None,
+                            snapshot=None):
     """STATISTICS-DRIVEN BROADCAST for Data Source scans: the Python
     Data Source API reports no relation statistics, so Spark sizes
     every ``format("bazof")`` scan at defaultSizeInBytes (≈ 2^62) and
@@ -1819,17 +1820,21 @@ def broadcast_hint_if_small(spark, table_path: str, df, version=None):
     bytes over-approximate the merged output (the as-of merge only
     shrinks rows), mirroring Spark's own compressed-file-size
     estimate; snapshots without recorded sizes (reference-era) stay
-    unhinted. Pinned in tests/test_broadcast_stats.py."""
+    unhinted. A caller that already resolved the snapshot passes it
+    as ``snapshot`` (no metadata re-read); otherwise ``version`` (or
+    Current) is resolved here. Pinned in tests/test_broadcast_stats.py."""
     import os as _os
 
     try:
-        from bazof_spark.table import Table
+        snap = snapshot
+        if snap is None:
+            from bazof_spark.table import Table
 
-        t = Table(
-            path=table_path,
-            name=_os.path.basename(table_path.rstrip("/")),
-        )
-        snap = t.get_snapshot(str(version or t.current_version()))
+            t = Table(
+                path=table_path,
+                name=_os.path.basename(table_path.rstrip("/")),
+            )
+            snap = t.get_snapshot(str(version or t.current_version()))
         files = set(snap.get_data_files())
         sizes = snap.file_sizes()
         if not files or not files <= set(sizes):

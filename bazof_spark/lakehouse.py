@@ -561,7 +561,9 @@ class Lakehouse:
         # (snapshot-recorded at commit; see broadcast_hint_if_small)
         from bazof_spark.datasource import broadcast_hint_if_small
 
-        return broadcast_hint_if_small(self.spark, table.path, out, version)
+        return broadcast_hint_if_small(
+            self.spark, table.path, out, snapshot=snapshot
+        )
 
     def _dedup_latest_per_key(
         self,

@@ -78,7 +78,7 @@ from bazof_spark.schema import (
     TableSchema,
 )
 from bazof_spark.table import VERSION_FILE, Table
-from bazof_spark.writer import dataframe_to_parquet_file
+from bazof_spark.writer import arrow_duplicate_pairs, dataframe_to_parquet_file
 
 
 # ---------------------------------------------------------------------------
@@ -639,8 +639,6 @@ def _arrow_data_checks(present: list[str], report: "ValidationReport"):
     reference's first-row-wins), warning when clustered one-row-per-key
     (order-independent). O(data) on the driver — a validation tool's
     profile, streamed one file at a time."""
-    from collections import Counter
-
     import pyarrow.parquet as pq
 
     dupe_groups = 0
@@ -651,10 +649,9 @@ def _arrow_data_checks(present: list[str], report: "ValidationReport"):
         t = pq.read_table(
             rel, filesystem=filesystem, columns=[KEY_COL, EVENT_TIME_COL]
         )
+        dupe_groups += arrow_duplicate_pairs(t)
         keys = t[KEY_COL].to_pylist()
         ts = t[EVENT_TIME_COL].to_pylist()
-        counts = Counter(zip(keys, ts))
-        dupe_groups += sum(1 for c in counts.values() if c > 1)
         unsorted = any(
             b is not None and a is not None and b > a
             for a, b in zip(ts, ts[1:])

@@ -547,7 +547,7 @@ def _str_val(toks, i: int) -> str:
 
 
 def _word_ver(toks, i: int):
-    """The \w+ version literal at token i (bare or quoted), else None
+    r"""The \w+ version literal at token i (bare or quoted), else None
     — mirroring the regex pass's '?(\w+)'? capture. Works on both the
     2-tuple and span token shapes (probes index [0]/[1] only)."""
     if _word_at(toks, i) and _re.fullmatch(r"\w+", toks[i][1]):

@@ -18,6 +18,17 @@ Single data files are written driver-side via Arrow (these are batch
 -sized artifacts: one base or delta). Nothing here sits on the 100 TB
 read path — large tables are built by appending many delta files, each
 written from one batch.
+
+One Spark job per driver-side file: the batch is materialized ONCE with
+``toArrow()`` and the same Arrow table then carries the whole commit —
+the unique (key, event_time) check (:func:`arrow_duplicate_pairs`, the
+Arrow twin of :func:`validate_data_file_invariants`, which exists
+because the batch is already on the driver here), the empty-batch
+check, the ``start``/``end`` bounds and the stable event_time-DESC sort.
+No persist, no probe job, no range-partitioned sort. The distributed
+paths (``append_delta(distributed=True)``, ``add_delta_distributed``,
+``datasource.write_table``) never bring data to the driver and keep
+their Spark-side checks.
 """
 
 from __future__ import annotations
@@ -68,6 +79,12 @@ def dataframe_to_parquet_file(
     (crates/azof-cli/src/test_bench.rs:103-121). Gen tooling: batch-sized
     data, driver-side Arrow write.
 
+    The default order costs one Spark job: ``toArrow()`` collects the
+    batch and a stable Arrow sort orders it on the driver (rows sharing
+    an event_time keep their input order) — the batch comes to the
+    driver for the write anyway, so a Spark sort would only add its
+    range-partition sample and sort shuffle.
+
     ``timestamp_unit``: the reference's Arrow schema is ms
     (crates/azof/src/schema.rs:188-197); we default to µs — Spark's
     native TimestampType resolution — so no precision is lost writing
@@ -75,10 +92,23 @@ def dataframe_to_parquet_file(
 
     ``order_by`` overrides the sort (Z-order clustering writes bases
     sorted by Morton code instead — sound for unique-key bases, where
-    merge winner selection is order-independent); ``row_group_rows``
-    bounds row-group size so min/max skipping has granularity."""
-    order = order_by if order_by is not None else [F.col(EVENT_TIME_COL).desc()]
-    tbl = df.orderBy(*order).toArrow()
+    merge winner selection is order-independent) and keeps it in Spark;
+    ``row_group_rows`` bounds row-group size so min/max skipping has
+    granularity."""
+    if order_by is None:
+        tbl = _collect_batch(df, validate=False)
+    else:
+        tbl = df.orderBy(*order_by).toArrow()
+    _write_arrow_file(tbl, dest_path, timestamp_unit, row_group_rows)
+
+
+def _write_arrow_file(
+    tbl: pa.Table,
+    dest_path: str,
+    timestamp_unit: str = "us",
+    row_group_rows: int | None = None,
+) -> None:
+    """Write an already-ordered Arrow table as ONE parquet file."""
     fields = []
     for f in tbl.schema:
         if pa.types.is_timestamp(f.type):
@@ -232,11 +262,48 @@ def file_key_bloom(table_path: str, file_name: str):
 def validate_data_file_invariants(df: DataFrame) -> None:
     """Check unique (key, event_time) pairs — the invariant that makes
     the as-of dedup well-defined (SURVEY §7.4)."""
-    dupes = (
+    _reject_duplicate_pairs(
         df.groupBy(KEY_COL, EVENT_TIME_COL).count().filter(F.col("count") > 1).count()
     )
+
+
+def arrow_duplicate_pairs(tbl: pa.Table) -> int:
+    """Number of (key, event_time) pairs occurring more than once in a
+    collected batch — the Arrow twin of
+    :func:`validate_data_file_invariants` for batches already on the
+    driver. Null keys and null event times group like any other value,
+    as in Spark's ``groupBy``."""
+    import pyarrow.compute as pc
+
+    counts = tbl.group_by([KEY_COL, EVENT_TIME_COL]).aggregate(
+        [([], "count_all")]
+    )
+    return pc.sum(pc.greater(counts["count_all"], 1)).as_py() or 0
+
+
+def _reject_duplicate_pairs(dupes: int) -> None:
     if dupes:
         raise BazofError(f"{dupes} duplicate (key, event_time) pairs in data file")
+
+
+def _collect_batch(df: DataFrame, validate: bool) -> pa.Table:
+    """Materialize one driver-side file's batch — its ONE Spark job —
+    check the unique-pair invariant on it, and return it in the file
+    layout order: stable sort by ``event_time`` DESC, nulls last
+    (Spark's DESC default)."""
+    batch = df.toArrow()
+    if validate:
+        _reject_duplicate_pairs(arrow_duplicate_pairs(batch))
+    return batch.sort_by([(EVENT_TIME_COL, "descending")])
+
+
+def _event_time_bounds(batch: pa.Table) -> tuple[datetime | None, datetime | None]:
+    """(min, max) ``event_time`` of a collected batch; (None, None) when
+    it holds no non-null event time."""
+    import pyarrow.compute as pc
+
+    mm = pc.min_max(batch[EVENT_TIME_COL]).as_py()
+    return mm["min"], mm["max"]
 
 
 def _ts(dt: datetime) -> str:
@@ -535,10 +602,11 @@ class TableWriter:
         iofs.makedirs(table_path)
 
     def _write_file(self, df: DataFrame, file_name: str, validate: bool) -> None:
-        ordered = df.select(KEY_COL, EVENT_TIME_COL, *self.schema.column_names())
-        if validate:
-            validate_data_file_invariants(ordered)
-        dataframe_to_parquet_file(ordered, iofs.join(self.path, file_name))
+        batch = _collect_batch(
+            df.select(KEY_COL, EVENT_TIME_COL, *self.schema.column_names()),
+            validate,
+        )
+        _write_arrow_file(batch, iofs.join(self.path, file_name))
 
     def add_segment(
         self,
@@ -728,8 +796,11 @@ def append_delta(
     ``start`` is newer, which is the format's defined semantics (file
     precedence beats timestamp, SURVEY §4.2).
 
-    ``start``/``end`` default to the batch's min/max ``event_time`` (one
-    cheap aggregate over the batch). Target segment: ``segment_id`` if
+    ``start``/``end`` default to the batch's min/max ``event_time``.
+    The driver-side path (``distributed=False``) is ONE Spark job: the
+    batch is collected once with ``toArrow()`` and the invariant check,
+    the bounds and the event_time-DESC sort all run on that Arrow
+    table. Target segment: ``segment_id`` if
     given, else the LAST open top-level segment; ``create_segment=True``
     opens a fresh one when none exists.
 
@@ -745,7 +816,8 @@ def append_delta(
     the tombstone flag, so a tombstone row winning the merge hides its
     key instead of surfacing. Precedence/eligibility are the ordinary
     delta rules: as-of instants before the delete still see the old
-    row, and a later upsert resurrects the key.
+    row, and a later upsert resurrects the key. An empty driver-side
+    tombstone batch is a version no-op (returns the current snapshot).
     """
     table = Table(path=table_path, name=os.path.basename(table_path.rstrip("/")))
     version = table.current_version()
@@ -782,27 +854,43 @@ def append_delta(
         ordered = df.select(KEY_COL, EVENT_TIME_COL)
     else:
         ordered = _conform_to_schema(df, schema)
-    # one materialization for the up-to-three consumers (invariant
-    # check, min/max bounds, the write itself) — without it each re-runs
-    # the batch's full lineage as its own Spark job
-    multi_pass = validate or start is None or end is None
-    if multi_pass:
-        ordered = ordered.persist()
-    try:
-        if validate:
-            validate_data_file_invariants(ordered)
+    multi_pass = False
+    if distributed:
+        # one materialization for the up-to-three consumers (invariant
+        # check, min/max bounds, the write itself) — without it each
+        # re-runs the batch's full lineage as its own Spark job
+        multi_pass = validate or start is None or end is None
+        if multi_pass:
+            ordered = ordered.persist()
+        try:
+            if validate:
+                validate_data_file_invariants(ordered)
+            if start is None or end is None:
+                lo, hi = ordered.select(
+                    F.min(EVENT_TIME_COL), F.max(EVENT_TIME_COL)
+                ).first()
+                if lo is None:
+                    raise BazofError("cannot upsert an empty batch")
+                start = start or lo
+                end = end or hi
+        except BaseException:
+            if multi_pass:
+                ordered.unpersist()
+            raise
+    else:
+        # the batch comes to the driver for the write anyway: collect it
+        # once and run the check, the bounds and the sort on that table
+        batch = _collect_batch(ordered, validate)
+        if tombstone and batch.num_rows == 0:
+            # same no-op contract as delete_keys: an empty tombstone
+            # must not flip a delete-free table to delete-capable
+            return snapshot
         if start is None or end is None:
-            lo, hi = ordered.select(
-                F.min(EVENT_TIME_COL), F.max(EVENT_TIME_COL)
-            ).first()
+            lo, hi = _event_time_bounds(batch)
             if lo is None:
                 raise BazofError("cannot upsert an empty batch")
             start = start or lo
             end = end or hi
-    except BaseException:
-        if multi_pass:
-            ordered.unpersist()
-        raise
     # aware-UTC like their serialized form, so the in-memory snapshot
     # sorts/compares exactly as a re-read of s{N}.json will
     start, end = _aware_utc(start), _aware_utc(end)
@@ -833,7 +921,7 @@ def append_delta(
                 )
         else:
             name = _fresh_delta_name(table_path, target.id, len(target.delta))
-            dataframe_to_parquet_file(ordered, iofs.join(table_path, name))
+            _write_arrow_file(batch, iofs.join(table_path, name))
             new_deltas.append(
                 _delta_with_stats(
                     table_path, name, start, end, tombstone=tombstone
@@ -1135,15 +1223,14 @@ def delete_keys(
             F.col(KEY_COL).cast("string").alias(KEY_COL),
             F.lit(at).alias(EVENT_TIME_COL),
         ).dropDuplicates([KEY_COL])
-        if df.isEmpty():
-            # A predicate that matches nothing is a no-op, NOT an empty
-            # tombstone commit: publishing one would permanently flip a
-            # delete-free table to delete-capable (raw/stream schema
-            # gains _tombstone, running streams fail fast on the delta)
-            # without removing a single row. Return the current
-            # snapshot unchanged instead.
-            from bazof_spark.table import Table
-
+        # A predicate that matches nothing is a no-op, NOT an empty
+        # tombstone commit: publishing one would permanently flip a
+        # delete-free table to delete-capable (raw/stream schema gains
+        # _tombstone, running streams fail fast on the delta) without
+        # removing a single row. The driver-side append_delta sees the
+        # emptiness on its collected batch; the distributed path never
+        # collects, so it probes.
+        if kwargs.get("distributed") and df.isEmpty():
             return Table(table_path, table_path).get_current_snapshot()
     else:
         ks = sorted({str(k) for k in keys})
@@ -1152,8 +1239,6 @@ def delete_keys(
             # empty request must not flip a delete-free table to
             # delete-capable (schema gains _tombstone) without removing
             # a single row
-            from bazof_spark.table import Table
-
             return Table(table_path, table_path).get_current_snapshot()
         df = spark.createDataFrame(
             [(k, at) for k in ks], f"{KEY_COL} string, {EVENT_TIME_COL} timestamp"
@@ -1217,85 +1302,63 @@ def merge_apply(
     next_version = str(max([current, *_numeric_versions(table_path)]) + 1)
     schema = snapshot.schema
 
-    ordered = None
+    # each side is collected once (toArrow) and checked, bounded, sorted
+    # or deduplicated on the driver — a Spark-side dropDuplicates would
+    # add a shuffle-stage job
+    batch = None
     if upsert_df is not None:
-        ordered = _conform_to_schema(upsert_df, schema).persist()
-        try:
-            if ordered.isEmpty():
-                ordered.unpersist()
-                ordered = None
-            elif validate:
-                validate_data_file_invariants(ordered)
-        except BaseException:
-            ordered.unpersist()
-            raise
+        batch = _collect_batch(_conform_to_schema(upsert_df, schema), validate)
+        if batch.num_rows == 0:
+            batch = None
     tomb = None
     if delete_keys_df is not None:
-        # persist around the isEmpty probe + parquet write so the
-        # delete-key derivation (joins over the target scan) runs once,
-        # mirroring `ordered` above
-        tomb = delete_keys_df.select(
-            F.col(KEY_COL).cast("string").alias(KEY_COL),
-            F.lit(at).alias(EVENT_TIME_COL),
-        ).dropDuplicates([KEY_COL]).persist()
-        try:
-            if tomb.isEmpty():
-                tomb.unpersist()
-                tomb = None  # same no-op contract as delete_keys
-        except BaseException:
-            tomb.unpersist()
-            if ordered is not None:
-                ordered.unpersist()
-            raise
-    if ordered is None and tomb is None:
+        collected = delete_keys_df.select(
+            F.col(KEY_COL).cast("string").alias(KEY_COL)
+        ).toArrow()
+        keys = collected[KEY_COL].unique()
+        if len(keys):  # else: same no-op contract as delete_keys
+            ts_type = pa.timestamp("us", tz="UTC")
+            tomb = pa.table(
+                [keys, pa.repeat(pa.scalar(at, ts_type), len(keys))],
+                schema=pa.schema([
+                    collected.schema.field(KEY_COL),
+                    pa.field(EVENT_TIME_COL, ts_type, nullable=False),
+                ]),
+            )
+    if batch is None and tomb is None:
         return snapshot
 
-    try:
-        if ordered is not None:
-            lo, hi = ordered.select(
-                F.min(EVENT_TIME_COL), F.max(EVENT_TIME_COL)
-            ).first()
-            u_start, u_end = _aware_utc(lo), _aware_utc(hi)
-        else:
-            u_start = u_end = at
+    if batch is not None:
+        lo, hi = _event_time_bounds(batch)
+        u_start, u_end = _aware_utc(lo), _aware_utc(hi)
+    else:
+        u_start = u_end = at
 
-        segs = list(snapshot.segments)
-        idx = _pick_target_segment(
-            segs, None, create_segment, min(u_start, at), next_version
+    segs = list(snapshot.segments)
+    idx = _pick_target_segment(
+        segs, None, create_segment, min(u_start, at), next_version
+    )
+    target = segs[idx]
+    deltas = tuple(target.delta)
+    n = len(deltas)
+    if batch is not None:
+        name = _fresh_delta_name(table_path, target.id, n)
+        _write_arrow_file(batch, iofs.join(table_path, name))
+        deltas = _insert_deltas(
+            deltas,
+            [_delta_with_stats(table_path, name, u_start, u_end, tombstone=False)],
+            u_start,
         )
-        target = segs[idx]
-        deltas = tuple(target.delta)
-        n = len(deltas)
-        if ordered is not None:
-            name = _fresh_delta_name(table_path, target.id, n)
-            dataframe_to_parquet_file(ordered, iofs.join(table_path, name))
-            deltas = _insert_deltas(
-                deltas,
-                [
-                    _delta_with_stats(
-                        table_path, name, u_start, u_end, tombstone=False
-                    )
-                ],
-                u_start,
-            )
-            n += 1
-        if tomb is not None:
-            name = _fresh_delta_name(table_path, target.id, n)
-            dataframe_to_parquet_file(tomb, iofs.join(table_path, name))
-            deltas = _insert_deltas(
-                deltas,
-                [
-                    _delta_with_stats(
-                        table_path, name, at, at, tombstone=True
-                    )
-                ],
-                at,
-            )
-    finally:
-        if ordered is not None:
-            ordered.unpersist()
-        if tomb is not None:
-            tomb.unpersist()
+        n += 1
+    if tomb is not None:
+        name = _fresh_delta_name(table_path, target.id, n)
+        # every row carries ``at``: already in event_time-DESC order
+        _write_arrow_file(tomb, iofs.join(table_path, name))
+        deltas = _insert_deltas(
+            deltas,
+            [_delta_with_stats(table_path, name, at, at, tombstone=True)],
+            at,
+        )
 
     segs[idx] = dataclasses.replace(target, delta=deltas)
     new_snapshot = Snapshot(segments=tuple(segs), schema=schema)

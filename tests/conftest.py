@@ -55,6 +55,19 @@ def pytest_runtest_protocol(item, nextitem):
     return True
 
 
+REFERENCE_DATA = "/root/reference/test-data"
+
+
+@pytest.fixture(scope="session")
+def reference_data():
+    """Root of the reference implementation's golden test-data tree
+    (read-only). Tests that need it skip with a reason when it is not
+    mounted, instead of erroring on a missing path."""
+    if not os.path.isdir(REFERENCE_DATA):
+        pytest.skip(f"reference test data not mounted at {REFERENCE_DATA}")
+    return REFERENCE_DATA
+
+
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark(app_name="bazof-tests", shuffle_partitions=8)

@@ -173,14 +173,14 @@ def test_validate_snapshot_structure():
         report.raise_if_invalid()
 
 
-def test_checkpoint_financials_reference_tree(spark, tmp_path):
+def test_checkpoint_financials_reference_tree(spark, tmp_path, reference_data):
     """Checkpoint the reference's own 171-file nested financials tree
     (copied): reads must be identical at historical instants, and
     Current must collapse to one file."""
     import shutil
 
     shutil.copytree(
-        "/root/reference/test-data/financials", str(tmp_path / "financials")
+        os.path.join(reference_data, "financials"), str(tmp_path / "financials")
     )
     lh = Lakehouse(spark, str(tmp_path))
     instants = [
@@ -461,11 +461,11 @@ def test_checkpoint_preserves_key_blooms(spark, lakehouse):
     assert archived.key_bloom.to_json() == open_seg.key_bloom.to_json()
 
 
-def test_arrow_data_checks_match_spark_findings(spark):
+def test_arrow_data_checks_match_spark_findings(spark, reference_data):
     """data_checks='arrow' must report the SAME invariant findings as
     the Spark path — pinned on the reference's own financials table,
     whose shipped files contain 5 duplicate (key, event_time) pairs."""
-    lh = Lakehouse(spark, "/root/reference/test-data")
+    lh = Lakehouse(spark, reference_data)
     via_spark = validate_table(lh, "financials", data_checks=True)
     via_arrow = validate_table(lh, "financials", data_checks="arrow")
     assert via_spark.errors == via_arrow.errors == []

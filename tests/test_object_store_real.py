@@ -887,3 +887,36 @@ def test_remote_reads_coalesce_ranged_gets(s3_endpoint):
     rows_auto, gets_auto = read_all()  # auto = ON for remote filesystems
     assert rows_off == rows_auto == n
     assert gets_auto < gets_off, (gets_auto, gets_off)
+
+
+def test_keyed_scan_metadata_gets_over_real_s3(spark, s3_endpoint):
+    """A keyed lookup over s3:// resolves its snapshot once on the
+    driver (version.txt + s{N}.json) and once in the Data Source
+    planner (s{N}.json, version-pinned); the broadcast-size decision
+    reuses the driver's resolved snapshot instead of re-reading
+    s{N}.json. GET census from the live server's log."""
+    uri = "s3://bazof-real/metagets"
+    table_uri = iofs.join(uri, "t")
+    t0 = dt.datetime(2024, 1, 1, tzinfo=UTC)
+    w = TableWriter(spark, table_uri, _schema())
+    w.add_segment(
+        "s1", start=t0,
+        base_df=_batch(spark, [("a", t0, "a1"), ("b", t0, "b1")]),
+    )
+    w.commit("1")
+    append_delta(
+        spark, table_uri,
+        _batch(spark, [("a", dt.datetime(2024, 2, 1, tzinfo=UTC), "a2")]),
+    )
+    lh = Lakehouse(spark, uri)
+    log = s3_endpoint.store.get_log
+    mark = len(log)
+    got = {r["key"]: r["value"] for r in lh.scan("t", keys=["a"]).collect()}
+    assert got == {"a": "a2"}
+    meta = sorted(
+        p.rsplit("/", 1)[1]
+        for p, _ in log[mark:]
+        if p.startswith("bazof-real/metagets/")
+        and (p.endswith(".json") or p.endswith("version.txt"))
+    )
+    assert meta == ["s2.json", "s2.json", "version.txt"], meta

@@ -13,8 +13,6 @@ from bazof_spark import Lakehouse  # noqa: E402
 from bazof_spark.errors import BazofError  # noqa: E402
 from bazof_spark.sql import parse_dml  # noqa: E402
 
-REF = "/root/reference/test-data"
-
 
 def test_parse_dml_detection():
     d = parse_dml("CREATE TABLE t AS SELECT 1")
@@ -72,9 +70,9 @@ def test_ctas_insert_roundtrip_with_time_travel(spark, lh):
     assert old["0"] == 0.0 and "9" not in old
 
 
-def test_ctas_from_time_travel_source(spark, lh, tmp_path):
+def test_ctas_from_time_travel_source(spark, lh, tmp_path, reference_data):
     """The CTAS source query may itself time-travel an azof table."""
-    ref = Lakehouse(spark, REF)
+    ref = Lakehouse(spark, reference_data)
     # materialize the reference table into this lakehouse as-of a date
     df = ref.scan("table0", as_of="2024-01-15T00:00:00.000Z")
     df.createOrReplaceTempView("t0_src")

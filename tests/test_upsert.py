@@ -639,3 +639,124 @@ def test_merge_apply_atomic_single_version(spark, tmp_path):
             expected_version=v0,
         )
     assert lh.table("t").current_version() == v1
+
+
+def _spark_jobs(spark, fn):
+    """(fn's result, number of Spark jobs it ran) — counted by job group
+    once the listener bus has recorded every job start."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobcount-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _persistent_rdds(spark):
+    return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+
+def test_driver_side_commits_run_one_job_per_file(spark, tmp_path):
+    """The driver-side write path materializes each file's batch once
+    (toArrow) and validates, bounds and sorts it in Arrow: an upsert is
+    exactly ONE Spark job, a MERGE with upsert and delete rows at most
+    two, and no path leaves a persisted RDD behind — not even when the
+    invariant check rejects the batch."""
+    from bazof_spark.writer import merge_apply
+
+    lh = _seed_table(spark, str(tmp_path))
+    path = f"{tmp_path}/t"
+    held = _persistent_rdds(spark)
+    rows = [(str(k), ts(2024, 2, 1 + k % 20), f"v{k}") for k in range(300)]
+    batch = _df(spark, rows)
+    _, jobs = _spark_jobs(spark, lambda: append_delta(spark, path, batch))
+    assert jobs == 1
+    assert _persistent_rdds(spark) == held
+
+    up = _df(spark, [("7", ts(2024, 4, 1), "m7"), ("8", ts(2024, 4, 1), "m8")])
+    dels = spark.createDataFrame([("1",), ("2",), ("2",)], "key string")
+    _, jobs = _spark_jobs(
+        spark,
+        lambda: merge_apply(spark, path, upsert_df=up, delete_keys_df=dels),
+    )
+    assert jobs <= 2
+    assert _persistent_rdds(spark) == held
+    cur = dict(_current(lh))
+    assert "1" not in cur and "2" not in cur and cur["7"] == "m7"
+
+    version = lh.table("t").current_version()
+    dup = _df(spark, [("5", ts(2024, 5, 1), "x"), ("5", ts(2024, 5, 1), "y")])
+    with pytest.raises(BazofError, match="duplicate"):
+        append_delta(spark, path, dup)
+    with pytest.raises(BazofError, match="duplicate"):
+        merge_apply(spark, path, upsert_df=dup)
+    assert _persistent_rdds(spark) == held
+    assert lh.table("t").current_version() == version
+
+
+def test_arrow_invariant_check_matches_spark(spark, tmp_path):
+    """The Arrow twin of validate_data_file_invariants rejects exactly
+    the batches the Spark check rejects, with the same duplicate-pair
+    count and error text — null keys and null event times group like
+    any value. validate=False still writes duplicates, an empty batch
+    still raises, and rows sharing one event_time keep input order."""
+    import pyarrow.parquet as pq
+
+    from bazof_spark.writer import (
+        arrow_duplicate_pairs,
+        validate_data_file_invariants,
+    )
+
+    lh = _seed_table(spark, str(tmp_path))
+    path = f"{tmp_path}/t"
+    a, b = ts(2024, 5, 1), ts(2024, 5, 2)
+    batches = {
+        "unique": [("1", a, "x"), ("1", b, "y"), ("2", a, "z")],
+        "one pair": [("1", a, "x"), ("1", a, "y"), ("2", a, "z")],
+        "triple + pair": [("1", a, "x"), ("1", a, "y"), ("1", a, "w"),
+                          ("2", b, "p"), ("2", b, "q"), ("3", b, "r")],
+        "null keys": [(None, a, "x"), (None, a, "y"), (None, b, "z")],
+        "null times": [("1", None, "x"), ("1", None, "y"), ("2", None, "z")],
+        "all null": [(None, None, "x"), (None, None, "y")],
+    }
+    ddl = "key string, event_time timestamp, value string"
+    for label, rows in batches.items():
+        df = spark.createDataFrame(rows, ddl)
+        spark_dupes = (
+            df.groupBy("key", "event_time").count().filter("count > 1").count()
+        )
+        assert arrow_duplicate_pairs(df.toArrow()) == spark_dupes, label
+        if not spark_dupes:
+            validate_data_file_invariants(df)
+            continue
+        with pytest.raises(BazofError) as via_spark:
+            validate_data_file_invariants(df)
+        version = lh.table("t").current_version()
+        with pytest.raises(BazofError) as via_arrow:
+            append_delta(spark, path, df)
+        assert str(via_arrow.value) == str(via_spark.value), label
+        assert str(via_arrow.value).startswith(f"{spark_dupes} duplicate")
+        assert lh.table("t").current_version() == version
+
+    snap = append_delta(
+        spark, path,
+        spark.createDataFrame(batches["one pair"], ddl), validate=False,
+    )
+    newest = snap.segments[-1].delta[0].file
+    assert pq.read_table(f"{path}/{newest}").num_rows == 3
+
+    with pytest.raises(BazofError, match="cannot upsert an empty batch"):
+        append_delta(spark, path, spark.createDataFrame([], ddl))
+
+    order = ["k9", "k1", "k5", "k3", "k7"]
+    snap = append_delta(
+        spark, path,
+        spark.createDataFrame([(k, b, k) for k in order], ddl),
+    )
+    newest = snap.segments[-1].delta[0].file
+    assert pq.read_table(f"{path}/{newest}")["key"].to_pylist() == order
