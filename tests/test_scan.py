@@ -10,12 +10,10 @@ import pytest
 
 from bazof_spark.lakehouse import Lakehouse
 
-REF_DATA = "/root/reference/test-data"
-
 
 @pytest.fixture(scope="module")
-def lh(spark):
-    return Lakehouse(spark, REF_DATA)
+def lh(spark, reference_data):
+    return Lakehouse(spark, reference_data)
 
 
 def rows(df, *cols):
@@ -120,12 +118,11 @@ def test_scan_empty_for_early_as_of(lh):
     assert df.columns == ["key", "event_time", "value"]
 
 
-def test_intra_file_duplicate_tiebreak_matches_reference(spark):
+def test_intra_file_duplicate_tiebreak_matches_reference(lh):
     """The reference's own year_2019_q2_delta ships 5 keys with TWO
     different rows at the same event_time; the reference's merge keeps
     the physically-first row (lakehouse.rs:54-79). Our _metadata.row_index
     tie-break must reproduce those exact winners."""
-    lh = Lakehouse(spark, "/root/reference/test-data")
     got = {
         r["key"]: r["revenue"]
         for r in lh.scan("financials", as_of="2019-06-15T00:00:00.000Z")

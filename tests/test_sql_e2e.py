@@ -12,19 +12,17 @@ import pytest
 from bazof_spark.asof import EventTime
 from bazof_spark.lakehouse import Lakehouse
 
-REF_DATA = "/root/reference/test-data"
-
 
 @pytest.fixture(scope="module")
-def lh(spark):
-    return Lakehouse(spark, REF_DATA)
+def lh(spark, reference_data):
+    return Lakehouse(spark, reference_data)
 
 
-def duckdb_asof_oracle(table: str, as_of_iso: str):
+def duckdb_asof_oracle(root: str, table: str, as_of_iso: str):
     """Independent re-implementation of the as-of merge in DuckDB SQL:
     prune files with our metadata layer, then pick per key the row with
     min file rank, then max event_time."""
-    lhmeta = Lakehouse(None, REF_DATA)
+    lhmeta = Lakehouse(None, root)
     tbl = lhmeta.table(table)
     snap = tbl.get_current_snapshot()
     as_of = EventTime(as_of_iso)
@@ -64,7 +62,9 @@ def test_readme_financials_query(lh):
     got = [tuple(r) for r in df.collect()]
     assert len(got) == 5
 
-    oracle = duckdb_asof_oracle("financials", "2019-01-17T00:00:00.000Z")
+    oracle = duckdb_asof_oracle(
+        lh.root, "financials", "2019-01-17T00:00:00.000Z"
+    )
     expected = duckdb.sql(
         """
         SELECT key AS symbol, revenue, net_income FROM oracle
@@ -83,7 +83,7 @@ def test_full_scan_matches_duckdb_oracle(lh):
         r["key"]: (r["industry"], r["revenue"], r["net_income"])
         for r in df.collect()
     }
-    oracle = duckdb_asof_oracle("financials", as_of)
+    oracle = duckdb_asof_oracle(lh.root, "financials", as_of)
     exp = {
         r[0]: (r[2], r[3], r[5])
         for r in duckdb.sql(
@@ -109,7 +109,7 @@ def test_system_time_syntax_and_self_join(lh):
     assert n > 0
     # spot-check one row against the oracles
     row = df.orderBy("key").first()
-    o15 = duckdb_asof_oracle("financials", "2015-07-02T00:00:00.000Z")
+    o15 = duckdb_asof_oracle(lh.root, "financials", "2015-07-02T00:00:00.000Z")
     r15 = duckdb.sql(
         f"SELECT revenue FROM o15 WHERE key = '{row['key']}'"
     ).fetchone()

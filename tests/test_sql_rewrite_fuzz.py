@@ -386,13 +386,21 @@ def test_round7_statements_leading_trivia_and_case():
         "when matched and a < 'THEN DELETE' then delete"
     )
     assert d.kind == "merge_delete" and d.pred == "a < 'THEN DELETE'"
+    # a leading string literal is a token, not trivia: these are not
+    # statements (Spark rejects them), never an unpredicated DELETE
+    from bazof_spark.sql import parse_show
+
+    assert parse_dml("'x' DELETE FROM t") is None
+    assert parse_dml("'x' /* c */ UPDATE t SET v = 1") is None
+    assert parse_maintenance("'x' VACUUM t") is None
+    assert parse_show("'x' SHOW TABLES") is None
 
 
 def test_update_body_parsing_is_linear():
-    """ADVICE r6: _split_top_level recomputed paren depth per candidate
-    (O(n²)); a machine-generated UPDATE with thousands of SET commas
-    must now parse in well under a second (the quadratic form took
-    tens of seconds at this size)."""
+    """A machine-generated UPDATE with thousands of SET commas must
+    parse in well under a second: the body split is one token walk,
+    never a per-candidate rescan (a quadratic form took tens of
+    seconds at this size)."""
     import time
 
     from bazof_spark.sql import parse_dml
