@@ -243,9 +243,9 @@ def main(argv: list[str] | None = None) -> int:
 
     p_dc = sub.add_parser(
         "decompress",
-        help="decode a compressed file with the repo's from-spec "
-        "decoders (gzip/zlib/zstd/xz/.lzma/bz2/lz4-frame, sniffed by "
-        "magic bytes); no Spark session",
+        help="decode a compressed file (gzip/zlib/zstd/xz/.lzma/bz2/"
+        "lz4-frame, sniffed by magic bytes) with the stdlib and pyarrow "
+        "C codecs; no Spark session",
     )
     p_dc.add_argument("file")
     p_dc.add_argument("--out", help="output path (default: stdout)")
@@ -326,11 +326,16 @@ def main(argv: list[str] | None = None) -> int:
             )
 
     if args.cmd == "decompress":
-        # pure byte work through the from-spec decoders — no Spark
+        # pure byte work through the stdlib/pyarrow codecs — no Spark
         data = open(args.file, "rb").read()
         from bazof_spark.operators.codecs import sniff_decompress
 
-        fmt, out = sniff_decompress(data)
+        try:
+            fmt, out = sniff_decompress(data)
+        except ValueError as exc:
+            raise SystemExit(
+                f"cannot decompress {args.file}: {exc}"
+            ) from exc
         if args.out:
             with open(args.out, "wb") as fh:
                 fh.write(out)

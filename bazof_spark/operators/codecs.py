@@ -1,13 +1,26 @@
-"""Magic-byte dispatcher over the repo's from-spec decompressors.
+"""Magic-byte dispatcher over the C decompressors stdlib and pyarrow ship.
 
-One entry point for the whole family (inflate/gzip/zlib, LZ4 frame,
-ZSTD, bzip2, .lzma, .xz): sniff the container from its leading bytes
-and decode with the in-repo implementation — the surface the CLI's
-``decompress`` subcommand exposes. Snappy and raw LZ4 blocks have no
-magic and must be dispatched explicitly by their callers.
+One entry point for the whole family (gzip, zlib, LZ4 frame, ZSTD,
+bzip2, .lzma, .xz): sniff the container from its leading bytes and
+decode it with ``gzip``/``zlib``/``bz2``/``lzma`` or pyarrow's
+zstd/LZ4 stream decoders — the surface the CLI's ``decompress``
+subcommand exposes. Concatenated gzip, bzip2, xz, zstd and LZ4-frame
+streams decode in full, as their command-line tools do; a .lzma file
+holds one stream and zlib data must end with its stream. A corrupt or
+truncated stream raises ``ValueError`` naming the format.
+Snappy and raw LZ4 blocks have no magic and must be dispatched
+explicitly by their callers.
 """
 
 from __future__ import annotations
+
+import bz2
+import gzip
+import lzma
+import zlib
+
+# what the C codecs raise on a corrupt or truncated stream
+_CORRUPT = (OSError, EOFError, ValueError, zlib.error, lzma.LZMAError)
 
 
 def sniff_format(data: bytes) -> str:
@@ -85,39 +98,46 @@ def sniff_decompress(data: bytes) -> tuple[str, bytes]:
         # 2^n / 2^n+2^(n-1)): attempt the decode when the rest of the
         # header is sane; its success is the proof sniffing can't give
         if len(data) >= 13 and _sane_lzma_header(data):
-            from bazof_spark.operators.lzmacodec import (
-                lzma_alone_decompress,
-            )
-
             try:
-                return "lzma", lzma_alone_decompress(data)
-            except Exception:
+                return "lzma", _decode("lzma", data)
+            except _CORRUPT:
                 pass
         raise
+    try:
+        return fmt, _decode(fmt, data)
+    except _CORRUPT as exc:
+        raise ValueError(f"corrupt {fmt} stream: {exc}") from exc
+
+
+def _decode(fmt: str, data: bytes) -> bytes:
     if fmt == "gzip":
-        from bazof_spark.operators.inflate import gzip_decompress
-
-        return fmt, gzip_decompress(data)
+        return gzip.decompress(data)
     if fmt == "zlib":
-        from bazof_spark.operators.inflate import zlib_decompress
-
-        return fmt, zlib_decompress(data)
-    if fmt == "zstd":
-        from bazof_spark.operators.zstdcodec import zstd_decompress
-
-        return fmt, zstd_decompress(data)
-    if fmt == "xz":
-        from bazof_spark.operators.lzmacodec import xz_decompress
-
-        return fmt, xz_decompress(data)
+        # zlib.decompress drops bytes after the stream end; reject them
+        d = zlib.decompressobj()
+        out = _first_stream(d, data)
+        if d.unused_data:
+            raise ValueError(
+                f"{len(d.unused_data)} bytes after the end of the stream"
+            )
+        return out
     if fmt == "bzip2":
-        from bazof_spark.operators.bzip2codec import bz2_decompress
+        return bz2.decompress(data)
+    if fmt == "xz":
+        return lzma.decompress(data, format=lzma.FORMAT_XZ)
+    if fmt == "lzma":
+        # a .lzma file holds one stream (xz -d never reads a second)
+        return _first_stream(lzma.LZMADecompressor(lzma.FORMAT_ALONE), data)
+    # zstd / lz4 frame: the output size is not known up front, which
+    # pa.Codec.decompress requires, so read them as streams
+    import pyarrow as pa
 
-        return fmt, bz2_decompress(data)
-    if fmt == "lz4":
-        from bazof_spark.operators.lz4codec import lz4_frame_decompress
+    return pa.CompressedInputStream(pa.BufferReader(data), fmt).read()
 
-        return fmt, lz4_frame_decompress(data)
-    from bazof_spark.operators.lzmacodec import lzma_alone_decompress
 
-    return fmt, lzma_alone_decompress(data)
+def _first_stream(d, data: bytes) -> bytes:
+    """Decode the first stream of ``data`` with decompressor ``d``."""
+    out = d.decompress(data)
+    if not d.eof:
+        raise EOFError("stream ends before its end marker")
+    return out

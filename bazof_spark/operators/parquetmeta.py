@@ -3,11 +3,11 @@
 Every byte this engine serves comes out of parquet files, and every
 footer read so far goes through pyarrow/the JVM — the C/Java
 implementations. This module is the INDEPENDENT direction for the
-container itself, completing the from-spec family (inflate/zstd/lz4/
-snappy/bzip2/lzma for the page codecs → this for the metadata): a
-hand-written Thrift *compact protocol* decoder plus the public
-parquet.thrift field-id mappings, pinned field-by-field against
-pyarrow's parsed metadata on real files (tests/test_parquetmeta.py).
+container metadata (page bytes still decompress through pyarrow's C
+codecs, see :mod:`parquetpages`): a hand-written Thrift *compact
+protocol* decoder plus the public parquet.thrift field-id mappings,
+pinned field-by-field against pyarrow's parsed metadata on real files
+(tests/test_parquetmeta.py).
 The protocol is purely structural — varints, zigzag, nibble-packed
 field headers — no constant tables to transcribe, so everything here
 is verifiable in-sandbox.

@@ -1,12 +1,11 @@
 """From-spec parquet COLUMN reader — pages, levels, values.
 
-Together with :mod:`parquetmeta` (the footer) and the from-spec codec
-family (inflate/gzip, snappy, zstd, lz4 — the page codecs), this
-closes the loop: a flat parquet column decodes END-TO-END with zero
-external parsers — footer → row group → column chunk → PageHeader
-(Thrift compact) → decompress (in-repo codecs) → definition levels
-(RLE/bit-packed hybrid) → values (PLAIN or dictionary indices). The
-pin is total: the decoded value lists must equal pyarrow's
+Together with :mod:`parquetmeta` (the footer), this decodes a parquet
+column END-TO-END without pyarrow's parquet reader — footer → row
+group → column chunk → PageHeader (Thrift compact) → decompress
+(pyarrow's C page codecs: snappy, gzip, zstd, lz4_raw) → definition
+levels (RLE/bit-packed hybrid) → values (PLAIN or dictionary
+indices). The pin is total: the decoded value lists must equal pyarrow's
 ``read_table(...).to_pylist()`` on every fixture, so a wrong field id,
 level width, bit order or codec route cannot hide.
 
@@ -72,23 +71,16 @@ from bazof_spark.operators.parquetmeta import (
 def _decompress(codec: str, data: bytes, uncompressed_size: int) -> bytes:
     if codec == "UNCOMPRESSED":
         return data
-    if codec == "SNAPPY":
-        from bazof_spark.operators.snappycodec import snappy_decompress
+    name = {
+        "SNAPPY": "snappy", "GZIP": "gzip", "ZSTD": "zstd", "LZ4_RAW": "lz4_raw",
+    }.get(codec)
+    if name is None:
+        raise NotImplementedError(f"page codec {codec!r} not implemented")
+    import pyarrow as pa
 
-        return snappy_decompress(data)
-    if codec == "GZIP":
-        from bazof_spark.operators.inflate import gzip_decompress
-
-        return gzip_decompress(data)
-    if codec == "ZSTD":
-        from bazof_spark.operators.zstdcodec import zstd_decompress
-
-        return zstd_decompress(data)
-    if codec == "LZ4_RAW":
-        from bazof_spark.operators.lz4codec import lz4_block_decompress
-
-        return lz4_block_decompress(data, uncompressed_size)
-    raise NotImplementedError(f"page codec {codec!r} not implemented")
+    return pa.Codec(name).decompress(
+        data, decompressed_size=uncompressed_size
+    ).to_pybytes()
 
 
 def _read_hybrid(data: bytes, bit_width: int, count: int) -> list[int]:

@@ -1,7 +1,7 @@
 """Generic thrift COMPACT-protocol round-trip codec: parse any struct
-into a typed tree and re-emit it byte-identically. The from-spec
-parquet vertical (operators/parquetmeta/parquetpages) only ever READ
-footers; appending bloom filters to a finished file
+into a typed tree and re-emit it byte-identically. The in-repo
+parquet footer and page readers (operators/parquetmeta/parquetpages)
+only ever READ footers; appending bloom filters to a finished file
 (operators/parquetbloom) needs to REWRITE the footer with two new
 fields per column chunk while preserving every other byte of a footer
 some OTHER writer produced — so the codec keeps wire types, field

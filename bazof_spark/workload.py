@@ -3451,22 +3451,18 @@ def url_normalize_q(spark, sf_dir):
 
 
 def deflate_decode_text_q(spark, sf_dir):
-    """Cross-implementation DEFLATE round trip at corpus scale: each
-    document's text is compressed by ZLIB (the C implementation, at
-    level doc_id % 10 so stored, fixed-Huffman and dynamic-Huffman
-    blocks all appear in the corpus) and recovered by the repo's OWN
-    RFC 1951 inflate (operators/inflate.py — independent direction,
-    Adler-32 verified), then reduced to byte length + md5 of the
-    recovered bytes. The DuckDB oracle hashes the original text
-    directly — the hashes agree only if the from-spec decompressor is
-    byte-perfect against zlib on every document. Two map-only
+    """DEFLATE round trip at corpus scale: each document's text is
+    compressed by zlib at level doc_id % 10 (so stored, fixed-Huffman
+    and dynamic-Huffman blocks all appear in the corpus) and recovered
+    by ``zlib.decompress`` (Adler-32 verified), then reduced to byte
+    length + md5 of the recovered bytes. The DuckDB oracle hashes the
+    original text directly, so the hashes agree only if every
+    document survives the round trip byte for byte. Two map-only
     Arrow-batched stages, no shuffle."""
     import hashlib
     import zlib
 
     import pandas as pd
-
-    from bazof_spark.operators.inflate import zlib_decompress
 
     docs = _docs_par(spark, sf_dir).select("doc_id", "text")
 
@@ -3484,7 +3480,7 @@ def deflate_decode_text_q(spark, sf_dir):
         for pdf in it:
             out = {"doc_id": [], "level": [], "n_bytes": [], "digest": []}
             for d, z in zip(pdf["doc_id"], pdf["z"]):
-                raw = zlib_decompress(bytes(z))
+                raw = zlib.decompress(bytes(z))
                 out["doc_id"].append(d)
                 out["level"].append(int(d) % 10)
                 out["n_bytes"].append(len(raw))
@@ -3497,100 +3493,75 @@ def deflate_decode_text_q(spark, sf_dir):
 
 
 def compressed_text_roundtrip_q(spark, sf_dir):
-    """Cross-implementation compression round trip at corpus scale —
-    parquet's standard page codecs made inspectable: each document's
-    text is compressed by C implementations (doc_id % 6 picks
-    lz4-frame / lz4-raw-block / snappy / ZSTD via pyarrow, bzip2 or
-    classic .lzma via the stdlib wrappers) and recovered by the
-    repo's OWN from-spec decoders (operators/lz4codec.py — token
-    nibbles, linked-block windows, xxHash32-verified frames;
-    operators/snappycodec.py — varint preamble, tagged elements;
-    operators/zstdcodec.py — the full RFC 8878 path: FSE-coded
-    Huffman literals, interleaved LL/OF/ML sequence states, repeat
-    offsets, xxHash64 checksums; operators/bzip2codec.py — Huffman
-    groups with MTF selectors, RUNA/RUNB zero-runs, inverse BWT,
-    RLE1, both CRC layers; operators/lzmacodec.py — the range-coded
-    member: adaptive-probability bit trees, the 12-state machine,
-    matched-byte literal contexts, pos-slot distances), then reduced
-    to byte length + md5 of the recovered bytes. The DuckDB oracle hashes the original
-    text directly, so agreement proves every decoder byte-perfect
-    against the C implementations on every document. Two map-only
-    Arrow-batched stages, no shuffle."""
+    """Compression round trip at corpus scale over parquet's standard
+    page codecs: doc_id % 6 picks lz4-frame / lz4-raw-block / snappy /
+    ZSTD (pyarrow) or bzip2 / classic .lzma (stdlib) to compress each
+    document's text, and the same C library recovers it, reduced to
+    byte length + md5 of the recovered bytes. pyarrow's decoders need
+    the output size up front, so the compress stage carries the exact
+    raw length with each blob. The DuckDB oracle hashes the original
+    text directly, so agreement proves every document survives its
+    codec byte for byte. Two map-only Arrow-batched stages, no
+    shuffle."""
+    import bz2
     import hashlib
+    import lzma
 
     import pandas as pd
     import pyarrow as pa
 
-    from bazof_spark.operators.lz4codec import (
-        lz4_block_decompress,
-        lz4_frame_decompress,
-    )
-    from bazof_spark.operators.bzip2codec import bz2_decompress
-    from bazof_spark.operators.lzmacodec import lzma_alone_decompress
-    from bazof_spark.operators.snappycodec import snappy_decompress
-    from bazof_spark.operators.zstdcodec import zstd_decompress
-
     docs = _docs_par(spark, sf_dir).select("doc_id", "text")
+    by_doc_mod = ("lz4_frame", "lz4_block", "snappy", "zstd", "bzip2", "lzma")
+    # codec name -> pyarrow codec; bzip2 and lzma go through the stdlib
+    pa_codecs = {
+        "lz4_frame": "lz4", "lz4_block": "lz4_raw",
+        "snappy": "snappy", "zstd": "zstd",
+    }
 
     def compress(it):
-        lz4f = pa.Codec("lz4")
-        lz4r = pa.Codec("lz4_raw")
-        sn = pa.Codec("snappy")
-        zs = pa.Codec("zstd")
-        import bz2 as _bz2
-        import lzma as _lzma
+        codecs = {name: pa.Codec(c) for name, c in pa_codecs.items()}
         for pdf in it:
-            blobs, names = [], []
+            blobs, names, sizes = [], [], []
             for d, t in zip(pdf["doc_id"], pdf["text"]):
                 raw = t.encode("utf-8")
-                which = int(d) % 6
-                if which == 0:
-                    blobs.append(lz4f.compress(raw).to_pybytes())
-                    names.append("lz4_frame")
-                elif which == 1:
-                    blobs.append(lz4r.compress(raw).to_pybytes())
-                    names.append("lz4_block")
-                elif which == 2:
-                    blobs.append(sn.compress(raw).to_pybytes())
-                    names.append("snappy")
-                elif which == 3:
-                    blobs.append(zs.compress(raw).to_pybytes())
-                    names.append("zstd")
-                elif which == 4:
-                    blobs.append(_bz2.compress(raw, 9))
-                    names.append("bzip2")
-                else:
+                name = by_doc_mod[int(d) % 6]
+                if name == "bzip2":
+                    blobs.append(bz2.compress(raw, 9))
+                elif name == "lzma":
                     blobs.append(
-                        _lzma.compress(
-                            raw, format=_lzma.FORMAT_ALONE, preset=6
-                        )
+                        lzma.compress(raw, format=lzma.FORMAT_ALONE, preset=6)
                     )
-                    names.append("lzma")
+                else:
+                    blobs.append(codecs[name].compress(raw).to_pybytes())
+                names.append(name)
+                sizes.append(len(raw))
             yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "codec": names, "z": blobs}
+                {"doc_id": pdf["doc_id"], "codec": names, "z": blobs,
+                 "raw_len": sizes}
             )
 
-    comp = docs.mapInPandas(compress, "doc_id long, codec string, z binary")
+    comp = docs.mapInPandas(
+        compress, "doc_id long, codec string, z binary, raw_len long"
+    )
 
     def recover(it):
+        codecs = {name: pa.Codec(c) for name, c in pa_codecs.items()}
         for pdf in it:
             out = {
                 "doc_id": [], "codec": [], "n_bytes": [], "digest": [],
             }
-            for d, name, z in zip(pdf["doc_id"], pdf["codec"], pdf["z"]):
+            for d, name, z, n in zip(
+                pdf["doc_id"], pdf["codec"], pdf["z"], pdf["raw_len"]
+            ):
                 z = bytes(z)
-                if name == "lz4_frame":
-                    raw = lz4_frame_decompress(z)
-                elif name == "lz4_block":
-                    raw = lz4_block_decompress(z)
-                elif name == "snappy":
-                    raw = snappy_decompress(z)
-                elif name == "zstd":
-                    raw = zstd_decompress(z)
-                elif name == "bzip2":
-                    raw = bz2_decompress(z)
+                if name == "bzip2":
+                    raw = bz2.decompress(z)
+                elif name == "lzma":
+                    raw = lzma.decompress(z, format=lzma.FORMAT_ALONE)
                 else:
-                    raw = lzma_alone_decompress(z)
+                    raw = codecs[name].decompress(
+                        z, decompressed_size=int(n)
+                    ).to_pybytes()
                 out["doc_id"].append(d)
                 out["codec"].append(name)
                 out["n_bytes"].append(len(raw))
@@ -4215,7 +4186,7 @@ _MULTIMODAL_ORACLES = {
         FROM built
     """,
     # original text hashed directly again: Spark's answer went through
-    # pyarrow-C lz4/snappy compress -> the from-spec Python decoders
+    # compress -> decompress with the same C codec
     "compressed_text_roundtrip": """
         SELECT doc_id,
                CASE doc_id % 6 WHEN 0 THEN 'lz4_frame'
@@ -4227,8 +4198,7 @@ _MULTIMODAL_ORACLES = {
         FROM documents
     """,
     # the original text hashed directly: Spark's answer went through
-    # zlib-compress -> from-spec inflate, so agreement proves the
-    # RFC 1951 decoder byte-perfect on every document
+    # zlib.compress -> zlib.decompress at every level
     "deflate_decode_text": """
         SELECT doc_id,
                CAST(doc_id % 10 AS INT) AS level,

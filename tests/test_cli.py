@@ -250,8 +250,9 @@ def test_update_subcommand(spark, lake, capsys):
 
 
 def test_cli_decompress_sniffs_all_containers(tmp_path):
-    """The decompress subcommand routes by magic through the from-spec
-    decoder family, without a Spark session."""
+    """The decompress subcommand routes by magic to the stdlib/pyarrow
+    codecs, without a Spark session; a corrupt input exits non-zero
+    with a one-line message, not a traceback."""
     import bz2
     import gzip
     import lzma
@@ -286,6 +287,16 @@ def test_cli_decompress_sniffs_all_containers(tmp_path):
         )
         assert r.returncode == 0, (ext, r.stderr[-300:])
         assert out.read_bytes() == raw, ext
+    src = tmp_path / "cut.xz"
+    src.write_bytes(blobs["xz"][:-4])
+    r = subprocess.run(
+        [sys.executable, "-m", "bazof_spark.cli", "decompress", str(src)],
+        capture_output=True, text=True, cwd=REPO,
+    )
+    assert r.returncode != 0
+    lines = r.stderr.strip().splitlines()
+    assert len(lines) == 1, r.stderr[-300:]
+    assert lines[0].startswith(f"cannot decompress {src}: corrupt xz stream")
 
 
 def test_cli_footer_parses_parquet(tmp_path):

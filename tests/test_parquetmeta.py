@@ -70,12 +70,12 @@ def test_every_testdata_file_pins_to_pyarrow():
         _pin_file(p)
 
 
-def test_reference_golden_files_pin_to_their_writer():
+def test_reference_golden_files_pin_to_their_writer(reference_data):
     """The reference's own data files were written by arrow-rs — a
     THIRD writer implementation; the from-spec reader must parse those
     too."""
     paths = sorted(
-        glob.glob("/root/reference/test-data/*/*.parquet")
+        glob.glob(os.path.join(reference_data, "*", "*.parquet"))
     )
     assert paths
     for p in paths:
@@ -159,12 +159,14 @@ def test_rejects_non_parquet_and_truncated():
         parse_parquet_footer(bad)
 
 
-def test_repo_written_lakehouse_files_pin(tmp_path):
+def test_repo_written_lakehouse_files_pin(tmp_path, reference_data):
     """Files the repo's own writer commits (Spark's parquet writer —
     the JVM implementation, a second writer family) parse and pin."""
     import shutil
 
-    src = sorted(glob.glob("/root/reference/test-data/financials/*.parquet"))
+    src = sorted(
+        glob.glob(os.path.join(reference_data, "financials", "*.parquet"))
+    )
     # plus a pyarrow rewrite with tiny row groups (many-group footer)
     p = tmp_path / "many_groups.parquet"
     pq.write_table(pq.read_table(src[0]), p, row_group_size=16)

@@ -109,10 +109,10 @@ def test_every_corpus_column_decodes():
             assert mine == ref, (path, name)
 
 
-def test_reference_golden_columns_decode():
+def test_reference_golden_columns_decode(reference_data):
     """The reference's arrow-rs-written goldens (a third writer): the
     financials value columns decode end-to-end."""
-    path = "/root/reference/test-data/financials/year_2000_base.parquet"
+    path = os.path.join(reference_data, "financials", "year_2000_base.parquet")
     data = open(path, "rb").read()
     ref_t = pq.read_table(path)
     for name, field in zip(ref_t.column_names, ref_t.schema):

@@ -138,22 +138,11 @@ def test_html_to_text_never_leaks_script_or_tags(parts):
     assert "  " not in text  # whitespace collapsed
 
 
-# --- session-5 family: VP8L, inflate, LZ4, Snappy, G.711, containers ------
-
-import zlib as _zlib  # noqa: E402
-
-import pyarrow as _pa  # noqa: E402
+# --- session-5 family: VP8L, G.711, containers ---------------------------
 
 from bazof_spark.operators.g711codec import (  # noqa: E402
     g711_decode,
     g711_encode,
-)
-from bazof_spark.operators.inflate import zlib_decompress  # noqa: E402
-from bazof_spark.operators.lz4codec import (  # noqa: E402
-    lz4_block_compress,
-    lz4_block_decompress,
-    lz4_frame_compress,
-    lz4_frame_decompress,
 )
 from bazof_spark.operators.mkvcontainer import (  # noqa: E402
     encode_mkv_mjpeg,
@@ -163,59 +152,10 @@ from bazof_spark.operators.mp4container import (  # noqa: E402
     encode_mp4_mjpeg,
     parse_mp4,
 )
-from bazof_spark.operators.snappycodec import (  # noqa: E402
-    snappy_compress,
-    snappy_decompress,
-)
 from bazof_spark.operators.vp8lcodec import (  # noqa: E402
     decode_vp8l,
     encode_vp8l,
 )
-
-bytes_blob = st.binary(min_size=0, max_size=4000) | st.builds(
-    lambda b, n: b * n,
-    st.binary(min_size=1, max_size=8),
-    st.integers(1, 2000),
-)
-
-
-@_FAST
-@given(bytes_blob, st.integers(0, 9))
-def test_inflate_vs_zlib_property(data, level):
-    assert zlib_decompress(_zlib.compress(data, level)) == data
-
-
-@_FAST
-@given(bytes_blob)
-def test_lz4_block_property(data):
-    ours = lz4_block_compress(data)
-    assert lz4_block_decompress(ours) == data
-    if data:
-        c = _pa.Codec("lz4_raw").compress(data).to_pybytes()
-        assert lz4_block_decompress(c) == data
-
-
-@_FAST
-@given(bytes_blob)
-def test_lz4_frame_property(data):
-    assert lz4_frame_decompress(lz4_frame_compress(data)) == data
-    c = _pa.Codec("lz4").compress(data).to_pybytes()
-    assert lz4_frame_decompress(c) == data
-
-
-@_FAST
-@given(bytes_blob)
-def test_snappy_property(data):
-    ours = snappy_compress(data)
-    assert snappy_decompress(ours) == data
-    c = _pa.Codec("snappy").compress(data).to_pybytes()
-    assert snappy_decompress(c) == data
-    assert (
-        _pa.Codec("snappy")
-        .decompress(ours, decompressed_size=len(data))
-        .to_pybytes()
-        == data
-    )
 
 
 @_FAST
@@ -277,46 +217,3 @@ def test_vp8l_roundtrip_property(h, w, rnd, variant):
         kw = {"cache_bits": 1 + rnd.randrange(8)}
     out = decode_vp8l(encode_vp8l(px, **kw))
     assert (out == px).all()
-
-
-from bazof_spark.operators.zstdcodec import zstd_decompress  # noqa: E402
-
-
-@_FAST
-@given(bytes_blob, st.sampled_from([1, 3, 9, 19]))
-def test_zstd_vs_pyarrow_property(data, level):
-    c = _pa.Codec("zstd", compression_level=level).compress(data)
-    assert zstd_decompress(c.to_pybytes()) == data
-
-
-import bz2 as _bz2  # noqa: E402
-
-from bazof_spark.operators.bzip2codec import bz2_decompress  # noqa: E402
-
-
-@_FAST
-@given(bytes_blob, st.sampled_from([1, 9]))
-def test_bzip2_vs_stdlib_property(data, level):
-    assert bz2_decompress(_bz2.compress(data, level)) == data
-
-
-import lzma as _lzma  # noqa: E402
-
-from bazof_spark.operators.lzmacodec import lzma_alone_decompress  # noqa: E402
-
-
-@_FAST
-@given(bytes_blob, st.sampled_from([0, 6, 9]))
-def test_lzma_vs_stdlib_property(data, preset):
-    c = _lzma.compress(data, format=_lzma.FORMAT_ALONE, preset=preset)
-    assert lzma_alone_decompress(c) == data
-
-
-from bazof_spark.operators.lzmacodec import xz_decompress  # noqa: E402
-
-
-@_FAST
-@given(bytes_blob, st.sampled_from([_lzma.CHECK_CRC32, _lzma.CHECK_CRC64]))
-def test_xz_vs_stdlib_property(data, check):
-    c = _lzma.compress(data, format=_lzma.FORMAT_XZ, check=check, preset=1)
-    assert xz_decompress(c) == data
