@@ -182,7 +182,10 @@ def _file_batches(path: str, rank: int, columns, field_order, arrow_schema,
         if _pb_env in ("0", "1")
         else not isinstance(filesystem, pafs.LocalFileSystem)
     )
-    f = pq.ParquetFile(filesystem.open_input_file(rel), pre_buffer=pre_buffer)
+    # one handle for the footer, the page-index prune and the data
+    # reads (each open of an object-store file is a HEAD request)
+    fin = filesystem.open_input_file(rel)
+    f = pq.ParquetFile(fin, pre_buffer=pre_buffer)
     md = f.metadata
     # (group index, file-global first row) for every group this byte
     # range covers. length None with start > 0 = open-ended tail range
@@ -217,7 +220,8 @@ def _file_batches(path: str, rank: int, columns, field_order, arrow_schema,
     want = [src[c] for c in columns if c in src]
     spans_by_group = (
         _page_prune_spans(
-            filesystem, rel, pushed, src, [g for g, _ in sel], prune_stats
+            filesystem, rel, pushed, src, [g for g, _ in sel], prune_stats,
+            fin=fin,
         )
         if pushed
         else None
@@ -282,13 +286,17 @@ def _file_batches(path: str, rank: int, columns, field_order, arrow_schema,
 #: coalesced page-index region read cap — larger (pathological)
 #: layouts fall back to per-chunk reads
 _INDEX_REGION_MAX = 16 << 20
+#: the prune planner's first read: the file's last 64 KiB (the footer
+#: read size pyarrow itself uses) — trailer, footer and, on files whose
+#: page indexes sit just before the footer, the whole index region
+_TAIL_READ_BYTES = 64 << 10
 #: largest bloom blob worth a ranged read at planning time (the spec
 #: caps bitsets at 1 MiB; anything bigger is malformed)
 _BLOOM_FETCH_MAX = 2 << 20
 
 
 def _page_prune_spans(filesystem, rel, pushed, src, group_indices,
-                      stats=None, group_offsets=None):
+                      stats=None, group_offsets=None, fin=None):
     """Page-index prune plan for one file: {group index: sorted
     [(first row in group, n rows), ...] covering a SUPERSET of the
     rows any pushed predicate can match}. An empty span list means the
@@ -302,14 +310,17 @@ def _page_prune_spans(filesystem, rel, pushed, src, group_indices,
     file offset — the handle split PLANNING uses to map surviving
     groups back onto byte ranges.
 
-    The indexes are fetched by BYTE RANGE (one small read per pushed
-    column chunk plus one footer read), which is the point on object
-    stores: a selective predicate touches a few KB of index instead of
-    the row groups it ends up skipping. Bounds are decoded by the
-    chunk's physical type and compared in the parquet sort order
-    (UTF-8 bounds bytewise — identical to code-point order, so
-    writer-truncated min/max stay valid bounds)."""
+    The indexes are fetched by BYTE RANGE: one read of the file's tail
+    (trailer, footer and usually the page-index region) plus, only for
+    indexes or blooms outside it, one more — which is the point on
+    object stores: a selective predicate touches a few KB of index
+    instead of the row groups it ends up skipping. ``fin`` (optional)
+    is an already-open input file for ``rel``, saving a second open.
+    Bounds are decoded by the chunk's physical type and compared in
+    the parquet sort order (UTF-8 bounds bytewise — identical to
+    code-point order, so writer-truncated min/max stay valid bounds)."""
     import struct as _struct
+    from contextlib import nullcontext
 
     from bazof_spark.operators.parquetmeta import (
         parse_column_index_blob,
@@ -385,16 +396,24 @@ def _page_prune_spans(filesystem, rel, pushed, src, group_indices,
         return True  # unknown op: never prune on it
 
     try:
-        with filesystem.open_input_file(rel) as fin:
+        with (
+            nullcontext(fin)
+            if fin is not None
+            else filesystem.open_input_file(rel)
+        ) as fin:
             size = fin.size()
             if size < 12:
                 return None
-            fin.seek(size - 8)
-            (meta_len,) = _struct.unpack("<I", fin.read(8)[:4])
+            tail_at = max(0, size - _TAIL_READ_BYTES)
+            tail = fin.read_at(size - tail_at, tail_at)
+            (meta_len,) = _struct.unpack("<I", tail[-8:-4])
             if size - 8 - meta_len < 4:
                 return None
-            fin.seek(size - 8 - meta_len)
-            footer = parse_footer_blob(fin.read(meta_len))
+            footer = parse_footer_blob(
+                tail[len(tail) - 8 - meta_len : -8]
+                if meta_len + 8 <= len(tail)
+                else fin.read_at(meta_len, size - 8 - meta_len)
+            )
             top_elems = _top_level_schema_elements(footer["schema"])
             if group_indices is None:
                 group_indices = list(range(len(footer["row_groups"])))
@@ -409,13 +428,14 @@ def _page_prune_spans(filesystem, rel, pushed, src, group_indices,
                             off = cs[0].get("data_page_offset") or 0
                         group_offsets[gi] = off
 
-            # one COALESCED ranged read covers the whole page-index
-            # region (per the spec it sits contiguously between the
-            # last data page and the footer), so the planner costs
-            # O(1) reads per file instead of 2 per predicate×group —
-            # the difference between a metadata nibble and a GET storm
-            # on object stores. Bounded to 16 MiB; a (pathological)
-            # sparser layout falls back to per-chunk reads.
+            # the whole page-index region (per the spec it sits
+            # contiguously between the last data page and the footer)
+            # comes from the tail read or ONE more coalesced ranged
+            # read, so the planner costs O(1) reads per file instead of
+            # 2 per predicate×group — the difference between a metadata
+            # nibble and a GET storm on object stores. Bounded to
+            # 16 MiB; a (pathological) sparser layout falls back to
+            # per-chunk reads.
             spans_needed = []
             for gi in group_indices:
                 for c in footer["row_groups"][gi]["columns"]:
@@ -427,23 +447,20 @@ def _page_prune_spans(filesystem, rel, pushed, src, group_indices,
                     ):
                         if off and ln:
                             spans_needed.append((off, ln))
-            region = None
+            region = (tail_at, tail)
             if spans_needed:
                 r0 = min(o for o, _ in spans_needed)
                 r1 = max(o + n for o, n in spans_needed)
-                if r1 - r0 <= _INDEX_REGION_MAX:
-                    fin.seek(r0)
-                    region = (r0, fin.read(r1 - r0))
+                if r0 < tail_at and r1 - r0 <= _INDEX_REGION_MAX:
+                    region = (r0, fin.read_at(r1 - r0, r0))
 
             def fetch(off: int, ln: int) -> bytes:
-                if region is not None:
-                    base, blob = region
-                    if base <= off and off + ln <= base + len(blob):
-                        return blob[off - base : off - base + ln]
-                # outside the coalesced index region (bloom filters sit
-                # with the data pages) or no region: direct ranged read
-                fin.seek(off)
-                return fin.read(ln)
+                base, blob = region
+                if base <= off and off + ln <= base + len(blob):
+                    return blob[off - base : off - base + ln]
+                # outside the index region (bloom filters sit with the
+                # data pages): direct ranged read
+                return fin.read_at(ln, off)
 
             spans_by_group: dict[int, list[tuple[int, int]]] = {}
             any_index = False
@@ -669,9 +686,9 @@ DEFAULT_MAX_PARTITION_BYTES = 128 << 20  # Spark's files.maxPartitionBytes
 
 
 def _max_partition_bytes(options: dict) -> int:
-    """The split threshold: reader option (lakehouse forwards the
-    session's spark.sql.files.maxPartitionBytes), env override, or the
-    Spark default."""
+    """The split threshold: reader option ``maxPartitionBytes``, env
+    override, or the Spark default (``Lakehouse.scan`` on object-store
+    roots uses the session's spark.sql.files.maxPartitionBytes)."""
     import os as _os
 
     return _parse_byte_size(
@@ -716,6 +733,149 @@ def _byte_ranges(size: int, max_bytes: int) -> list[tuple[int, int | None]]:
     step = -(-size // nsplits)  # balanced, not max-then-runt
     starts = list(range(0, size, step))
     return [(s0, step) for s0 in starts[:-1]] + [(starts[-1], None)]
+
+
+def plan_byte_ranges(files, known_sizes: dict[str, int], max_bytes: int,
+                     env: dict, pushed=(), point_lookup: bool = False):
+    """Read tasks ``[(path, rank, tombstone, start, length)]`` over
+    already-pruned ``files`` ``[(path, rank, tombstone)]`` — the one
+    task planner behind the Data Source readers and the driver-planned
+    object-store scan (``Lakehouse.scan_snapshot``).
+
+    Files larger than ``max_bytes`` split into balanced byte ranges
+    (:func:`_byte_ranges`); each task reads the row groups whose first
+    page offset falls in its range, so a 10 GB single-file base fans
+    out across the cluster instead of serializing on one task — the
+    JVM scan's FilePartition behavior, which the reference's
+    one-partition-per-file provider lacks
+    (crates/azof-datafusion/src/lib.rs:199-204). Sizes come from
+    ``known_sizes`` (commit-time-recorded lengths); only files missing
+    there are stat'ed, one batched call per filesystem.
+
+    ``point_lookup`` (a pushed key equality/IN within the bloom probe
+    budget): a file that needs SPLITTING has its page indexes fetched
+    once (one coalesced ranged read) and the byte ranges containing no
+    may-match row group are dropped — a selective lookup on a 10 GB
+    base schedules 1 task, not ceil(size/maxPartitionBytes) empty
+    ones. Reader-side pruning stays authoritative, so this is purely a
+    task-count optimization."""
+    from bazof_spark import iofs
+
+    sizes = {p: known_sizes.get(p, 0) for p, _, _ in files}
+    missing = [p for p, n in sizes.items() if not n]
+    if missing:
+        sizes.update(_file_sizes(missing, env))
+    out = []
+    for p, r, tomb in files:
+        ranges = _byte_ranges(sizes.get(p) or 0, max_bytes)
+        if point_lookup and len(ranges) > 1:
+            iofs.apply_env(env)
+            filesystem, rel = iofs.split(p)
+            offsets: dict[int, int] = {}
+            spans = _page_prune_spans(
+                filesystem,
+                rel,
+                pushed,
+                {c: c for _, c, _ in pushed},
+                None,  # all row groups
+                group_offsets=offsets,
+            )
+            if spans is not None:
+                keep = [
+                    offsets[g] for g, s in spans.items() if s and g in offsets
+                ]
+                ranges = [
+                    (s0, ln)
+                    for s0, ln in ranges
+                    if any(
+                        s0 <= off and (ln is None or off < s0 + ln)
+                        for off in keep
+                    )
+                ]
+        out.extend((p, r, tomb, s0, ln) for s0, ln in ranges)
+    return out
+
+
+def read_file_range(path: str, rank: int, tombstone: bool, start: int,
+                    length: int | None, *, columns, field_order,
+                    arrow_schema, formers, pushed, as_of_dt) -> Iterator:
+    """One batch read task: :func:`_file_batches` over one (file, byte
+    range), with the as-of bound and the pushed ``(op, column, value)``
+    predicates applied row-wise, so rows past the instant or outside
+    the predicates never cross into the JVM. Shared by
+    :meth:`BazofReader.read` and the driver-planned object-store scan
+    (``Lakehouse.scan_snapshot``); yields Arrow record batches."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    for t in _file_batches(
+        path,
+        rank,
+        columns,
+        field_order,
+        arrow_schema,
+        tombstone=tombstone,
+        formers=formers,
+        start=start,
+        length=length,
+        # pushed predicates double as the page-index prune plan: row
+        # groups no page can match are never fetched, partial groups
+        # are sliced to may-match page spans — the exact row-wise
+        # evaluation below stays authoritative. The as-of bound rides
+        # along: the writer's event_time-DESC invariant puts the NEWEST
+        # instants in a file's leading pages, so a historical as-of
+        # prunes them wholesale
+        pushed=(
+            list(pushed)
+            + (
+                [("less_equal", "event_time", as_of_dt)]
+                if as_of_dt is not None
+                else []
+            )
+        ),
+    ):
+        if as_of_dt is not None:
+            # Naive parquet timestamps are treated as UTC instants
+            # (same convention as sources/tables._normalize_ntz).
+            col = t.column("event_time")
+            if getattr(col.type, "tz", None):
+                target = pa.timestamp("us", col.type.tz)
+                bound = pa.scalar(as_of_dt, type=target)
+            else:
+                target = pa.timestamp("us")
+                bound = pa.scalar(as_of_dt.replace(tzinfo=None), type=target)
+            t = t.filter(pc.less_equal(pc.cast(col, target), bound))
+        for op, name, value in pushed:
+            col = t.column(name)
+            if op == "isin":
+                t = t.filter(
+                    pc.is_in(col, value_set=pa.array(value, type=col.type))
+                )
+            else:
+                t = t.filter(
+                    getattr(pc, op)(col, pa.scalar(value, type=col.type))
+                )
+        yield from t.to_batches()
+
+
+def file_range_task_reader(tasks, env: dict, **read_args):
+    """``mapInArrow`` body over ``spark.range(len(tasks))``: row ``i``
+    reads ``tasks[i]`` (a :func:`plan_byte_ranges` entry) through
+    :func:`read_file_range`. The task list rides in the pickled
+    closure — five scalars per task — together with the driver's
+    BAZOF_* env: executors inherit the JVM's LAUNCH-time env, so an
+    endpoint or emulation variable set after session start would
+    otherwise never reach the per-file iofs resolution."""
+
+    def read(batches):
+        from bazof_spark import iofs
+
+        iofs.apply_env(env)
+        for b in batches:
+            for i in b.column(0).to_pylist():
+                yield from read_file_range(*tasks[i], **read_args)
+
+    return read
 
 
 class BazofReader(DataSourceReader):
@@ -768,9 +928,8 @@ class BazofReader(DataSourceReader):
         )
         self._as_of_dt = as_of.event_time_at
         self._pushed: list[tuple[str, str, object]] = []
-        # row-group splitting threshold — mirrors the JVM branch's
-        # spark.sql.files.maxPartitionBytes (lakehouse passes the
-        # session value through; env/default otherwise)
+        # row-group splitting threshold — the JVM scan's
+        # spark.sql.files.maxPartitionBytes counterpart
         self._max_part_bytes = _max_partition_bytes(options)
         # driver-side BAZOF_* env rides with the pickled reader —
         # executors inherit the JVM's LAUNCH-time env, so an endpoint
@@ -820,7 +979,9 @@ class BazofReader(DataSourceReader):
                 self._pushed.append((op, col, f.value))
             elif (
                 isinstance(f, In)
-                and isinstance(getattr(f, "value", None), tuple)
+                # Spark 4.1 hands the value list over as a list; the
+                # dataclass annotation (and older callers) say tuple
+                and isinstance(getattr(f, "value", None), (list, tuple))
                 and f.value
                 and all(_acceptable(col, v) for v in f.value)
             ):
@@ -880,84 +1041,30 @@ class BazofReader(DataSourceReader):
         return KeyRange(lo, hi, keys=probe)
 
     def partitions(self):
-        """Byte-range tasks over the ranked data files — minus the
-        files whose zone-map stats (snapshot key_min/key_max bounds,
-        key bloom) exclude the pushed key predicate: a selective key
-        lookup schedules O(matching files) tasks, the Data-Source twin
-        of Lakehouse.scan(keys=...).
-
-        Files larger than maxPartitionBytes split into balanced byte
-        ranges (one footer-free stat per file at planning, batched per
-        filesystem); each task reads the row groups whose first page
-        offset falls in its range, so a 10 GB single-file base fans
-        out across the cluster instead of serializing on one task —
-        the JVM scan's FilePartition behavior, which the reference's
-        one-partition-per-file provider lacks
-        (crates/azof-datafusion/src/lib.rs:199-204)."""
+        """Byte-range tasks (:func:`plan_byte_ranges`) over the ranked
+        data files — minus the files whose zone-map stats (snapshot
+        key_min/key_max bounds, key bloom) exclude the pushed key
+        predicate: a selective key lookup schedules O(matching files)
+        tasks, the Data-Source twin of Lakehouse.scan(keys=...)."""
         kr = self._pushed_key_range()
         surviving = [
             (p, r, tomb)
             for p, r, kmin, kmax, bloom, tomb in self._files
             if kr is None or kr.admits(kmin, kmax, bloom)
         ]
-        sizes = {
-            p: self._known_sizes.get(p, 0) for p, _, _ in surviving
-        }
-        missing = [p for p, n in sizes.items() if not n]
-        if missing:
-            sizes.update(_file_sizes(missing, self._env))
-        # planner-side page pruning, point-lookup shape only (the same
-        # gate as the bloom probe): when a pushed key equality/IN
-        # exists and a file needs SPLITTING, fetch its page indexes
-        # once (one coalesced ranged read) and drop the byte ranges
-        # containing no may-match row group — a selective lookup on a
-        # 10 GB base schedules 1 task, not ceil(size/maxPartitionBytes)
-        # empty ones. Reader-side pruning stays authoritative, so this
-        # is purely a task-count optimization.
-        point_lookup = kr is not None and kr.keys is not None
-        out = []
-        for p, r, tomb in surviving:
-            ranges = _byte_ranges(
-                sizes.get(p) or 0, self._max_part_bytes
+        return [
+            _FilePartition(p, r, tomb, start=s0, length=ln)
+            for p, r, tomb, s0, ln in plan_byte_ranges(
+                surviving,
+                self._known_sizes,
+                self._max_part_bytes,
+                self._env,
+                self._pushed,
+                point_lookup=kr is not None and kr.keys is not None,
             )
-            if point_lookup and len(ranges) > 1:
-                from bazof_spark import iofs
-
-                iofs.apply_env(self._env)
-                filesystem, rel = iofs.split(p)
-                offsets: dict[int, int] = {}
-                spans = _page_prune_spans(
-                    filesystem,
-                    rel,
-                    self._pushed,
-                    {c: c for _, c, _ in self._pushed},
-                    None,  # all row groups
-                    group_offsets=offsets,
-                )
-                if spans is not None:
-                    keep = [
-                        offsets[g]
-                        for g, s in spans.items()
-                        if s and g in offsets
-                    ]
-                    ranges = [
-                        (s0, ln)
-                        for s0, ln in ranges
-                        if any(
-                            s0 <= off and (ln is None or off < s0 + ln)
-                            for off in keep
-                        )
-                    ]
-            out.extend(
-                _FilePartition(p, r, tomb, start=s0, length=ln)
-                for s0, ln in ranges
-            )
-        return out
+        ]
 
     def read(self, partition: _FilePartition) -> Iterator:
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
         from bazof_spark import iofs
 
         iofs.apply_env(self._env)
@@ -966,58 +1073,19 @@ class BazofReader(DataSourceReader):
             # [None] for an empty partition list and still calls read()
             # (plan_data_source_read.py) — a 0-row result, not an error
             return
-        for t in _file_batches(
+        yield from read_file_range(
             partition.path,
             partition.rank,
-            self._columns,
-            self._field_order,
-            self._arrow_schema,
-            tombstone=partition.tombstone,
+            partition.tombstone,
+            partition.start,
+            partition.length,
+            columns=self._columns,
+            field_order=self._field_order,
+            arrow_schema=self._arrow_schema,
             formers=self._formers,
-            start=partition.start,
-            length=partition.length,
-            # pushed predicates double as the page-index prune plan:
-            # row groups no page can match are never fetched, partial
-            # groups are sliced to may-match page spans — the exact
-            # row-wise evaluation below stays authoritative. The as-of
-            # bound rides along: the writer's event_time-DESC invariant
-            # puts the NEWEST instants in a file's leading pages, so a
-            # historical as-of prunes them wholesale
-            pushed=(
-                self._pushed
-                + (
-                    [("less_equal", "event_time", self._as_of_dt)]
-                    if self._as_of_dt is not None
-                    else []
-                )
-            ),
-        ):
-            if self._as_of_dt is not None:
-                # event-time bound applied IN the reader: rows past the
-                # as-of instant never cross into the JVM. Naive parquet
-                # timestamps are treated as UTC instants (same
-                # convention as sources/tables._normalize_ntz).
-                col = t.column("event_time")
-                if getattr(col.type, "tz", None):
-                    target = pa.timestamp("us", col.type.tz)
-                    bound = pa.scalar(self._as_of_dt, type=target)
-                else:
-                    target = pa.timestamp("us")
-                    bound = pa.scalar(
-                        self._as_of_dt.replace(tzinfo=None), type=target
-                    )
-                t = t.filter(pc.less_equal(pc.cast(col, target), bound))
-            for op, name, value in self._pushed:
-                col = t.column(name)
-                if op == "isin":
-                    t = t.filter(
-                        pc.is_in(col, value_set=pa.array(value, type=col.type))
-                    )
-                else:
-                    t = t.filter(
-                        getattr(pc, op)(col, pa.scalar(value, type=col.type))
-                    )
-            yield from t.to_batches()
+            pushed=self._pushed,
+            as_of_dt=self._as_of_dt,
+        )
 
 
 @dataclass
@@ -1455,29 +1523,17 @@ class BazofStreamReader(DataSourceStreamReader):
                         "marker, or set .option('ignoreDeletes', "
                         "'true') to skip tombstone files"
                     )
-                out.append(
-                    _VersionFilePartition(
-                        self._table.data_file_path(f), v, f in tomb,
-                        formers=fmap,
-                    )
-                )
+                out.append((self._table.data_file_path(f), v, f in tomb))
             prev, prev_bases = cur, cur_bases
-        # byte-range splitting, same thresholds as the batch reader: a
+        # byte-range splitting, same planner as the batch reader: a
         # large file in the range (a big base replayed from version 0)
-        # must not serialize one micro-batch onto one task. Lengths
-        # recorded at commit time skip the stat; older files fall back
-        sizes = {p.path: known_sizes.get(p.path, 0) for p in out}
-        missing = [p for p, n in sizes.items() if not n]
-        if missing:
-            sizes.update(_file_sizes(missing, self._env))
+        # must not serialize one micro-batch onto one task
         return [
             _VersionFilePartition(
-                p.path, p.version, p.tombstone, formers=p.formers,
-                start=s0, length=ln,
+                p, v, tomb, formers=fmap, start=s0, length=ln
             )
-            for p in out
-            for s0, ln in _byte_ranges(
-                sizes.get(p.path) or 0, self._max_part_bytes
+            for p, v, tomb, s0, ln in plan_byte_ranges(
+                out, known_sizes, self._max_part_bytes, self._env
             )
         ]
 

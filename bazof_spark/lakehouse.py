@@ -7,11 +7,18 @@ in-memory RecordBatch (lakehouse.rs:40-85) wrapped in a 1-partition
 DataFusion node (lib.rs:199-204). Here the same semantics are declared as
 DataFrame operations and Catalyst/Tungsten execute them distributed:
 
-1. version + snapshot resolution, temporal file pruning — driver-side
-   Python, O(metadata), no Spark jobs (like Delta log file skipping);
+1. version + snapshot resolution, temporal and key file pruning —
+   driver-side Python, O(metadata), no Spark jobs (like Delta log file
+   skipping, or Photon planning file skips from table metadata);
 2. ONE ``spark.read.parquet(*pruned_files)`` — vectorized reader,
    parallel across files/row-groups, column pruning pushed down from the
-   projection, ``event_time <= t`` pushed to row-group stats;
+   projection, ``event_time <= t`` pushed to row-group stats. On an
+   object-store root the JVM may lack the scheme's connector, so the
+   driver also splits the pruned files into byte ranges and ONE
+   ``spark.range(n).mapInArrow`` reads them, a pyarrow read per range
+   with the projection, as-of bound and key predicate applied in the
+   reader (``datasource.read_file_range``, the Data Source reader's
+   own per-task read) — executors get only the scan;
 3. file precedence (crates/azof/src/metadata.rs:47-73 — child segments
    shadow parents, newer deltas shadow older, deltas shadow base) is
    attached as a ``_rank`` column mapped from ``input_file_name()``;
@@ -52,7 +59,7 @@ from pyspark.sql import functions as F
 
 from bazof_spark import iofs
 from bazof_spark.asof import AsOf, coerce_as_of
-from bazof_spark.errors import BazofError, TableNotFoundError
+from bazof_spark.errors import TableNotFoundError
 from bazof_spark.metadata import Snapshot
 from bazof_spark.projection import Projection, coerce_projection
 from bazof_spark.schema import EVENT_TIME_COL, KEY_COL
@@ -73,7 +80,7 @@ _VERSIONED_VIEW_ROOTS: dict[str, str] = {}
 
 def _normalize_file_uri(path: str) -> str:
     """Normalize a path/URI into the SAME canonical form
-    :func:`_normalized_input_file` computes in SQL, so the two sides
+    :func:`_normalized_input_file_sql` computes in SQL, so the two sides
     join. Canonical form: local/file → scheme-less path without leading
     slashes (``file:///a/b``, ``file:/a/b``, ``/a/b`` → ``a/b``);
     remote → ``scheme://rest`` with leading slashes collapsed and
@@ -95,8 +102,8 @@ def _normalize_file_uri(path: str) -> str:
 
 
 # strip scheme + collapse leading slashes: file:///a/b → a/b, s3a://b/k → s3a://b/k
-def _normalized_input_file(base_sql: str = "input_file_name()") -> F.Column:
-    """Normalization as ONE parsed expression (opt round 1: the
+def _normalized_input_file_sql(base_sql: str = "input_file_name()") -> str:
+    """Normalization as ONE SQL expression text (opt round 1: the
     Column-by-Column build cost ~96 py4j round trips per scan; the
     parsed text is the identical analyzed tree in one). ``base_sql`` is
     the SQL text of the input column (a literal spelling via
@@ -112,7 +119,7 @@ def _normalized_input_file(base_sql: str = "input_file_name()") -> F.Column:
     dec = f"url_decode(regexp_replace({base_sql}, '\\\\+', '%2B'))"
     scheme = f"regexp_extract({dec}, '^([A-Za-z][A-Za-z0-9+.-]*)://', 1)"
     rest = f"regexp_replace({dec}, '^[A-Za-z][A-Za-z0-9+.-]*:/+', '')"
-    return F.expr(
+    return (
         f"CASE WHEN {scheme} = 'file' THEN {rest} "
         f"WHEN {scheme} = '' THEN regexp_replace({rest}, '^/+', '') "
         f"ELSE concat({scheme}, '://', {rest}) END"
@@ -124,6 +131,13 @@ def _sql_str(s: str) -> str:
     (backslash and quote escaped — default parser semantics, i.e.
     ``spark.sql.parser.escapedStringLiterals=false``)."""
     return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def _map_sql(entries: dict[str, int]) -> str:
+    """A ``map(k1, v1, ...)`` SQL literal of string keys to ints."""
+    return "map(" + ", ".join(
+        f"{_sql_str(k)}, {r}" for k, r in entries.items()
+    ) + ")"
 
 
 def _uri_variants(path: str) -> set[str]:
@@ -224,14 +238,11 @@ class Lakehouse:
         as_of = coerce_as_of(as_of)
         projection = coerce_projection(columns)
         table = self.table(table_name)
-        # resolve the version FIRST so the object-store scan branch can
-        # pin the Data Source read to exactly this snapshot (a second
-        # independent current-pointer resolution could straddle a
-        # concurrent commit)
-        resolved_version = (
+        # ONE snapshot resolution per scan: pruning, task planning and
+        # the broadcast-size decision all read this snapshot
+        snapshot = table.get_snapshot(
             str(version) if version is not None else table.current_version()
         )
-        snapshot = table.get_snapshot(resolved_version)
         key_values: list[str] | None = None
         kr: KeyRange | None = None
         if keys is not None and key_range is not None:
@@ -243,7 +254,7 @@ class Lakehouse:
             kr = KeyRange(lo=key_range[0], hi=key_range[1])
         return self.scan_snapshot(
             table, snapshot, as_of, projection, key_range=kr,
-            key_values=key_values, version=resolved_version,
+            key_values=key_values,
         )
 
     def scan_changes(
@@ -362,26 +373,13 @@ class Lakehouse:
         projection: Projection,
         key_range=None,
         key_values: list[str] | None = None,
-        version: str | None = None,
     ) -> DataFrame:
-        if iofs.is_uri(table.path) and not table.path.startswith("file://"):
-            # object-store root: the JVM may lack the scheme's connector
-            # (no S3A jars in this runtime) — route through the Python
-            # Data Source, whose executor-side pyarrow readers resolve
-            # every byte via iofs (endpoint + emulation aware). Same
-            # merge semantics, one task per surviving ranked file.
-            return self._scan_snapshot_arrow(
-                table, snapshot, as_of, projection,
-                key_range=key_range, key_values=key_values,
-                version=version,
-            )
         ranked = snapshot.ranked_data_files(as_of, key_range)
         out_cols = snapshot.schema.output_columns(projection)
-        struct_type = snapshot.schema.to_struct_type(projection)
         if not ranked:
-            return self.spark.createDataFrame([], struct_type)
-
-        paths = [table.data_file_path(f) for f, _ in ranked]
+            return self.spark.createDataFrame(
+                [], snapshot.schema.to_struct_type(projection)
+            )
         # value columns we must read: projected ones (key/event_time are
         # always read — the merge needs them, as in the reference's
         # ProjectionMask, crates/azof/src/lakehouse.rs:98-109)
@@ -390,6 +388,56 @@ class Lakehouse:
             for c in snapshot.schema.columns
             if projection.contains(c.name)
         ]
+        # object-store root: the JVM may lack the scheme's connector (no
+        # S3A jars in this runtime), so the ranked files are read by
+        # executor-side pyarrow through iofs — planned here, on the
+        # driver, from the snapshot already resolved (no second
+        # resolution, no planner round trips); same merge either way
+        remote = iofs.is_uri(table.path) and not table.path.startswith(
+            "file://"
+        )
+        if remote:
+            df = self._read_ranked_arrow(
+                table, snapshot, ranked, as_of, value_cols,
+                key_range=key_range, key_values=key_values,
+            )
+        else:
+            df = self._read_ranked_parquet(
+                table, snapshot, ranked, as_of, value_cols,
+                key_range=key_range, key_values=key_values,
+            )
+        tombs = snapshot.tombstone_files()
+        tomb_ranks = tuple(r for f, r in ranked if f in tombs)
+        out = self._dedup_latest_per_key(df, value_cols, tomb_ranks, out_cols)
+        if remote:
+            # the mapInArrow leaf carries no statistics — attach the
+            # broadcast decision Spark would have made from file sizes
+            # (snapshot-recorded at commit; see broadcast_hint_if_small)
+            from bazof_spark.datasource import broadcast_hint_if_small
+
+            return broadcast_hint_if_small(
+                self.spark, table.path, out, snapshot=snapshot
+            )
+        return out
+
+    def _read_ranked_parquet(
+        self,
+        table: Table,
+        snapshot: Snapshot,
+        ranked: list[tuple[str, int]],
+        as_of: AsOf,
+        value_cols: list[str],
+        key_range=None,
+        key_values: list[str] | None = None,
+    ) -> DataFrame:
+        """Raw versioned rows of the ranked files through ONE JVM
+        parquet scan, with ``_rank``/``_row_idx`` provenance. Every
+        expression is parsed from SQL text — one py4j round trip each
+        instead of one per Column node; the parsed trees are the
+        identical analyzed plan."""
+        from bazof_spark.ordering import quote_sql_ident as _q
+
+        paths = [table.data_file_path(f) for f, _ in ranked]
         # explicit schema read: (a) skips schema inference/merging over
         # the file listing, (b) null-fills columns added by schema
         # evolution that predate a file (maintenance.evolve_table_schema).
@@ -408,11 +456,6 @@ class Lakehouse:
             for c in snapshot.schema.columns
             if c.formers and c.name in value_cols
         }
-        from bazof_spark.ordering import quote_sql_ident as _q
-
-        # selectExpr: every projection parses in ONE py4j round trip
-        # (the per-column F.col/alias build cost ~100 per scan — opt
-        # round 1); the parsed trees are the identical analyzed plan
         value_exprs = [
             "coalesce({}) AS {}".format(
                 ", ".join(_q(x) for x in (c, *formers[c])), _q(c)
@@ -432,152 +475,126 @@ class Lakehouse:
             *value_exprs,
             "_metadata.row_index AS _row_idx",
         )
-
+        # as-of bound (pushed to row-group stats: rows with event_time
+        # > t are invisible and do NOT shadow older versions,
+        # lakehouse.rs:62-67) and the key predicate (file-level zone
+        # maps bound WHICH files are read, the row filter bounds which
+        # rows survive; filter-on-key commutes with the groupBy(key)
+        # merge, so winners are unchanged)
+        conds = []
         if not as_of.is_current:
-            # row-group stats pruning applies; rows with event_time > t
-            # are invisible and do NOT shadow older versions
-            # (lakehouse.rs:62-67)
-            df = df.filter(F.col(EVENT_TIME_COL) <= F.lit(as_of.event_time_at))
-
-        # key predicate as a row filter too (pushed to parquet row-group
-        # stats): file-level zone maps bound WHICH files are read, the
-        # row filter bounds which rows survive; filter-on-key commutes
-        # with the groupBy(key) merge, so winners are unchanged
+            conds.append(
+                f"{EVENT_TIME_COL} <= TIMESTAMP "
+                + _sql_str(as_of.event_time_at.isoformat())
+            )
         if key_values is not None:
-            df = df.filter(F.col(KEY_COL).isin(key_values))
+            conds.append(
+                f"{KEY_COL} IN ({', '.join(map(_sql_str, key_values))})"
+            )
         elif key_range is not None:
             if key_range.lo is not None:
-                df = df.filter(F.col(KEY_COL) >= F.lit(key_range.lo))
+                conds.append(f"{KEY_COL} >= {_sql_str(key_range.lo)}")
             if key_range.hi is not None:
-                df = df.filter(F.col(KEY_COL) <= F.lit(key_range.hi))
+                conds.append(f"{KEY_COL} <= {_sql_str(key_range.hi)}")
+        if conds:
+            df = df.filter(" AND ".join(conds))
+        return self._with_rank(df, table, ranked)
 
-        tombs = snapshot.tombstone_files()
-        tomb_ranks = tuple(r for f, r in ranked if f in tombs)
-        df = self._dedup_latest_per_key(
-            df, table, ranked, value_cols, tomb_ranks
-        )
-        return df.select(*out_cols) if out_cols else df.select(KEY_COL).drop(KEY_COL)
-
-    def _scan_snapshot_arrow(
+    def _read_ranked_arrow(
         self,
         table: Table,
         snapshot: Snapshot,
+        ranked: list[tuple[str, int]],
         as_of: AsOf,
-        projection: Projection,
+        value_cols: list[str],
         key_range=None,
         key_values: list[str] | None = None,
-        version: str | None = None,
     ) -> DataFrame:
-        """Object-store twin of :meth:`scan_snapshot`: the Spark 4
-        Python Data Source plans one task per ranked file, each an
-        executor-side pyarrow read through iofs ($BAZOF_S3_ENDPOINT /
-        emulation routed), with the as-of bound, pushed key predicates
-        and column projection applied IN the reader — then the same
-        ``max_by(payload, latest_wins_ordering)`` merge as the JVM
-        branch (the source exposes ``_rank``/``_row_idx`` provenance
-        and a per-row ``_tombstone`` marker on delete-capable tables).
-        Reference parity: the reference runs on any ``object_store``
-        backend (crates/azof/src/lakehouse.rs:19-27); this closes the
-        ``scan()``/``sql()`` side of that on connector-less JVMs."""
-        from bazof_spark.asof import format_rfc3339_ms
-        from bazof_spark.datasource import BazofDataSource
-        from bazof_spark.ordering import latest_wins_agg
+        """Raw versioned rows of the ranked files on an object-store
+        root, whose scheme the JVM may have no connector for (no S3A
+        jars in this runtime): the driver splits the already-pruned
+        files into byte-range tasks and ``spark.range(n).mapInArrow``
+        runs one executor-side pyarrow read per task through iofs
+        ($BAZOF_S3_ENDPOINT / emulation routed) — the Data Source
+        reader's own per-task read (``datasource.read_file_range``),
+        with the as-of bound, the key predicate and the projection
+        applied IN the reader. Reference parity: the reference runs on
+        any ``object_store`` backend (crates/azof/src/lakehouse.rs:
+        19-27)."""
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_schema
+        from pyspark.sql.types import LongType, StructField, StructType
 
-        path = table.path.rstrip("/")
-        if not path.endswith("/" + table.name):
-            raise BazofError(
-                f"cannot derive lakehouse root from table path {path!r}"
-            )
-        root = path[: -(len(table.name) + 1)]
-        out_cols = snapshot.schema.output_columns(projection)
-        value_cols = [
-            c for c in out_cols if c not in (KEY_COL, EVENT_TIME_COL)
-        ]
-
-        self.spark.dataSource.register(BazofDataSource)
-        self.spark.conf.set(
-            "spark.sql.python.filterPushdown.enabled", "true"
+        from bazof_spark.datasource import (
+            _parse_byte_size,
+            file_range_task_reader,
+            plan_byte_ranges,
         )
-        import json
 
-        reader = (
-            self.spark.read.format("bazof")
-            .option("path", root)
-            .option("table", table.name)
-            # projection reaches the Arrow reader (the Python source
-            # API has no pruning hook, so it travels as an option)
-            .option("columns", ",".join(value_cols))
-            # planning runs in a separate Python worker — forward the
-            # driver's endpoint/emulation env (datasource._apply_env_option)
-            .option("bazofEnv", json.dumps(iofs.env_snapshot()))
-            # big files split into byte-range tasks at the same
-            # threshold the JVM scan uses
-            .option(
-                "maxPartitionBytes",
-                self.spark.conf.get(
-                    "spark.sql.files.maxPartitionBytes", "134217728b"
-                ),
-            )
+        read_type = snapshot.schema.to_struct_type(
+            Projection.of([KEY_COL, EVENT_TIME_COL, *value_cols])
         )
-        if version is not None:
-            reader = reader.option("version", version)
-        if not as_of.is_current:
-            reader = reader.option(
-                "asOf", format_rfc3339_ms(as_of.event_time_at)
-            )
-        df = reader.load()
-
-        # key predicates as ordinary filters: pushFilters routes them
-        # into the reader (row filter + bloom-probed file pruning)
+        raw = StructType(
+            [StructField(f.name, f.dataType, True) for f in read_type.fields]
+            + [
+                StructField("_rank", LongType(), False),
+                StructField("_row_idx", LongType(), False),
+            ]
+        )
+        pushed: list[tuple[str, str, object]] = []
         if key_values is not None:
-            df = df.filter(F.col(KEY_COL).isin(key_values))
+            pushed.append(("isin", KEY_COL, tuple(key_values)))
         elif key_range is not None:
             if key_range.lo is not None:
-                df = df.filter(F.col(KEY_COL) >= F.lit(key_range.lo))
+                pushed.append(("greater_equal", KEY_COL, key_range.lo))
             if key_range.hi is not None:
-                df = df.filter(F.col(KEY_COL) <= F.lit(key_range.hi))
-
-        has_tomb = "_tombstone" in df.columns
-        winner = df.groupBy(KEY_COL).agg(
-            latest_wins_agg(
-                value_cols, "_tombstone" if has_tomb else None, "batch"
-            ).alias("_w")
+                pushed.append(("less_equal", KEY_COL, key_range.hi))
+        env = iofs.env_snapshot()
+        tasks = plan_byte_ranges(
+            # tombstone flag False: the merge hides tombstones by _rank
+            # (the raw rows carry no _tombstone column)
+            [(table.data_file_path(f), r, False) for f, r in ranked],
+            {table.data_file_path(f): n for f, n in snapshot.file_sizes().items()},
+            _parse_byte_size(
+                self.spark.conf.get("spark.sql.files.maxPartitionBytes")
+            ),
+            env,
+            pushed,
+            point_lookup=key_range is not None and key_range.keys is not None,
         )
-        if has_tomb:
-            merged = (
-                winner.filter(~F.col("_w._tombstone"))
-                .select(KEY_COL, "_w.*")
-                .drop("_tombstone")
-            )
-        else:
-            merged = winner.select(KEY_COL, "_w.*")
-        out = (
-            merged.select(*out_cols)
-            if out_cols
-            else merged.select(KEY_COL).drop(KEY_COL)
+        read = file_range_task_reader(
+            tasks,
+            env,
+            columns=[KEY_COL, EVENT_TIME_COL, *value_cols],
+            field_order=raw.fieldNames(),
+            # Spark's Arrow bridge accepts only µs timestamps; nullable
+            # because arrow's cast refuses nulls into non-null fields
+            arrow_schema=pa.schema(
+                [f.with_nullable(True) for f in to_arrow_schema(raw)]
+            ),
+            formers={
+                c.name: c.formers for c in snapshot.schema.columns if c.formers
+            },
+            pushed=pushed,
+            as_of_dt=as_of.event_time_at,
         )
-        # Python DS relations carry no statistics — attach the
-        # broadcast decision Spark would have made from file sizes
-        # (snapshot-recorded at commit; see broadcast_hint_if_small)
-        from bazof_spark.datasource import broadcast_hint_if_small
-
-        return broadcast_hint_if_small(
-            self.spark, table.path, out, snapshot=snapshot
-        )
+        # one partition per task (at least one: zero tasks — every byte
+        # range page-pruned — must read as zero rows, not fail)
+        n = len(tasks)
+        return self.spark.range(0, n, 1, max(n, 1)).mapInArrow(read, raw)
 
     def _dedup_latest_per_key(
         self,
         df: DataFrame,
-        table: Table,
-        ranked: list[tuple[str, int]],
         value_cols: list[str],
-        tomb_ranks: tuple[int, ...] = (),
+        tomb_ranks: tuple[int, ...],
+        out_cols: list[str],
     ) -> DataFrame:
         """First-eligible-occurrence-in-file-order semantics
         (crates/azof/src/lakehouse.rs:40,54-79 + metadata.rs:47-73),
         encoded as max_by over (−rank, event_time): min rank wins, then
         max event_time — exactly 'latest version ≤ t, file precedence
-        beats timestamp'.
+        beats timestamp'. Output: ``out_cols`` of the winners.
 
         ``tomb_ranks`` marks tombstone deltas (our DELETE extension):
         their rows compete in the merge like any newer version, but a
@@ -585,9 +602,8 @@ class Lakehouse:
         flag rides inside the max_by payload, so the filter costs one
         post-aggregate predicate and nothing at all on delete-free
         tables (the common case keeps the exact pre-extension plan)."""
-        df = self._with_rank(df, table, ranked)
-
         from bazof_spark.ordering import latest_wins_agg
+        from bazof_spark.ordering import quote_sql_ident as _q
 
         # whole merge aggregate as ONE parsed expression (opt round 1):
         # the Column-by-Column struct/max_by build cost ~250 py4j round
@@ -602,12 +618,15 @@ class Lakehouse:
             latest_wins_agg(value_cols, tomb_sql, "batch").alias("_w")
         )
         if tomb_ranks:
-            return (
-                winner.filter(~F.col("_w._tombstone"))
-                .select(KEY_COL, "_w.*")
-                .drop("_tombstone")
+            winner = winner.filter("NOT _w._tombstone")
+        if not out_cols:
+            return winner.select(KEY_COL).drop(KEY_COL)
+        return winner.selectExpr(
+            *(
+                KEY_COL if c == KEY_COL else f"_w.{_q(c)} AS {_q(c)}"
+                for c in out_cols
             )
-        return winner.select(KEY_COL, "_w.*")
+        )
 
     def _with_rank(
         self, df: DataFrame, table: Table, ranked: list[tuple[str, int]]
@@ -627,29 +646,16 @@ class Lakehouse:
                 for f, r in ranked
                 for v in _uri_variants(table.data_file_path(f))
             }
-            # map literals as ONE parsed expression each (opt round 1):
-            # F.lit per key/value cost 2 py4j round trips apiece (~150
-            # per scan on an 8-delta table); the parsed map() call is
-            # the identical analyzed CreateMap tree in one round trip
-            fast_map = F.expr(
-                "map("
-                + ", ".join(
-                    f"{_sql_str(k)}, {r}" for k, r in fast_pairs.items()
-                )
-                + ")"
-            )
-            norm_map = F.expr(
-                "map("
-                + ", ".join(
-                    f"{_sql_str(k)}, {r}" for k, r in pairs.items()
-                )
-                + ")"
-            )
+            # the whole rank expression as ONE parsed expression (opt
+            # round 1): F.lit per key/value cost 2 py4j round trips
+            # apiece (~150 per scan on an 8-delta table); the parsed
+            # coalesce(map()[...], map()[...]) is the identical analyzed
+            # tree in one round trip
             return df.withColumn(
                 "_rank",
-                F.coalesce(
-                    fast_map[F.expr("input_file_name()")],
-                    norm_map[_normalized_input_file()],
+                F.expr(
+                    f"coalesce({_map_sql(fast_pairs)}[input_file_name()], "
+                    f"{_map_sql(pairs)}[{_normalized_input_file_sql()}])"
                 ),
             )
         # scale path (thousands of files): broadcast-join a tiny
@@ -661,7 +667,7 @@ class Lakehouse:
             self.spark.createDataFrame(list(pairs.items()), ["_file", "_rank"])
         )
         return (
-            df.withColumn("_file", _normalized_input_file())
+            df.withColumn("_file", F.expr(_normalized_input_file_sql()))
             .join(rank_df, on="_file", how="left")
             .withColumn(
                 "_rank",

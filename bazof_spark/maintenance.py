@@ -101,10 +101,10 @@ def checkpoint_table(
     preserved bit-identically at every as-of (see module docstring).
     Returns the committed snapshot. Works on any table root: local and
     file:// scans go through the JVM parquet reader; object-store roots
-    route the merged-state scan through the Python Data Source
-    (executor-side pyarrow reads via iofs — round 9, the same path
-    Lakehouse.scan auto-selects), and metadata + the base write were
-    iofs-routed from the start."""
+    read the merged-state scan's driver-planned byte ranges with
+    executor-side pyarrow through iofs (the path Lakehouse.scan
+    auto-selects), and metadata + the base write were iofs-routed from
+    the start."""
     if at.tzinfo is None:
         at = at.replace(tzinfo=timezone.utc)
     table = lakehouse.table(table_name)
@@ -118,9 +118,7 @@ def checkpoint_table(
 
     # distributed state computation: the Current scan itself (Current
     # pruning, NOT EventTime(T) — closed bases are invisible to Current)
-    state = lakehouse.scan_snapshot(
-        table, snapshot, CURRENT, Projection.all(), version=version
-    )
+    state = lakehouse.scan_snapshot(table, snapshot, CURRENT, Projection.all())
     order_by = None
     if cluster_by:
         # Z-order clustered base: multi-column data skipping (see

@@ -5,6 +5,7 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bazof_spark.datasource import BazofDataSource  # noqa: E402
 from bazof_spark.session import get_spark  # noqa: E402
 
 # Environmental Python-worker-spawn failures (opt round 2). The host
@@ -71,6 +72,10 @@ def reference_data():
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark(app_name="bazof-tests", shuffle_partitions=8)
+    # tests read spark.read.format("bazof") directly; the library
+    # registers the source only on its own read_table / write_table /
+    # stream paths (Lakehouse.scan never goes through it)
+    s.dataSource.register(BazofDataSource)
     # Pre-warm the Python worker daemon before any test runs: the
     # first Python-boundary job of a session pays daemon + worker
     # interpreter startup, exactly the phase the degraded-host windows

@@ -13,9 +13,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from bazof_spark import Lakehouse  # noqa: E402
 from bazof_spark.datasource import BazofDataSource, read_table  # noqa: E402
 
-REF = "/root/reference/test-data"
-
-
 def rows(df, cols=("key",)):
     return sorted(map(tuple, df.collect()), key=repr)
 
@@ -31,18 +28,18 @@ def rows(df, cols=("key",)):
         ("financials", "2020-06-01T00:00:00.000Z"),
     ],
 )
-def test_source_matches_native_scan(spark, table, as_of):
-    native = Lakehouse(spark, REF).scan(table, as_of=as_of)
-    via_source = read_table(spark, REF, table, as_of=as_of)
+def test_source_matches_native_scan(spark, reference_data, table, as_of):
+    native = Lakehouse(spark, reference_data).scan(table, as_of=as_of)
+    via_source = read_table(spark, reference_data, table, as_of=as_of)
     assert sorted(via_source.columns) == sorted(native.columns)
     assert rows(via_source.select(*native.columns)) == rows(native)
 
 
-def test_raw_load_carries_rank_and_rowidx(spark):
+def test_raw_load_carries_rank_and_rowidx(spark, reference_data):
     spark.dataSource.register(BazofDataSource)
     df = (
         spark.read.format("bazof")
-        .option("path", REF)
+        .option("path", reference_data)
         .option("table", "table0")
         .load()
     )
@@ -51,12 +48,14 @@ def test_raw_load_carries_rank_and_rowidx(spark):
     assert df.select("_rank").distinct().count() == 2
 
 
-def test_filter_pushdown_matches_postfilter(spark):
+def test_filter_pushdown_matches_postfilter(spark, reference_data):
     """Filters Catalyst pushes into the source (evaluated in the Arrow
     reader) must give exactly the rows a JVM-side post-filter gives,
     across comparison ops and types — including ones the reader
     declines (handed back to Spark)."""
-    native = Lakehouse(spark, REF).scan("financials", as_of="2020-06-01T00:00:00.000Z")
+    native = Lakehouse(spark, reference_data).scan(
+        "financials", as_of="2020-06-01T00:00:00.000Z"
+    )
     for cond in [
         "key = 'MSFT'",
         "revenue > 1000000000",
@@ -66,20 +65,20 @@ def test_filter_pushdown_matches_postfilter(spark):
         "key LIKE 'M%'",  # not pushable → Spark evaluates
     ]:
         via = read_table(
-            spark, REF, "financials", as_of="2020-06-01T00:00:00.000Z"
+            spark, reference_data, "financials", as_of="2020-06-01T00:00:00.000Z"
         ).filter(cond)
         want = rows(native.filter(cond).select(*sorted(native.columns)))
         got = rows(via.select(*sorted(native.columns)))
         assert got == want, cond
 
 
-def test_pushfilters_accepts_and_declines_correctly(spark):
+def test_pushfilters_accepts_and_declines_correctly(spark, reference_data):
     from pyspark.sql.datasource import EqualTo, GreaterThan
 
     from bazof_spark.datasource import BazofReader, BazofDataSource
 
     src = BazofDataSource(
-        options={"path": REF, "table": "financials"}
+        options={"path": reference_data, "table": "financials"}
     )
     reader = src.reader(src.schema())
     remaining = list(
@@ -96,11 +95,11 @@ def test_pushfilters_accepts_and_declines_correctly(spark):
     assert len(remaining) == 2
 
 
-def test_as_of_prunes_rows_in_reader(spark):
+def test_as_of_prunes_rows_in_reader(spark, reference_data):
     spark.dataSource.register(BazofDataSource)
     early = (
         spark.read.format("bazof")
-        .option("path", REF)
+        .option("path", reference_data)
         .option("table", "table0")
         .option("asOf", "2024-01-15T00:00:00.000Z")
         .load()
@@ -109,7 +108,7 @@ def test_as_of_prunes_rows_in_reader(spark):
     assert early.filter("event_time >= '2024-02-01'").count() == 0
 
 
-def test_pushed_key_probe_set_is_capped(spark):
+def test_pushed_key_probe_set_is_capped(spark, reference_data):
     """A huge pushed `key IN (...)` list must not turn partition
     planning into an O(|keys|)-per-file bloom probe: past
     MAX_BLOOM_PROBE_KEYS the pushed range falls back to range-only
@@ -117,7 +116,7 @@ def test_pushed_key_probe_set_is_capped(spark):
     the exact probe set."""
     from bazof_spark.metadata import MAX_BLOOM_PROBE_KEYS
 
-    src = BazofDataSource(options={"path": REF, "table": "financials"})
+    src = BazofDataSource(options={"path": reference_data, "table": "financials"})
     reader = src.reader(src.schema())
 
     reader._pushed = [("isin", "key", tuple(f"k{i:05d}" for i in range(5)))]
@@ -136,7 +135,7 @@ def test_pushed_key_probe_set_is_capped(spark):
     assert kr.keys is None
 
 
-def test_row_group_split_partitions(spark, tmp_path, monkeypatch):
+def test_row_group_split_partitions(spark, reference_data, tmp_path, monkeypatch):
     """Files larger than maxPartitionBytes split into byte-range tasks
     (the JVM scan's FilePartition behavior, which the reference's
     one-partition-per-file provider lacks): a multi-row-group file
@@ -155,7 +154,7 @@ def test_row_group_split_partitions(spark, tmp_path, monkeypatch):
     from bazof_spark.datasource import BazofReader
 
     root = tmp_path / "lake"
-    shutil.copytree(REF, root)
+    shutil.copytree(reference_data, root)
     for p in Path(root, "financials").glob("*.parquet"):
         t = pq.read_table(p)  # bit-identical rows, tiny row groups
         pq.write_table(t, p, row_group_size=16)
@@ -191,7 +190,9 @@ def test_row_group_split_partitions(spark, tmp_path, monkeypatch):
         assert rows(via.select(*native.columns)) == rows(native), as_of
 
 
-def test_row_group_split_row_idx_is_file_global(spark, tmp_path, monkeypatch):
+def test_row_group_split_row_idx_is_file_global(
+    spark, reference_data, tmp_path, monkeypatch
+):
     """Raw source rows keep their file-global _row_idx under splitting:
     the split read's (key, event_time, _rank, _row_idx) set equals the
     whole-file read's exactly."""
@@ -201,7 +202,7 @@ def test_row_group_split_row_idx_is_file_global(spark, tmp_path, monkeypatch):
     import pyarrow.parquet as pq
 
     root = tmp_path / "lake"
-    shutil.copytree(REF, root)
+    shutil.copytree(reference_data, root)
     for p in Path(root, "financials").glob("*.parquet"):
         pq.write_table(pq.read_table(p), p, row_group_size=16)
 
@@ -229,7 +230,7 @@ def test_row_group_split_row_idx_is_file_global(spark, tmp_path, monkeypatch):
     assert split == whole
 
 
-def test_recorded_sizes_skip_stat_pass(spark, tmp_path, monkeypatch):
+def test_recorded_sizes_skip_stat_pass(spark, reference_data, tmp_path, monkeypatch):
     """Tables committed by this writer record each file's byte length
     in the snapshot, so split planning needs ZERO stat/HEAD calls
     (r10 ADVICE: the unconditional stat pass added planning latency on
@@ -276,7 +277,7 @@ def test_recorded_sizes_skip_stat_pass(spark, tmp_path, monkeypatch):
     assert parts and calls == []  # every size came from the snapshot
 
     # reference snapshot (no sizes) → stat fallback still happens
-    ref_lh = Lakehouse(spark, REF)
+    ref_lh = Lakehouse(spark, reference_data)
     ref_snap = ref_lh.table("table0").get_current_snapshot()
     assert ref_snap.file_sizes() == {}
     ref_reader = BazofReader(

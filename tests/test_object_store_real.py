@@ -889,13 +889,45 @@ def test_remote_reads_coalesce_ranged_gets(s3_endpoint):
     assert gets_auto < gets_off, (gets_auto, gets_off)
 
 
-def test_keyed_scan_metadata_gets_over_real_s3(spark, s3_endpoint):
-    """A keyed lookup over s3:// resolves its snapshot once on the
-    driver (version.txt + s{N}.json) and once in the Data Source
-    planner (s{N}.json, version-pinned); the broadcast-size decision
-    reuses the driver's resolved snapshot instead of re-reading
-    s{N}.json. GET census from the live server's log."""
-    uri = "s3://bazof-real/metagets"
+def test_page_prune_plan_is_one_tail_get(s3_endpoint):
+    """The page-index prune plan of a file whose footer and page
+    indexes sit in its last 64 KiB costs ONE ranged GET — trailer,
+    footer and index region all come from that read — and still
+    prunes the pages a key equality cannot match."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from bazof_spark.datasource import _page_prune_spans
+
+    fs, rel = iofs.split("s3://prebuf/prune.parquet")
+    try:
+        fs.create_dir("prebuf")
+    except Exception:
+        pass
+    n = 20_000
+    pq.write_table(
+        pa.table({
+            "key": [f"k{i:06d}" for i in range(n)],
+            "value": [f"v{i}" for i in range(n)],
+        }),
+        rel, filesystem=fs, row_group_size=5_000, write_page_index=True,
+        data_page_size=4096,
+    )
+    assert fs.get_file_info(rel).size > 64 << 10  # tail < whole file
+    log = s3_endpoint.store.get_log
+    mark = len(log)
+    stats: dict = {}
+    spans = _page_prune_spans(
+        fs, rel, [("equal", "key", "k012345")], {"key": "key"}, None, stats
+    )
+    gets = [p for p, _ in log[mark:] if p.endswith("prune.parquet")]
+    assert len(gets) == 1, gets
+    assert sum(len(s) for s in spans.values()) == 1, spans
+    assert stats["pages_pruned"] > 0
+
+
+def _two_version_table(spark, uri: str) -> Lakehouse:
+    """Base of keys a, b at 2024-01-01 plus a delta upserting a."""
     table_uri = iofs.join(uri, "t")
     t0 = dt.datetime(2024, 1, 1, tzinfo=UTC)
     w = TableWriter(spark, table_uri, _schema())
@@ -908,7 +940,16 @@ def test_keyed_scan_metadata_gets_over_real_s3(spark, s3_endpoint):
         spark, table_uri,
         _batch(spark, [("a", dt.datetime(2024, 2, 1, tzinfo=UTC), "a2")]),
     )
-    lh = Lakehouse(spark, uri)
+    return Lakehouse(spark, uri)
+
+
+def test_keyed_scan_metadata_gets_over_real_s3(spark, s3_endpoint):
+    """A keyed lookup over s3:// resolves its snapshot once, on the
+    driver (version.txt + s{N}.json): the driver plans the byte-range
+    tasks from that snapshot, the executors read only data files, and
+    the broadcast-size decision reuses the same resolved snapshot. GET
+    census from the live server's log."""
+    lh = _two_version_table(spark, "s3://bazof-real/metagets")
     log = s3_endpoint.store.get_log
     mark = len(log)
     got = {r["key"]: r["value"] for r in lh.scan("t", keys=["a"]).collect()}
@@ -919,4 +960,35 @@ def test_keyed_scan_metadata_gets_over_real_s3(spark, s3_endpoint):
         if p.startswith("bazof-real/metagets/")
         and (p.endswith(".json") or p.endswith("version.txt"))
     )
-    assert meta == ["s2.json", "s2.json", "version.txt"], meta
+    assert meta == ["s2.json", "version.txt"], meta
+
+
+def test_object_store_scan_is_driver_planned(spark, s3_endpoint):
+    """Lakehouse.scan on an s3:// root reads the driver-planned byte
+    ranges with mapInArrow (one task per range, no Python Data Source
+    scan) and merges them in the usual single shuffle."""
+    from bazof_spark.plans import formatted_plan, shuffle_count
+
+    lh = _two_version_table(spark, "s3://bazof-real/driverplan")
+    df = lh.scan("t", keys=["a", "b"])
+    plan = formatted_plan(df)
+    assert "MapInArrow" in plan, plan
+    assert "BatchScan" not in plan, plan
+    assert shuffle_count(df) == 1, plan
+    assert sorted((r["key"], r["value"]) for r in df.collect()) == [
+        ("a", "a2"), ("b", "b1"),
+    ]
+
+
+def test_object_store_scan_before_first_segment(spark, s3_endpoint):
+    """An as-of instant before the table's first segment ranks no
+    files: the scan is empty with the declared columns, whole-table
+    and keyed alike, instead of planning zero read tasks."""
+    lh = _two_version_table(spark, "s3://bazof-real/prehistory")
+    before = "2023-06-01T00:00:00.000Z"
+    for df in (
+        lh.scan("t", as_of=before),
+        lh.scan("t", as_of=before, keys=["a"]),
+    ):
+        assert df.columns == ["key", "event_time", "value"]
+        assert df.collect() == []

@@ -180,7 +180,7 @@ def test_no_page_index_degrades_to_full_read(tmp_path):
     assert stats.get("pages_pruned", 0) == 0
 
 
-def test_prune_planner_on_reference_files():
+def test_prune_planner_on_reference_files(reference_data):
     """Reference-authored files (arrow-rs writes page indexes by
     default) prune too — and always to a SUPERSET of the matching
     rows: probing every reference table0 file for a key each file may
@@ -189,7 +189,7 @@ def test_prune_planner_on_reference_files():
 
     from bazof_spark import iofs
 
-    root = "/root/reference/test-data/table0"
+    root = os.path.join(reference_data, "table0")
     files = [f for f in os.listdir(root) if f.endswith(".parquet")]
     assert files
     for name in files:
@@ -288,7 +288,9 @@ def test_region_cap_falls_back_to_per_chunk_reads(indexed_file, monkeypatch):
     assert fb.sort_by("_row_idx").equals(base.sort_by("_row_idx"))
 
 
-def test_point_lookup_prunes_split_plan(spark, tmp_path, monkeypatch):
+def test_point_lookup_prunes_split_plan(
+    spark, tmp_path, monkeypatch, reference_data
+):
     """Planner-side split pruning (point-lookup shape): a pushed key
     equality on a multi-range split plan schedules ONLY the byte
     ranges whose row groups may contain the key — a selective lookup
@@ -304,7 +306,7 @@ def test_point_lookup_prunes_split_plan(spark, tmp_path, monkeypatch):
     from bazof_spark.datasource import BazofReader
 
     root = tmp_path / "lake"
-    shutil.copytree("/root/reference/test-data", root)
+    shutil.copytree(reference_data, root)
     for p in Path(root, "financials").glob("*.parquet"):
         t = pq.read_table(p).sort_by("key")
         pq.write_table(

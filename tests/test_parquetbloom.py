@@ -36,11 +36,6 @@ from bazof_spark.operators.thriftcodec import (  # noqa: E402
     parse_struct,
 )
 
-REF_FILE = (
-    "/root/reference/test-data/financials/year_2000_base.parquet"
-)
-
-
 def _footer_bytes(path):
     data = open(path, "rb").read()
     (n,) = struct.unpack("<I", data[-8:-4])
@@ -59,7 +54,7 @@ def test_xxh64_published_vectors():
     assert xxh64(long) == xxh64(bytes(long))  # stable across buffer types
 
 
-def test_thrift_roundtrip_byte_identical(tmp_path, spark):
+def test_thrift_roundtrip_byte_identical(tmp_path, spark, reference_data):
     """parse→emit reproduces footers from pyarrow, duckdb, parquet-mr
     (Spark JVM) and arrow-rs (the reference's own files) byte for
     byte — the property the bloom append leans on."""
@@ -87,7 +82,9 @@ def test_thrift_roundtrip_byte_identical(tmp_path, spark):
         if f.endswith(".parquet")
     ]
     cases["parquet-mr"] = f3
-    cases["arrow-rs"] = REF_FILE
+    cases["arrow-rs"] = os.path.join(
+        reference_data, "financials", "year_2000_base.parquet"
+    )
     for name, path in cases.items():
         blob = _footer_bytes(path)
         fields, end = parse_struct(blob)

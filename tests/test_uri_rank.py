@@ -1,7 +1,7 @@
 """Object-store URI discipline for the precedence-rank attachment.
 
 The rank map keys (driver-side `_normalize_file_uri` over snapshot
-paths) and the per-row join key (`_normalized_input_file()` over
+paths) and the per-row join key (`_normalized_input_file_sql()` over
 `input_file_name()`) must land in the SAME canonical form for every
 spelling a filesystem might emit — file:/ vs file:// vs file:///,
 s3a/abfss, percent-encoding, doubled slashes — or ranks silently miss.
@@ -22,7 +22,7 @@ import bazof_spark.lakehouse as lh_mod  # noqa: E402
 from bazof_spark import Lakehouse  # noqa: E402
 from bazof_spark.lakehouse import (  # noqa: E402
     _normalize_file_uri,
-    _normalized_input_file,
+    _normalized_input_file_sql,
     _sql_str,
     _uri_variants,
 )
@@ -32,11 +32,11 @@ AS_OF = "2019-01-17T00:00:00.000Z"
 
 
 def sql_norm(spark, spelled: str) -> str:
-    # _normalized_input_file takes the input as SQL text (it parses ONE
-    # expression — opt round 1); _sql_str-quoting the spelling drives
-    # the exact production code path with a literal input
-    return spark.range(1).select(
-        _normalized_input_file(_sql_str(spelled)).alias("n")
+    # _normalized_input_file_sql takes the input as SQL text (the scan
+    # parses it as ONE expression — opt round 1); _sql_str-quoting the
+    # spelling drives the exact production code path with a literal input
+    return spark.range(1).selectExpr(
+        f"{_normalized_input_file_sql(_sql_str(spelled))} AS n"
     ).first()["n"]
 
 
