@@ -656,28 +656,36 @@ def _row_group_offset(rg) -> int:
     return off
 
 
-def _parse_byte_size(text) -> int:
-    """Spark-style size strings ('134217728b', '128m', '128MB', '1g',
-    '1t', '1pb' — the full suffix set byteStringAsBytes accepts);
-    non-positive values are rejected so a misconfigured threshold
-    fails at planning with a clear message, not a ZeroDivisionError
-    inside the split arithmetic."""
-    s = str(text).strip().lower()
-    value = None
-    for suffix, mult in (
+def _bytes_conf(value) -> int | None:
+    """Parse a Spark-style size string ('134217728b', '128m', '10MB',
+    '1g', '1t', '1pb', '-1' — the suffix set byteStringAsBytes
+    accepts) → bytes, or None when unparsable."""
+    s = str(value).strip().lower()
+    mult = 1
+    for suffix, m in (
         ("kb", 1 << 10), ("mb", 1 << 20), ("gb", 1 << 30),
         ("tb", 1 << 40), ("pb", 1 << 50),
         ("k", 1 << 10), ("m", 1 << 20), ("g", 1 << 30),
         ("t", 1 << 40), ("p", 1 << 50), ("b", 1),
     ):
         if s.endswith(suffix):
-            value = int(s[: -len(suffix)]) * mult
+            s, mult = s[: -len(suffix)], m
             break
-    if value is None:
-        value = int(s)
-    if value <= 0:
+    try:
+        return int(s) * mult
+    except ValueError:
+        return None
+
+
+def _parse_byte_size(text) -> int:
+    """:func:`_bytes_conf` for ``maxPartitionBytes``: unparsable and
+    non-positive values are rejected so a misconfigured threshold
+    fails at planning with a clear message, not a ZeroDivisionError
+    inside the split arithmetic."""
+    value = _bytes_conf(text)
+    if value is None or value <= 0:
         raise ValueError(
-            f"maxPartitionBytes must be positive, got {text!r}"
+            f"maxPartitionBytes must be a positive byte size, got {text!r}"
         )
     return value
 
@@ -1843,23 +1851,6 @@ def write_table(
     if merge_schema:
         writer = writer.option("mergeSchema", "true")
     writer.save()
-
-
-def _bytes_conf(value: str) -> int | None:
-    """Parse a Spark byte-size conf value ('10485760b', '10MB',
-    '-1'…) → bytes, or None when unparsable."""
-    try:
-        s = str(value).strip().lower()
-        for suffix, mult in (
-            ("kb", 1 << 10), ("mb", 1 << 20), ("gb", 1 << 30),
-            ("tb", 1 << 40), ("k", 1 << 10), ("m", 1 << 20),
-            ("g", 1 << 30), ("t", 1 << 40), ("b", 1),
-        ):
-            if s.endswith(suffix):
-                return int(s[: -len(suffix)]) * mult
-        return int(s)
-    except (ValueError, TypeError):
-        return None
 
 
 def broadcast_hint_if_small(spark, table_path: str, df, version=None,

@@ -49,6 +49,7 @@ version, higher = newer); see ``ordering.py`` for both recipes.
 
 from __future__ import annotations
 
+import functools
 import os
 import urllib.parse
 from datetime import datetime
@@ -879,11 +880,11 @@ class Lakehouse:
         result through the distributed Data Source writer; the returned
         DataFrame is a 1-row (table, version, operation) status.
 
-        ``dml_at``: optional statement timestamp for DML that stamps
-        'now' (MERGE tombstones / BY SOURCE UPDATE rows) — the SQL
-        twin of ``Lakehouse.update(at=…)``'s determinism knob for
-        replay and oracle fixtures; production statements leave it
-        None.
+        ``dml_at``: optional statement timestamp for every DML that
+        stamps 'now' (DELETE FROM and MERGE tombstones, UPDATE rows,
+        MERGE BY SOURCE UPDATE rows) — the SQL twin of
+        ``Lakehouse.update(at=…)``'s determinism knob for replay and
+        oracle fixtures; production statements leave it None.
         """
         from bazof_spark.sql import parse_dml, parse_maintenance, parse_show
 
@@ -1069,21 +1070,37 @@ class Lakehouse:
         )
 
     def _execute_dml(self, dml, at=None) -> DataFrame:
-        """CTAS / INSERT INTO execution: inner query through ``sql``
-        (time travel works in the source), result through the Data
-        Source writer's two-phase commit (``datasource.write_table`` —
-        repartition-by-key placement, event_time-DESC files, atomic
-        version flip). Any Current temp view of the table is refreshed
-        so subsequent SQL sees the new version."""
+        """DML execution. Returns a 1-row (table, version, operation)
+        status frame; any Current temp view of the table is refreshed so
+        subsequent SQL sees the new version.
+
+        - CTAS / INSERT INTO / the native-upsert MERGE: the inner query
+          runs through ``sql`` (time travel works in the source) and the
+          result through the Data Source writer's two-phase commit
+          (``datasource.write_table`` — repartition-by-key placement,
+          event_time-DESC files, atomic version flip).
+        - every other MERGE: the clause list, one atomic
+          ``writer.merge_apply`` commit (``_execute_merge``).
+        - DELETE FROM / UPDATE: tombstones / re-stamped rows.
+
+        ``at`` stamps every DML that stamps 'now' (default: now, UTC)."""
+        from datetime import datetime, timezone
+
         from bazof_spark.datasource import write_table
         from bazof_spark.errors import BazofError
-        from bazof_spark.sql import DmlStatement  # noqa: F401 (typing)
 
+        if dml.kind != "ctas" and not self.has_table(dml.table):
+            raise BazofError(
+                f"cannot {dml.kind.split('_')[0].upper()} missing table "
+                f"{dml.table!r}"
+            )
+        at = (
+            datetime.now(timezone.utc)
+            if at is None
+            else at.astimezone(timezone.utc)
+        )
+        op = dml.kind
         if dml.kind == "delete":
-            if not self.has_table(dml.table):
-                raise BazofError(
-                    f"cannot DELETE from missing table {dml.table!r}"
-                )
             # matching keys stay a DataFrame end to end (writer
             # .delete_keys' distributed path): DELETE WHERE <predicate>
             # at corpus scale never collects the key set
@@ -1103,412 +1120,243 @@ class Lakehouse:
                     self.spark,
                     self.table(dml.table).path,
                     self.sql(q),
+                    at=at,
                     create_segment=True,
                     expected_version=pinned,
                 )
             finally:
                 self.spark.catalog.dropTempView(view)
-            if self.spark.catalog.tableExists(dml.table):
-                self.scan(dml.table).createOrReplaceTempView(dml.table)
-            version = self.table(dml.table).current_version()
-            return self.spark.createDataFrame(
-                [(dml.table, version, "delete")],
-                "table string, version string, operation string",
-            )
-
-        if dml.kind == "merge_delete":
-            # MERGE ... WHEN MATCHED [AND <pred>] THEN DELETE: tombstone
-            # every target key the source matches (pred narrows over the
-            # target's CURRENT row). Same read-modify-write discipline
-            # as DELETE FROM: pin before the matched read, CAS on commit.
-            if not self.has_table(dml.table):
-                raise BazofError(
-                    f"cannot MERGE into missing table {dml.table!r}"
-                )
-            from bazof_spark.writer import delete_keys
-
-            pinned = self.table(dml.table).current_version()
-            src = self.sql(dml.select.rstrip().rstrip(";"))
-            if "key" not in src.columns:
-                raise BazofError(
-                    "MERGE ... THEN DELETE source must produce a 'key' "
-                    f"column, got {src.columns}"
-                )
-            view = self._fresh_current_view(dml.table)
-            try:
-                src_view = f"{view}__src"
-                src.select("key").createOrReplaceTempView(src_view)
-                # semi join: output carries ONLY target columns, so the
-                # predicate's unqualified references resolve against the
-                # target's current row (and no source-duplicate fanout)
-                q = (
-                    f"SELECT key FROM (SELECT * FROM {view} t LEFT SEMI "
-                    f"JOIN {src_view} s ON t.key = s.key)"
-                )
-                if dml.pred:
-                    q += f" WHERE {dml.pred}"
-                delete_keys(
-                    self.spark,
-                    self.table(dml.table).path,
-                    self.spark.sql(q),
-                    create_segment=True,
-                    expected_version=pinned,
-                )
-            finally:
-                self.spark.catalog.dropTempView(view)
-                self.spark.catalog.dropTempView(src_view)
-            if self.spark.catalog.tableExists(dml.table):
-                self.scan(dml.table).createOrReplaceTempView(dml.table)
-            version = self.table(dml.table).current_version()
-            return self.spark.createDataFrame(
-                [(dml.table, version, "merge_delete")],
-                "table string, version string, operation string",
-            )
-
-        if dml.kind == "merge_insert":
-            # MERGE ... WHEN NOT MATCHED THEN INSERT *: append ONLY the
-            # source rows whose keys are absent from Current — a plain
-            # append would upsert (shadow) existing keys. Read-modify-
-            # write like merge-delete: pin, anti-join, CAS on commit.
-            if not self.has_table(dml.table):
-                raise BazofError(
-                    f"cannot MERGE into missing table {dml.table!r}"
-                )
-            from bazof_spark.writer import append_delta
-
-            pinned = self.table(dml.table).current_version()
-            src = self.sql(dml.select.rstrip().rstrip(";"))
-            schema = self.table(dml.table).get_current_snapshot().schema
-            expected = ["key", "event_time", *schema.column_names()]
-            if set(src.columns) != set(expected) and len(src.columns) == len(
-                expected
-            ):
-                src = src.toDF(*expected)  # positional, like INSERT
-            # (declared-type casting — DECIMAL literals etc. — happens
-            # inside append_delta for every writer path)
-            view = self._fresh_current_view(dml.table)
-            try:
-                src_view = f"{view}__src"
-                src.createOrReplaceTempView(src_view)
-                fresh = self.spark.sql(
-                    f"SELECT s.* FROM {src_view} s LEFT ANTI JOIN {view} t "
-                    "ON s.key = t.key"
-                )
-                if not fresh.isEmpty():
-                    append_delta(
-                        self.spark,
-                        self.table(dml.table).path,
-                        fresh,
-                        create_segment=True,
-                        expected_version=pinned,
-                    )
-            finally:
-                self.spark.catalog.dropTempView(view)
-                self.spark.catalog.dropTempView(src_view)
-            if self.spark.catalog.tableExists(dml.table):
-                self.scan(dml.table).createOrReplaceTempView(dml.table)
-            version = self.table(dml.table).current_version()
-            return self.spark.createDataFrame(
-                [(dml.table, version, "merge_insert")],
-                "table string, version string, operation string",
-            )
-
-        if dml.kind == "merge_multi":
-            # combined clause list — first matching WHEN MATCHED clause
-            # wins per key (Delta/ANSI semantics; predicates evaluate
-            # over the TARGET's current row like the single-delete
-            # form), WHEN NOT MATCHED THEN INSERT * takes the source
-            # rows whose keys are absent from Current. Compiles to ONE
-            # atomic commit: writer.merge_apply publishes the upsert
-            # delta and the tombstone delta in the same snapshot, so a
-            # reader sees all of the MERGE or none of it.
-            if not self.has_table(dml.table):
-                raise BazofError(
-                    f"cannot MERGE into missing table {dml.table!r}"
-                )
-            from datetime import datetime, timezone
-
-            from bazof_spark.writer import merge_apply
-
-            # one statement timestamp: tombstones AND unmatched-by-
-            # source UPDATE rows are stamped with it, so the whole
-            # statement shares a single commit instant
-            statement_at = (
-                at.astimezone(timezone.utc)
-                if at is not None
-                else datetime.now(timezone.utc)
-            )
-            pinned = self.table(dml.table).current_version()
-            src = self.sql(dml.select.rstrip().rstrip(";"))
-            if "key" not in src.columns:
-                raise BazofError(
-                    "MERGE source must produce a 'key' column, got "
-                    f"{src.columns}"
-                )
-            needs_rows = dml.insert_unmatched or any(
-                cl[0] in ("update", "update_set") for cl in dml.clauses
-            )
-            has_clauses = bool(dml.clauses)
-            schema = self.table(dml.table).get_current_snapshot().schema
-            if needs_rows:
-                expected = ["key", "event_time", *schema.column_names()]
-                if set(src.columns) != set(expected) and len(
-                    src.columns
-                ) == len(expected):
-                    src = src.toDF(*expected)  # positional, like INSERT
-            view = self._fresh_current_view(dml.table)
-            src_view = f"{view}__src"
-            try:
-                src.createOrReplaceTempView(src_view)
-                # per matched key: verdict = first clause whose pred
-                # holds on the target's CURRENT row (NULL pred result =
-                # clause does not apply — coalesce keeps three-valued
-                # logic from leaking a row past an earlier clause)
-                verdicts = None
-                if has_clauses:
-                    arms = " ".join(
-                        f"WHEN coalesce({cl[1]}, false) THEN '{cl[0]}{i}'"
-                        if cl[1]
-                        else f"WHEN true THEN '{cl[0]}{i}'"
-                        for i, cl in enumerate(dml.clauses)
-                    )
-                    verdicts = self.spark.sql(
-                        f"SELECT t.key, CASE {arms} END AS _verdict "
-                        f"FROM {view} t LEFT SEMI JOIN {src_view} s "
-                        "ON t.key = s.key"
-                    )
-                delete_df = None
-                upsert_parts = []
-                del_tags = [
-                    f"'delete{i}'"
-                    for i, cl in enumerate(dml.clauses)
-                    if cl[0] == "delete"
-                ]
-                upd_tags = [
-                    f"'update{i}'"
-                    for i, cl in enumerate(dml.clauses)
-                    if cl[0] == "update"
-                ]
-                if verdicts is not None:
-                    verdicts.createOrReplaceTempView(f"{src_view}__v")
-                if del_tags:
-                    delete_df = self.spark.sql(
-                        f"SELECT key FROM {src_view}__v "
-                        f"WHERE _verdict IN ({', '.join(del_tags)})"
-                    )
-                if dml.by_source:
-                    # Delta's WHEN NOT MATCHED BY SOURCE clauses:
-                    # target keys NO source row matches (anti join) —
-                    # disjoint from every matched set AND from inserts
-                    # (⊆ source keys), so the single-commit contract
-                    # holds. First matching clause wins per key (same
-                    # CASE verdict shape as the matched list);
-                    # predicates and UPDATE SET expressions see the
-                    # target's current row only — there is no source
-                    # row, hence no `src` struct. DELETE verdicts join
-                    # the tombstone set (stamped at statement time);
-                    # UPDATE SET verdicts re-commit the target row with
-                    # the expressions applied AT the statement time —
-                    # like the UPDATE statement, an unmatched-by-source
-                    # update always wins merge precedence (contrast the
-                    # matched update_set clause, which commits at the
-                    # source row's event_time).
-                    anti_v = f"{src_view}__anti"
-                    self.spark.sql(
-                        f"SELECT t.* FROM {view} t LEFT ANTI JOIN "
-                        f"{src_view} s ON t.key = s.key"
-                    ).createOrReplaceTempView(anti_v)
-                    bs_arms = " ".join(
-                        f"WHEN coalesce({cl[1]}, false) THEN 'bs{cl[0]}{i}'"
-                        if cl[1]
-                        else f"WHEN true THEN 'bs{cl[0]}{i}'"
-                        for i, cl in enumerate(dml.by_source)
-                    )
-                    self.spark.sql(
-                        f"SELECT key, CASE {bs_arms} END AS _verdict "
-                        f"FROM {anti_v}"
-                    ).createOrReplaceTempView(f"{anti_v}__v")
-                    bs_del_tags = [
-                        f"'bsdelete{i}'"
-                        for i, cl in enumerate(dml.by_source)
-                        if cl[0] == "delete"
-                    ]
-                    if bs_del_tags:
-                        bysrc_df = self.spark.sql(
-                            f"SELECT key FROM {anti_v}__v WHERE "
-                            f"_verdict IN ({', '.join(bs_del_tags)})"
-                        )
-                        delete_df = (
-                            bysrc_df
-                            if delete_df is None
-                            else delete_df.unionByName(bysrc_df)
-                        )
-                    at_lit = statement_at.strftime(
-                        "%Y-%m-%d %H:%M:%S.%f"
-                    )
-                    for i, cl in enumerate(dml.by_source):
-                        if cl[0] != "update_set":
-                            continue
-                        sets = dict(cl[2])
-                        unknown = sorted(
-                            set(sets) - {c.name for c in schema.columns}
-                        )
-                        if unknown:
-                            raise BazofError(
-                                f"MERGE UPDATE SET references unknown "
-                                f"column(s) {unknown}; declared: "
-                                f"{[c.name for c in schema.columns]}"
-                            )
-                        cols_sql = ", ".join(
-                            f"({sets[c.name]}) AS {c.name}"
-                            if c.name in sets
-                            else f"t.{c.name} AS {c.name}"
-                            for c in schema.columns
-                        )
-                        upsert_parts.append(
-                            self.spark.sql(
-                                f"SELECT t.key AS key, "
-                                f"timestamp'{at_lit}' AS event_time, "
-                                f"{cols_sql} FROM {anti_v} t "
-                                f"JOIN {anti_v}__v v ON v.key = t.key "
-                                f"WHERE v._verdict = 'bsupdate_set{i}'"
-                            )
-                        )
-                if upd_tags:
-                    # UPDATE SET * = the full SOURCE row upserts the key
-                    upsert_parts.append(
-                        self.spark.sql(
-                            f"SELECT s.* FROM {src_view} s JOIN "
-                            f"{src_view}__v v ON s.key = v.key "
-                            f"WHERE v._verdict IN ({', '.join(upd_tags)})"
-                        )
-                    )
-                for i, cl in enumerate(dml.clauses):
-                    if cl[0] != "update_set":
-                        continue
-                    # per-column SET: the TARGET's current row with the
-                    # assignment expressions applied. Unqualified names
-                    # resolve to the target (like UPDATE t SET …); the
-                    # matched SOURCE row rides along as ONE struct
-                    # column named `src`, so expressions can read
-                    # src.<col> without making bare value-column
-                    # references ambiguous. Committed at the matched
-                    # SOURCE row's event_time — deterministic (no
-                    # wall-clock), and event-versioned like every azof
-                    # merge: a STALE source (src.event_time earlier
-                    # than the target row's current event_time) loses
-                    # merge precedence, so the UPDATE is a no-op for
-                    # that key. That asymmetry with DELETE clauses
-                    # (tombstones are stamped at the statement time and
-                    # always win) is the format's contract, not a bug;
-                    # README §MERGE documents it.
-                    sets = dict(cl[2])
-                    unknown = sorted(
-                        set(sets) - {c.name for c in schema.columns}
-                    )
-                    if unknown:
-                        raise BazofError(
-                            f"MERGE UPDATE SET references unknown "
-                            f"column(s) {unknown}; declared: "
-                            f"{[c.name for c in schema.columns]}"
-                        )
-                    cols_sql = ", ".join(
-                        f"({sets[c.name]}) AS {c.name}"
-                        if c.name in sets
-                        else f"t.{c.name} AS {c.name}"
-                        for c in schema.columns
-                    )
-                    upsert_parts.append(
-                        self.spark.sql(
-                            f"SELECT t.key AS key, src.event_time AS "
-                            f"event_time, {cols_sql} "
-                            f"FROM {view} t "
-                            f"JOIN (SELECT s.key AS _src_key, "
-                            f"struct(s.*) AS src FROM {src_view} s) "
-                            f"ON t.key = _src_key "
-                            f"JOIN {src_view}__v v ON v.key = t.key "
-                            f"WHERE v._verdict = 'update_set{i}'"
-                        )
-                    )
-                if dml.insert_unmatched:
-                    upsert_parts.append(
-                        self.spark.sql(
-                            f"SELECT s.* FROM {src_view} s LEFT ANTI "
-                            f"JOIN {view} t ON s.key = t.key"
-                        )
-                    )
-                upsert_df = None
-                for p in upsert_parts:
-                    upsert_df = p if upsert_df is None else (
-                        upsert_df.unionByName(p)
-                    )
-                merge_apply(
-                    self.spark,
-                    self.table(dml.table).path,
-                    upsert_df=upsert_df,
-                    delete_keys_df=delete_df,
-                    at=statement_at,
-                    create_segment=True,
-                    expected_version=pinned,
-                )
-            finally:
-                self.spark.catalog.dropTempView(view)
-                self.spark.catalog.dropTempView(src_view)
-                self.spark.catalog.dropTempView(f"{src_view}__v")
-                self.spark.catalog.dropTempView(f"{src_view}__anti")
-                self.spark.catalog.dropTempView(f"{src_view}__anti__v")
-            if self.spark.catalog.tableExists(dml.table):
-                self.scan(dml.table).createOrReplaceTempView(dml.table)
-            version = self.table(dml.table).current_version()
-            return self.spark.createDataFrame(
-                [(dml.table, version, "merge_multi")],
-                "table string, version string, operation string",
-            )
-
-        if dml.kind == "update":
-            self.update(dml.table, dict(dml.sets), where=dml.select)
-            if self.spark.catalog.tableExists(dml.table):
-                self.scan(dml.table).createOrReplaceTempView(dml.table)
-            version = self.table(dml.table).current_version()
-            return self.spark.createDataFrame(
-                [(dml.table, version, "update")],
-                "table string, version string, operation string",
-            )
-
-        df = self.sql(dml.select.rstrip().rstrip(";"))
-        if dml.kind == "ctas":
+        elif dml.kind == "update":
+            self.update(dml.table, dict(dml.sets), where=dml.select, at=at)
+        elif dml.kind == "ctas":
             if self.has_table(dml.table) and not dml.replace:
                 raise BazofError(
                     f"table {dml.table!r} already exists "
                     "(use CREATE OR REPLACE TABLE)"
                 )
+            df = self.sql(dml.select.rstrip().rstrip(";"))
             write_table(df, self.root, dml.table, mode="overwrite")
             op = "create"
-        else:
-            # insert and merge share the append path: in this format an
-            # appended delta IS a merge-by-key — the new version shadows
-            # the older one per key at read time (lakehouse.rs:40-79),
-            # which is exactly WHEN MATCHED UPDATE / NOT MATCHED INSERT
-            if not self.has_table(dml.table):
-                raise BazofError(
-                    f"cannot {dml.kind.upper()} into missing table "
-                    f"{dml.table!r}"
-                )
-            # SQL INSERT is positional: when the select's column names
-            # are not the table's (e.g. bare literals), align by
-            # position against (key, event_time, value columns…); a
-            # name-matching set is left alone (writer binds by name)
-            schema = self.table(dml.table).get_current_snapshot().schema
-            expected = ["key", "event_time", *schema.column_names()]
-            if set(df.columns) != set(expected) and len(df.columns) == len(
-                expected
-            ):
-                df = df.toDF(*expected)
+        elif dml.kind in ("insert", "merge"):
+            # insert and the native-upsert merge share the blind append:
+            # in this format an appended delta IS a merge-by-key — the
+            # new version shadows the older one per key at read time
+            # (lakehouse.rs:40-79), which is exactly WHEN MATCHED UPDATE
+            # SET * / NOT MATCHED INSERT *; nothing is read from the
+            # target, so there is no pin and no driver collect
+            df = self._positional(
+                self.sql(dml.select.rstrip().rstrip(";")), dml.table
+            )
             write_table(df, self.root, dml.table, mode="append")
-            op = dml.kind
+        else:
+            self._execute_merge(dml, at)
         if self.spark.catalog.tableExists(dml.table):
             self.scan(dml.table).createOrReplaceTempView(dml.table)
         version = self.table(dml.table).current_version()
         return self.spark.createDataFrame(
-            [(dml.table, version, op)], "table string, version string, operation string"
+            [(dml.table, version, op)],
+            "table string, version string, operation string",
         )
+
+    def _positional(self, df: DataFrame, table_name: str) -> DataFrame:
+        """SQL INSERT is positional: when the select's column names are
+        not the table's (e.g. bare literals), align by position against
+        (key, event_time, value columns…); a name-matching set is left
+        alone (the writer binds by name, and declared-type casting —
+        DECIMAL literals etc. — happens inside every writer path)."""
+        schema = self.table(table_name).get_current_snapshot().schema
+        expected = ["key", "event_time", *schema.column_names()]
+        if set(df.columns) != set(expected) and len(df.columns) == len(
+            expected
+        ):
+            return df.toDF(*expected)
+        return df
+
+    def _execute_merge(self, dml, at: datetime) -> None:
+        """Every MERGE clause list except the native upsert. Per matched
+        key the first WHEN MATCHED clause whose predicate holds on the
+        TARGET's current row wins (Delta/ANSI semantics); WHEN NOT
+        MATCHED THEN INSERT * takes the source rows whose keys are
+        absent from Current; WHEN NOT MATCHED BY SOURCE clauses route
+        the target keys no source row matches. Compiles to ONE atomic
+        commit: writer.merge_apply publishes the upsert delta and the
+        tombstone delta in the same snapshot, so a reader sees all of
+        the MERGE or none of it. Tombstones and unmatched-by-source
+        UPDATE rows share the single statement instant ``at``. The
+        commit CAS-checks the version pinned before the source read, so
+        a concurrent commit conflicts instead of being overwritten."""
+        from bazof_spark.errors import BazofError
+        from bazof_spark.writer import merge_apply
+
+        pinned = self.table(dml.table).current_version()
+        src = self.sql(dml.select.rstrip().rstrip(";"))
+        if dml.insert_unmatched or any(
+            cl[0] in ("update", "update_set") for cl in dml.clauses
+        ):
+            src = self._positional(src, dml.table)
+        if "key" not in src.columns:
+            raise BazofError(
+                "MERGE source must produce a 'key' column, got "
+                f"{src.columns}"
+            )
+        schema = self.table(dml.table).get_current_snapshot().schema
+        declared = [c.name for c in schema.columns]
+
+        def case_arms(clauses, prefix: str) -> str:
+            # per key: verdict = first clause whose pred holds on the
+            # target's CURRENT row (NULL pred result = clause does not
+            # apply — coalesce keeps three-valued logic from leaking a
+            # row past an earlier clause)
+            return " ".join(
+                f"WHEN coalesce({cl[1]}, false) THEN '{prefix}{cl[0]}{i}'"
+                if cl[1]
+                else f"WHEN true THEN '{prefix}{cl[0]}{i}'"
+                for i, cl in enumerate(clauses)
+            )
+
+        def tags(clauses, prefix: str, action: str) -> str:
+            return ", ".join(
+                f"'{prefix}{action}{i}'"
+                for i, cl in enumerate(clauses)
+                if cl[0] == action
+            )
+
+        def assigned(sets) -> str:
+            # the target row's declared columns, SET expressions applied
+            sets = dict(sets)
+            unknown = sorted(set(sets) - set(declared))
+            if unknown:
+                raise BazofError(
+                    f"MERGE UPDATE SET references unknown column(s) "
+                    f"{unknown}; declared: {declared}"
+                )
+            return ", ".join(
+                f"({sets[c]}) AS {c}" if c in sets else f"t.{c} AS {c}"
+                for c in declared
+            )
+
+        view = self._fresh_current_view(dml.table)
+        src_view = f"{view}__src"
+        try:
+            src.createOrReplaceTempView(src_view)
+            if dml.clauses:
+                self.spark.sql(
+                    f"SELECT t.key, CASE {case_arms(dml.clauses, '')} END "
+                    f"AS _verdict FROM {view} t LEFT SEMI JOIN {src_view} s "
+                    "ON t.key = s.key"
+                ).createOrReplaceTempView(f"{src_view}__v")
+            delete_parts = []
+            upsert_parts = []
+            if del_tags := tags(dml.clauses, "", "delete"):
+                delete_parts.append(
+                    self.spark.sql(
+                        f"SELECT key FROM {src_view}__v "
+                        f"WHERE _verdict IN ({del_tags})"
+                    )
+                )
+            if dml.by_source:
+                # Delta's WHEN NOT MATCHED BY SOURCE clauses: target
+                # keys NO source row matches (anti join) — disjoint from
+                # every matched set AND from inserts (⊆ source keys), so
+                # the single-commit contract holds. Same first-match
+                # verdict shape as the matched list; predicates and
+                # UPDATE SET expressions see the target's current row
+                # only — there is no source row, hence no `src` struct.
+                # DELETE verdicts join the tombstone set (stamped at
+                # ``at``); UPDATE SET verdicts re-commit the target row
+                # with the expressions applied AT ``at`` — like the
+                # UPDATE statement, an unmatched-by-source update always
+                # wins merge precedence (contrast the matched update_set
+                # clause, which commits at the source row's event_time).
+                anti_v = f"{src_view}__anti"
+                self.spark.sql(
+                    f"SELECT t.* FROM {view} t LEFT ANTI JOIN "
+                    f"{src_view} s ON t.key = s.key"
+                ).createOrReplaceTempView(anti_v)
+                self.spark.sql(
+                    f"SELECT key, CASE {case_arms(dml.by_source, 'bs')} "
+                    f"END AS _verdict FROM {anti_v}"
+                ).createOrReplaceTempView(f"{anti_v}__v")
+                if bs_del_tags := tags(dml.by_source, "bs", "delete"):
+                    delete_parts.append(
+                        self.spark.sql(
+                            f"SELECT key FROM {anti_v}__v WHERE "
+                            f"_verdict IN ({bs_del_tags})"
+                        )
+                    )
+                at_lit = at.strftime("%Y-%m-%d %H:%M:%S.%f")
+                for i, cl in enumerate(dml.by_source):
+                    if cl[0] != "update_set":
+                        continue
+                    upsert_parts.append(
+                        self.spark.sql(
+                            f"SELECT t.key AS key, "
+                            f"timestamp'{at_lit}' AS event_time, "
+                            f"{assigned(cl[2])} FROM {anti_v} t "
+                            f"JOIN {anti_v}__v v ON v.key = t.key "
+                            f"WHERE v._verdict = 'bsupdate_set{i}'"
+                        )
+                    )
+            if upd_tags := tags(dml.clauses, "", "update"):
+                # UPDATE SET * = the full SOURCE row upserts the key
+                upsert_parts.append(
+                    self.spark.sql(
+                        f"SELECT s.* FROM {src_view} s JOIN "
+                        f"{src_view}__v v ON s.key = v.key "
+                        f"WHERE v._verdict IN ({upd_tags})"
+                    )
+                )
+            for i, cl in enumerate(dml.clauses):
+                if cl[0] != "update_set":
+                    continue
+                # per-column SET: the TARGET's current row with the
+                # assignment expressions applied. Unqualified names
+                # resolve to the target (like UPDATE t SET …); the
+                # matched SOURCE row rides along as ONE struct column
+                # named `src`, so expressions can read src.<col> without
+                # making bare value-column references ambiguous.
+                # Committed at the matched SOURCE row's event_time —
+                # deterministic (no wall-clock), and event-versioned
+                # like every azof merge: a STALE source (src.event_time
+                # earlier than the target row's current event_time)
+                # loses merge precedence, so the UPDATE is a no-op for
+                # that key. That asymmetry with DELETE clauses
+                # (tombstones are stamped at the statement time and
+                # always win) is the format's contract, not a bug;
+                # README §MERGE documents it.
+                upsert_parts.append(
+                    self.spark.sql(
+                        f"SELECT t.key AS key, src.event_time AS "
+                        f"event_time, {assigned(cl[2])} "
+                        f"FROM {view} t "
+                        f"JOIN (SELECT s.key AS _src_key, "
+                        f"struct(s.*) AS src FROM {src_view} s) "
+                        f"ON t.key = _src_key "
+                        f"JOIN {src_view}__v v ON v.key = t.key "
+                        f"WHERE v._verdict = 'update_set{i}'"
+                    )
+                )
+            if dml.insert_unmatched:
+                upsert_parts.append(
+                    self.spark.sql(
+                        f"SELECT s.* FROM {src_view} s LEFT ANTI "
+                        f"JOIN {view} t ON s.key = t.key"
+                    )
+                )
+            merge_apply(
+                self.spark,
+                self.table(dml.table).path,
+                upsert_df=_union_all(upsert_parts),
+                delete_keys_df=_union_all(delete_parts),
+                at=at,
+                create_segment=True,
+                expected_version=pinned,
+            )
+        finally:
+            for v in (view, src_view, f"{src_view}__v", f"{src_view}__anti",
+                      f"{src_view}__anti__v"):
+                self.spark.catalog.dropTempView(v)
+
+
+def _union_all(parts: list) -> DataFrame | None:
+    return functools.reduce(DataFrame.unionByName, parts) if parts else None

@@ -178,53 +178,28 @@ _INSERT_RE = re.compile(
     rf"^INSERT\s+INTO\s+(?P<name>{_IDENT})\s+(?P<select>.+)$",
     re.IGNORECASE | re.DOTALL,
 )
-# MERGE INTO t USING <source query> [ON/WHEN canonical suffix]. The
-# format's append-delta IS merge-by-key (a newer version shadows the
-# older one per key at read time, crates/azof/src/lakehouse.rs:40-79),
-# so the only merge the format can express is the full-row
-# upsert-by-key — the optional ON/WHEN suffix is validated against
-# exactly that canonical shape and anything else is a clear error, not
-# silently different semantics.
+# MERGE INTO t USING <src> [ON key WHEN … clause list] — our Delta-style
+# extension over the format's merge-by-key (a newer version shadows the
+# older one per key at read time, crates/azof/src/lakehouse.rs:40-79).
+# ONE parser: _MERGE_RE splits off the target, _parse_merge_clauses
+# (sqlcheck.merge_tail_ast) parses every clause list:
+#   MERGE INTO t USING <src> ON key
+#     WHEN MATCHED [AND <p>] THEN DELETE | UPDATE SET * | UPDATE SET c = e, …
+#     WHEN NOT MATCHED THEN INSERT *
+#     WHEN NOT MATCHED BY SOURCE [AND <p>] THEN DELETE | UPDATE SET c = e, …
+# Clause order is significant (first matching clause wins per key,
+# Delta/ANSI semantics); predicates evaluate over the TARGET's current
+# row. _merge_kind labels the parsed list; the executor has two routes:
+# the "merge" shape (bare `USING <src>`, or one unpredicated UPDATE SET *
+# plus INSERT *) IS the format's native upsert, a blind append, and every
+# other shape compiles to ONE atomic commit (writer.merge_apply: data
+# delta + tombstone delta in the same snapshot). _MERGE_WHEN_RE only
+# finds WHEN [NOT] MATCHED text that is not a parseable clause list, for
+# the unsupported-shape error — never silently different semantics.
 _MERGE_RE = re.compile(
     rf"^MERGE\s+INTO\s+(?P<name>{_IDENT})\s+USING\s+(?P<select>.+)$",
     re.IGNORECASE | re.DOTALL,
 )
-_MERGE_CANONICAL_SUFFIX_RE = re.compile(
-    r"\s+ON\s+key\s+WHEN\s+MATCHED\s+THEN\s+UPDATE\s+SET\s+\*"
-    r"\s+WHEN\s+NOT\s+MATCHED\s+THEN\s+INSERT\s+\*\s*;?\s*$",
-    re.IGNORECASE,
-)
-# the delete form: MERGE INTO t USING <src> ON key
-# WHEN MATCHED [AND <pred>] THEN DELETE — tombstone every target key
-# the source matches (optionally narrowed by <pred> over the target's
-# current row). Compiles to delete_keys over the matched set, so it is
-# time-travel-consistent exactly like DELETE FROM.
-_MERGE_DELETE_SUFFIX_RE = re.compile(
-    r"\s+ON\s+key\s+WHEN\s+MATCHED"
-    r"(?:\s+AND\s+(?P<pred>.+?))?\s+THEN\s+DELETE\s*;?\s*$",
-    re.IGNORECASE | re.DOTALL,
-)
-# the insert-only form: MERGE INTO t USING <src> ON key
-# WHEN NOT MATCHED THEN INSERT * — append only the source rows whose
-# keys are absent from the target's Current state; existing keys are
-# left untouched (a plain MERGE would upsert them). Version-pinned so
-# a key committed concurrently can't be silently overwritten.
-_MERGE_INSERT_ONLY_SUFFIX_RE = re.compile(
-    r"\s+ON\s+key\s+WHEN\s+NOT\s+MATCHED\s+THEN\s+INSERT\s+\*\s*;?\s*$",
-    re.IGNORECASE,
-)
-
-# multi-clause MERGE — the shape real pipelines write, combining the
-# three single forms in one statement with per-clause predicates:
-#   MERGE INTO t USING <src> ON key
-#     WHEN MATCHED AND <p1> THEN DELETE
-#     WHEN MATCHED [AND <p2>] THEN UPDATE SET *
-#     WHEN NOT MATCHED THEN INSERT *
-# Clause order is significant (first matching WHEN MATCHED clause wins
-# per key, Delta/ANSI semantics); predicates evaluate over the TARGET's
-# current row, like the single merge-delete form. Compiles to ONE
-# atomic commit (writer.merge_apply: data delta + tombstone delta in
-# the same snapshot).
 _MERGE_WHEN_RE = re.compile(
     r"\bWHEN\s+(?:NOT\s+)?MATCHED\b", re.IGNORECASE
 )
@@ -233,11 +208,12 @@ _MERGE_WHEN_RE = re.compile(
 def _parse_merge_clauses(select: str):
     """Parse ``<src> ON key WHEN ... [WHEN ...]*`` into
     (source_sql, matched_clauses, insert_unmatched, by_source_clauses)
-    — or None when the text doesn't have that shape (the caller falls
-    through to the single-form error). matched_clauses entries, in
-    statement order: ("delete", pred), ("update", pred) for the
-    full-row UPDATE SET *, or ("update_set", pred, ((col, expr), …))
-    for per-column assignment lists. by_source_clauses are the WHEN
+    — or None when the text has no ``ON key WHEN …`` clause list (a
+    bare ``USING <src>`` upsert, or the unsupported-shape error).
+    matched_clauses entries, in statement order: ("delete", pred),
+    ("update", pred) for the full-row UPDATE SET *, or ("update_set",
+    pred, ((col, expr), …)) for per-column assignment lists.
+    by_source_clauses are the WHEN
     NOT MATCHED BY SOURCE [AND pred] THEN DELETE / UPDATE SET
     assignment-list clauses in statement order (first match wins per
     unmatched target key, same reachability rule: an unpredicated
@@ -338,7 +314,7 @@ def _merge_ast_to_result(ast: dict):
                 # the UPDATE statement; the new row commits at the
                 # SOURCE row's event_time (a stale source — earlier
                 # than the target's current event_time — is a merge-
-                # precedence no-op, see lakehouse merge_multi)
+                # precedence no-op, see Lakehouse._execute_merge)
                 _check_assign_cols(act[1])
                 matched.append(("update_set", pred, act[1]))
     return ast["src"], tuple(matched), insert_unmatched, tuple(by_source)
@@ -352,6 +328,20 @@ def _check_assign_cols(sets: tuple) -> None:
                 "key and event_time are immutable (the updated row's "
                 "commit instant is the clause's, never an expression)"
             )
+
+
+def _merge_kind(clauses: tuple, insert: bool, by_source: tuple) -> str:
+    """The label of a parsed clause list (status-frame ``operation``).
+    Only "merge" routes differently: it is the native upsert."""
+    if by_source:
+        return "merge_multi"
+    if clauses == (("update", ""),) and insert:
+        return "merge"
+    if len(clauses) == 1 and clauses[0][0] == "delete" and not insert:
+        return "merge_delete"
+    if not clauses and insert:
+        return "merge_insert"
+    return "merge_multi"
 
 
 # UPDATE t SET col = expr[, ...] [WHERE <pred>] — sugar over the
@@ -377,32 +367,30 @@ _DELETE_RE = re.compile(
 
 @dataclass(frozen=True)
 class DmlStatement:
-    #: "ctas"|"insert"|"merge"|"merge_delete"|"merge_insert"|
-    #: "merge_multi"|"delete"|"update"
+    #: "ctas"|"insert"|"delete"|"update", or a MERGE label from
+    #: _merge_kind: "merge" (native upsert) | "merge_delete" |
+    #: "merge_insert" | "merge_multi" (all three run the clause list)
     kind: str
     table: str
     replace: bool
-    select: str  # for "delete"/"update": the WHERE predicate ("" = all)
+    #: the source query; for "delete"/"update": the WHERE predicate
+    #: ("" = all)
+    select: str
     #: for "update": ((column, sql_expression), ...) SET assignments
     sets: tuple = ()
-    #: for "merge_delete": the WHEN MATCHED AND predicate ("" = all
-    #: matched keys), evaluated over the target's current rows
-    pred: str = ""
-    #: for "merge_multi": ("delete"|"update", pred) WHEN MATCHED
-    #: clauses in statement order (first match wins per key)
+    #: MERGE: WHEN MATCHED clauses in statement order (first match wins
+    #: per key): ("delete"|"update", pred) or ("update_set", pred,
+    #: ((col, expr), …)); "" predicate = all matched keys, evaluated
+    #: over the target's current row
     clauses: tuple = ()
-    #: for "merge_multi": a WHEN NOT MATCHED THEN INSERT * clause
+    #: MERGE: a WHEN NOT MATCHED THEN INSERT * clause
     insert_unmatched: bool = False
-    #: for "merge_multi": WHEN NOT MATCHED BY SOURCE clauses in
-    #: statement order (first match wins per unmatched target key):
-    #: ("delete", pred) or ("update_set", pred, ((col, expr), …));
-    #: "" predicate = all unmatched target keys, expressions over the
-    #: target's current row (no source row exists, so no `src` struct)
+    #: MERGE: WHEN NOT MATCHED BY SOURCE clauses in statement order
+    #: (first match wins per unmatched target key): ("delete", pred) or
+    #: ("update_set", pred, ((col, expr), …)); "" predicate = all
+    #: unmatched target keys, expressions over the target's current row
+    #: (no source row exists, so no `src` struct)
     by_source: tuple = ()
-    #: convenience view of by_source: the DELETE clause's predicate
-    #: (None = no BY SOURCE DELETE clause) — kept because the
-    #: single-kind form predates BY SOURCE UPDATE SET
-    by_source_delete: str | None = None
 
 
 def _lstrip_trivia(sql: str) -> str:
@@ -473,84 +461,34 @@ def parse_dml(sql: str) -> DmlStatement | None:
     m = _MERGE_RE.match(head)
     if m:
         select = m.group("select")
+        parsed = _parse_merge_clauses(select)
+        if parsed is not None:
+            src, clauses, insert_unmatched, by_src = parsed
+            return DmlStatement(
+                kind=_merge_kind(clauses, insert_unmatched, by_src),
+                table=m.group("name"),
+                replace=False,
+                select=src,
+                clauses=clauses,
+                insert_unmatched=insert_unmatched,
+                by_source=by_src,
+            )
+        # no clause list: a bare `USING <src>` is the native upsert
+        # ("ON key" alone is left to the source query — it is a legal
+        # join condition there); any other WHEN [NOT] MATCHED is an
+        # unsupported shape
         spans = _string_spans(select)
-        # single-clause suffix regexes use lazy-dot predicates that
-        # could mis-span ACROSS clauses of a multi-clause statement
-        # (pred swallowing "… THEN UPDATE SET * WHEN MATCHED …"), so
-        # they only apply when there is at most one top-level WHEN
-        n_whens = sum(
-            1
-            for w in _MERGE_WHEN_RE.finditer(select)
-            if not _inside(w.start(), spans)
-        )
-        canon = _MERGE_CANONICAL_SUFFIX_RE.search(select)
-        if canon is not None and not _inside(canon.start(), spans):
-            select = select[: canon.start()]
-        elif (
-            n_whens <= 1
-            and (dele := _MERGE_DELETE_SUFFIX_RE.search(select)) is not None
-            and not _inside(dele.start(), spans)
-        ):
-            return DmlStatement(
-                kind="merge_delete",
-                table=m.group("name"),
-                replace=False,
-                select=select[: dele.start()],
-                pred=(dele.group("pred") or "").strip(),
-            )
-        elif (
-            (ins := _MERGE_INSERT_ONLY_SUFFIX_RE.search(select)) is not None
-            and not _inside(ins.start(), spans)
-        ):
-            return DmlStatement(
-                kind="merge_insert",
-                table=m.group("name"),
-                replace=False,
-                select=select[: ins.start()],
-            )
-        else:
-            # general clause-list form (combined multi-clause MERGE);
-            # falls back to a clear error for any WHEN [NOT] MATCHED
-            # text that is not a parseable clause list — never silently
-            # different semantics ("ON key" alone is left to the source
-            # query — it is a legal join condition there)
-            multi = _parse_merge_clauses(select)
-            if multi is not None:
-                src, clauses, insert_unmatched, by_src = multi
-                if not clauses and insert_unmatched and not by_src:
-                    return DmlStatement(
-                        kind="merge_insert",
-                        table=m.group("name"),
-                        replace=False,
-                        select=src,
-                    )
-                bs_del = next(
-                    (cl[1] for cl in by_src if cl[0] == "delete"), None
+        for cand in _MERGE_WHEN_RE.finditer(select):
+            if not _inside(cand.start(), spans):
+                raise SqlRewriteError(
+                    "MERGE INTO supports the format's merges-by-key: "
+                    "'ON key' followed by a clause list of WHEN MATCHED "
+                    "[AND <pred>] THEN UPDATE SET */UPDATE SET col = "
+                    "expr/DELETE, WHEN NOT MATCHED THEN INSERT * and "
+                    "WHEN NOT MATCHED BY SOURCE [AND <pred>] THEN "
+                    "DELETE/UPDATE SET col = expr, "
+                    f"got: {select[cand.start():].strip()!r}"
                 )
-                return DmlStatement(
-                    kind="merge_multi",
-                    table=m.group("name"),
-                    replace=False,
-                    select=src,
-                    clauses=clauses,
-                    insert_unmatched=insert_unmatched,
-                    by_source=by_src,
-                    by_source_delete=bs_del,
-                )
-            for cand in _MERGE_WHEN_RE.finditer(select):
-                if not _inside(cand.start(), spans):
-                    raise SqlRewriteError(
-                        "MERGE INTO supports only the format's native "
-                        "merges-by-key: 'ON key WHEN MATCHED THEN "
-                        "UPDATE SET * WHEN NOT MATCHED THEN INSERT *' "
-                        "(full-row upsert), 'ON key WHEN MATCHED [AND "
-                        "<pred>] THEN DELETE', 'ON key WHEN NOT "
-                        "MATCHED THEN INSERT *', or a combined clause "
-                        "list of those shapes (WHEN MATCHED [AND p] "
-                        "THEN UPDATE SET */DELETE ... WHEN NOT MATCHED "
-                        "THEN INSERT *), "
-                        f"got: {select[cand.start():].strip()!r}"
-                    )
         return DmlStatement(
             kind="merge",
             table=m.group("name"),

@@ -16,16 +16,15 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from bazof_spark.cli import main  # noqa: E402
 
-REF = "/root/reference/test-data"
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 @pytest.fixture()
-def lake(tmp_path):
+def lake(tmp_path, reference_data):
     """Writable lakehouse: the reference's table0 (has CSVs for gen/
     upsert) + financials (multi-file history)."""
     for t in ("table0", "financials"):
-        shutil.copytree(os.path.join(REF, t), str(tmp_path / t))
+        shutil.copytree(os.path.join(reference_data, t), str(tmp_path / t))
     return str(tmp_path)
 
 

@@ -18,7 +18,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from bazof_spark import Lakehouse  # noqa: E402
 from bazof_spark.interop import duckdb_view_sql  # noqa: E402
 
-REF = "/root/reference/test-data"
 
 
 def _duck(sql):
@@ -55,10 +54,12 @@ def _spark_rows(df):
         ("financials", "2020-06-01T00:00:00.000Z"),
     ],
 )
-def test_reference_goldens_match_scan(spark, table, as_of):
-    lh = Lakehouse(spark, REF)
+def test_reference_goldens_match_scan(spark, reference_data, table, as_of):
+    lh = Lakehouse(spark, reference_data)
     want = _spark_rows(lh.scan(table, as_of=as_of))
-    got = _duck(duckdb_view_sql(os.path.join(REF, table), as_of=as_of))
+    got = _duck(
+        duckdb_view_sql(os.path.join(reference_data, table), as_of=as_of)
+    )
     assert got == want
     assert want  # non-vacuous
 
@@ -184,9 +185,9 @@ def test_renamed_column_coalesces(spark, tmp_path):
     assert {r[2] for r in got} == {7, 8}
 
 
-def test_empty_as_of_returns_empty_typed(spark):
+def test_empty_as_of_returns_empty_typed(spark, reference_data):
     sql = duckdb_view_sql(
-        os.path.join(REF, "table0"), as_of="2000-01-01T00:00:00.000Z"
+        os.path.join(reference_data, "table0"), as_of="2000-01-01T00:00:00.000Z"
     )
     assert duckdb.sql(sql).fetchall() == []
 
@@ -245,13 +246,13 @@ def test_changes_sql_matches_scan_changes(spark, tmp_path):
         assert want  # non-vacuous: every window has changes
 
 
-def test_changes_sql_append_only_reference_table(spark):
+def test_changes_sql_append_only_reference_table(spark, reference_data):
     """Append-only financials (no tombstones): the feed is pure
     inserts/updates; both engines agree on a real multi-version
     history window."""
     from bazof_spark.interop import duckdb_changes_sql
 
-    lh = Lakehouse(spark, REF)
+    lh = Lakehouse(spark, reference_data)
     since, until = (
         "2019-01-17T00:00:00.000Z",
         "2020-06-01T00:00:00.000Z",
@@ -260,7 +261,7 @@ def test_changes_sql_append_only_reference_table(spark):
         lh.scan_changes("financials", since=since, until=until)
     )
     got = _duck(
-        duckdb_changes_sql(os.path.join(REF, "financials"), since, until)
+        duckdb_changes_sql(os.path.join(reference_data, "financials"), since, until)
     )
     assert got == want
     assert want

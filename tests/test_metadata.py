@@ -262,14 +262,14 @@ def test_bad_metadata_raises():
         )
 
 
-def test_reference_snapshots_parse():
+def test_reference_snapshots_parse(reference_data):
     """Our reader parses the reference's own shipped snapshots."""
     for name in ("table0", "table1", "table2", "financials"):
-        with open(f"/root/reference/test-data/{name}/s1.json") as f:
+        with open(f"{reference_data}/{name}/s1.json") as f:
             snapshot = Snapshot.deserialize(f.read())
         assert snapshot.get_data_files(Current) or name  # financials: 171 files
 
-    with open("/root/reference/test-data/financials/s1.json") as f:
+    with open(f"{reference_data}/financials/s1.json") as f:
         fin = Snapshot.deserialize(f.read())
     # 2021 is the only open-ended year; Current sees its quarters + base
     current = fin.get_data_files(Current)

@@ -14,7 +14,7 @@ the beyond-reference §5 upgrade (the reference has no property tests).
 from datetime import datetime, timedelta, timezone
 
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from bazof_spark.asof import Current, EventTime
@@ -539,6 +539,15 @@ def _mc_model(table, source, clauses, insert, by_src):
     return out
 
 
+# target with a NULL value and a key on each side of the predicate
+# bound; source matching two target keys and bringing one new key
+_MC_PINNED = {
+    "table": {"a": 10.0, "b": None, "c": 70.0, "d": 40.0},
+    "source": {"a": 1.0, "c": 2.0, "x": 3.0},
+    "by_src": [],
+}
+
+
 @pytest.mark.usefixtures("spark")
 @settings(
     max_examples=10,
@@ -546,6 +555,13 @@ def _mc_model(table, source, clauses, insert, by_src):
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
 @given(case=multi_merge_case)
+# every MERGE shape runs against the model whatever hypothesis draws:
+# the lone DELETE with and without a predicate, insert-only, and the
+# canonical UPDATE SET * + INSERT * upsert
+@example(case=dict(_MC_PINNED, clauses=[("delete", None)], insert=False))
+@example(case=dict(_MC_PINNED, clauses=[("delete", 50)], insert=False))
+@example(case=dict(_MC_PINNED, clauses=[], insert=True))
+@example(case=dict(_MC_PINNED, clauses=[("update", None)], insert=True))
 def test_multi_clause_merge_matches_model(spark, tmp_path_factory, case):
     """Random table states × random source rows × random clause lists
     (with NULL target values exercising three-valued predicates): the

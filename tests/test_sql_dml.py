@@ -444,13 +444,13 @@ def test_parse_merge_delete_detection():
         "MERGE INTO t USING SELECT key FROM s ON key "
         "WHEN MATCHED THEN DELETE"
     )
-    assert d.kind == "merge_delete" and d.table == "t" and d.pred == ""
+    assert d.kind == "merge_delete" and d.table == "t" and d.clauses[0][1] == ""
     assert d.select.strip() == "SELECT key FROM s"
     d = parse_dml(
         "merge into x.y using (select 'a' as key) on key "
         "when matched and value > 5 then delete;"
     )
-    assert d.kind == "merge_delete" and d.pred == "value > 5"
+    assert d.kind == "merge_delete" and d.clauses[0][1] == "value > 5"
     # the upsert canonical form still parses as plain merge
     d = parse_dml(
         "MERGE INTO t USING SELECT * FROM s ON key WHEN MATCHED THEN "
@@ -574,13 +574,13 @@ def test_merge_insert_only_end_to_end(spark, lh):
     import bazof_spark.writer as w
 
     seen = {}
-    orig = w.append_delta
+    orig = w.merge_apply
 
-    def spy(spark, table_path, df, **kw):
+    def spy(spark, table_path, **kw):
         seen.update(kw)
-        return orig(spark, table_path, df, **kw)
+        return orig(spark, table_path, **kw)
 
-    w.append_delta = spy
+    w.merge_apply = spy
     try:
         lh.sql(
             "MERGE INTO t USING SELECT 'z' AS key, "
@@ -588,7 +588,7 @@ def test_merge_insert_only_end_to_end(spark, lh):
             "ON key WHEN NOT MATCHED THEN INSERT *"
         )
     finally:
-        w.append_delta = orig
+        w.merge_apply = orig
     assert seen.get("expected_version") is not None
 
 
@@ -602,22 +602,23 @@ def test_merge_delete_pins_read_version(spark, lh):
         "timestamp'2024-01-01' AS event_time, 1.0 AS value"
     )
     seen = {}
-    orig = w.append_delta
+    orig = w.merge_apply
 
-    def spy(spark, table_path, df, **kw):
+    def spy(spark, table_path, **kw):
         seen.update(kw)
-        return orig(spark, table_path, df, **kw)
+        return orig(spark, table_path, **kw)
 
-    w.append_delta = spy
+    w.merge_apply = spy
     try:
         lh.sql(
             "MERGE INTO t USING SELECT 'a' AS key ON key "
             "WHEN MATCHED THEN DELETE"
         )
     finally:
-        w.append_delta = orig
+        w.merge_apply = orig
     assert seen.get("expected_version") is not None
-    assert seen.get("tombstone") is True
+    assert seen.get("delete_keys_df") is not None
+    assert lh.sql("SELECT key FROM t").count() == 0  # the tombstone landed
 
 
 def test_update_casts_set_expressions_to_declared_types(spark, lh):
@@ -1004,7 +1005,7 @@ def test_parse_merge_multi_clause_detection():
     assert d.clauses == (
         ("delete", "a"), ("update", "b"), ("delete", ""),
     )
-    # the legacy single forms still route to their own kinds
+    # the single-clause shapes keep their own labels
     assert parse_dml(
         "MERGE INTO t USING SELECT * FROM s ON key "
         "WHEN MATCHED THEN DELETE"
@@ -1129,6 +1130,12 @@ def test_merge_multi_null_predicate_keeps_row(spark, lh):
     assert got == {"a": None}
 
 
+def _by_source_delete(d):
+    """The WHEN NOT MATCHED BY SOURCE DELETE clause's predicate (None =
+    no such clause)."""
+    return next((cl[1] for cl in d.by_source if cl[0] == "delete"), None)
+
+
 def test_parse_merge_not_matched_by_source():
     from bazof_spark.sql import SqlRewriteError
 
@@ -1139,7 +1146,7 @@ def test_parse_merge_not_matched_by_source():
     )
     assert d.kind == "merge_multi"
     assert d.clauses == (("update", ""),)
-    assert d.by_source_delete == "value < 10"
+    assert _by_source_delete(d) == "value < 10"
     assert not d.insert_unmatched
     # unpredicated form deletes every unmatched target key
     d = parse_dml(
@@ -1147,7 +1154,7 @@ def test_parse_merge_not_matched_by_source():
         "WHEN NOT MATCHED BY SOURCE THEN DELETE"
     )
     assert d.kind == "merge_multi"
-    assert d.clauses == () and d.by_source_delete == ""
+    assert d.clauses == () and _by_source_delete(d) == ""
     # UPDATE SET * has no source row to take values from — rejected
     with pytest.raises(SqlRewriteError, match="cannot UPDATE SET"):
         parse_dml(
@@ -1166,7 +1173,7 @@ def test_parse_merge_not_matched_by_source():
         ("update_set", "value < 10", (("value", "value * 2"),)),
         ("delete", ""),
     )
-    assert d.by_source_delete == ""
+    assert _by_source_delete(d) == ""
     with pytest.raises(SqlRewriteError, match="unreachable"):
         parse_dml(
             "MERGE INTO t USING SELECT * FROM s ON key "
@@ -1345,13 +1352,13 @@ def test_parse_merge_action_then_inside_string():
     assert d.kind == "merge_multi"
     assert d.clauses == (("delete", "note = 'x THEN UPDATE SET v = 1'"),)
     assert d.insert_unmatched
-    # the single-clause fast path keeps its own correct handling
+    # the lone clause parses the same way
     d = parse_dml(
         "MERGE INTO t USING SELECT * FROM s ON key "
         "WHEN MATCHED AND note = 'x THEN UPDATE SET v = 1' THEN DELETE"
     )
     assert d.kind == "merge_delete"
-    assert d.pred == "note = 'x THEN UPDATE SET v = 1'"
+    assert d.clauses[0][1] == "note = 'x THEN UPDATE SET v = 1'"
     # same protection for an assignment EXPRESSION ending in a string
     # that embeds THEN DELETE
     d = parse_dml(
@@ -1488,3 +1495,49 @@ def test_merge_by_source_update_end_to_end(spark, lh):
         ).collect()
     }
     assert old == {str(i): float(i) for i in range(6)}
+
+
+def _delta_starts(lh, table):
+    """{delta file: start} over the whole segment tree of Current."""
+    out = {}
+    segs = list(lh.table(table).get_current_snapshot().segments)
+    while segs:
+        seg = segs.pop()
+        segs.extend(seg.segments)
+        out.update((d.file, d.start) for d in seg.delta)
+    return out
+
+
+def test_dml_at_stamps_every_statement(spark, lh):
+    """``dml_at`` is the statement instant of every DML that stamps
+    'now': the delta each statement commits starts at it, whichever
+    MERGE shape, DELETE FROM or UPDATE wrote it."""
+    import datetime as dt
+
+    lh.sql(
+        """
+        CREATE TABLE t AS
+        SELECT CAST(id AS STRING) AS key,
+               timestamp'2024-01-01 00:00:00' AS event_time,
+               CAST(id AS DOUBLE) AS value
+          FROM range(8)
+        """
+    )
+    at = dt.datetime(2024, 6, 1, tzinfo=dt.timezone.utc)
+    statements = [
+        "MERGE INTO t USING SELECT '0' AS key ON key "
+        "WHEN MATCHED THEN DELETE",
+        # every source key matches: the INSERT * clause adds no row
+        "MERGE INTO t USING SELECT key, event_time, value FROM t "
+        "WHERE key = '1' ON key "
+        "WHEN MATCHED THEN DELETE WHEN NOT MATCHED THEN INSERT *",
+        "DELETE FROM t WHERE key = '2'",
+        "UPDATE t SET value = value + 1 WHERE key = '3'",
+    ]
+    for stmt in statements:
+        before = _delta_starts(lh, "t")
+        lh.sql(stmt, dml_at=at)
+        new = {
+            f: s for f, s in _delta_starts(lh, "t").items() if f not in before
+        }
+        assert new and set(new.values()) == {at}, (stmt, new)

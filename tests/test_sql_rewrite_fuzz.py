@@ -249,6 +249,12 @@ def test_merge_keywords_inside_strings_and_comments():
     assert not d.select.rstrip().upper().endswith("INSERT *")  # clause gone
 
 
+def _by_source_delete(d):
+    """The WHEN NOT MATCHED BY SOURCE DELETE clause's predicate (None =
+    no such clause)."""
+    return next((cl[1] for cl in d.by_source if cl[0] == "delete"), None)
+
+
 def test_merge_multi_clause_fuzz_strings_stay_inert():
     """Round-8 multi-clause MERGE: clause text inside string literals
     never splits real clauses, predicates carrying quotes/parens parse
@@ -288,7 +294,7 @@ def test_merge_multi_clause_fuzz_strings_stay_inert():
     assert d.kind == "merge_multi"
     assert "BY SOURCE' AS doc" in d.select
     assert d.clauses == (("update", ""),)
-    assert d.by_source_delete == "note != 'BY SOURCE'"
+    assert _by_source_delete(d) == "note != 'BY SOURCE'"
 
 
 # ---------------------------------------------------------------------------
@@ -385,7 +391,7 @@ def test_round7_statements_leading_trivia_and_case():
         "-- lead\nmerge into t using select * from s on key "
         "when matched and a < 'THEN DELETE' then delete"
     )
-    assert d.kind == "merge_delete" and d.pred == "a < 'THEN DELETE'"
+    assert d.kind == "merge_delete" and d.clauses[0][1] == "a < 'THEN DELETE'"
     # a leading string literal is a token, not trivia: these are not
     # statements (Spark rejects them), never an unpredicated DELETE
     from bazof_spark.sql import parse_show
@@ -476,7 +482,7 @@ def test_merge_clause_list_generative_roundtrip():
             + " ".join(parts)
         )
         d = parse_dml(sql)
-        # the canonical two-clause form routes to the legacy kind
+        # the canonical two-clause form is the native upsert
         if (
             len(matched) == 1
             and matched[0] == ("update", "")
@@ -491,12 +497,10 @@ def test_merge_clause_list_generative_roundtrip():
             and not insert
             and by_src is None
         ):
-            # the single-form router takes ANY lone matched-DELETE
-            # (predicated or not) — _MERGE_DELETE_SUFFIX_RE's pred is
-            # optional (exposed when the round-10 fuzz widened the RNG
-            # stream; the model previously only covered pred == "")
+            # ANY lone matched-DELETE (predicated or not) is labelled
+            # merge_delete
             assert d.kind == "merge_delete", sql
-            assert d.pred == matched[0][1], sql
+            assert d.clauses[0][1] == matched[0][1], sql
             continue
         if not matched and insert and by_src is None:
             assert d.kind == "merge_insert", sql
@@ -505,4 +509,4 @@ def test_merge_clause_list_generative_roundtrip():
         assert d.select.strip() == "SELECT * FROM src WHERE x = ','", sql
         assert d.clauses == tuple(matched), sql
         assert d.insert_unmatched == insert, sql
-        assert d.by_source_delete == by_src, sql
+        assert _by_source_delete(d) == by_src, sql

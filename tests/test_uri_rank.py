@@ -27,7 +27,6 @@ from bazof_spark.lakehouse import (  # noqa: E402
     _uri_variants,
 )
 
-REF = "/root/reference/test-data"
 AS_OF = "2019-01-17T00:00:00.000Z"
 
 
@@ -112,29 +111,47 @@ def test_uri_variants_cover_sql_spellings(spark):
         assert sql_norm(spark, v) == want, v
 
 
-def test_scale_rank_path_matches_literal_path(spark, monkeypatch):
+def test_scale_rank_path_matches_literal_path(
+    spark, reference_data, monkeypatch
+):
     """Force the >512-file broadcast-join rank path on a real
     multi-file table and pin it to the literal-map path's answer."""
-    base = Lakehouse(spark, REF).scan("financials", as_of=AS_OF).collect()
+    base = (
+        Lakehouse(spark, reference_data)
+        .scan("financials", as_of=AS_OF)
+        .collect()
+    )
     monkeypatch.setattr(lh_mod, "_RANK_MAP_LITERAL_MAX", 0)
-    joined = Lakehouse(spark, REF).scan("financials", as_of=AS_OF).collect()
+    joined = (
+        Lakehouse(spark, reference_data)
+        .scan("financials", as_of=AS_OF)
+        .collect()
+    )
     assert sorted(map(tuple, joined)) == sorted(map(tuple, base))
     assert len(base) > 0
 
 
-def test_scale_rank_path_on_file_uri_root(spark, monkeypatch):
+def test_scale_rank_path_on_file_uri_root(spark, reference_data, monkeypatch):
     """The join path must survive a file:// root — input_file_name's
     file-scheme spellings and the snapshot's URI paths meet in the
     scheme-less canonical form."""
-    plain = Lakehouse(spark, REF).scan("financials", as_of=AS_OF).collect()
+    plain = (
+        Lakehouse(spark, reference_data)
+        .scan("financials", as_of=AS_OF)
+        .collect()
+    )
     monkeypatch.setattr(lh_mod, "_RANK_MAP_LITERAL_MAX", 0)
     via_uri = (
-        Lakehouse(spark, "file://" + REF).scan("financials", as_of=AS_OF).collect()
+        Lakehouse(spark, "file://" + reference_data)
+        .scan("financials", as_of=AS_OF)
+        .collect()
     )
     assert sorted(map(tuple, via_uri)) == sorted(map(tuple, plain))
 
 
-def test_scale_rank_path_fails_fast_on_unknown_spelling(spark, monkeypatch):
+def test_scale_rank_path_fails_fast_on_unknown_spelling(
+    spark, reference_data, monkeypatch
+):
     """A URI spelling the map doesn't anticipate must raise, not
     silently null out precedence (which would quietly corrupt merges)."""
     monkeypatch.setattr(lh_mod, "_RANK_MAP_LITERAL_MAX", 0)
@@ -142,7 +159,9 @@ def test_scale_rank_path_fails_fast_on_unknown_spelling(spark, monkeypatch):
         lh_mod, "_normalize_file_uri", lambda p: "WRONG/" + os.path.basename(p)
     )
     with pytest.raises(Exception, match="no precedence rank"):
-        Lakehouse(spark, REF).scan("financials", as_of=AS_OF).collect()
+        Lakehouse(spark, reference_data).scan(
+            "financials", as_of=AS_OF
+        ).collect()
 
 
 def _author_many_file_table(root: str, n_files: int) -> str:
