@@ -273,7 +273,8 @@ def main(argv: list[str] | None = None) -> int:
     p_ft = sub.add_parser(
         "footer",
         help="parse a parquet file's footer with the repo's from-spec "
-        "thrift compact-protocol reader (operators/parquetmeta) and "
+        "thrift compact-protocol reader (operators/thriftcodec, field "
+        "views in operators/parquetmeta) and "
         "print it as JSON; no Spark session",
     )
     p_ft.add_argument("file")

@@ -913,6 +913,12 @@ def _referenced_files(snapshot: Snapshot) -> set[str]:
 
 
 _SNAPSHOT_RE = re.compile(r"^s(\d+)\.json$")
+#: temp dirs a crashed write leaves in a table root: the JVM job dir
+#: ``_{stem}_job`` and the pyarrow stage dirs ``_{stem}_stage-{hex}``
+#: (writer) and ``_ds_stage_{hex}`` (Data Source writer)
+_STAGING_DIR_RE = re.compile(
+    r"^_(?:.*_)?(?:job|stage-[0-9a-f]+)$|^_ds_stage_[0-9a-f]+$"
+)
 
 
 def _numeric_versions(table_path: str) -> list[int]:
@@ -976,7 +982,8 @@ def vacuum_table(
     """Garbage-collect a table directory (Delta-style VACUUM): delete
     snapshot JSONs older than the ``keep_versions`` most recent ones,
     parquet data files referenced by NO retained snapshot, and leftover
-    ``_*_job`` temp dirs from crashed distributed writes.
+    temp dirs from crashed distributed writes (``_*_job``,
+    ``_*_stage-*``, ``_ds_stage_*``).
 
     Concurrency (two guards, belt and braces):
 
@@ -1010,11 +1017,13 @@ def vacuum_table(
         raise BazofError("keep_versions must be >= 1")
     table = lakehouse.table(table_name)
 
-    def _young(full: str) -> bool:
+    def _young(full: str, if_unknown: bool = False) -> bool:
         if min_age_s <= 0:
             return False
         mtime = iofs.file_mtime(full)
-        return mtime is not None and (_time.time() - mtime) < min_age_s
+        if mtime is None:
+            return if_unknown
+        return (_time.time() - mtime) < min_age_s
 
     with _commit_lock(table.path):
         current = int(table.current_version())
@@ -1040,8 +1049,10 @@ def vacuum_table(
         for f, is_dir in sorted(iofs.listdir_info(table.path)):
             full = iofs.join(table.path, f)
             if is_dir:
-                if f.startswith("_") and f.endswith("_job") and not _young(
-                    full
+                # an object-store prefix has no mtime: it may be an
+                # in-flight write's stage dir, so unknown age keeps it
+                if _STAGING_DIR_RE.match(f) and not _young(
+                    full, if_unknown=True
                 ):
                     removed_dirs.append(f)
                     if not dry_run:

@@ -1,7 +1,7 @@
 """From-spec parquet SPLIT-BLOCK BLOOM FILTERS (parquet-format
 BloomFilter.md): build, serialize, append to finished files, and probe
 — completing the format vertical one layer past the r11/r12 page
-indexes (footer → pages → page indexes → bloom filters). The format's
+indexes (footer → page indexes → bloom filters). The format's
 own snapshots already carry FILE-level key blooms
 (metadata.KeyBloom); parquet-native blooms are per-ROW-GROUP,
 per-column, and — being part of the public format — readable by every

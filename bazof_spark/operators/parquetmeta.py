@@ -1,41 +1,27 @@
-"""From-spec parquet FOOTER parser (Thrift compact protocol).
+"""From-spec parquet FOOTER and page-index views (Thrift compact
+protocol).
 
-Every byte this engine serves comes out of parquet files, and every
-footer read so far goes through pyarrow/the JVM — the C/Java
-implementations. This module is the INDEPENDENT direction for the
-container metadata (page bytes still decompress through pyarrow's C
-codecs, see :mod:`parquetpages`): a hand-written Thrift *compact
-protocol* decoder plus the public parquet.thrift field-id mappings,
-pinned field-by-field against pyarrow's parsed metadata on real files
+The footer, OffsetIndex and ColumnIndex blobs are parsed by the repo's
+one compact-protocol reader (:mod:`thriftcodec`); this module flattens
+its typed tree into ``{field_id: value}`` dicts and maps the public
+parquet.thrift field ids onto named views, pinned field-by-field
+against pyarrow's parsed metadata on real files
 (tests/test_parquetmeta.py).
-The protocol is purely structural — varints, zigzag, nibble-packed
-field headers — no constant tables to transcribe, so everything here
-is verifiable in-sandbox.
 
 Layout (parquet-format spec): the file ends with
 ``<FileMetaData thrift> <4-byte LE length> b"PAR1"``; the thrift blob
 is a compact-protocol STRUCT.
 
-Compact protocol (thrift spec):
-- varint = LEB128; signed ints are zigzag-encoded varints;
-- each field header is one byte ``(id_delta << 4) | wire_type`` with
-  id_delta in 1..15 (0 ⇒ a zigzag varint field id follows);
-- wire types: 0 stop, 1 true, 2 false, 3 i8, 4 i16, 5 i32, 6 i64,
-  7 double (LE), 8 binary/string (varint length + bytes),
-  9 list / 10 set (``(size << 4) | elem_type``, size 15 ⇒ varint),
-  11 map, 12 struct;
-- BOOLEAN values inside lists are full bytes (1/2).
-
-The generic reader decodes ANY compact struct into
-``{field_id: value}`` (structs → dicts, lists → lists) with no schema,
-then the typed views below pick out the FileMetaData/RowGroup/
-ColumnChunk/Statistics field ids — a wrong id mapping cannot hide,
-because the pyarrow pin compares the decoded values on every fixture.
+The typed views below pick out the FileMetaData/RowGroup/ColumnChunk/
+Statistics field ids — a wrong id mapping cannot hide, because the
+pyarrow pin compares the decoded values on every fixture.
 """
 
 from __future__ import annotations
 
 import struct as _struct
+
+from bazof_spark.operators.thriftcodec import parse_struct
 
 # parquet.thrift public enums (verified against pyarrow in the tests)
 PHYSICAL_TYPES = {
@@ -54,105 +40,23 @@ ENCODINGS = {
 REPETITION = {0: "REQUIRED", 1: "OPTIONAL", 2: "REPEATED"}
 
 
-class _Reader:
-    def __init__(self, data: bytes, pos: int = 0):
-        self.data = data
-        self.pos = pos
-
-    def byte(self) -> int:
-        if self.pos >= len(self.data):
-            raise ValueError("thrift blob truncated")
-        b = self.data[self.pos]
-        self.pos += 1
-        return b
-
-    def varint(self) -> int:
-        out = 0
-        shift = 0
-        while True:
-            b = self.byte()
-            out |= (b & 0x7F) << shift
-            if not b & 0x80:
-                return out
-            shift += 7
-            if shift > 70:
-                raise ValueError("thrift varint too long")
-
-    def zigzag(self) -> int:
-        v = self.varint()
-        return (v >> 1) ^ -(v & 1)
-
-    def binary(self) -> bytes:
-        n = self.varint()
-        out = self.data[self.pos : self.pos + n]
-        if len(out) != n:
-            raise ValueError("thrift binary runs past the buffer")
-        self.pos += n
-        return out
-
-    def double(self) -> float:
-        (v,) = _struct.unpack_from("<d", self.data, self.pos)
-        self.pos += 8
-        return v
+def _plain(wire: int, value):
+    """A thriftcodec tree value as plain Python: structs →
+    ``{field_id: value}``, lists/sets → lists, maps → dicts."""
+    if wire == 12:
+        return {fid: _plain(w, v) for fid, w, v in value}
+    if wire in (9, 10):
+        elem, vals = value
+        return [_plain(elem, v) for v in vals]
+    if wire == 11:
+        kt, vt, pairs = value
+        return {_plain(kt, k): _plain(vt, v) for k, v in pairs}
+    return value
 
 
-def _read_value(r: _Reader, wire_type: int):
-    if wire_type == 1:
-        return True
-    if wire_type == 2:
-        return False
-    if wire_type == 3:
-        return r.zigzag()  # i8
-    if wire_type in (4, 5, 6):
-        return r.zigzag()  # i16/i32/i64
-    if wire_type == 7:
-        return r.double()
-    if wire_type == 8:
-        return r.binary()
-    if wire_type in (9, 10):
-        head = r.byte()
-        size = head >> 4
-        elem = head & 0x0F
-        if size == 15:
-            size = r.varint()
-        out = []
-        for _ in range(size):
-            if elem in (1, 2):
-                # list-element booleans are FULL bytes, unlike the
-                # bool-in-field-header trick
-                out.append(r.byte() == 1)
-            else:
-                out.append(_read_value(r, elem))
-        return out
-    if wire_type == 11:
-        head = r.varint()
-        if head == 0:
-            return {}
-        kt_vt = r.byte()
-        kt, vt = kt_vt >> 4, kt_vt & 0x0F
-        return {
-            (_read_value(r, kt)): _read_value(r, vt) for _ in range(head)
-        }
-    if wire_type == 12:
-        return _read_struct(r)
-    raise ValueError(f"unknown thrift compact wire type {wire_type}")
-
-
-def _read_struct(r: _Reader) -> dict:
-    """One compact-protocol struct → {field_id: value}."""
-    out: dict = {}
-    field_id = 0
-    while True:
-        head = r.byte()
-        if head == 0:  # STOP
-            return out
-        delta = head >> 4
-        wire_type = head & 0x0F
-        if delta:
-            field_id += delta
-        else:
-            field_id = r.zigzag()
-        out[field_id] = _read_value(r, wire_type)
+def _read_dict(blob: bytes) -> dict:
+    """One compact-protocol struct → ``{field_id: value}``."""
+    return _plain(12, parse_struct(blob)[0])
 
 
 def _utf8(v) -> str | None:
@@ -249,7 +153,7 @@ def _row_group(d: dict) -> dict:
 
 def parse_footer_blob(meta: bytes) -> dict:
     """Decode a raw FileMetaData thrift blob."""
-    d = _read_struct(_Reader(meta))
+    d = _read_dict(meta)
     return {
         "version": d.get(1),
         "schema": [_schema_element(e) for e in d.get(2, [])],
@@ -305,7 +209,7 @@ def parse_offset_index_blob(blob: bytes) -> list[dict]:
     form above slices it out of whole-file bytes; readers that fetch
     the index region by byte range — e.g. the Data Source page-prune
     pass over object stores — hand the blob in directly)."""
-    d = _read_struct(_Reader(blob))
+    d = _read_dict(blob)
     return [
         {
             "offset": p.get(1),
@@ -334,7 +238,7 @@ def parse_column_index(data: bytes, chunk: dict) -> dict | None:
 def parse_column_index_blob(blob: bytes) -> dict:
     """Decode a raw ColumnIndex thrift blob (byte-range-fetch twin of
     :func:`parse_column_index`, same contract)."""
-    d = _read_struct(_Reader(blob))
+    d = _read_dict(blob)
     return {
         "null_pages": d.get(1, []),
         "min_values": d.get(2, []),

@@ -1,7 +1,8 @@
 """Generic thrift COMPACT-protocol round-trip codec: parse any struct
-into a typed tree and re-emit it byte-identically. The in-repo
-parquet footer and page readers (operators/parquetmeta/parquetpages)
-only ever READ footers; appending bloom filters to a finished file
+into a typed tree and re-emit it byte-identically. This is the repo's
+only compact-protocol reader: the parquet footer and page-index views
+(operators/parquetmeta) flatten its tree into ``{field_id: value}``
+dicts, and appending bloom filters to a finished file
 (operators/parquetbloom) needs to REWRITE the footer with two new
 fields per column chunk while preserving every other byte of a footer
 some OTHER writer produced — so the codec keeps wire types, field
@@ -10,8 +11,11 @@ round-trip identity is pinned on real footers from four independent
 writers (pyarrow, parquet-mr, duckdb, arrow-rs) in
 tests/test_parquetbloom.py.
 
-Encoding rules mirrored from the public thrift compact spec (and the
-reading half of operators/parquetmeta._read_struct):
+Parsed bytes come from outside the program (files, byte-range GETs),
+so every read is bounds-checked: a truncated blob, or a length or
+value that runs past its end, raises ``ValueError``.
+
+Encoding rules mirrored from the public thrift compact spec:
 
 - field header: ``(delta << 4) | wire_type`` when 0 < delta ≤ 15,
   else a ``0x0_``-type byte followed by the zigzag field id;
@@ -44,6 +48,8 @@ class _R:
         self.pos = pos
 
     def byte(self) -> int:
+        if self.pos >= len(self.data):
+            raise ValueError("thrift blob truncated")
         b = self.data[self.pos]
         self.pos += 1
         return b
@@ -63,6 +69,21 @@ class _R:
     def zigzag(self) -> int:
         v = self.varint()
         return (v >> 1) ^ -(v & 1)
+
+    def binary(self) -> bytes:
+        n = self.varint()
+        out = self.data[self.pos : self.pos + n]
+        if len(out) != n:
+            raise ValueError("thrift binary runs past the buffer")
+        self.pos += n
+        return out
+
+    def double(self) -> float:
+        if self.pos + 8 > len(self.data):
+            raise ValueError("thrift double runs past the buffer")
+        (v,) = _struct.unpack_from("<d", self.data, self.pos)
+        self.pos += 8
+        return v
 
 
 def parse_struct(data: bytes, pos: int = 0) -> tuple[list[Field], int]:
@@ -97,16 +118,9 @@ def _parse_value(r: _R, wire: int):
     if wire in (3, 4, 5, 6):
         return r.zigzag()
     if wire == 7:
-        v = _struct.unpack_from("<d", r.data, r.pos)[0]
-        r.pos += 8
-        return v
+        return r.double()
     if wire == 8:
-        n = r.varint()
-        out = r.data[r.pos : r.pos + n]
-        if len(out) != n:
-            raise ValueError("thrift binary runs past the buffer")
-        r.pos += n
-        return out
+        return r.binary()
     if wire in (9, 10):
         head = r.byte()
         size = head >> 4

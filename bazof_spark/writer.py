@@ -907,10 +907,13 @@ def append_delta(
             # the 100-TB path: repartition by key (a key lives in exactly
             # one file, so stable precedence among equal-start siblings
             # can never arbitrate between two versions of one key),
-            # event_time-DESC within each file
-            stem = _fresh_delta_name(table_path, target.id, len(target.delta))[
-                : -len(".parquet")
-            ]
+            # event_time-DESC within each file. The per-commit token
+            # keeps concurrent writers' part files apart (the
+            # commit_delta_files discipline), so no name is reserved.
+            stem = (
+                f"{target.id}_delta{len(target.delta) + 1}_"
+                f"{uuid.uuid4().hex[:8]}"
+            )
             for name in _write_distributed_delta(
                 ordered, table_path, stem, num_files
             ):
@@ -1044,7 +1047,7 @@ def commit_delta_files(
     table = Table(path=table_path, name=os.path.basename(table_path.rstrip("/")))
     start, end = _aware_utc(start), _aware_utc(end)
     token = uuid.uuid4().hex[:8]
-    moved: list[str] | None = None
+    new_deltas: list[Delta] | None = None
     for attempt in range(retries + 1):
         version = table.current_version()
         snapshot = table.get_snapshot(version)
@@ -1060,16 +1063,16 @@ def commit_delta_files(
             segs, segment_id, create_segment, start, next_version
         )
         target = segs[idx]
-        if moved is None:  # move exactly once, under collision-free names
+        if new_deltas is None:  # move exactly once, under collision-free names
             stem = f"{target.id}_delta{len(target.delta) + 1}_{token}"
             moved = []
             for i, staged in enumerate(sorted(staged_paths)):
                 name = f"{stem}_p{i:05d}.parquet"
                 iofs.move(staged, iofs.join(table_path, name))
                 moved.append(name)
-        new_deltas = [
-            _delta_with_stats(table_path, n, start, end) for n in moved
-        ]
+            new_deltas = [
+                _delta_with_stats(table_path, n, start, end) for n in moved
+            ]
         segs[idx] = dataclasses.replace(
             target, delta=_insert_deltas(tuple(target.delta), new_deltas, start)
         )
@@ -1116,7 +1119,7 @@ def create_table_version_from_files(
     version_path = iofs.join(table_path, VERSION_FILE)
     start, end = _aware_utc(start), _aware_utc(end)
     token = uuid.uuid4().hex[:8]
-    moved: list[str] | None = None
+    deltas: tuple[Delta, ...] | None = None
     retries = 3
     for attempt in range(retries + 1):
         fresh = not iofs.exists(version_path)
@@ -1137,22 +1140,18 @@ def create_table_version_from_files(
             next_version = str(
                 max([base, *_numeric_versions(table_path)]) + 1
             )
-        if moved is None:  # move exactly once, under collision-free names
+        if deltas is None:  # move exactly once, under collision-free names
             moved = []
             for i, staged in enumerate(sorted(staged_paths)):
                 name = f"w_{token}_p{i:05d}.parquet"
                 iofs.move(staged, iofs.join(table_path, name))
                 moved.append(name)
+            deltas = tuple(
+                _delta_with_stats(table_path, n, start, end) for n in moved
+            )
         snapshot = Snapshot(
             segments=(
-                Segment(
-                    id=f"w{next_version}",
-                    start=start,
-                    delta=tuple(
-                        _delta_with_stats(table_path, n, start, end)
-                        for n in moved
-                    ),
-                ),
+                Segment(id=f"w{next_version}", start=start, delta=deltas),
             ),
             schema=schema,
         )

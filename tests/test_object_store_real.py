@@ -216,9 +216,18 @@ def test_evolve_restore_vacuum_over_real_s3(spark, s3_endpoint):
         for c in lh.table("t").get_current_snapshot().schema.columns
     ] == ["value"]
 
+    # a stage prefix has no mtime on S3: its age is unknown, so the
+    # default retention keeps it (it may be an in-flight write's)
+    stage = iofs.join(table_uri, "_ds_stage_0123456789ab")
+    iofs.write_text(iofs.join(stage, "part.parquet"), "staged")
+    kept = vacuum_table(lh, "t", keep_versions=1, dry_run=True)
+    assert kept["removed_dirs"] == []
+
     # vacuum with zero retention sweeps unreferenced snapshots' debris;
     # the restored current version must keep every referenced file
-    vacuum_table(lh, "t", keep_versions=1, min_age_s=0)
+    swept = vacuum_table(lh, "t", keep_versions=1, min_age_s=0)
+    assert swept["removed_dirs"] == ["_ds_stage_0123456789ab"]
+    assert not iofs.exists(stage)
     report = validate_table(lh, "t", data_checks=False)
     assert not [e for e in report.errors if "missing" in e], report.errors
     assert _read_current_keys(table_uri) == {"a": "a1"}

@@ -182,23 +182,21 @@ def test_page_index_parses_and_matches_data():
     every OffsetIndex offset starts a parseable PageHeader whose
     header+body span equals compressed_page_size; (2) data-derived,
     each page's ColumnIndex min/max/null_count equals the bounds of
-    the values our own page reader decodes for that page's
-    first_row_index span; (3) cross-layout, v1/v2 pages × int64/string
-    × multi row groups."""
+    the values pyarrow decodes for that page's first_row_index span;
+    (3) cross-layout, v1/v2 pages × int64/string × multi row
+    groups."""
     import io
 
     import pyarrow as pa
     import pyarrow.parquet as pq
 
     from bazof_spark.operators.parquetmeta import (
-        _Reader,
-        _read_struct,
         decode_int64_stat,
         parse_column_index,
         parse_offset_index,
         parse_parquet_footer,
     )
-    from bazof_spark.operators.parquetpages import read_column
+    from bazof_spark.operators.thriftcodec import get_field, parse_struct
 
     ints = [None if i % 7 == 6 else (i * 37) % 1000 for i in range(10000)]
     strs = [None if i % 9 == 8 else f"s{(i * 13) % 500:04d}" for i in range(10000)]
@@ -216,7 +214,12 @@ def test_page_index_parses_and_matches_data():
         )
         data = buf.getvalue()
         meta = parse_parquet_footer(data)
-        decoded = {c: read_column(data, c) for c in ("a", "s")}
+        back = pq.read_table(pa.BufferReader(data), columns=["a", "s"])
+        # BYTE_ARRAY bounds are raw bytes: compare strings as binary
+        decoded = {
+            "a": back["a"].to_pylist(),
+            "s": back["s"].cast(pa.binary()).to_pylist(),
+        }
         row_base = 0
         for g in meta["row_groups"]:
             for chunk in g["columns"]:
@@ -227,11 +230,10 @@ def test_page_index_parses_and_matches_data():
                 assert len(oi) == len(ci["min_values"]) == len(ci["null_pages"])
                 assert len(oi) > 1  # data_page_size=512 forces multi-page
                 for k, p in enumerate(oi):
-                    r = _Reader(data, p["offset"])
-                    hdr = _read_struct(r)
-                    assert hdr.get(1) in (0, 3), kw  # data page v1/v2
+                    hdr, end = parse_struct(data, p["offset"])
+                    assert get_field(hdr, 1) in (0, 3), kw  # data page v1/v2
                     assert (
-                        (r.pos - p["offset"]) + hdr.get(3)
+                        (end - p["offset"]) + get_field(hdr, 3)
                         == p["compressed_page_size"]
                     )
                     lo = row_base + p["first_row_index"]

@@ -13,7 +13,7 @@ import pytest
 
 from bazof_spark.errors import BazofError
 from bazof_spark.lakehouse import Lakehouse
-from bazof_spark.maintenance import validate_table
+from bazof_spark.maintenance import _referenced_files, validate_table
 from bazof_spark.schema import ColumnDef, ColumnType, TableSchema
 from bazof_spark.streaming.sink import upsert_sink
 from bazof_spark.writer import TableWriter, append_delta
@@ -87,6 +87,10 @@ def test_upsert_distributed_multifile(spark, tmp_path):
     snap = lh.table("t").get_current_snapshot()
     files = [d.file for d in snap.segments[-1].delta]
     assert len(files) == 4
+    # no stray files: every parquet on disk is non-empty and referenced
+    on_disk = {f for f in os.listdir(tmp_path / "t") if f.endswith(".parquet")}
+    assert on_disk == _referenced_files(snap)
+    assert all((tmp_path / "t" / f).stat().st_size > 0 for f in on_disk)
     got = dict(_current(lh))
     assert got["7"] == "v7" and got["199"] == "v199" and len(got) == 200
     validate_table(lh, "t").raise_if_invalid()
@@ -322,8 +326,17 @@ def test_commit_delta_files_retries_on_conflict(spark, tmp_path):
             write_table(mk(["c"], "2024-03-01", 3), root, "t", mode="append")
         return real_publish(*args, **kwargs)
 
+    real_stats = W._delta_with_stats
+    stat_reads = []  # file names, one per stats read
+
+    def counting_stats(table_path, file_name, *args, **kwargs):
+        stat_reads.append(file_name)
+        return real_stats(table_path, file_name, *args, **kwargs)
+
     start = datetime(2024, 2, 1, tzinfo=timezone.utc)
-    with mock.patch.object(W, "_publish_snapshot", side_effect=racing_publish):
+    with mock.patch.object(
+        W, "_publish_snapshot", side_effect=racing_publish
+    ), mock.patch.object(W, "_delta_with_stats", side_effect=counting_stats):
         W.commit_delta_files(str(tdir), [str(staged)], start, start)
 
     got = {
@@ -331,6 +344,8 @@ def test_commit_delta_files_retries_on_conflict(spark, tmp_path):
     }
     assert got == {"a": 1.0, "b": 2.0, "c": 3.0}
     assert fired["n"] == 1  # conflict happened exactly once
+    # the retry re-derives metadata only: stats are read once per file
+    assert stat_reads and len(stat_reads) == len(set(stat_reads))
 
 
 def test_concurrent_upserts_lose_nothing(spark, tmp_path):

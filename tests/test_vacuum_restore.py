@@ -68,8 +68,10 @@ def test_vacuum_gc_and_retention(spark, tmp_path):
     root = str(tmp_path)
     lh = _seed(spark, root)  # v1..v3
     tdir = f"{root}/t"
-    # crashed-write debris
-    os.makedirs(os.path.join(tdir, "_x_job"))
+    # crashed-write debris: a JVM job dir and both pyarrow stage dirs
+    debris = ["_ds_stage_0123456789ab", "_x_job", "_x_stage-0123456789ab"]
+    for d in debris:
+        os.makedirs(os.path.join(tdir, d))
     # a data file no snapshot references
     with open(os.path.join(tdir, "orphan.parquet"), "wb") as f:
         f.write(b"junk")
@@ -79,7 +81,7 @@ def test_vacuum_gc_and_retention(spark, tmp_path):
     # staged delta); snapshot GC proceeds regardless (guard-serialized)
     young = vacuum_table(lh, "t", keep_versions=1, dry_run=True)
     assert "orphan.parquet" not in young["removed_files"]
-    assert "_x_job" not in young["removed_dirs"]
+    assert young["removed_dirs"] == []
 
     dry = vacuum_table(lh, "t", keep_versions=1, dry_run=True, min_age_s=0)
     assert "orphan.parquet" in dry["removed_files"]
@@ -88,12 +90,13 @@ def test_vacuum_gc_and_retention(spark, tmp_path):
     # aged debris is collected even with the default retention window
     old = time.time() - 7200
     os.utime(os.path.join(tdir, "orphan.parquet"), (old, old))
-    os.utime(os.path.join(tdir, "_x_job"), (old, old))
+    for d in debris:
+        os.utime(os.path.join(tdir, d), (old, old))
     result = vacuum_table(lh, "t", keep_versions=1)
     assert result["removed_snapshots"] == ["s1.json", "s2.json"]
     assert "orphan.parquet" in result["removed_files"]
-    assert result["removed_dirs"] == ["_x_job"]
-    assert not os.path.exists(os.path.join(tdir, "_x_job"))
+    assert result["removed_dirs"] == debris
+    assert not any(os.path.exists(os.path.join(tdir, d)) for d in debris)
     # deltas of v3 are all still referenced → still on disk; scan works
     assert _val(lh) == "a3"
     validate_table(lh, "t").raise_if_invalid()
