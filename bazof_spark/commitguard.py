@@ -27,11 +27,14 @@ conflict) hardened by a per-table guard around the publish window:
   one Delta Lake closes with a LogStore; wiring a real service is a
   one-class drop-in via :func:`register_commit_guard`.
 
-Every snapshot publish in the repo (writer.append_delta /
-commit_delta_files / create_table_version_from_files, and the
-maintenance publishers: checkpoint/optimize/restore/evolve) goes
-through ``writer._publish_snapshot``, which acquires the guard from
-:func:`guard_for` — so a registered guard covers ALL commit paths.
+Every snapshot publisher in the repo — the writers (append_delta,
+delete_keys, merge_apply, commit_delta_files,
+create_table_version_from_files, the Data Source batch and stream
+sinks) and the maintenance publishers (checkpoint/optimize, evolve,
+restore) — runs the one commit transaction ``writer._commit``, whose
+``writer._publish_snapshot`` acquires the guard from :func:`guard_for`
+— so a registered guard covers ALL commit paths (pinned by
+tests/test_commitguard.py::test_publish_snapshot_has_one_caller).
 """
 
 from __future__ import annotations

@@ -1154,6 +1154,7 @@ class BazofBatchWriter(DataSourceArrowWriter):
         self._table_path = iofs.join(root, name)
         self._overwrite = overwrite
         self._segment_id = options.get("segment") or None
+        self._pending_add: list = []
         if overwrite:
             # declared schema derives from the incoming frame
             self._table_schema = TableSchema.from_struct_type(schema)
@@ -1180,9 +1181,9 @@ class BazofBatchWriter(DataSourceArrowWriter):
                     )
                 # auto-evolve: the evolved schema is derived here so
                 # tasks write files with the new nullable columns, but
-                # the evolution SNAPSHOT only commits in commit(),
-                # alongside the data — an aborted write must not leave
-                # the table's schema changed
+                # the columns only commit in commit(), in the SAME
+                # snapshot as the data — an aborted write must not
+                # leave the table's schema changed
                 from bazof_spark.schema import (
                     ColumnDef,
                     column_type_from_spark,
@@ -1271,63 +1272,47 @@ class BazofBatchWriter(DataSourceArrowWriter):
 
     # -- driver side ------------------------------------------------------
     def commit(self, messages):
-        from datetime import datetime, timezone
-
         from bazof_spark import iofs
         from bazof_spark.errors import BazofError
-        from bazof_spark.writer import (
-            commit_delta_files,
-            create_table_version_from_files,
-        )
 
         real = [m for m in messages if m is not None and m.file_path]
         try:
-            if not real:
-                if self._overwrite:
-                    # an empty table has no state to publish
-                    raise BazofError("cannot commit an empty write")
-                return  # empty append: no-op, no version churn
-            files = [m.file_path for m in real]
-            start = datetime.fromtimestamp(
-                min(m.start_us for m in real) / 1e6, tz=timezone.utc
-            )
-            end = datetime.fromtimestamp(
-                max(m.end_us for m in real) / 1e6, tz=timezone.utc
-            )
-            self._apply_pending_evolution()
-            if self._overwrite:
-                create_table_version_from_files(
-                    self._table_path, self._table_schema, files, start, end
-                )
-            else:
-                commit_delta_files(
-                    self._table_path,
-                    files,
-                    start,
-                    end,
-                    segment_id=self._segment_id,
-                    create_segment=True,
-                )
+            if real:
+                self._publish(real)
+            elif self._overwrite:
+                # an empty table has no state to publish
+                raise BazofError("cannot commit an empty write")
+            # else: empty append — no-op, no version churn
         finally:
             iofs.delete_dir(self._stage_dir)
 
-    def _apply_pending_evolution(self) -> None:
-        """Commit the mergeSchema column additions as a metadata-only
-        snapshot — called from commit(), never earlier, so an aborted
-        write leaves the table schema untouched."""
-        add = getattr(self, "_pending_add", None)
-        if not add:
-            return
-        from types import SimpleNamespace
+    def _publish(self, real: list) -> None:
+        """Publish the staged files named in ``real`` as ONE snapshot:
+        the replacement state (overwrite) or an appended delta set
+        carrying any mergeSchema columns in the same snapshot."""
+        from datetime import datetime, timezone
 
-        from bazof_spark.maintenance import evolve_table_schema
-
-        name = os.path.basename(self._table_path.rstrip("/"))
-        lh = SimpleNamespace(
-            table=lambda n: Table(path=self._table_path, name=n)
+        from bazof_spark.writer import (
+            _commit_files,
+            create_table_version_from_files,
         )
-        evolve_table_schema(lh, name, add=list(add))
-        self._pending_add = None
+
+        files = [m.file_path for m in real]
+        start = datetime.fromtimestamp(
+            min(m.start_us for m in real) / 1e6, tz=timezone.utc
+        )
+        end = datetime.fromtimestamp(
+            max(m.end_us for m in real) / 1e6, tz=timezone.utc
+        )
+        if self._overwrite:
+            create_table_version_from_files(
+                self._table_path, self._table_schema, files, start, end
+            )
+        else:
+            _commit_files(
+                self._table_path, files, start, end,
+                segment_id=self._segment_id, add=self._pending_add,
+            )
 
     def abort(self, messages):
         from bazof_spark import iofs
@@ -1613,11 +1598,7 @@ class BazofStreamWriter(BazofBatchWriter, DataSourceStreamArrowWriter):
     """
 
     def __init__(self, options: dict, schema: StructType, overwrite: bool):
-        import hashlib
-        import uuid
-
         from bazof_spark.errors import TableNotFoundError
-        from bazof_spark.schema import TableSchema  # noqa: F401
 
         if overwrite:
             raise ValueError(
@@ -1625,12 +1606,11 @@ class BazofStreamWriter(BazofBatchWriter, DataSourceStreamArrowWriter):
             )
         try:
             super().__init__(options, schema, overwrite=False)
-            self._create_pending = False
         except TableNotFoundError:
-            # first batch will create the table from the stream schema
+            # the first non-empty batch creates the table from the
+            # stream schema (an overwrite of nothing); later batches
+            # append
             super().__init__(options, schema, overwrite=True)
-            self._overwrite = False
-            self._create_pending = True
         # batchIds are scoped to a CHECKPOINT (a fresh checkpoint
         # restarts at 0), so the replay marker must be too — and to the
         # checkpoint's IDENTITY, not its path: deleting the checkpoint
@@ -1676,13 +1656,7 @@ class BazofStreamWriter(BazofBatchWriter, DataSourceStreamArrowWriter):
         return iofs.join(self._table_path, self._marker_name)
 
     def commit(self, messages, batchId: int) -> None:  # noqa: N803
-        from datetime import datetime, timezone
-
         from bazof_spark import iofs
-        from bazof_spark.writer import (
-            commit_delta_files,
-            create_table_version_from_files,
-        )
 
         real = [m for m in messages if m is not None and m.file_path]
         try:
@@ -1693,27 +1667,8 @@ class BazofStreamWriter(BazofBatchWriter, DataSourceStreamArrowWriter):
                     return  # replayed batch already durable
             if not real:
                 return  # empty micro-batch: no version churn
-            files = [m.file_path for m in real]
-            start = datetime.fromtimestamp(
-                min(m.start_us for m in real) / 1e6, tz=timezone.utc
-            )
-            end = datetime.fromtimestamp(
-                max(m.end_us for m in real) / 1e6, tz=timezone.utc
-            )
-            if self._create_pending:
-                create_table_version_from_files(
-                    self._table_path, self._table_schema, files, start, end
-                )
-                self._create_pending = False
-            else:
-                commit_delta_files(
-                    self._table_path,
-                    files,
-                    start,
-                    end,
-                    segment_id=self._segment_id,
-                    create_segment=True,
-                )
+            self._publish(real)
+            self._overwrite = False
             iofs.replace_text(marker, str(batchId))
         finally:
             # committed files were MOVED out; what remains is orphans

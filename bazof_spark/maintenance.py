@@ -105,89 +105,83 @@ def checkpoint_table(
     executor-side pyarrow through iofs (the path Lakehouse.scan
     auto-selects), and metadata + the base write were iofs-routed from
     the start."""
+    from bazof_spark.writer import _commit, file_stats
+
     if at.tzinfo is None:
         at = at.replace(tzinfo=timezone.utc)
     table = lakehouse.table(table_name)
-    version = table.current_version()
-    snapshot = table.get_snapshot(version)
-
-    _check_nothing_beyond(lakehouse, table, snapshot, at)
-
     seg_id = segment_id or f"checkpoint_{int(at.timestamp() * 1000)}"
     base_file = f"{seg_id}_base.parquet"
 
-    # distributed state computation: the Current scan itself (Current
-    # pruning, NOT EventTime(T) — closed bases are invisible to Current)
-    state = lakehouse.scan_snapshot(table, snapshot, CURRENT, Projection.all())
-    order_by = None
-    if cluster_by:
-        # Z-order clustered base: multi-column data skipping (see
-        # operators/zorder.py). Sound because a checkpoint base has one
-        # row per key, so merge winner selection is order-independent;
-        # validate_table treats unique-key unsorted files as a layout
-        # warning, not an error.
-        from bazof_spark.operators.zorder import zorder_code
-
-        order_by = [zorder_code(state, cluster_by, zorder_bits)]
-    dataframe_to_parquet_file(
-        state,
-        table.data_file_path(base_file),
-        order_by=order_by,
-        row_group_rows=row_group_rows,
-    )
-
-    was_open = [s for s in snapshot.segments if s.end is None]
-    kept_closed = tuple(s for s in snapshot.segments if s.end is not None)
-    segments = kept_closed
-    if was_open:
-        wrapper = Segment(
-            id=f"{seg_id}_archived",
-            start=min(s.start for s in was_open),
-            end=at,
-            segments=tuple(
-                Segment(
-                    id=s.id,
-                    start=s.start,
-                    end=at,
-                    file=s.file,
-                    segments=s.segments,
-                    delta=s.delta,
-                    key_min=s.key_min,
-                    key_max=s.key_max,
-                    ts_min=s.ts_min,
-                    ts_max=s.ts_max,
-                    # carry the base-file bloom: dropping it here would
-                    # silently degrade point-lookup pruning after every
-                    # checkpoint (absent bloom = always admit)
-                    key_bloom=s.key_bloom,
-                )
-                for s in was_open
-            ),
+    def place(snapshot: Snapshot, next_version: str, _) -> Snapshot:
+        _check_nothing_beyond(lakehouse, table, snapshot, at)
+        # distributed state computation: the Current scan itself
+        # (Current pruning, NOT EventTime(T) — closed bases are
+        # invisible to Current)
+        state = lakehouse.scan_snapshot(
+            table, snapshot, CURRENT, Projection.all()
         )
-        segments = segments + (wrapper,)
-    from bazof_spark.writer import file_key_bloom, file_zone_stats
+        order_by = None
+        if cluster_by:
+            # Z-order clustered base: multi-column data skipping (see
+            # operators/zorder.py). Sound because a checkpoint base has
+            # one row per key, so merge winner selection is
+            # order-independent; validate_table treats unique-key
+            # unsorted files as a layout warning, not an error.
+            from bazof_spark.operators.zorder import zorder_code
 
-    new_seg = Segment(
-        id=seg_id, start=at, file=base_file,
-        # best-effort: file_key_bloom self-gates on the footer row
-        # count / cardinality budget, so a big compacted base simply
-        # gets range-only pruning
-        key_bloom=file_key_bloom(table.path, base_file),
-        **file_zone_stats(table.path, base_file),
-    )
-    new_snapshot = Snapshot(segments=segments + (new_seg,), schema=snapshot.schema)
+            order_by = [zorder_code(state, cluster_by, zorder_bits)]
+        dataframe_to_parquet_file(
+            state,
+            table.data_file_path(base_file),
+            order_by=order_by,
+            row_group_rows=row_group_rows,
+        )
 
-    # locked CAS publish (writer._publish_snapshot): a writer commit
+        was_open = [s for s in snapshot.segments if s.end is None]
+        segments = tuple(s for s in snapshot.segments if s.end is not None)
+        if was_open:
+            wrapper = Segment(
+                id=f"{seg_id}_archived",
+                start=min(s.start for s in was_open),
+                end=at,
+                segments=tuple(
+                    Segment(
+                        id=s.id,
+                        start=s.start,
+                        end=at,
+                        file=s.file,
+                        segments=s.segments,
+                        delta=s.delta,
+                        key_min=s.key_min,
+                        key_max=s.key_max,
+                        ts_min=s.ts_min,
+                        ts_max=s.ts_max,
+                        # carry the base-file bloom: dropping it here
+                        # would silently degrade point-lookup pruning
+                        # after every checkpoint (absent bloom = always
+                        # admit)
+                        key_bloom=s.key_bloom,
+                    )
+                    for s in was_open
+                ),
+            )
+            segments = segments + (wrapper,)
+        # a big compacted base gets range-only pruning: file_stats
+        # skips the bloom on the footer row count
+        new_seg = Segment(
+            id=seg_id, start=at, file=base_file,
+            **file_stats(table.path, base_file),
+        )
+        return Snapshot(
+            segments=segments + (new_seg,), schema=snapshot.schema
+        )
+
+    # the one commit transaction (writer._commit), without retries: the
+    # base was computed from the snapshot read, so a writer commit
     # landing while the checkpoint ran raises CommitConflictError
-    # instead of being silently overwritten; never reuse an abandoned
-    # snapshot number
-    from bazof_spark.writer import _publish_snapshot
-
-    next_version = str(
-        max(int(version), *_numeric_versions(table.path)) + 1
-    )
-    _publish_snapshot(table.path, version, next_version, new_snapshot)
-    return new_snapshot
+    # instead of being silently overwritten
+    return _commit(table.path, place)
 
 
 def optimize_table(
@@ -306,34 +300,16 @@ def _max_event_time_arrow(paths: list[str]):
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
+    from bazof_spark.writer import _column_footer_bounds
+
     best = None
     for path in paths:
         fs, rel = iofs.split(path)
         pf = pq.ParquetFile(fs.open_input_file(rel))
-        md = pf.metadata
-        idx = next(
-            (
-                i
-                for i in range(md.num_columns)
-                if md.schema.column(i).name == EVENT_TIME_COL
-            ),
-            None,
-        )
-        file_max = None
-        if idx is not None and md.num_row_groups:
-            vals = []
-            for g in range(md.num_row_groups):
-                st = md.row_group(g).column(idx).statistics
-                if st is None or not st.has_min_max:
-                    vals = None
-                    break
-                vals.append(st.max)
-            if vals:
-                file_max = max(vals)
+        _, file_max = _column_footer_bounds(pf.metadata, EVENT_TIME_COL)
         if file_max is None and EVENT_TIME_COL in pf.schema_arrow.names:
             col = pf.read(columns=[EVENT_TIME_COL]).column(EVENT_TIME_COL)
-            mm = pc.max(col).as_py()
-            file_max = mm
+            file_max = pc.max(col).as_py()
         if file_max is not None and (best is None or file_max > best):
             best = file_max
     return best
@@ -380,19 +356,45 @@ def evolve_table_schema(
     retention). Values ≤ 2⁵³ in magnitude convert exactly. Narrowing
     and other type changes are rejected.
     """
-    add = add or []
-    drop = drop or []
-    rename = dict(rename or {})
+    from bazof_spark.writer import _commit
+
     widen = {
         k: (v if isinstance(v, ColumnType) else ColumnType(v))
         for k, v in (widen or {}).items()
     }
     table = lakehouse.table(table_name)
-    version = table.current_version()
-    snapshot = table.get_current_snapshot()
 
-    existing = {c.name for c in snapshot.schema.columns}
-    former_names = snapshot.schema.former_names()
+    def place(snapshot: Snapshot, next_version: str, _) -> Snapshot:
+        new_schema = _evolved_schema(snapshot.schema, add, drop, rename, widen)
+        segments = snapshot.segments
+        if widen:
+            segments = _rewrite_tree_with_cast(
+                table, snapshot.segments, snapshot.schema, widen,
+                suffix=f"w{next_version}",
+            )
+        return Snapshot(segments=segments, schema=new_schema)
+
+    # the one commit transaction (writer._commit), without retries: a
+    # commit landing meanwhile raises CommitConflictError
+    return _commit(table.path, place)
+
+
+def _evolved_schema(
+    schema: TableSchema,
+    add: list[ColumnDef] | None = None,
+    drop: list[str] | None = None,
+    rename: dict[str, str] | None = None,
+    widen: dict[str, ColumnType] | None = None,
+) -> TableSchema:
+    """``schema`` with the :func:`evolve_table_schema` changes applied,
+    each checked against it first (BazofError on a collision, an
+    unknown column or an unsupported type change)."""
+    add = add or []
+    drop = drop or []
+    rename = dict(rename or {})
+    widen = widen or {}
+    existing = {c.name for c in schema.columns}
+    former_names = schema.former_names()
     for col in add:
         if col.name in existing or col.name in (KEY_COL, EVENT_TIME_COL):
             raise BazofError(f"column {col.name!r} already exists")
@@ -439,7 +441,7 @@ def evolve_table_schema(
     for name, target in widen.items():
         if name not in existing:
             raise BazofError(f"cannot widen unknown column {name!r}")
-        cur = next(c for c in snapshot.schema.columns if c.name == name)
+        cur = next(c for c in schema.columns if c.name == name)
         if not (cur.data_type is ColumnType.INT and target is ColumnType.FLOAT):
             raise BazofError(
                 f"unsupported type change {cur.data_type.value} -> "
@@ -470,27 +472,10 @@ def evolve_table_schema(
             )
         return c
 
-    new_columns = tuple(
-        _evolve_col(c)
-        for c in snapshot.schema.columns
-        if c.name not in set(drop)
-    ) + tuple(add)
-    new_schema = TableSchema(new_columns)
-    segments = snapshot.segments
-    if widen:
-        segments = _rewrite_tree_with_cast(
-            table, snapshot.segments, snapshot.schema, widen,
-            suffix=f"w{int(version) + 1}",
-        )
-    new_snapshot = Snapshot(segments=segments, schema=new_schema)
-    # locked CAS publish — see checkpoint_table's tail
-    from bazof_spark.writer import _publish_snapshot
-
-    next_version = str(
-        max(int(version), *_numeric_versions(table.path)) + 1
+    return TableSchema(
+        tuple(_evolve_col(c) for c in schema.columns if c.name not in set(drop))
+        + tuple(add)
     )
-    _publish_snapshot(table.path, version, next_version, new_snapshot)
-    return new_snapshot
 
 
 def _rewrite_tree_with_cast(
@@ -944,7 +929,6 @@ def restore_table(lakehouse, table_name: str, version: str | int) -> Snapshot:
     Time/as-of travel within the restored snapshot is unaffected.
     """
     table = lakehouse.table(table_name)
-    expected = table.current_version()  # CAS anchor for the publish
     snapshot = table.get_snapshot(str(version))  # must exist + deserialize
     missing = [
         f
@@ -956,13 +940,12 @@ def restore_table(lakehouse, table_name: str, version: str | int) -> Snapshot:
             f"cannot restore to version {version}: {len(missing)} referenced "
             f"data file(s) no longer exist (vacuumed?): {missing[:3]}"
         )
-    # locked CAS publish: a writer commit racing the restore raises
-    # CommitConflictError instead of being silently overwritten
-    from bazof_spark.writer import _publish_snapshot
+    # the one commit transaction (writer._commit): a writer commit
+    # racing the restore raises CommitConflictError instead of being
+    # silently overwritten
+    from bazof_spark.writer import _commit
 
-    next_version = str(max(_numeric_versions(table.path)) + 1)
-    _publish_snapshot(table.path, expected, next_version, snapshot)
-    return snapshot
+    return _commit(table.path, lambda current, next_version, _: snapshot)
 
 
 #: default minimum age before an UNREFERENCED file is collectible —

@@ -45,7 +45,6 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from bazof_spark.asof import format_rfc3339_ms
 from bazof_spark import iofs
 from bazof_spark.errors import BazofError
 from bazof_spark.metadata import Delta, Segment, Snapshot
@@ -166,97 +165,67 @@ def _column_footer_bounds(md, name: str):
     return lo, hi
 
 
-def file_zone_stats(table_path: str, file_name: str) -> dict:
-    """Zone-map bounds for one committed parquet file, read from its
-    footer — one driver-side metadata fetch per file at COMMIT time
-    (O(files in this commit), never per-read). Returns a dict with any
-    of ``key_min``/``key_max`` (strings) and ``ts_min``/``ts_max``
-    (tz-aware datetimes for the event_time column; naive footer values
-    are interpreted as UTC instants, the same convention the readers
-    use). Parquet footer min/max are valid bounds even when the writer
-    truncated long values (parquet-cpp truncates mins downward and
-    increments truncated maxes), which is all pruning needs. Missing
-    entries disable pruning for that dimension, never correctness
-    (metadata.KeyRange.admits / the ts_min guard)."""
+def file_stats(table_path: str, file_name: str) -> dict:
+    """Stats of one committed parquet file as ``Delta``/``Segment``
+    keyword fields, from ONE open of the file at COMMIT time (never
+    per-read): ``size`` (scan planning splits large files into byte
+    ranges without a stat/HEAD per read); the footer bounds
+    ``key_min``/``key_max`` and ``ts_min``/``ts_max`` (naive footer
+    values are UTC instants, the readers' convention; truncated
+    footer values are still valid bounds); and ``key_bloom`` over the
+    key column — ranges prune key-CLUSTERED layouts, the bloom prunes
+    POINT lookups on scattered ones. The bloom is skipped on the footer
+    row count, before any column read, when the file exceeds the inline
+    budget (metadata.KeyBloom.MAX_KEYS). Every field is best-effort: a
+    missing one disables that pruning, never correctness, and an
+    unreadable file never fails a commit."""
     from datetime import timezone
+
+    from bazof_spark.metadata import KeyBloom
 
     out: dict = {}
     try:
         fs, rel = iofs.split(iofs.join(table_path, file_name))
-        md = pq.ParquetFile(rel, filesystem=fs).metadata
+        f = fs.open_input_file(rel)
     except Exception:
-        # stats are best-effort: an unreadable footer must never fail
-        # a commit
         return out
-    try:
-        # file length (bytes): recording it at commit time lets scan
-        # planning split large files into byte ranges without a
-        # stat/HEAD per file per read
-        size = fs.get_file_info(rel).size
-        if isinstance(size, int) and size > 0:
-            out["size"] = size
-    except Exception:
-        pass
-    try:
-        kmin, kmax = _column_footer_bounds(md, KEY_COL)
-        if isinstance(kmin, str) and isinstance(kmax, str):
-            out["key_min"], out["key_max"] = kmin, kmax
-    except Exception:
-        pass
-    try:
-        tmin, tmax = _column_footer_bounds(md, EVENT_TIME_COL)
-        if isinstance(tmin, datetime) and isinstance(tmax, datetime):
-            if tmin.tzinfo is None:
-                tmin = tmin.replace(tzinfo=timezone.utc)
-            if tmax.tzinfo is None:
-                tmax = tmax.replace(tzinfo=timezone.utc)
-            out["ts_min"], out["ts_max"] = tmin, tmax
-    except Exception:
-        pass
+    with f:
+        try:
+            pf = pq.ParquetFile(f)
+        except Exception:
+            return out
+        md = pf.metadata
+        with contextlib.suppress(Exception):
+            size = f.size()
+            if isinstance(size, int) and size > 0:
+                out["size"] = size
+        with contextlib.suppress(Exception):
+            kmin, kmax = _column_footer_bounds(md, KEY_COL)
+            if isinstance(kmin, str) and isinstance(kmax, str):
+                out["key_min"], out["key_max"] = kmin, kmax
+        with contextlib.suppress(Exception):
+            tmin, tmax = _column_footer_bounds(md, EVENT_TIME_COL)
+            if isinstance(tmin, datetime) and isinstance(tmax, datetime):
+                if tmin.tzinfo is None:
+                    tmin = tmin.replace(tzinfo=timezone.utc)
+                if tmax.tzinfo is None:
+                    tmax = tmax.replace(tzinfo=timezone.utc)
+                out["ts_min"], out["ts_max"] = tmin, tmax
+        with contextlib.suppress(Exception):
+            if (
+                KEY_COL in pf.schema_arrow.names
+                and md.num_rows <= 40 * KeyBloom.MAX_KEYS
+            ):
+                keys: set[str] = set()
+                for batch in pf.iter_batches(columns=[KEY_COL]):
+                    keys.update(batch.column(0).to_pylist())
+                    if len(keys) > KeyBloom.MAX_KEYS:
+                        break
+                else:
+                    bloom = KeyBloom.build(k for k in keys if k is not None)
+                    if bloom is not None:
+                        out["key_bloom"] = bloom
     return out
-
-
-def file_key_stats(table_path: str, file_name: str) -> tuple[str | None, str | None]:
-    """Key bounds only — see :func:`file_zone_stats`."""
-    stats = file_zone_stats(table_path, file_name)
-    return stats.get("key_min"), stats.get("key_max")
-
-
-def file_key_bloom(table_path: str, file_name: str):
-    """Bloom filter over one committed file's key column, or None.
-
-    Complements the footer min/max: ranges prune key-CLUSTERED
-    layouts, the bloom prunes POINT lookups on scattered layouts
-    (time-partitioned ingest where every file's [key_min, key_max]
-    spans the whole key space). Built at COMMIT time from a
-    single-column read of the just-written file — the driver-side
-    equivalent of building the filter executor-side during the write
-    (where a real deployment computes it; parquet's own bloom filters
-    are written the same way). Returns None — disabling bloom pruning
-    for this file, never failing the commit — when the column is
-    unreadable or its cardinality exceeds the inline size budget
-    (metadata.KeyBloom.MAX_KEYS)."""
-    from bazof_spark.metadata import KeyBloom
-
-    try:
-        fs, rel = iofs.split(iofs.join(table_path, file_name))
-        pf = pq.ParquetFile(rel, filesystem=fs)
-        if KEY_COL not in pf.schema_arrow.names:
-            return None
-        # bail on the FOOTER row count before touching the column: a
-        # file that large (compacted base) can't fit the inline budget
-        # anyway, and the driver must never pay an unbounded column
-        # read at commit time
-        if pf.metadata.num_rows > 40 * KeyBloom.MAX_KEYS:
-            return None
-        keys: set[str] = set()
-        for batch in pf.iter_batches(columns=[KEY_COL]):
-            keys.update(batch.column(0).to_pylist())
-            if len(keys) > KeyBloom.MAX_KEYS:
-                return None
-        return KeyBloom.build(k for k in keys if k is not None)
-    except Exception:
-        return None
 
 
 def validate_data_file_invariants(df: DataFrame) -> None:
@@ -306,10 +275,6 @@ def _event_time_bounds(batch: pa.Table) -> tuple[datetime | None, datetime | Non
     return mm["min"], mm["max"]
 
 
-def _ts(dt: datetime) -> str:
-    return format_rfc3339_ms(dt)
-
-
 def _delta_with_stats(
     table_path: str,
     file_name: str,
@@ -317,33 +282,14 @@ def _delta_with_stats(
     end: datetime,
     tombstone: bool = False,
 ) -> Delta:
-    """Delta entry carrying the file's zone-map stats when readable."""
+    """Delta entry carrying the file's stats when readable."""
     return Delta(
         file=file_name,
         start=start,
         end=end,
-        key_bloom=file_key_bloom(table_path, file_name),
         tombstone=tombstone,
-        **file_zone_stats(table_path, file_name),
+        **file_stats(table_path, file_name),
     )
-
-
-def _stats_json(table_path: str, file_name: str) -> dict:
-    """Optional zone-map JSON fields (``key_min``/``key_max``/
-    ``ts_min``/``ts_max``/``key_bloom``) for a node referencing
-    ``file_name`` (empty when stats are unavailable)."""
-    stats = file_zone_stats(table_path, file_name)
-    out: dict = {}
-    for k in ("key_min", "key_max", "size"):
-        if k in stats:
-            out[k] = stats[k]
-    for k in ("ts_min", "ts_max"):
-        if k in stats:
-            out[k] = _ts(stats[k])
-    bloom = file_key_bloom(table_path, file_name)
-    if bloom is not None:
-        out["key_bloom"] = bloom.to_json()
-    return out
 
 
 def _aware_utc(dt: datetime) -> datetime:
@@ -354,22 +300,6 @@ def _aware_utc(dt: datetime) -> datetime:
     from datetime import timezone
 
     return dt.astimezone(timezone.utc)
-
-
-def _local_table_path(table_path: str) -> str:
-    """Local filesystem path for the JVM-side distributed write branch
-    (Spark part-file listing + os.replace renames). ``file://`` URIs
-    strip to their path; object-store URIs take the executor-side
-    pyarrow branch (:func:`_write_distributed_delta_uri`) instead."""
-    if table_path.startswith("file://"):
-        return table_path[len("file://"):]
-    if "://" in table_path:
-        raise BazofError(
-            "internal: _local_table_path called with an object-store "
-            f"URI {table_path!r} — route through "
-            "_write_distributed_delta_uri"
-        )
-    return table_path
 
 
 def _write_distributed_delta_uri(
@@ -481,7 +411,7 @@ def _write_distributed_delta(
         return _write_distributed_delta_uri(
             ordered, table_path, stem, num_files
         )
-    local = _local_table_path(table_path)
+    local = table_path.removeprefix("file://")
     part = (
         ordered.repartition(num_files, KEY_COL)
         if num_files
@@ -522,12 +452,7 @@ class SegmentBuilder:
         file_name = name or f"{self._node['id']}_delta{len(deltas) + 1}.parquet"
         self._writer._write_file(df, file_name, validate)
         deltas.append(
-            {
-                "file": file_name,
-                "start": _ts(start),
-                "end": _ts(end),
-                **_stats_json(self._writer.path, file_name),
-            }
+            _delta_with_stats(self._writer.path, file_name, start, end).to_json()
         )
         return self
 
@@ -561,12 +486,9 @@ class SegmentBuilder:
             ordered, self._writer.path, stem, num_files
         ):
             deltas.append(
-                {
-                    "file": file_name,
-                    "start": _ts(start),
-                    "end": _ts(end),
-                    **_stats_json(self._writer.path, file_name),
-                }
+                _delta_with_stats(
+                    self._writer.path, file_name, start, end
+                ).to_json()
             )
         return self
 
@@ -578,14 +500,9 @@ class SegmentBuilder:
         base_df: DataFrame | None = None,
         validate: bool = True,
     ) -> "SegmentBuilder":
-        node: dict = {"id": segment_id, "start": _ts(start)}
-        if end is not None:
-            node["end"] = _ts(end)
-        if base_df is not None:
-            file_name = f"{segment_id}_base.parquet"
-            self._writer._write_file(base_df, file_name, validate)
-            node["file"] = file_name
-            node.update(_stats_json(self._writer.path, file_name))
+        node = self._writer._segment_node(
+            segment_id, start, end, base_df, validate
+        )
         self._node.setdefault("segments", []).append(node)
         return SegmentBuilder(self._writer, node)
 
@@ -608,6 +525,24 @@ class TableWriter:
         )
         _write_arrow_file(batch, iofs.join(self.path, file_name))
 
+    def _segment_node(
+        self,
+        segment_id: str,
+        start: datetime,
+        end: datetime | None,
+        base_df: DataFrame | None,
+        validate: bool,
+    ) -> dict:
+        """JSON node of one segment, writing its base file if given."""
+        if base_df is None:
+            return Segment(id=segment_id, start=start, end=end).to_json()
+        file_name = f"{segment_id}_base.parquet"
+        self._write_file(base_df, file_name, validate)
+        return Segment(
+            id=segment_id, start=start, end=end, file=file_name,
+            **file_stats(self.path, file_name),
+        ).to_json()
+
     def add_segment(
         self,
         segment_id: str,
@@ -616,14 +551,7 @@ class TableWriter:
         base_df: DataFrame | None = None,
         validate: bool = True,
     ) -> SegmentBuilder:
-        node: dict = {"id": segment_id, "start": _ts(start)}
-        if end is not None:
-            node["end"] = _ts(end)
-        if base_df is not None:
-            file_name = f"{segment_id}_base.parquet"
-            self._write_file(base_df, file_name, validate)
-            node["file"] = file_name
-            node.update(_stats_json(self.path, file_name))
+        node = self._segment_node(segment_id, start, end, base_df, validate)
         self._segments.append(node)
         return SegmentBuilder(self, node)
 
@@ -642,70 +570,6 @@ class TableWriter:
 # ---------------------------------------------------------------------------
 # Incremental upsert into an EXISTING table (new snapshot version per batch)
 # ---------------------------------------------------------------------------
-
-
-def _as_local_path(path: str) -> str | None:
-    """Local filesystem path for a plain or ``file://`` table path;
-    None for any other scheme (object stores)."""
-    if path.startswith("file://"):
-        return path[len("file://"):]
-    if "://" in path:
-        return None
-    return path
-
-
-def _reservable_local_path(full: str) -> str | None:
-    """Local path on which a delta NAME can be reserved atomically:
-    plain/file:// paths directly; emulated object-store URIs via their
-    local mirror (the emulation's conditional-put stand-in — caught red-
-    handed by the emulated two-writer stress, where the plain existence
-    probe let both writers pick the same name and clobber each other's
-    bytes while the version chain looked intact). Real object stores
-    return None."""
-    local = _as_local_path(full)
-    if local is not None:
-        return local
-    try:
-        return iofs.emulated_mirror(full)
-    except ValueError:
-        return None
-
-
-def _fresh_delta_name(table_path: str, segment_id: str, n_existing: int) -> str:
-    """First non-colliding ``{seg}_delta{N}.parquet`` name — snapshots
-    may reference fewer files than the directory holds (e.g. after a
-    checkpoint kept originals on disk), so probe for existence.
-
-    Local FS (and emulated object-store schemes, via their mirror): the
-    name is RESERVED atomically (O_EXCL create of an empty file the
-    parquet write then overwrites) — two concurrent writers probing at
-    once can otherwise pick the same name and clobber each other's
-    delta bytes before either commits. Real object stores have no
-    atomic create-if-absent through pyarrow.fs, so the name carries a
-    per-commit random token instead (``{seg}_delta{N}_{token}.parquet``
-    — the commit_delta_files discipline): two writers deriving the same
-    sequence number produce DIFFERENT names and can never clobber each
-    other's bytes; they race only on the version pointer, which the
-    commit guard arbitrates. The real-S3 two-writer stress
-    (tests/test_object_store_real.py) caught the plain existence probe
-    silently losing a committed delta's bytes exactly this way."""
-    n = n_existing + 1
-    while True:
-        name = f"{segment_id}_delta{n}.parquet"
-        full = iofs.join(table_path, name)
-        local = _reservable_local_path(full)
-        if local is not None:
-            try:
-                os.close(os.open(local, os.O_CREAT | os.O_EXCL | os.O_WRONLY))
-                return name
-            except FileExistsError:
-                n += 1
-                continue
-        token = uuid.uuid4().hex[:8]
-        name = f"{segment_id}_delta{n}_{token}.parquet"
-        if not iofs.exists(iofs.join(table_path, name)):
-            return name
-        n += 1
 
 
 def _conform_to_schema(df: DataFrame, schema) -> DataFrame:
@@ -804,9 +668,14 @@ def append_delta(
     given, else the LAST open top-level segment; ``create_segment=True``
     opens a fresh one when none exists.
 
-    Concurrency: like the reference, the format has no commit log or
-    lock — concurrent writers race on ``version.txt`` (last flip wins).
-    Single-writer-per-table is the assumed discipline.
+    Concurrency: the commit is the optimistic transaction of
+    :func:`_commit`. A commit that lands between this one's read and
+    its publish raises CommitConflictError (:func:`upsert_with_retry`
+    re-places the already-written files instead), and
+    ``expected_version`` pins the version the caller derived ``df``
+    from (e.g. Lakehouse.update's read-modify-write): a moved pointer
+    raises before anything is written, so rows computed without seeing
+    a newer commit never shadow it.
 
     ``tombstone=True`` commits the batch as a DELETE marker (our
     Delta-Lake-style extension; see :func:`delete_keys` and
@@ -819,128 +688,104 @@ def append_delta(
     row, and a later upsert resurrects the key. An empty driver-side
     tombstone batch is a version no-op (returns the current snapshot).
     """
-    table = Table(path=table_path, name=os.path.basename(table_path.rstrip("/")))
-    version = table.current_version()
-    if expected_version is not None and version != expected_version:
-        # the caller derived ``df`` from a read of ``expected_version``
-        # (e.g. Lakehouse.update's read-modify-write): a commit that
-        # landed since would be silently shadowed by rows computed
-        # without seeing it — surface the conflict instead so the
-        # caller re-derives (the same contract _publish_snapshot
-        # enforces for the narrower read→flip window below)
-        from bazof_spark.errors import CommitConflictError
+    return _append_delta(**locals())  # every parameter, passed through
 
-        raise CommitConflictError(
-            f"table moved {expected_version!r} → {version!r} since the "
-            "batch was derived; re-read and re-derive before retrying"
-        )
-    snapshot = table.get_snapshot(version)
-    try:
-        current = int(version)
-    except ValueError as exc:  # non-numeric pointer: don't guess
-        raise BazofError(
-            f"cannot bump non-numeric snapshot version {version!r}"
-        ) from exc
-    # never overwrite an existing snapshot (e.g. one abandoned by a
-    # pointer rollback): publish above every numbered snapshot on disk
-    from bazof_spark.maintenance import _numeric_versions
 
-    next_version = str(max([current, *_numeric_versions(table_path)]) + 1)
+def _append_delta(
+    spark: SparkSession,
+    table_path: str,
+    df: DataFrame,
+    start: datetime | None = None,
+    end: datetime | None = None,
+    segment_id: str | None = None,
+    create_segment: bool = False,
+    distributed: bool = False,
+    num_files: int | None = None,
+    validate: bool = True,
+    tombstone: bool = False,
+    expected_version: str | None = None,
+    retries: int = 0,
+) -> Snapshot:
+    """:func:`append_delta`, re-placing its files on up to ``retries``
+    commit conflicts."""
 
-    schema = snapshot.schema
-    if tombstone:
-        # a tombstone file carries ONLY the merge keys; the scan's
-        # explicit-schema read null-fills the value columns
-        ordered = df.select(KEY_COL, EVENT_TIME_COL)
-    else:
-        ordered = _conform_to_schema(df, schema)
-    multi_pass = False
-    if distributed:
-        # one materialization for the up-to-three consumers (invariant
-        # check, min/max bounds, the write itself) — without it each
-        # re-runs the batch's full lineage as its own Spark job
-        multi_pass = validate or start is None or end is None
+    def write(snapshot: Snapshot, next_version: str):
+        if tombstone:
+            # a tombstone file carries ONLY the merge keys; the scan's
+            # explicit-schema read null-fills the value columns
+            ordered = df.select(KEY_COL, EVENT_TIME_COL)
+        else:
+            ordered = _conform_to_schema(df, snapshot.schema)
+        # one materialization for the up-to-three consumers of a
+        # distributed batch (invariant check, min/max bounds, the write
+        # itself) — without it each re-runs the batch's full lineage
+        multi_pass = distributed and (validate or start is None or end is None)
         if multi_pass:
             ordered = ordered.persist()
         try:
-            if validate:
-                validate_data_file_invariants(ordered)
-            if start is None or end is None:
-                lo, hi = ordered.select(
-                    F.min(EVENT_TIME_COL), F.max(EVENT_TIME_COL)
-                ).first()
-                if lo is None:
+            if distributed:
+                if validate:
+                    validate_data_file_invariants(ordered)
+            else:
+                # the batch comes to the driver for the write anyway:
+                # collect it once and run the check, the bounds and the
+                # sort on that table
+                batch = _collect_batch(ordered, validate)
+                if tombstone and batch.num_rows == 0:
+                    # same no-op contract as delete_keys: an empty
+                    # tombstone must not flip a delete-free table to
+                    # delete-capable
+                    return None
+            lo, hi = start, end
+            if lo is None or hi is None:
+                b_lo, b_hi = (
+                    ordered.select(
+                        F.min(EVENT_TIME_COL), F.max(EVENT_TIME_COL)
+                    ).first()
+                    if distributed
+                    else _event_time_bounds(batch)
+                )
+                if b_lo is None:
                     raise BazofError("cannot upsert an empty batch")
-                start = start or lo
-                end = end or hi
-        except BaseException:
+                lo, hi = lo or b_lo, hi or b_hi
+            # aware-UTC like their serialized form, so the in-memory
+            # snapshot sorts/compares exactly as a re-read of s{N}.json
+            lo, hi = _aware_utc(lo), _aware_utc(hi)
+            (stem,) = _delta_stems(
+                snapshot, next_version, lo, segment_id, create_segment
+            )
+            if distributed:
+                # the 100-TB path: repartition by key (a key lives in
+                # exactly one file, so stable precedence among
+                # equal-start siblings can never arbitrate between two
+                # versions of one key), event_time-DESC within each file
+                names = _write_distributed_delta(
+                    ordered, table_path, stem, num_files
+                )
+            else:
+                names = [f"{stem}.parquet"]
+                _write_arrow_file(batch, iofs.join(table_path, names[0]))
+        finally:
             if multi_pass:
                 ordered.unpersist()
-            raise
-    else:
-        # the batch comes to the driver for the write anyway: collect it
-        # once and run the check, the bounds and the sort on that table
-        batch = _collect_batch(ordered, validate)
-        if tombstone and batch.num_rows == 0:
-            # same no-op contract as delete_keys: an empty tombstone
-            # must not flip a delete-free table to delete-capable
-            return snapshot
-        if start is None or end is None:
-            lo, hi = _event_time_bounds(batch)
-            if lo is None:
-                raise BazofError("cannot upsert an empty batch")
-            start = start or lo
-            end = end or hi
-    # aware-UTC like their serialized form, so the in-memory snapshot
-    # sorts/compares exactly as a re-read of s{N}.json will
-    start, end = _aware_utc(start), _aware_utc(end)
+        return lo, [
+            _delta_with_stats(table_path, n, lo, hi, tombstone=tombstone)
+            for n in names
+        ]
 
-    # -- pick the target top-level segment --------------------------------
-    segs = list(snapshot.segments)
-    idx = _pick_target_segment(segs, segment_id, create_segment, start, next_version)
-    target = segs[idx]
+    def place(snapshot: Snapshot, next_version: str, written):
+        if written is None:
+            return None
+        lo, deltas = written
+        return _place_deltas(
+            snapshot, next_version, lo, [(deltas, lo)],
+            segment_id, create_segment,
+        )
 
-    # -- write the delta file(s) ------------------------------------------
-    new_deltas: list[Delta] = []
-    try:
-        if distributed:
-            # the 100-TB path: repartition by key (a key lives in exactly
-            # one file, so stable precedence among equal-start siblings
-            # can never arbitrate between two versions of one key),
-            # event_time-DESC within each file. The per-commit token
-            # keeps concurrent writers' part files apart (the
-            # commit_delta_files discipline), so no name is reserved.
-            stem = (
-                f"{target.id}_delta{len(target.delta) + 1}_"
-                f"{uuid.uuid4().hex[:8]}"
-            )
-            for name in _write_distributed_delta(
-                ordered, table_path, stem, num_files
-            ):
-                new_deltas.append(
-                    _delta_with_stats(
-                        table_path, name, start, end, tombstone=tombstone
-                    )
-                )
-        else:
-            name = _fresh_delta_name(table_path, target.id, len(target.delta))
-            _write_arrow_file(batch, iofs.join(table_path, name))
-            new_deltas.append(
-                _delta_with_stats(
-                    table_path, name, start, end, tombstone=tombstone
-                )
-            )
-    finally:
-        if multi_pass:
-            ordered.unpersist()
-
-    # -- publish the new snapshot -----------------------------------------
-    segs[idx] = dataclasses.replace(
-        target, delta=_insert_deltas(tuple(target.delta), new_deltas, start)
+    return _commit(
+        table_path, place, write,
+        expected_version=expected_version, retries=retries,
     )
-    new_snapshot = Snapshot(segments=tuple(segs), schema=schema)
-    _publish_snapshot(table_path, version, next_version, new_snapshot)
-    return new_snapshot
 
 
 def _insert_deltas(
@@ -954,20 +799,12 @@ def _insert_deltas(
     OLD delta win such ties (stable sort keeps array order), silently
     dropping the upsert. Pure writer-side placement: reader semantics
     (metadata.rs:47-73 port) are untouched, and entries within one
-    commit keep their file order."""
-    from datetime import timezone
-
-    def _utc(dt: datetime) -> datetime:
-        # snapshot timestamps parse tz-aware; batch aggregates may be
-        # naive. Interpret naive values exactly as format_rfc3339_ms
-        # will when the delta serializes (astimezone = machine-local
-        # for naive input), so the comparison here always agrees with
-        # the start the READER later sees on disk.
-        return dt.astimezone(timezone.utc)
-
+    commit keep their file order. Starts compare through
+    :func:`_aware_utc`, so the order here always agrees with the one the
+    READER later sees on disk."""
     idx = len(existing)
     for i, d in enumerate(existing):
-        if _utc(d.start) <= _utc(start):
+        if _aware_utc(d.start) <= _aware_utc(start):
             idx = i
             break
     return existing[:idx] + tuple(new) + existing[idx:]
@@ -1021,69 +858,78 @@ def commit_delta_files(
     write, e.g. the bazof Data Source writer) into an existing table as
     ONE logical upsert: each staged file is moved to its final name and
     appended as a Delta entry, then the new snapshot is published
-    optimistically (same check-then-flip as :func:`append_delta`).
+    optimistically (:func:`_commit`, as for :func:`append_delta`).
 
-    Multi-writer safety: final names carry a per-commit random token
-    (``{seg}_delta{N}_{token}_p{i}.parquet``), so two concurrent
-    commits that derived the same sequence number can never clobber
-    each other's data files — they only race on the version pointer.
-    The loser of that race re-reads the table and re-publishes
-    REFERENCING THE SAME already-moved files (the move happens exactly
-    once; only the metadata derivation retries, up to ``retries``
-    times). On final failure the moved files are left unreferenced —
-    ``vacuum_table`` debris, never visible data.
+    The files are moved exactly once, under per-commit token names
+    (``{seg}_delta{N}_{token}_p{i}.parquet``); a commit conflict
+    re-reads the table and re-places the SAME moved files, up to
+    ``retries`` times. On final failure the moved files are left
+    unreferenced — ``vacuum_table`` debris, never visible data.
 
     All sibling files carry the SAME ``[start, end]`` range — they are
     one batch, so none may shadow another; the caller guarantees a key
     lives in at most one staged file (repartition-by-key discipline,
     same as ``add_delta_distributed``)."""
-    import uuid
+    return _commit_files(
+        table_path, staged_paths, start, end, segment_id, create_segment,
+        retries,
+    )
 
-    from bazof_spark.errors import CommitConflictError
-    from bazof_spark.maintenance import _numeric_versions
 
+def _commit_files(
+    table_path: str,
+    staged_paths: list[str],
+    start: datetime,
+    end: datetime,
+    segment_id: str | None = None,
+    create_segment: bool = True,
+    retries: int = 3,
+    add: tuple | list = (),
+) -> Snapshot:
+    """:func:`commit_delta_files` that also adds the nullable columns
+    ``add`` (the Data Source writer's mergeSchema) in the SAME snapshot
+    as the files written with them; a column already declared
+    identically is not added twice."""
     if not staged_paths:
         raise BazofError("cannot commit an empty file set")
-    table = Table(path=table_path, name=os.path.basename(table_path.rstrip("/")))
     start, end = _aware_utc(start), _aware_utc(end)
-    token = uuid.uuid4().hex[:8]
-    new_deltas: list[Delta] | None = None
-    for attempt in range(retries + 1):
-        version = table.current_version()
-        snapshot = table.get_snapshot(version)
-        try:
-            current = int(version)
-        except ValueError as exc:
-            raise BazofError(
-                f"cannot bump non-numeric snapshot version {version!r}"
-            ) from exc
-        next_version = str(max([current, *_numeric_versions(table_path)]) + 1)
-        segs = list(snapshot.segments)
-        idx = _pick_target_segment(
-            segs, segment_id, create_segment, start, next_version
+
+    def write(snapshot: Snapshot, next_version: str) -> list[Delta]:
+        (stem,) = _delta_stems(
+            snapshot, next_version, start, segment_id, create_segment
         )
-        target = segs[idx]
-        if new_deltas is None:  # move exactly once, under collision-free names
-            stem = f"{target.id}_delta{len(target.delta) + 1}_{token}"
-            moved = []
-            for i, staged in enumerate(sorted(staged_paths)):
-                name = f"{stem}_p{i:05d}.parquet"
-                iofs.move(staged, iofs.join(table_path, name))
-                moved.append(name)
-            new_deltas = [
-                _delta_with_stats(table_path, n, start, end) for n in moved
-            ]
-        segs[idx] = dataclasses.replace(
-            target, delta=_insert_deltas(tuple(target.delta), new_deltas, start)
+        return _move_staged(table_path, staged_paths, stem, start, end)
+
+    def place(snapshot: Snapshot, next_version: str, deltas: list[Delta]):
+        schema = snapshot.schema
+        new_columns = [c for c in add if c not in schema.columns]
+        if new_columns:
+            from bazof_spark.maintenance import _evolved_schema
+
+            schema = _evolved_schema(schema, add=new_columns)
+        return _place_deltas(
+            snapshot, next_version, start, [(deltas, start)],
+            segment_id, create_segment, schema,
         )
-        new_snapshot = Snapshot(segments=tuple(segs), schema=snapshot.schema)
-        try:
-            _publish_snapshot(table_path, version, next_version, new_snapshot)
-            return new_snapshot
-        except CommitConflictError:
-            if attempt == retries:
-                raise
-    raise AssertionError("unreachable")
+
+    return _commit(table_path, place, write, retries=retries)
+
+
+def _move_staged(
+    table_path: str,
+    staged_paths: list[str],
+    stem: str,
+    start: datetime,
+    end: datetime,
+) -> list[Delta]:
+    """Move staged files to ``{stem}_p{i:05d}.parquet`` in the table dir
+    and read each file's stats once, after the move."""
+    names = []
+    for i, staged in enumerate(sorted(staged_paths)):
+        name = f"{stem}_p{i:05d}.parquet"
+        iofs.move(staged, iofs.join(table_path, name))
+        names.append(name)
+    return [_delta_with_stats(table_path, n, start, end) for n in names]
 
 
 def create_table_version_from_files(
@@ -1100,75 +946,28 @@ def create_table_version_from_files(
     pinnable via ``.option("version", …)`` time travel while the
     pointer now resolves to the replacement state.
 
-    Multi-writer safety mirrors :func:`commit_delta_files`: final file
-    names carry a per-commit random token (moved exactly once), so
-    concurrent overwrites never clobber each other's data files;
-    existing-table publishes go through the optimistic
-    ``_publish_snapshot`` check and re-derive the version on conflict.
-    Two racing CREATIONS of a table that does not exist yet still
-    last-write-win on ``version.txt`` (no CAS on object stores), but
-    each points at its own intact file set — never a torn mix."""
-    import uuid
-
-    from bazof_spark.errors import CommitConflictError
-    from bazof_spark.maintenance import _numeric_versions
-
+    Multi-writer safety is :func:`commit_delta_files`': the files are
+    moved once under per-commit token names, and the publish goes
+    through :func:`_commit` — a creation included, which re-checks
+    under the commit guard that the table is still absent."""
     if not staged_paths:
         raise BazofError("cannot publish an empty file set")
     iofs.makedirs(table_path)
-    version_path = iofs.join(table_path, VERSION_FILE)
     start, end = _aware_utc(start), _aware_utc(end)
-    token = uuid.uuid4().hex[:8]
-    deltas: tuple[Delta, ...] | None = None
-    retries = 3
-    for attempt in range(retries + 1):
-        fresh = not iofs.exists(version_path)
-        if fresh:
-            expected = None
-            next_version = "1"
-        else:
-            table = Table(
-                path=table_path, name=os.path.basename(table_path.rstrip("/"))
-            )
-            expected = table.current_version()
-            try:
-                base = int(expected)
-            except ValueError as exc:
-                raise BazofError(
-                    f"cannot bump non-numeric snapshot version {expected!r}"
-                ) from exc
-            next_version = str(
-                max([base, *_numeric_versions(table_path)]) + 1
-            )
-        if deltas is None:  # move exactly once, under collision-free names
-            moved = []
-            for i, staged in enumerate(sorted(staged_paths)):
-                name = f"w_{token}_p{i:05d}.parquet"
-                iofs.move(staged, iofs.join(table_path, name))
-                moved.append(name)
-            deltas = tuple(
-                _delta_with_stats(table_path, n, start, end) for n in moved
-            )
-        snapshot = Snapshot(
+
+    def write(snapshot: Snapshot | None, next_version: str) -> list[Delta]:
+        stem = f"w{next_version}_delta1_{uuid.uuid4().hex[:8]}"
+        return _move_staged(table_path, staged_paths, stem, start, end)
+
+    def place(snapshot, next_version: str, deltas: list[Delta]) -> Snapshot:
+        return Snapshot(
             segments=(
-                Segment(id=f"w{next_version}", start=start, delta=deltas),
+                Segment(id=f"w{next_version}", start=start, delta=tuple(deltas)),
             ),
             schema=schema,
         )
-        if expected is None:
-            iofs.write_text(
-                iofs.join(table_path, f"s{next_version}.json"),
-                snapshot.serialize(),
-            )
-            iofs.replace_text(version_path, next_version)
-            return snapshot
-        try:
-            _publish_snapshot(table_path, expected, next_version, snapshot)
-            return snapshot
-        except CommitConflictError:
-            if attempt == retries:
-                raise
-    raise AssertionError("unreachable")
+
+    return _commit(table_path, place, write, retries=3, create=True)
 
 
 def upsert_with_retry(
@@ -1178,18 +977,11 @@ def upsert_with_retry(
     retries: int = 3,
     **kwargs,
 ):
-    """append_delta with optimistic-concurrency retries: on
-    CommitConflictError the table is re-read (fresh version, fresh
-    snapshot) and the upsert re-derived — the standard commit loop
-    every optimistic lakehouse writer runs."""
-    from bazof_spark.errors import CommitConflictError
-
-    for attempt in range(retries + 1):
-        try:
-            return append_delta(spark, table_path, df, **kwargs)
-        except CommitConflictError:
-            if attempt == retries:
-                raise
+    """append_delta with optimistic-concurrency retries: the batch is
+    written once, and on CommitConflictError the table is re-read and
+    the same files re-placed in the fresh snapshot, up to ``retries``
+    times — the commit loop every optimistic lakehouse writer runs."""
+    return _append_delta(spark, table_path, df, retries=retries, **kwargs)
 
 
 def delete_keys(
@@ -1274,95 +1066,207 @@ def merge_apply(
     delete-free table to delete-capable."""
     from datetime import timezone
 
-    from bazof_spark.maintenance import _numeric_versions
-
     if at is None:
         at = datetime.now(timezone.utc)
     at = _aware_utc(at)
 
-    table = Table(
-        path=table_path, name=os.path.basename(table_path.rstrip("/"))
-    )
-    version = table.current_version()
-    if expected_version is not None and version != expected_version:
-        from bazof_spark.errors import CommitConflictError
-
-        raise CommitConflictError(
-            f"table moved {expected_version!r} → {version!r} since the "
-            "merge was derived; re-read and re-derive before retrying"
-        )
-    snapshot = table.get_snapshot(version)
-    try:
-        current = int(version)
-    except ValueError as exc:
-        raise BazofError(
-            f"cannot bump non-numeric snapshot version {version!r}"
-        ) from exc
-    next_version = str(max([current, *_numeric_versions(table_path)]) + 1)
-    schema = snapshot.schema
-
-    # each side is collected once (toArrow) and checked, bounded, sorted
-    # or deduplicated on the driver — a Spark-side dropDuplicates would
-    # add a shuffle-stage job
-    batch = None
-    if upsert_df is not None:
-        batch = _collect_batch(_conform_to_schema(upsert_df, schema), validate)
-        if batch.num_rows == 0:
-            batch = None
-    tomb = None
-    if delete_keys_df is not None:
-        collected = delete_keys_df.select(
-            F.col(KEY_COL).cast("string").alias(KEY_COL)
-        ).toArrow()
-        keys = collected[KEY_COL].unique()
-        if len(keys):  # else: same no-op contract as delete_keys
-            ts_type = pa.timestamp("us", tz="UTC")
-            tomb = pa.table(
-                [keys, pa.repeat(pa.scalar(at, ts_type), len(keys))],
-                schema=pa.schema([
-                    collected.schema.field(KEY_COL),
-                    pa.field(EVENT_TIME_COL, ts_type, nullable=False),
-                ]),
+    def write(snapshot: Snapshot, next_version: str):
+        # each side is collected once (toArrow) and checked, bounded,
+        # sorted or deduplicated on the driver — a Spark-side
+        # dropDuplicates would add a shuffle-stage job
+        batch = None
+        if upsert_df is not None:
+            batch = _collect_batch(
+                _conform_to_schema(upsert_df, snapshot.schema), validate
             )
-    if batch is None and tomb is None:
-        return snapshot
+            if batch.num_rows == 0:
+                batch = None
+        tomb = None
+        if delete_keys_df is not None:
+            collected = delete_keys_df.select(
+                F.col(KEY_COL).cast("string").alias(KEY_COL)
+            ).toArrow()
+            keys = collected[KEY_COL].unique()
+            if len(keys):  # else: same no-op contract as delete_keys
+                ts_type = pa.timestamp("us", tz="UTC")
+                tomb = pa.table(
+                    [keys, pa.repeat(pa.scalar(at, ts_type), len(keys))],
+                    schema=pa.schema([
+                        collected.schema.field(KEY_COL),
+                        pa.field(EVENT_TIME_COL, ts_type, nullable=False),
+                    ]),
+                )
+        if batch is None and tomb is None:
+            return None
+        if batch is not None:
+            lo, hi = _event_time_bounds(batch)
+            u_start, u_end = _aware_utc(lo), _aware_utc(hi)
+        else:
+            u_start = u_end = at
+        start = min(u_start, at)
+        stems = iter(_delta_stems(
+            snapshot, next_version, start, None, create_segment, count=2
+        ))
+        inserts = []
+        if batch is not None:
+            name = f"{next(stems)}.parquet"
+            _write_arrow_file(batch, iofs.join(table_path, name))
+            inserts.append(
+                ([_delta_with_stats(table_path, name, u_start, u_end)], u_start)
+            )
+        if tomb is not None:
+            name = f"{next(stems)}.parquet"
+            # every row carries ``at``: already in event_time-DESC order
+            _write_arrow_file(tomb, iofs.join(table_path, name))
+            inserts.append(
+                ([_delta_with_stats(table_path, name, at, at, tombstone=True)], at)
+            )
+        return start, inserts
 
-    if batch is not None:
-        lo, hi = _event_time_bounds(batch)
-        u_start, u_end = _aware_utc(lo), _aware_utc(hi)
-    else:
-        u_start = u_end = at
+    def place(snapshot: Snapshot, next_version: str, written):
+        if written is None:
+            return None
+        start, inserts = written
+        return _place_deltas(
+            snapshot, next_version, start, inserts,
+            create_segment=create_segment,
+        )
 
+    return _commit(table_path, place, write, expected_version=expected_version)
+
+
+def _delta_stems(
+    snapshot: Snapshot,
+    next_version: str,
+    start: datetime,
+    segment_id: str | None,
+    create_segment: bool,
+    count: int = 1,
+) -> list[str]:
+    """File stems for ``count`` new deltas of one commit, the one naming
+    rule of every commit: ``{seg}_delta{N}_{token}`` — the target
+    segment (:func:`_pick_target_segment`), the next delta sequence
+    numbers in it and a per-commit random token. Two writers that
+    derive the same N produce DIFFERENT names, so they never clobber
+    each other's bytes; they race only on the version pointer, which
+    the commit guard arbitrates."""
+    segs = list(snapshot.segments)
+    target = segs[
+        _pick_target_segment(
+            segs, segment_id, create_segment, start, next_version
+        )
+    ]
+    token = uuid.uuid4().hex[:8]
+    n = len(target.delta)
+    return [f"{target.id}_delta{n + i}_{token}" for i in range(1, count + 1)]
+
+
+def _place_deltas(
+    snapshot: Snapshot,
+    next_version: str,
+    start: datetime,
+    inserts: list,
+    segment_id: str | None = None,
+    create_segment: bool = False,
+    schema: TableSchema | None = None,
+) -> Snapshot:
+    """``snapshot`` with each ``(deltas, delta_start)`` of ``inserts``
+    placed in the commit's target top-level segment (opened at
+    ``start`` when ``create_segment`` finds none), under ``schema`` or
+    the snapshot's own."""
     segs = list(snapshot.segments)
     idx = _pick_target_segment(
-        segs, None, create_segment, min(u_start, at), next_version
+        segs, segment_id, create_segment, start, next_version
     )
-    target = segs[idx]
-    deltas = tuple(target.delta)
-    n = len(deltas)
-    if batch is not None:
-        name = _fresh_delta_name(table_path, target.id, n)
-        _write_arrow_file(batch, iofs.join(table_path, name))
-        deltas = _insert_deltas(
-            deltas,
-            [_delta_with_stats(table_path, name, u_start, u_end, tombstone=False)],
-            u_start,
-        )
-        n += 1
-    if tomb is not None:
-        name = _fresh_delta_name(table_path, target.id, n)
-        # every row carries ``at``: already in event_time-DESC order
-        _write_arrow_file(tomb, iofs.join(table_path, name))
-        deltas = _insert_deltas(
-            deltas,
-            [_delta_with_stats(table_path, name, at, at, tombstone=True)],
-            at,
-        )
+    delta = tuple(segs[idx].delta)
+    for new, delta_start in inserts:
+        delta = _insert_deltas(delta, new, delta_start)
+    segs[idx] = dataclasses.replace(segs[idx], delta=delta)
+    return Snapshot(segments=tuple(segs), schema=schema or snapshot.schema)
 
-    segs[idx] = dataclasses.replace(target, delta=deltas)
-    new_snapshot = Snapshot(segments=tuple(segs), schema=schema)
-    _publish_snapshot(table_path, version, next_version, new_snapshot)
-    return new_snapshot
+
+def _commit(
+    table_path: str,
+    place,
+    write=None,
+    expected_version: str | None = None,
+    retries: int = 0,
+    create: bool = False,
+) -> Snapshot:
+    """The one commit transaction every snapshot publisher runs (Delta
+    Lake routes every writer through ``OptimisticTransaction.commit``
+    for the same reason):
+
+    1. read the version pointer — absent means the table is being
+       created, allowed only with ``create``;
+    2. check the ``expected_version`` pin before anything is written;
+    3. refuse a non-numeric pointer;
+    4. derive the next version above every numbered snapshot on disk,
+       so one abandoned by a pointer rollback is never overwritten;
+    5. on the first attempt only, ``write(snapshot, next_version)``
+       writes or moves the data files and returns what placement needs
+       (``snapshot`` is None on a create);
+    6. ``place(snapshot, next_version, written)`` returns the new
+       Snapshot, or None for no change (the current one is returned);
+    7. publish through :func:`_publish_snapshot`.
+
+    A CommitConflictError from the publish re-reads the table and
+    re-runs only the placement, up to ``retries`` times, after a short
+    random pause that lets a lock holder finish. A retry whose placed
+    schema differs from the first attempt's raises CommitConflictError
+    instead: the files were written under the old schema (a concurrent
+    Int → Float widen would otherwise leave int64 files under a Float
+    column)."""
+    import random
+    import time
+
+    from bazof_spark.errors import CommitConflictError
+    from bazof_spark.maintenance import _numeric_versions
+
+    table = Table(path=table_path, name=os.path.basename(table_path.rstrip("/")))
+    written = schema = None
+    for attempt in range(retries + 1):
+        version = _read_pointer(table, create)
+        if expected_version is not None and version != expected_version:
+            raise CommitConflictError(
+                f"table moved {expected_version!r} → {version!r} since the "
+                "commit was derived; re-read and re-derive before retrying"
+            )
+        try:
+            current = 0 if version is None else int(version)
+        except ValueError as exc:  # non-numeric pointer: don't guess
+            raise BazofError(
+                f"cannot bump non-numeric snapshot version {version!r}"
+            ) from exc
+        next_version = str(max([current, *_numeric_versions(table_path)]) + 1)
+        snapshot = None if version is None else table.get_snapshot(version)
+        if attempt == 0 and write is not None:
+            written = write(snapshot, next_version)
+        new = place(snapshot, next_version, written)
+        if new is None:
+            return snapshot
+        if attempt == 0:
+            schema = new.schema
+        elif new.schema != schema:
+            raise CommitConflictError(
+                "the table schema changed since this commit's files were "
+                "written; re-read and re-derive before retrying"
+            )
+        try:
+            _publish_snapshot(table_path, version, next_version, new)
+            return new
+        except CommitConflictError:
+            if attempt == retries:
+                raise
+            time.sleep(random.uniform(0, 0.05))
+    raise AssertionError("unreachable")
+
+
+def _read_pointer(table: Table, create: bool) -> str | None:
+    """The version pointer; None when ``create`` and the table has none."""
+    if create and not iofs.exists(iofs.join(table.path, VERSION_FILE)):
+        return None
+    return table.current_version()
 
 
 @contextlib.contextmanager
@@ -1390,13 +1294,14 @@ def _commit_lock(table_path: str):
 
 def _publish_snapshot(
     table_path: str,
-    expected_version: str,
+    expected_version: str | None,
     next_version: str,
     snapshot: Snapshot,
 ) -> None:
     """Optimistic-concurrency publish: under the commit guard, re-check
     the version pointer still reads ``expected_version`` (the snapshot
-    this commit was derived from), then write the snapshot and flip the
+    this commit was derived from; None: the table is being created and
+    must still have no pointer), then write the snapshot and flip the
     pointer; a moved pointer means a concurrent writer won — raise
     CommitConflictError so the caller re-reads and retries instead of
     silently dropping the other commit's deltas from its snapshot copy.
@@ -1421,9 +1326,10 @@ def _publish_snapshot(
     from bazof_spark.errors import CommitConflictError
 
     with _commit_lock(table_path) as held:
-        latest = Table(
-            path=table_path, name=os.path.basename(table_path.rstrip("/"))
-        ).current_version()
+        latest = _read_pointer(
+            Table(path=table_path, name=os.path.basename(table_path.rstrip("/"))),
+            create=expected_version is None,
+        )
         if latest != expected_version:
             raise CommitConflictError(
                 f"version pointer moved {expected_version!r} → {latest!r} "

@@ -27,7 +27,7 @@ from bazof_spark.metadata import (  # noqa: E402
     KeyRange,
 )
 from bazof_spark.schema import ColumnDef, ColumnType, TableSchema  # noqa: E402
-from bazof_spark.writer import TableWriter, file_key_bloom  # noqa: E402
+from bazof_spark.writer import TableWriter, file_stats  # noqa: E402
 
 UTC = dt.timezone.utc
 T0 = dt.datetime(2024, 1, 1, tzinfo=UTC)
@@ -180,7 +180,7 @@ def test_stripped_blooms_never_lose_rows(spark, tmp_path):
 
 
 def test_file_key_bloom_unreadable_file_is_none(tmp_path):
-    assert file_key_bloom(str(tmp_path), "nope.parquet") is None
+    assert file_stats(str(tmp_path), "nope.parquet").get("key_bloom") is None
 
 
 def test_datasource_pushed_equality_probes_bloom(spark, tmp_path):

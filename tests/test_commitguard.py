@@ -315,3 +315,42 @@ def test_staged_publish_success_leaves_no_stage_debris(spark, tmp_path):
     assert table.current_version() == "2"
     assert os.path.exists(os.path.join(table_path, "s2.json"))
     assert not [n for n in os.listdir(table_path) if ".stage-" in n]
+
+
+def test_publish_snapshot_has_one_caller():
+    """Every snapshot publisher goes through ONE commit transaction
+    (writer._commit), so a change to the commit path — a conditional-put
+    CAS, a commit log, per-commit fields — has exactly one site to
+    touch. Walks the package source: ``_publish_snapshot`` may be
+    called only from ``_commit``."""
+    import ast
+
+    pkg = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "bazof_spark",
+    )
+    callers = []
+    for dirpath, _, files in os.walk(pkg):
+        for name in files:
+            if not name.endswith(".py"):
+                continue
+            path = os.path.join(dirpath, name)
+            with open(path, encoding="utf-8") as f:
+                tree = ast.parse(f.read(), path)
+            for fn in ast.walk(tree):
+                if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                    continue
+                for node in ast.walk(fn):
+                    if isinstance(node, ast.Call) and (
+                        getattr(node.func, "id", None) == "_publish_snapshot"
+                        or getattr(node.func, "attr", None) == "_publish_snapshot"
+                    ):
+                        callers.append(
+                            (os.path.relpath(path, pkg), fn.name, node.lineno)
+                        )
+    # a call nested in an inner function is attributed to both; keep
+    # the innermost (the last-visited function holding that line)
+    innermost = {(p, ln): fn for p, fn, ln in callers}
+    assert sorted((p, fn) for (p, _), fn in innermost.items()) == [
+        ("writer.py", "_commit")
+    ]

@@ -273,12 +273,64 @@ def test_append_merge_schema_evolves(spark, root):
     # without mergeSchema: refused
     with pytest.raises(Exception, match="mergeSchema"):
         write_table(widened, root, "t", mode="append")
+    table = Table(path=os.path.join(root, "t"), name="t")
+    v0 = int(table.current_version())
     write_table(widened, root, "t", mode="append", merge_schema=True)
+    # the new column lands in the SAME snapshot as the data
+    assert int(table.current_version()) == v0 + 1
     rows = {
         r["key"]: (r["value"], r["note"])
         for r in Lakehouse(spark, root).scan("t").collect()
     }
     # old rows null-fill the evolved column; new rows carry it
+    assert rows == {"a": (1.0, None), "b": (2.0, "new")}
+
+
+def test_stream_append_merge_schema_evolves(spark, root, tmp_path):
+    """writeStream.format('bazof') with mergeSchema: the stream's extra
+    column is declared in the snapshot that commits the micro-batch —
+    one version — so it reads back instead of being dropped."""
+    import json
+
+    from bazof_spark.datasource import BazofDataSource
+
+    spark.dataSource.register(BazofDataSource)
+    write_table(
+        mkdf(spark, [("a", ts("2024-01-01T00:00:00"), 1.0)]),
+        root, "t", mode="overwrite",
+    )
+    table = Table(path=os.path.join(root, "t"), name="t")
+    v0 = int(table.current_version())
+    src = tmp_path / "src"
+    src.mkdir()
+    (src / "a.json").write_text(
+        json.dumps(
+            {"key": "b", "event_time": "2024-02-01T00:00:00Z",
+             "value": 2.0, "note": "new"}
+        )
+    )
+    q = (
+        spark.readStream.schema(
+            "key string, event_time timestamp, value double, note string"
+        )
+        .json(str(src))
+        .writeStream.format("bazof")
+        .option("path", root)
+        .option("table", "t")
+        .option("mergeSchema", "true")
+        .option("checkpointLocation", str(tmp_path / "cp"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    assert int(table.current_version()) == v0 + 1
+    assert [c.name for c in table.get_current_snapshot().schema.columns] == [
+        "value", "note"
+    ]
+    rows = {
+        r["key"]: (r["value"], r["note"])
+        for r in Lakehouse(spark, root).scan("t").collect()
+    }
     assert rows == {"a": (1.0, None), "b": (2.0, "new")}
 
 

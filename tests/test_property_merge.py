@@ -74,6 +74,13 @@ def _ts(hours):
     return T0 + timedelta(hours=hours)
 
 
+def _delta_named(seg, prefix):
+    """The one delta file of ``seg`` whose name starts with ``prefix``
+    (commit-written names end in a per-commit random token)."""
+    (name,) = [d.file for d in seg.delta if d.file.startswith(prefix)]
+    return name
+
+
 def _python_merge(ranked_rows, t):
     """Direct spec interpretation: files in rank order, rows event_time
     DESC inside each; first eligible occurrence of a key wins."""
@@ -126,13 +133,13 @@ def test_sequential_upserts_match_spec(spark, tmp_path_factory, h):
 
     snapshot = lh.table("t").get_current_snapshot()
     seg = snapshot.segments[-1]
-    # file NAMES are sequential per batch (s1_delta{i+1}); the ARRAY
-    # order is precedence order (a later equal-or-newer-start commit is
-    # placed ahead so it shadows — writer._insert_deltas), so map rows
-    # by name, not position
+    # file NAMES are sequential per batch (s1_delta{i+1}_{token}); the
+    # ARRAY order is precedence order (a later equal-or-newer-start
+    # commit is placed ahead so it shadows — writer._insert_deltas), so
+    # map rows by name, not position
     file_rows = {"s1_base.parquet": h["base"]}
     for i, rows in enumerate(h["batches"]):
-        file_rows[f"s1_delta{i + 1}.parquet"] = rows
+        file_rows[_delta_named(seg, f"s1_delta{i + 1}_")] = rows
     assert {d.file for d in seg.delta} == set(file_rows) - {"s1_base.parquet"}
 
     for t_off in [None, *h["asof_offsets"]]:
@@ -265,19 +272,22 @@ def test_interleaved_upserts_and_deletes_match_spec(
     w.add_segment("s1", _ts(0), base_df=df(h["base"]))
     w.commit()
     lh = Lakehouse(spark, str(tmp))
-    file_rows = {"s1_base.parquet": list(h["base"])}
+    prefix_rows = {}
     for i, (kind, payload) in enumerate(h["batches"]):
-        fname = f"s1_delta{i + 1}.parquet"
+        prefix = f"s1_delta{i + 1}_"
         if kind == "upsert":
             lh.upsert("t", df(payload))
-            file_rows[fname] = list(payload)
+            prefix_rows[prefix] = list(payload)
         else:
             keys, off = payload
             delete_keys(spark, str(tmp / "t"), keys, at=_ts(off))
-            file_rows[fname] = [(k, off, _TOMB) for k in sorted(keys)]
+            prefix_rows[prefix] = [(k, off, _TOMB) for k in sorted(keys)]
 
     snapshot = lh.table("t").get_current_snapshot()
     seg = snapshot.segments[-1]
+    file_rows = {"s1_base.parquet": list(h["base"])}
+    for prefix, rows in prefix_rows.items():
+        file_rows[_delta_named(seg, prefix)] = rows
     assert {d.file for d in seg.delta} == set(file_rows) - {"s1_base.parquet"}
 
     def merge_with_tombstones(ranked, t):

@@ -348,11 +348,177 @@ def test_commit_delta_files_retries_on_conflict(spark, tmp_path):
     assert stat_reads and len(stat_reads) == len(set(stat_reads))
 
 
+def test_conflicting_retry_writes_once(spark, tmp_path):
+    """upsert_with_retry writes its batch ONCE: a commit conflict
+    re-places the already-written file in the re-read snapshot instead
+    of re-collecting the batch, so no unreferenced delta is left behind
+    and both commits' rows survive."""
+    from unittest import mock
+
+    from bazof_spark import writer as W
+
+    lh = _seed_table(spark, str(tmp_path))
+    table_path = f"{tmp_path}/t"
+    real_publish = W._publish_snapshot
+    real_write = W._write_arrow_file
+    racing = {"fired": False, "now": False}
+    ours = []  # files written by the retried upsert, not the racer
+
+    def racing_publish(*args, **kwargs):
+        if not racing["fired"]:
+            racing["fired"] = racing["now"] = True
+            # a competing writer wins the pointer first
+            append_delta(spark, table_path, _df(spark, [("3", ts(2024, 1, 2), "c1")]))
+            racing["now"] = False
+        return real_publish(*args, **kwargs)
+
+    def counting_write(tbl, dest_path, *args, **kwargs):
+        if not racing["now"]:
+            ours.append(os.path.basename(dest_path))
+        return real_write(tbl, dest_path, *args, **kwargs)
+
+    with mock.patch.object(
+        W, "_publish_snapshot", side_effect=racing_publish
+    ), mock.patch.object(W, "_write_arrow_file", side_effect=counting_write):
+        W.upsert_with_retry(
+            spark, table_path, _df(spark, [("4", ts(2024, 1, 3), "d1")])
+        )
+
+    assert racing["fired"]
+    assert len(ours) == 1, ours  # the batch was written once
+    current = lh.table("t").get_current_snapshot()
+    on_disk = {f for f in os.listdir(table_path) if f.endswith(".parquet")}
+    assert on_disk == _referenced_files(current)
+    assert lh.table("t").current_version() == "3"
+    assert _current(lh) == [("1", "a1"), ("2", "b1"), ("3", "c1"), ("4", "d1")]
+
+
+def test_retry_refuses_files_written_under_an_old_schema(spark, tmp_path):
+    """A conflict whose winner widened Int → Float leaves this commit's
+    file holding int64 values: re-placing it under the Float schema
+    would corrupt reads, so the retry raises CommitConflictError and the
+    caller re-derives."""
+    from unittest import mock
+
+    from bazof_spark import writer as W
+    from bazof_spark.errors import CommitConflictError
+    from bazof_spark.maintenance import evolve_table_schema
+
+    schema = TableSchema(
+        (
+            ColumnDef("value", ColumnType.STRING, False),
+            ColumnDef("n", ColumnType.INT, True),
+        )
+    )
+
+    def df(rows):
+        return spark.createDataFrame(rows, schema.to_struct_type())
+
+    w = TableWriter(spark, f"{tmp_path}/t", schema)
+    w.add_segment("10", ts(2024, 1, 1), base_df=df([("1", ts(2024, 1, 1), "a1", 1)]))
+    w.commit()
+    lh = Lakehouse(spark, str(tmp_path))
+    real_publish = W._publish_snapshot
+    fired = {"n": 0}
+
+    def widening_publish(*args, **kwargs):
+        if fired["n"] == 0:
+            fired["n"] += 1
+            evolve_table_schema(lh, "t", widen={"n": "Float"})
+        return real_publish(*args, **kwargs)
+
+    with mock.patch.object(W, "_publish_snapshot", side_effect=widening_publish):
+        with pytest.raises(CommitConflictError, match="schema changed"):
+            W.upsert_with_retry(
+                spark, f"{tmp_path}/t", df([("2", ts(2024, 2, 1), "b1", 7)])
+            )
+    snap = lh.table("t").get_current_snapshot()
+    assert [c.data_type for c in snap.schema.columns] == [
+        ColumnType.STRING, ColumnType.FLOAT,
+    ]
+    assert sorted(tuple(r) for r in lh.scan("t").select("key", "n").collect()) == [
+        ("1", 1.0)
+    ]
+
+
+def _non_numeric_publishers():
+    """(id, call(spark, lh, table_path)) for every snapshot publisher."""
+    from bazof_spark import writer as W
+    from bazof_spark import maintenance as M
+
+    def batch(spark):
+        return _df(spark, [("9", ts(2024, 1, 2), "z")])
+
+    def staged(table_path):
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        # staged OUTSIDE the table dir: the test pins that nothing
+        # lands inside it
+        path = os.path.join(os.path.dirname(table_path), "stage", "p.parquet")
+        os.makedirs(os.path.dirname(path), exist_ok=True)
+        pq.write_table(
+            pa.table({
+                "key": ["9"],
+                "event_time": pa.array(
+                    [datetime(2024, 1, 2)], pa.timestamp("us", "UTC")
+                ),
+                "value": ["z"],
+            }),
+            path,
+        )
+        return [path]
+
+    at = ts(2024, 6, 1)
+    return [
+        ("append_delta", lambda sp, lh, p: W.append_delta(sp, p, batch(sp))),
+        ("append_delta_distributed", lambda sp, lh, p: W.append_delta(
+            sp, p, batch(sp), distributed=True)),
+        ("upsert_with_retry", lambda sp, lh, p: W.upsert_with_retry(sp, p, batch(sp))),
+        ("delete_keys", lambda sp, lh, p: W.delete_keys(sp, p, ["1"], at=at)),
+        ("merge_apply", lambda sp, lh, p: W.merge_apply(
+            sp, p, upsert_df=batch(sp),
+            delete_keys_df=sp.createDataFrame([("1",)], "key string"))),
+        ("commit_delta_files", lambda sp, lh, p: W.commit_delta_files(
+            p, staged(p), at, at)),
+        ("create_table_version_from_files", lambda sp, lh, p: (
+            W.create_table_version_from_files(
+                p, SCHEMA, staged(p), at, at))),
+        ("checkpoint_table", lambda sp, lh, p: M.checkpoint_table(lh, "t", at)),
+        ("optimize_table", lambda sp, lh, p: M.optimize_table(
+            lh, "t", at, cluster_by=["value"])),
+        ("evolve_add", lambda sp, lh, p: M.evolve_table_schema(
+            lh, "t", add=[ColumnDef("x", ColumnType.STRING, True)])),
+        ("restore_table", lambda sp, lh, p: M.restore_table(lh, "t", 1)),
+    ]
+
+
+@pytest.mark.parametrize(
+    "publish",
+    [p for _, p in _non_numeric_publishers()],
+    ids=[i for i, _ in _non_numeric_publishers()],
+)
+def test_non_numeric_pointer_refused_before_any_write(spark, tmp_path, publish):
+    """Every publisher refuses a non-numeric version pointer the same
+    way — one BazofError, raised before any data file is written."""
+    import shutil
+
+    lh = _seed_table(spark, str(tmp_path))
+    table_path = f"{tmp_path}/t"
+    shutil.copy(os.path.join(table_path, "s1.json"), os.path.join(table_path, "sabc.json"))
+    with open(os.path.join(table_path, "version.txt"), "w") as f:
+        f.write("abc")
+    before = sorted(os.listdir(table_path))
+    with pytest.raises(BazofError, match="cannot bump non-numeric"):
+        publish(spark, lh, table_path)
+    assert sorted(os.listdir(table_path)) == before
+
+
 def test_concurrent_upserts_lose_nothing(spark, tmp_path):
     """Two writer threads race 6 commits each through upsert_with_retry.
     The local-FS commit lock (writer._commit_lock) makes the pointer
-    check→flip a real CAS and the O_EXCL delta-name reservation stops
-    same-name clobbering, so EVERY committed delta must survive: all 12
+    check→flip a real CAS and the per-commit token in every delta name
+    stops same-name clobbering, so EVERY committed delta must survive: all 12
     keys present, version advanced exactly 12 times, snapshot chain
     linear, validation clean."""
     import threading
