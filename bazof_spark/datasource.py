@@ -743,6 +743,17 @@ def _byte_ranges(size: int, max_bytes: int) -> list[tuple[int, int | None]]:
     return [(s0, step) for s0 in starts[:-1]] + [(starts[-1], None)]
 
 
+def sizes_of(paths, known_sizes: dict[str, int], env: dict) -> dict[str, int]:
+    """``{path: bytes}`` for ``paths``: commit-time-recorded lengths from
+    ``known_sizes``, and one batched stat (:func:`_file_sizes`) for the
+    files missing there."""
+    sizes = {p: known_sizes.get(p, 0) for p in paths}
+    missing = [p for p, n in sizes.items() if not n]
+    if missing:
+        sizes.update(_file_sizes(missing, env))
+    return sizes
+
+
 def plan_byte_ranges(files, known_sizes: dict[str, int], max_bytes: int,
                      env: dict, pushed=(), point_lookup: bool = False):
     """Read tasks ``[(path, rank, tombstone, start, length)]`` over
@@ -769,10 +780,7 @@ def plan_byte_ranges(files, known_sizes: dict[str, int], max_bytes: int,
     task-count optimization."""
     from bazof_spark import iofs
 
-    sizes = {p: known_sizes.get(p, 0) for p, _, _ in files}
-    missing = [p for p, n in sizes.items() if not n]
-    if missing:
-        sizes.update(_file_sizes(missing, env))
+    sizes = sizes_of([p for p, _, _ in files], known_sizes, env)
     out = []
     for p, r, tomb in files:
         ranges = _byte_ranges(sizes.get(p) or 0, max_bytes)
@@ -1808,6 +1816,16 @@ def write_table(
     writer.save()
 
 
+def broadcast_threshold(spark) -> int | None:
+    """The session's ``spark.sql.autoBroadcastJoinThreshold`` in bytes
+    (None when unparsable; non-positive = off, Spark's meaning) — what
+    "small" means to :func:`broadcast_hint_if_small` and to the driver
+    read of keyed ``Lakehouse.scan`` lookups."""
+    return _bytes_conf(
+        spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760b")
+    )
+
+
 def broadcast_hint_if_small(spark, table_path: str, df, version=None,
                             snapshot=None):
     """STATISTICS-DRIVEN BROADCAST for Data Source scans: the Python
@@ -1842,11 +1860,7 @@ def broadcast_hint_if_small(spark, table_path: str, df, version=None,
         if not files or not files <= set(sizes):
             return df
         total = sum(sizes[f] for f in files)
-        threshold = _bytes_conf(
-            spark.conf.get(
-                "spark.sql.autoBroadcastJoinThreshold", "10485760b"
-            )
-        )
+        threshold = broadcast_threshold(spark)
         if threshold is not None and 0 < total <= threshold:
             return df.hint("broadcast")
     except Exception:

@@ -18,7 +18,11 @@ DataFrame operations and Catalyst/Tungsten execute them distributed:
    ``spark.range(n).mapInArrow`` reads them, a pyarrow read per range
    with the projection, as-of bound and key predicate applied in the
    reader (``datasource.read_file_range``, the Data Source reader's
-   own per-task read) — executors get only the scan;
+   own per-task read) — executors get only the scan. A ``keys=``
+   lookup whose planned ranges fit the broadcast threshold skips
+   steps 2-4 on the cluster: the driver reads the ranges with the
+   same reader and merges them in Arrow (``_latest_per_key_arrow``),
+   so the lookup runs no Spark job;
 3. file precedence (crates/azof/src/metadata.rs:47-73 — child segments
    shadow parents, newer deltas shadow older, deltas shadow base) is
    attached as a ``_rank`` column mapped from ``input_file_name()``;
@@ -42,8 +46,9 @@ costless column from the reader) and breaks ties on it inside the same
 ``max_by``, reproducing the reference bit-for-bit.
 
 Precedence-struct note: the ``max_by`` ordering used here is
-``bazof_spark.ordering.latest_wins_ordering("batch")`` — the native
-STREAM reader's ``_rank`` has the opposite convention (snapshot
+``bazof_spark.ordering.latest_wins_ordering("batch")``, and the driver
+merge sorts by its Arrow twin ``LATEST_WINS_SORT_KEYS`` — the
+native STREAM reader's ``_rank`` has the opposite convention (snapshot
 version, higher = newer); see ``ordering.py`` for both recipes.
 """
 
@@ -211,8 +216,12 @@ class Lakehouse:
         keys: Iterable[str] | None = None,
         key_range: tuple[str | None, str | None] | None = None,
     ) -> DataFrame:
-        """Point-in-time merge scan → lazy DataFrame
-        (reference: crates/azof/src/lakehouse.rs:29-86).
+        """Point-in-time merge scan → DataFrame
+        (reference: crates/azof/src/lakehouse.rs:29-86). Lazy, except
+        for a ``keys=`` lookup whose planned byte ranges fit
+        ``spark.sql.autoBroadcastJoinThreshold`` (``-1`` = never): that
+        one is read and merged on the driver, here, and comes back as
+        a local relation whose ``collect()`` runs no Spark job.
 
         ``version`` selects a specific snapshot (Delta-style system
         version travel — our extension; the reference only resolves the
@@ -228,7 +237,9 @@ class Lakehouse:
         files), not O(all in-range files). Merge-safe by construction:
         a pruned file cannot contain any requested key, so per-key
         winners are unchanged. The same row predicate is also applied
-        in the scan, pushed to parquet row-group stats.
+        in the scan, pushed to parquet row-group stats (or, on the
+        driver and object-store reads, to page indexes and rows in the
+        per-range reader).
 
         Output columns follow the reference's ordering rules: key,
         event_time, then declared value columns, each only if projected
@@ -397,18 +408,35 @@ class Lakehouse:
         remote = iofs.is_uri(table.path) and not table.path.startswith(
             "file://"
         )
-        if remote:
-            df = self._read_ranked_arrow(
+        tombs = snapshot.tombstone_files()
+        tomb_ranks = tuple(r for f, r in ranked if f in tombs)
+        # (an empty projection keeps the executor merge: a local
+        # relation needs at least one column)
+        keyed = key_values is not None and bool(out_cols)
+        if remote or keyed:
+            tasks, planned, raw, read_args = self._plan_ranked_ranges(
                 table, snapshot, ranked, as_of, value_cols,
                 key_range=key_range, key_values=key_values,
             )
+        if keyed:
+            # keyed lookup whose planned byte ranges are "small" by the
+            # session's broadcast threshold (-1 = off, Spark's meaning):
+            # read and merge on the driver — a bounded collect, and the
+            # lookup runs no Spark job at all
+            from bazof_spark.datasource import broadcast_threshold
+
+            limit = broadcast_threshold(self.spark)
+            if limit is not None and 0 < limit and planned <= limit:
+                return self._merge_on_driver(
+                    tasks, raw, read_args, tomb_ranks, out_cols
+                )
+        if remote:
+            df = self._read_ranked_arrow(tasks, raw, read_args)
         else:
             df = self._read_ranked_parquet(
                 table, snapshot, ranked, as_of, value_cols,
                 key_range=key_range, key_values=key_values,
             )
-        tombs = snapshot.tombstone_files()
-        tomb_ranks = tuple(r for f, r in ranked if f in tombs)
         out = self._dedup_latest_per_key(df, value_cols, tomb_ranks, out_cols)
         if remote:
             # the mapInArrow leaf carries no statistics — attach the
@@ -501,7 +529,7 @@ class Lakehouse:
             df = df.filter(" AND ".join(conds))
         return self._with_rank(df, table, ranked)
 
-    def _read_ranked_arrow(
+    def _plan_ranked_ranges(
         self,
         table: Table,
         snapshot: Snapshot,
@@ -510,26 +538,25 @@ class Lakehouse:
         value_cols: list[str],
         key_range=None,
         key_values: list[str] | None = None,
-    ) -> DataFrame:
-        """Raw versioned rows of the ranked files on an object-store
-        root, whose scheme the JVM may have no connector for (no S3A
-        jars in this runtime): the driver splits the already-pruned
-        files into byte-range tasks and ``spark.range(n).mapInArrow``
-        runs one executor-side pyarrow read per task through iofs
-        ($BAZOF_S3_ENDPOINT / emulation routed) — the Data Source
-        reader's own per-task read (``datasource.read_file_range``),
-        with the as-of bound, the key predicate and the projection
-        applied IN the reader. Reference parity: the reference runs on
-        any ``object_store`` backend (crates/azof/src/lakehouse.rs:
-        19-27)."""
+    ):
+        """Driver-side read plan of the ranked files: ``(tasks,
+        planned_bytes, raw, read_args)`` — the byte-range tasks
+        ``datasource.plan_byte_ranges`` splits the already-pruned files
+        into, the bytes those ranges cover, the raw-row schema
+        (projected columns + ``_rank``/``_row_idx``) and the keyword
+        arguments of ``datasource.read_file_range``, which applies the
+        as-of bound, the key predicate, page pruning, former spellings
+        and null fill IN the reader. Shared by the executor read
+        (:meth:`_read_ranked_arrow`) and the driver read
+        (:meth:`_merge_on_driver`)."""
         import pyarrow as pa
         from pyspark.sql.pandas.types import to_arrow_schema
         from pyspark.sql.types import LongType, StructField, StructType
 
         from bazof_spark.datasource import (
             _parse_byte_size,
-            file_range_task_reader,
             plan_byte_ranges,
+            sizes_of,
         )
 
         read_type = snapshot.schema.to_struct_type(
@@ -551,11 +578,17 @@ class Lakehouse:
             if key_range.hi is not None:
                 pushed.append(("less_equal", KEY_COL, key_range.hi))
         env = iofs.env_snapshot()
-        tasks = plan_byte_ranges(
-            # tombstone flag False: the merge hides tombstones by _rank
-            # (the raw rows carry no _tombstone column)
-            [(table.data_file_path(f), r, False) for f, r in ranked],
+        # tombstone flag False: the merge hides tombstones by _rank (the
+        # raw rows carry no _tombstone column)
+        files = [(table.data_file_path(f), r, False) for f, r in ranked]
+        sizes = sizes_of(
+            [p for p, _, _ in files],
             {table.data_file_path(f): n for f, n in snapshot.file_sizes().items()},
+            env,
+        )
+        tasks = plan_byte_ranges(
+            files,
+            sizes,
             _parse_byte_size(
                 self.spark.conf.get("spark.sql.files.maxPartitionBytes")
             ),
@@ -563,9 +596,11 @@ class Lakehouse:
             pushed,
             point_lookup=key_range is not None and key_range.keys is not None,
         )
-        read = file_range_task_reader(
-            tasks,
-            env,
+        # the last range of a file is open-ended (to EOF)
+        planned = sum(
+            sizes[p] - s0 if ln is None else ln for p, _, _, s0, ln in tasks
+        )
+        read_args = dict(
             columns=[KEY_COL, EVENT_TIME_COL, *value_cols],
             field_order=raw.fieldNames(),
             # Spark's Arrow bridge accepts only µs timestamps; nullable
@@ -579,10 +614,53 @@ class Lakehouse:
             pushed=pushed,
             as_of_dt=as_of.event_time_at,
         )
+        return tasks, planned, raw, read_args
+
+    def _read_ranked_arrow(self, tasks, raw, read_args: dict) -> DataFrame:
+        """Raw versioned rows of the ranked files on an object-store
+        root, whose scheme the JVM may have no connector for (no S3A
+        jars in this runtime): ``spark.range(n).mapInArrow`` runs one
+        executor-side pyarrow read per planned task through iofs
+        ($BAZOF_S3_ENDPOINT / emulation routed) — the Data Source
+        reader's own per-task read (``datasource.read_file_range``).
+        Reference parity: the reference runs on any ``object_store``
+        backend (crates/azof/src/lakehouse.rs:19-27)."""
+        from bazof_spark.datasource import file_range_task_reader
+
+        read = file_range_task_reader(tasks, iofs.env_snapshot(), **read_args)
         # one partition per task (at least one: zero tasks — every byte
         # range page-pruned — must read as zero rows, not fail)
         n = len(tasks)
         return self.spark.range(0, n, 1, max(n, 1)).mapInArrow(read, raw)
+
+    def _merge_on_driver(
+        self,
+        tasks,
+        raw,
+        read_args: dict,
+        tomb_ranks: tuple[int, ...],
+        out_cols: list[str],
+    ) -> DataFrame:
+        """Keyed lookup under the broadcast threshold: every planned
+        task is read HERE through ``datasource.read_file_range``, merged
+        latest-per-key in Arrow (:func:`_latest_per_key_arrow`) and
+        handed to Spark as a local relation — the reference's
+        in-process merge scan (crates/azof/src/lakehouse.rs:40-85), with
+        no Spark job to schedule. Output fields keep the raw schema's
+        nullability, as the executor routes do."""
+        import pyarrow as pa
+        from pyspark.sql.types import StructType
+
+        from bazof_spark.datasource import read_file_range
+
+        rows = pa.Table.from_batches(
+            [b for task in tasks for b in read_file_range(*task, **read_args)],
+            schema=read_args["arrow_schema"],
+        )
+        winners = _latest_per_key_arrow(rows, tomb_ranks)
+        return self.spark.createDataFrame(
+            winners.select(out_cols), StructType([raw[c] for c in out_cols])
+        )
 
     def _dedup_latest_per_key(
         self,
@@ -1356,6 +1434,39 @@ class Lakehouse:
             for v in (view, src_view, f"{src_view}__v", f"{src_view}__anti",
                       f"{src_view}__anti__v"):
                 self.spark.catalog.dropTempView(v)
+
+
+def _latest_per_key_arrow(raw, tomb_ranks: tuple[int, ...] = ()):
+    """The as-of merge over raw versioned rows (key, event_time, values,
+    ``_rank``, ``_row_idx``) in Arrow: sort by the batch precedence of
+    ``ordering.LATEST_WINS_SORT_KEYS`` and keep each key's FIRST row —
+    the row ``_dedup_latest_per_key``'s ``max_by`` picks — then hide
+    winners from tombstone files (``tomb_ranks``)."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    from bazof_spark.ordering import LATEST_WINS_SORT_KEYS
+
+    ordered = raw.sort_by(LATEST_WINS_SORT_KEYS)
+    first = (
+        ordered.select([KEY_COL])
+        .append_column("_pos", pa.array(np.arange(ordered.num_rows)))
+        .group_by(KEY_COL)
+        .aggregate([("_pos", "min")])
+        .column("_pos_min")
+    )
+    winners = ordered.take(first)
+    if tomb_ranks:
+        winners = winners.filter(
+            pc.invert(
+                pc.is_in(
+                    winners.column("_rank"),
+                    value_set=pa.array(tomb_ranks, pa.int64()),
+                )
+            )
+        )
+    return winners
 
 
 def _union_all(parts: list) -> DataFrame | None:

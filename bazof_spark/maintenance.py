@@ -58,6 +58,7 @@ one Spark job per table, not per file.
 
 from __future__ import annotations
 
+import dataclasses
 import os
 import re
 from dataclasses import dataclass, field
@@ -145,24 +146,10 @@ def checkpoint_table(
                 id=f"{seg_id}_archived",
                 start=min(s.start for s in was_open),
                 end=at,
+                # every recorded field carries over — sizes, bounds
+                # and the base-file bloom alike — only the span closes
                 segments=tuple(
-                    Segment(
-                        id=s.id,
-                        start=s.start,
-                        end=at,
-                        file=s.file,
-                        segments=s.segments,
-                        delta=s.delta,
-                        key_min=s.key_min,
-                        key_max=s.key_max,
-                        ts_min=s.ts_min,
-                        ts_max=s.ts_max,
-                        # carry the base-file bloom: dropping it here
-                        # would silently degrade point-lookup pruning
-                        # after every checkpoint (absent bloom = always
-                        # admit)
-                        key_bloom=s.key_bloom,
-                    )
+                    dataclasses.replace(s, end=at)
                     for s in was_open
                 ),
             )
@@ -490,7 +477,8 @@ def _rewrite_tree_with_cast(
     row-order preserved — the merge's intra-file tie-break is physical
     position), under a new name ``{stem}__{suffix}.parquet``; segment
     ids, ranges, and zone stats carry over unchanged (the cast touches
-    neither keys nor event times). Old files are left for prior
+    neither keys nor event-time values); each file's ``size`` is the
+    new file's. Old files are left for prior
     snapshots / vacuum. Former spellings of renamed columns are cast
     in place under their stored name, so reader coalescing still works
     post-widen."""
@@ -499,6 +487,7 @@ def _rewrite_tree_with_cast(
 
     from bazof_spark import iofs
     from bazof_spark.metadata import Segment
+    from bazof_spark.writer import _write_arrow_file
 
     # stored name -> target arrow type: the widened column may live in
     # files under a former spelling too
@@ -508,34 +497,31 @@ def _rewrite_tree_with_cast(
             for stored in (c.name, *c.formers):
                 targets[stored] = pa.float64()
 
-    def _rewrite_file(file: str) -> str:
-        stem = file[:-len(".parquet")] if file.endswith(".parquet") else file
-        new_name = f"{stem}__{suffix}.parquet"
-        src_fs, src_rel = iofs._split(table.data_file_path(file))
+    def _rewritten(rec):
+        """``rec`` (a Delta or a Segment with a base file) pointing at a
+        cast copy of its file, with the copy's real size."""
+        new_name = f"{rec.file.removesuffix('.parquet')}__{suffix}.parquet"
+        src_fs, src_rel = iofs.split(table.data_file_path(rec.file))
         t = pq.read_table(src_rel, filesystem=src_fs)
         fields = []
         for f in t.schema:
             tgt = targets.get(f.name)
             fields.append(f.with_type(tgt) if tgt is not None else f)
         t = t.cast(pa.schema(fields))
-        dst_fs, dst_rel = iofs._split(table.data_file_path(new_name))
-        from bazof_spark.operators.parquetbloom import write_table_with_blooms
-
-        write_table_with_blooms(t, dst_rel, dst_fs, write_page_index=True)
-        return new_name
-
-    import dataclasses
+        # the writer's own file write: timestamps go back as µs UTC (an
+        # INT96 event_time reads as ns, and ns written back is INT64
+        # nanos, which the JVM parquet scan rejects), with page indexes
+        # and the key bloom
+        size = _write_arrow_file(t, table.data_file_path(new_name))
+        return dataclasses.replace(rec, file=new_name, size=size)
 
     def _walk(seg: Segment) -> Segment:
-        return dataclasses.replace(
+        seg = dataclasses.replace(
             seg,
-            file=_rewrite_file(seg.file) if seg.file else seg.file,
             segments=tuple(_walk(s) for s in seg.segments),
-            delta=tuple(
-                dataclasses.replace(d, file=_rewrite_file(d.file))
-                for d in seg.delta
-            ),
+            delta=tuple(_rewritten(d) for d in seg.delta),
         )
+        return _rewritten(seg) if seg.file else seg
 
     return tuple(_walk(s) for s in segments)
 

@@ -216,7 +216,7 @@ def parse_bloom_blob(blob: bytes) -> bytes:
 
 def write_table_with_blooms(
     tbl, dest_rel: str, filesystem, bloom_cols=None, **write_kwargs
-):
+) -> int:
     """``pq.write_table`` + bloom append in ONE object PUT: the file is
     built in memory (bounded — every commit path writes partition- or
     driver-batch-sized chunks), blooms appended for ``bloom_cols``
@@ -225,7 +225,7 @@ def write_table_with_blooms(
     through ``filesystem``. Bloom construction is an optimization:
     any surprise keeps the plain file rather than failing the commit
     (tests pin bloom presence on committed files, so a silent
-    regression still surfaces)."""
+    regression still surfaces). Returns the bytes written."""
     import io
 
     import pyarrow.parquet as pq
@@ -242,6 +242,7 @@ def write_table_with_blooms(
             pass
     with filesystem.open_output_stream(dest_rel) as out:
         out.write(data)
+    return len(data)
 
 
 def append_blooms_bytes(

@@ -80,6 +80,17 @@ def latest_wins_ordering_sql(source: str = "batch") -> str:
     return f"struct({rank}, {EVENT_TIME_COL} AS ts, (- _row_idx) AS neg_row_idx)"
 
 
+#: Arrow twin of ``latest_wins_ordering_sql("batch")``: the ``sort_by``
+#: keys under which the FIRST row of each key is the row ``max_by``
+#: picks (the driver-side merge of ``Lakehouse.scan`` keyed lookups).
+#: Change it together with the two functions above.
+LATEST_WINS_SORT_KEYS = (
+    ("_rank", "ascending"),
+    (EVENT_TIME_COL, "descending"),
+    ("_row_idx", "ascending"),
+)
+
+
 def quote_sql_ident(name: str) -> str:
     """Backtick-quote an identifier for embedding in an ``F.expr``
     string (doubles embedded backticks, the Spark SQL escape)."""

@@ -106,8 +106,9 @@ def _write_arrow_file(
     dest_path: str,
     timestamp_unit: str = "us",
     row_group_rows: int | None = None,
-) -> None:
-    """Write an already-ordered Arrow table as ONE parquet file."""
+) -> int:
+    """Write an already-ordered Arrow table as ONE parquet file; returns
+    the bytes written."""
     fields = []
     for f in tbl.schema:
         if pa.types.is_timestamp(f.type):
@@ -130,14 +131,13 @@ def _write_arrow_file(
     from bazof_spark.operators.parquetbloom import write_table_with_blooms
 
     if row_group_rows:
-        write_table_with_blooms(
+        return write_table_with_blooms(
             tbl, dest_rel, dest_fs,
             row_group_size=row_group_rows, write_page_index=True,
         )
-    else:
-        write_table_with_blooms(
-            tbl, dest_rel, dest_fs, write_page_index=True
-        )
+    return write_table_with_blooms(
+        tbl, dest_rel, dest_fs, write_page_index=True
+    )
 
 
 def _column_footer_bounds(md, name: str):

@@ -1,5 +1,7 @@
+import contextlib
 import os
 import sys
+import uuid
 
 import pytest
 
@@ -90,3 +92,58 @@ def spark():
     except Exception:
         pass  # warmup is best-effort; tests proceed regardless
     yield s
+
+
+@pytest.fixture()
+def executor_lookups(spark):
+    """Keyed ``Lakehouse.scan`` lookups take the executor routes (JVM
+    parquet scan, or ``mapInArrow`` on object stores) instead of the
+    driver read: the broadcast threshold that bounds the driver read is
+    set to -1 (off) for the test and restored afterwards."""
+    conf = "spark.sql.autoBroadcastJoinThreshold"
+    saved = spark.conf.get(conf)
+    spark.conf.set(conf, "-1")
+    try:
+        yield
+    finally:
+        spark.conf.set(conf, saved)
+
+
+@pytest.fixture()
+def driver_reads(monkeypatch):
+    """Paths ``datasource.read_file_range`` opens in the test process —
+    on the driver route of a keyed lookup, the files the lookup read
+    (a local relation has no ``inputFiles()``)."""
+    from bazof_spark import datasource
+
+    opened: list[str] = []
+    read = datasource.read_file_range
+
+    def recording(path, *args, **kwargs):
+        opened.append(path)
+        return read(path, *args, **kwargs)
+
+    monkeypatch.setattr(datasource, "read_file_range", recording)
+    return opened
+
+
+@pytest.fixture()
+def spark_jobs(spark):
+    """``with spark_jobs() as ids:`` — after the block, ``ids`` holds
+    the ids of the Spark jobs started inside it (own job group)."""
+    sc = spark.sparkContext
+
+    @contextlib.contextmanager
+    def jobs():
+        group = f"jobs-{uuid.uuid4().hex}"
+        ids: list[int] = []
+        sc.setJobGroup(group, group)
+        try:
+            yield ids
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            # job events reach the status store through the async bus
+            sc._jsc.sc().listenerBus().waitUntilEmpty()
+            ids.extend(sc.statusTracker().getJobIdsForGroup(group))
+
+    return jobs

@@ -18,6 +18,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+import pytest  # noqa: E402
 from pyspark.sql import Row  # noqa: E402
 
 from bazof_spark import Lakehouse, Snapshot  # noqa: E402
@@ -126,6 +127,7 @@ def _scattered_table(spark, tmp_path):
     return Lakehouse(spark, str(tmp_path))
 
 
+@pytest.mark.usefixtures("executor_lookups")
 def test_point_lookup_prunes_scattered_files_by_bloom(spark, tmp_path):
     lh = _scattered_table(spark, tmp_path)
     snap = lh.table("t").get_current_snapshot()
@@ -143,11 +145,33 @@ def test_point_lookup_prunes_scattered_files_by_bloom(spark, tmp_path):
     assert [(r["key"], r["value"]) for r in df.collect()] == [("k101", "w1")]
 
 
+@pytest.mark.usefixtures("executor_lookups")
 def test_absent_key_inside_range_reads_zero_files(spark, tmp_path):
     lh = _scattered_table(spark, tmp_path)
     df = lh.scan("t", keys=["k150"])  # inside every range, in no file
     assert df.inputFiles() == []
     assert df.count() == 0
+    assert df.columns == ["key", "event_time", "value"]
+
+
+def test_driver_route_point_lookup_reads_bloom_pruned_files(
+    spark, tmp_path, driver_reads, spark_jobs
+):
+    """Driver-route twin of the two tests above: the keyed lookup reads
+    on the driver exactly the one file the bloom admits (none for an
+    absent key) and its collect runs no Spark job."""
+    lh = _scattered_table(spark, tmp_path)
+    df = lh.scan("t", keys=["k101"])
+    assert len(driver_reads) == 1
+    with spark_jobs() as jobs:
+        rows = df.collect()
+    assert jobs == []
+    assert [(r["key"], r["value"]) for r in rows] == [("k101", "w1")]
+
+    driver_reads.clear()
+    df = lh.scan("t", keys=["k150"])
+    assert driver_reads == []
+    assert df.collect() == []
     assert df.columns == ["key", "event_time", "value"]
 
 

@@ -461,6 +461,98 @@ def test_checkpoint_preserves_key_blooms(spark, lakehouse):
     assert archived.key_bloom.to_json() == open_seg.key_bloom.to_json()
 
 
+def test_checkpoint_keeps_recorded_file_sizes(spark, lakehouse, monkeypatch):
+    """The archived bases keep their commit-time sizes, so the snapshot
+    sizes every file of an as-of before the checkpoint and a historical
+    keyed lookup plans its byte ranges without stat'ing a file."""
+    from bazof_spark import datasource
+    from bazof_spark.asof import EventTime
+
+    want = snap(lakehouse.scan("t", as_of=ts(5), keys=["k1", "k3"]))
+    checkpoint_table(lakehouse, "t", at=ts(10))
+    table = lakehouse.table("t")
+    after = table.get_current_snapshot()
+    sizes = after.file_sizes()
+    ranked = after.ranked_data_files(EventTime(ts(5)))
+    assert ranked
+    for f, _rank in ranked:
+        assert sizes.get(f) == os.path.getsize(table.data_file_path(f)), f
+
+    def no_stat(paths, env):
+        raise AssertionError(f"stat of recorded files: {paths}")
+
+    monkeypatch.setattr(datasource, "_file_sizes", no_stat)
+    assert snap(lakehouse.scan("t", as_of=ts(5), keys=["k1", "k3"])) == want
+
+
+INT_SCHEMA = TableSchema(
+    (ColumnDef("value", ColumnType.STRING, False),
+     ColumnDef("qty", ColumnType.INT, True))
+)
+
+
+def _int_rows(spark, *data):
+    return spark.createDataFrame(list(data), INT_SCHEMA.to_struct_type())
+
+
+def test_widen_records_the_rewritten_file_sizes(spark, tmp_path):
+    """Every file the Int->Float widen rewrites is recorded with its
+    own size, not the size of the file it replaces."""
+    from bazof_spark.maintenance import evolve_table_schema
+    from bazof_spark.writer import append_delta
+
+    w = TableWriter(spark, str(tmp_path / "t"), INT_SCHEMA)
+    w.add_segment(
+        "s1", ts(1),
+        base_df=_int_rows(spark, *[(f"k{i}", ts(1), f"v{i}" * i, i) for i in range(40)]),
+    )
+    w.commit()
+    lh = Lakehouse(spark, str(tmp_path))
+    append_delta(
+        spark, str(tmp_path / "t"),
+        _int_rows(spark, ("k1", ts(3), "w", 7), ("k2", ts(3), "x" * 30, None)),
+    )
+    evolve_table_schema(lh, "t", widen={"qty": ColumnType.FLOAT})
+    table = lh.table("t")
+    snapshot = table.get_current_snapshot()
+    files = snapshot.get_data_files()
+    assert len(files) == 2
+    sizes = snapshot.file_sizes()
+    for f in files:
+        assert sizes.get(f) == os.path.getsize(table.data_file_path(f)), f
+
+
+def test_widen_after_distributed_append_still_scans(spark, tmp_path):
+    """A distributed append's JVM-written file stores event_time as
+    INT96; the widen rewrite must write it back in a form the JVM
+    parquet scan reads (µs), with the same instants and values."""
+    from bazof_spark.maintenance import evolve_table_schema
+    from bazof_spark.writer import append_delta
+
+    w = TableWriter(spark, str(tmp_path / "t"), INT_SCHEMA)
+    w.add_segment(
+        "s1", ts(1),
+        base_df=_int_rows(spark, ("k1", ts(1), "a1", 1), ("k2", ts(1), "b1", 2)),
+    )
+    w.commit()
+    lh = Lakehouse(spark, str(tmp_path))
+    append_delta(
+        spark, str(tmp_path / "t"),
+        _int_rows(spark, ("k1", ts(3), "a2", 10), ("k3", ts(3), "c1", None)),
+        distributed=True,
+    )
+    evolve_table_schema(lh, "t", widen={"qty": ColumnType.FLOAT})
+    assert snap(lh.scan("t")) == [
+        ("k1", datetime(2024, 1, 3), "a2", 10.0),
+        ("k2", datetime(2024, 1, 1), "b1", 2.0),
+        ("k3", datetime(2024, 1, 3), "c1", None),
+    ]
+    assert snap(lh.scan("t", as_of=ts(2))) == [
+        ("k1", datetime(2024, 1, 1), "a1", 1.0),
+        ("k2", datetime(2024, 1, 1), "b1", 2.0),
+    ]
+
+
 def test_arrow_data_checks_match_spark_findings(spark, reference_data):
     """data_checks='arrow' must report the SAME invariant findings as
     the Spark path — pinned on the reference's own financials table,

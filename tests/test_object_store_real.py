@@ -972,6 +972,7 @@ def test_keyed_scan_metadata_gets_over_real_s3(spark, s3_endpoint):
     assert meta == ["s2.json", "version.txt"], meta
 
 
+@pytest.mark.usefixtures("executor_lookups")
 def test_object_store_scan_is_driver_planned(spark, s3_endpoint):
     """Lakehouse.scan on an s3:// root reads the driver-planned byte
     ranges with mapInArrow (one task per range, no Python Data Source
@@ -985,6 +986,30 @@ def test_object_store_scan_is_driver_planned(spark, s3_endpoint):
     assert "BatchScan" not in plan, plan
     assert shuffle_count(df) == 1, plan
     assert sorted((r["key"], r["value"]) for r in df.collect()) == [
+        ("a", "a2"), ("b", "b1"),
+    ]
+
+
+def test_object_store_keyed_lookup_reads_on_the_driver(
+    spark, s3_endpoint, driver_reads, spark_jobs
+):
+    """Driver-route twin: under the default broadcast threshold the
+    same lookup reads both files over s3:// on the driver and hands
+    Spark a local relation — no MapInArrow, no scan, no Spark job."""
+    from bazof_spark.plans import formatted_plan, shuffle_count
+
+    lh = _two_version_table(spark, "s3://bazof-real/driverread")
+    df = lh.scan("t", keys=["a", "b"])
+    assert len(set(driver_reads)) == 2
+    assert all(p.startswith("s3://bazof-real/driverread/") for p in driver_reads)
+    plan = formatted_plan(df)
+    assert "LocalTableScan" in plan, plan
+    assert "MapInArrow" not in plan and "BatchScan" not in plan, plan
+    assert shuffle_count(df) == 0, plan
+    with spark_jobs() as jobs:
+        rows = df.collect()
+    assert jobs == []
+    assert sorted((r["key"], r["value"]) for r in rows) == [
         ("a", "a2"), ("b", "b1"),
     ]
 

@@ -66,6 +66,51 @@ def test_shared_tiebreaks(spark):
         assert _winners(df, source) == {"a": "newer", "b": "first"}, source
 
 
+def test_arrow_first_per_key_equals_max_by_winner(spark):
+    """The Arrow merge of keyed driver lookups (sort by
+    LATEST_WINS_SORT_KEYS, first row per key) picks Spark's batch
+    max_by winner on crafted rank, event_time and row-index ties."""
+    import pyarrow as pa
+
+    from bazof_spark.lakehouse import _latest_per_key_arrow
+
+    rows = [
+        # a lower rank beats a newer event_time
+        ("a", T1, "a-r2-new", 2, 0), ("a", T0, "a-r1-old", 1, 0),
+        # same rank: newer event_time beats a lower row index
+        ("b", T0, "b-old", 3, 0), ("b", T1, "b-new", 3, 5),
+        # same (rank, event_time): the first physical row, listed last
+        ("c", T0, "c-row4", 4, 4), ("c", T0, "c-row2", 4, 2),
+        ("c", T0, "c-row3", 4, 3),
+        # all three tie-breaks at once, across two ranks
+        ("d", T1, "d-r0-row1", 0, 1), ("d", T1, "d-r0-row0", 0, 0),
+        ("d", T1, "d-r6-row0", 6, 0), ("d", T0, "d-r0-old", 0, 0),
+    ]
+    df = _raw(spark, rows)
+    raw = pa.table({
+        "key": [r[0] for r in rows],
+        "event_time": pa.array([r[1] for r in rows], pa.timestamp("us")),
+        "value": [r[2] for r in rows],
+        "_rank": pa.array([r[3] for r in rows], pa.int64()),
+        "_row_idx": pa.array([r[4] for r in rows], pa.int64()),
+    })
+
+    def first_per_key(table):
+        return dict(zip(
+            table.column("key").to_pylist(), table.column("value").to_pylist()
+        ))
+
+    winners = _winners(df, "batch")
+    assert winners == {
+        "a": "a-r1-old", "b": "b-new", "c": "c-row2", "d": "d-r0-row0",
+    }
+    assert first_per_key(_latest_per_key_arrow(raw)) == winners
+    # a winner from a tombstone rank hides its key
+    assert first_per_key(_latest_per_key_arrow(raw, (1, 4))) == {
+        "b": "b-new", "d": "d-r0-row0",
+    }
+
+
 def test_unknown_source_rejected():
     with pytest.raises(ValueError, match="batch"):
         latest_wins_ordering("nope")

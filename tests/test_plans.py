@@ -397,6 +397,7 @@ def test_zonemap_key_lookup_pushes_key_and_single_shuffle(spark):
     assert shuffle_count(df) <= 1
 
 
+@pytest.mark.usefixtures("executor_lookups")
 def test_keyset_point_lookup_pushes_in_filter_and_single_shuffle(spark):
     """Round-5 key blooms: the point lookup's exact-key row predicate
     reaches the parquet reader as an In filter (row-group pruning
@@ -406,6 +407,32 @@ def test_keyset_point_lookup_pushes_in_filter_and_single_shuffle(spark):
     pushed = " ".join(pushed_filters(df))
     assert "In(key" in pushed or ("key" in pushed and "In" in pushed), pushed
     assert shuffle_count(df) <= 1
+
+
+def test_keyset_point_lookup_driver_route_runs_no_job(
+    spark, driver_reads, spark_jobs
+):
+    """Driver-route twin: under the default broadcast threshold the
+    point lookup reads the files the snapshot admits for its keys on
+    the driver, plans a local relation (no scan, no exchange) and its
+    collect runs no Spark job."""
+    from bazof_spark.metadata import KeyRange
+    from bazof_spark.sources.events import events_lakehouse
+
+    table = events_lakehouse(spark, SF_DIR).table("events_versioned")
+    admitted = {
+        table.data_file_path(f)
+        for f in table.get_current_snapshot().get_data_files(
+            key_range=KeyRange.of_keys(["3", "7", "11"])
+        )
+    }
+    driver_reads.clear()
+    df = q("keyset_point_lookup", spark)
+    assert set(driver_reads) == admitted
+    assert shuffle_count(df) == 0
+    with spark_jobs() as jobs:
+        assert df.collect()
+    assert jobs == []
 
 
 def test_quality_model_score_is_map_only(spark):

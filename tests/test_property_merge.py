@@ -259,10 +259,25 @@ def test_interleaved_upserts_and_deletes_match_spec(
     rule — a winning tombstone row hides its key. Deletes are ordinary
     deltas (precedence by start, file order on ties), so time travel,
     shadowing, and resurrection all fall out of the model for free."""
+    tmp = tmp_path_factory.mktemp("prop_del")
+    lh, spec = _mixed_table(spark, str(tmp), h)
+    for t_off in [None, *h["asof_offsets"]]:
+        as_of = None if t_off is None else _ts(t_off)
+        got = {
+            r["key"]: r["value"]
+            for r in lh.scan("t", as_of=as_of).collect()
+        }
+        assert got == spec(t_off), f"as_of offset {t_off}"
+
+
+def _mixed_table(spark, root, h):
+    """Table ``t`` under ``root`` built from a ``mixed_history`` draw, and
+    the spec model: ``spec(t_off)`` = {key: value} visible at that
+    offset (None = Current) — the reference merge with one added rule,
+    a winning tombstone row hides its key."""
     from bazof_spark.writer import delete_keys
 
-    tmp = tmp_path_factory.mktemp("prop_del")
-    w = TableWriter(spark, str(tmp / "t"), SCHEMA)
+    w = TableWriter(spark, f"{root}/t", SCHEMA)
 
     def df(rows):
         return spark.createDataFrame(
@@ -271,7 +286,7 @@ def test_interleaved_upserts_and_deletes_match_spec(
 
     w.add_segment("s1", _ts(0), base_df=df(h["base"]))
     w.commit()
-    lh = Lakehouse(spark, str(tmp))
+    lh = Lakehouse(spark, root)
     prefix_rows = {}
     for i, (kind, payload) in enumerate(h["batches"]):
         prefix = f"s1_delta{i + 1}_"
@@ -280,7 +295,7 @@ def test_interleaved_upserts_and_deletes_match_spec(
             prefix_rows[prefix] = list(payload)
         else:
             keys, off = payload
-            delete_keys(spark, str(tmp / "t"), keys, at=_ts(off))
+            delete_keys(spark, f"{root}/t", keys, at=_ts(off))
             prefix_rows[prefix] = [(k, off, _TOMB) for k in sorted(keys)]
 
     snapshot = lh.table("t").get_current_snapshot()
@@ -290,23 +305,180 @@ def test_interleaved_upserts_and_deletes_match_spec(
         file_rows[_delta_named(seg, prefix)] = rows
     assert {d.file for d in seg.delta} == set(file_rows) - {"s1_base.parquet"}
 
-    def merge_with_tombstones(ranked, t):
+    def spec(t_off):
+        ranked = snapshot.ranked_data_files(
+            Current if t_off is None else EventTime(_ts(t_off))
+        )
         winners = _python_merge(
-            [(r, file_rows[f]) for f, r in ranked], t
+            [(r, file_rows[f]) for f, r in ranked], t_off
         )
         return {k: v for k, v in winners.items() if v is not _TOMB}
 
+    return lh, spec
+
+
+# --- keyed lookups: every read route against the spec ---------------------
+
+BUCKET_ROOT = "s3://bk/lake"  # emulated: <tmp>/s3/bk/lake
+
+
+def _lake(tmp):
+    """Local root of a lake that ``BUCKET_ROOT`` also serves when the
+    s3 scheme is emulated from ``tmp``."""
+    return str(tmp / "s3" / "bk" / "lake")
+
+
+def _keyed_routes(spark, tmp, keys, as_of, cols=("value",)):
+    """{route: sorted (key, *cols) rows} of one keyed as-of lookup of
+    table ``t`` through every read route: the driver read (local and
+    object store), the local JVM scan and the object-store
+    ``mapInArrow`` read (broadcast threshold -1 turns the driver read
+    off), and the Python Data Source (``read_table``). Each route's
+    plan is checked to be the route it names, unless no file can hold
+    the keys (then every scan is the same empty relation)."""
+    from pyspark.sql import functions as F
+
+    from bazof_spark.datasource import read_table
+    from bazof_spark.plans import formatted_plan
+
+    threshold = "spark.sql.autoBroadcastJoinThreshold"
+    saved = spark.conf.get(threshold)
+    local, remote = Lakehouse(spark, _lake(tmp)), Lakehouse(spark, BUCKET_ROOT)
+    out = {}
+
+    def run(route, df, node):
+        plan = formatted_plan(df)
+        assert node in plan or "ExistingRDD" in plan, (route, plan)
+        out[route] = sorted(tuple(r) for r in df.select("key", *cols).collect())
+
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setenv("BAZOF_FS_EMULATE", "s3")
+        mp.setenv("BAZOF_FS_EMULATE_ROOT", str(tmp))
+        try:
+            for lh, where in ((local, "local"), (remote, "object store")):
+                spark.conf.set(threshold, saved)
+                run(f"driver, {where}",
+                    lh.scan("t", as_of=as_of, keys=keys), "LocalTableScan")
+                spark.conf.set(threshold, "-1")
+                run(f"executors, {where}",
+                    lh.scan("t", as_of=as_of, keys=keys),
+                    "MapInArrow" if lh is remote else "Scan parquet")
+        finally:
+            spark.conf.set(threshold, saved)
+    run("read_table",
+        read_table(
+            spark, _lake(tmp), "t",
+            as_of=None if as_of is None else as_of.isoformat(),
+        ).filter(F.col("key").isin(keys)),
+        "BatchScan")
+    return out
+
+
+@pytest.mark.usefixtures("spark")
+@settings(
+    max_examples=3,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(
+    h=mixed_history,
+    keys=st.lists(
+        st.sampled_from(["k1", "k2", "k3", "k4"]), min_size=1, unique=True
+    ),
+)
+def test_keyed_lookup_routes_match_spec(spark, tmp_path_factory, h, keys):
+    """Keyed as-of lookups (plus the absent k9) over random upsert and
+    tombstone histories: every read route returns the spec model's
+    winners at Current and at each as-of — the guard that the driver's
+    Arrow merge and the executor merges stay one semantics."""
+    tmp = tmp_path_factory.mktemp("prop_routes")
+    _, spec = _mixed_table(spark, _lake(tmp), h)
+    lookup = [*keys, "k9"]
     for t_off in [None, *h["asof_offsets"]]:
-        as_of = None if t_off is None else _ts(t_off)
-        ranked = snapshot.ranked_data_files(
-            Current if as_of is None else EventTime(as_of)
+        want = sorted((k, v) for k, v in spec(t_off).items() if k in keys)
+        routes = _keyed_routes(
+            spark, tmp, lookup, None if t_off is None else _ts(t_off)
         )
-        expected = merge_with_tombstones(ranked, t_off)
-        got = {
-            r["key"]: r["value"]
-            for r in lh.scan("t", as_of=as_of).collect()
-        }
-        assert got == expected, f"as_of offset {t_off}"
+        for route, got in routes.items():
+            assert got == want, (route, f"as_of offset {t_off}")
+
+
+def _assert_routes(spark, tmp, keys, as_of, cols, want):
+    for route, got in _keyed_routes(spark, tmp, keys, as_of, cols).items():
+        assert got == want, route
+
+
+def test_keyed_lookup_routes_read_former_and_added_columns(
+    spark, tmp_path
+):
+    """Fixed cases the histories above cannot draw: a RENAMED column
+    (files before the rename store the former name) and an ADDED
+    column (files before the add lack it: null fill) — every route
+    reads both spellings and fills the gap."""
+    from bazof_spark.maintenance import evolve_table_schema
+
+    w = TableWriter(spark, f"{_lake(tmp_path)}/t", SCHEMA)
+    w.add_segment(
+        "s1", _ts(0),
+        base_df=spark.createDataFrame(
+            [("k1", _ts(1), "a"), ("k2", _ts(1), "b")],
+            SCHEMA.to_struct_type(),
+        ),
+    )
+    w.commit()
+    lh = Lakehouse(spark, _lake(tmp_path))
+    evolve_table_schema(
+        lh, "t", rename={"value": "label"},
+        add=[ColumnDef("note", ColumnType.STRING, True)],
+    )
+    schema = lh.table("t").get_current_snapshot().schema
+    lh.upsert("t", spark.createDataFrame(
+        [("k2", _ts(5), "b2", "n2"), ("k3", _ts(5), "c", None)],
+        schema.to_struct_type(),
+    ))
+    cols = ("label", "note")
+    keys = ["k1", "k2", "k3", "k9"]
+    _assert_routes(spark, tmp_path, keys, None, cols, [
+        ("k1", "a", None), ("k2", "b2", "n2"), ("k3", "c", None),
+    ])
+    _assert_routes(spark, tmp_path, keys, _ts(2), cols, [
+        ("k1", "a", None), ("k2", "b", None),
+    ])
+
+
+def test_keyed_lookup_routes_keep_first_duplicate_row(spark, tmp_path):
+    """A duplicate (key, event_time) inside ONE file (the reference's
+    financials data ships such pairs): every route keeps the first
+    physical row, whatever the values' order."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    w = TableWriter(spark, f"{_lake(tmp_path)}/t", SCHEMA)
+    w.add_segment(
+        "s1", _ts(0),
+        base_df=spark.createDataFrame(
+            [("k1", _ts(2), "x"), ("k1", _ts(1), "y"), ("k2", _ts(1), "z")],
+            SCHEMA.to_struct_type(),
+        ),
+    )
+    w.commit()
+    # same keys and instants as the committed file (its recorded
+    # bounds stay true), now with k1@2 twice: "zz-first" physically
+    # first, "aa-second" after it
+    base = f"{_lake(tmp_path)}/t/s1_base.parquet"
+    stored = pq.read_table(base).schema
+    pq.write_table(pa.table({
+        "key": ["k1", "k1", "k2"],
+        "event_time": pa.array([_ts(2), _ts(2), _ts(1)], stored.field("event_time").type),
+        "value": ["zz-first", "aa-second", "z"],
+    }, schema=stored), base)
+    keys = ["k1", "k2", "k9"]
+    _assert_routes(spark, tmp_path, keys, None, ("value",), [
+        ("k1", "zz-first"), ("k2", "z"),
+    ])
+    _assert_routes(spark, tmp_path, keys, _ts(1), ("value",), [
+        ("k2", "z"),
+    ])
 
 
 full_dml_history = st.fixed_dictionaries(

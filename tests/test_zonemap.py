@@ -16,6 +16,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+import pytest  # noqa: E402
 from pyspark.sql import Row  # noqa: E402
 
 from bazof_spark import Lakehouse, Snapshot  # noqa: E402
@@ -75,6 +76,7 @@ def test_snapshot_carries_and_roundtrips_stats(spark, tmp_path):
     assert again.file_key_stats() == stats
 
 
+@pytest.mark.usefixtures("executor_lookups")
 def test_scan_keys_prunes_files_and_merges_correctly(spark, tmp_path):
     lh = _key_clustered_table(spark, tmp_path)
     full = {
@@ -96,6 +98,7 @@ def test_scan_keys_prunes_files_and_merges_correctly(spark, tmp_path):
     assert got == {k: v for k, v in full.items() if "a03" <= k <= "b99"}
 
 
+@pytest.mark.usefixtures("executor_lookups")
 def test_scan_key_pruning_respects_as_of(spark, tmp_path):
     lh = _key_clustered_table(spark, tmp_path)
     # before the update wave: the T1 b-delta is temporally pruned AND
@@ -103,6 +106,30 @@ def test_scan_key_pruning_respects_as_of(spark, tmp_path):
     df = lh.scan("t", as_of=T0, keys=["b02"])
     assert len(df.inputFiles()) == 1
     assert df.collect()[0]["value"] == "b2@01"
+
+
+def test_scan_keys_driver_route_reads_pruned_files_without_a_job(
+    spark, tmp_path, driver_reads, spark_jobs
+):
+    """Driver-route twin of the two tests above: under the default
+    broadcast threshold a keyed lookup reads its pruned files on the
+    driver — the same file sets — and its collect runs no Spark job."""
+    lh = _key_clustered_table(spark, tmp_path)
+    df = lh.scan("t", keys=["b02"])
+    read = {os.path.basename(f) for f in driver_reads}
+    assert len(read) == 2, read
+    assert all("b" in f or "delta" in f for f in read)
+    with spark_jobs() as jobs:
+        rows = df.collect()
+    assert jobs == []
+    assert [(r["key"], r["value"]) for r in rows] == [("b02", "b2@02")]
+
+    driver_reads.clear()
+    df = lh.scan("t", as_of=T0, keys=["b02"])
+    assert len(set(driver_reads)) == 1
+    with spark_jobs() as jobs:
+        assert df.collect()[0]["value"] == "b2@01"
+    assert jobs == []
 
 
 def test_measured_event_time_bounds_prune_invisible_files(spark, tmp_path):
@@ -238,6 +265,7 @@ def test_datasource_end_to_end_key_filter(spark, tmp_path):
     assert [(r["key"], r["value"]) for r in rows] == [("b02", "b2@02")]
 
 
+@pytest.mark.usefixtures("executor_lookups")
 def test_scan_changes_with_key_predicate_prunes_both_sides(spark, tmp_path):
     """"What changed for key X": the CDF restricted to a key set runs
     the same file-level stats pruning on BOTH as-of sides — here the
@@ -254,4 +282,23 @@ def test_scan_changes_with_key_predicate_prunes_both_sides(spark, tmp_path):
     # still only reads its own cluster's files
     quiet = lh.scan_changes("t", since=T0, keys=["a01"])
     assert len(quiet.inputFiles()) == 1
+    assert quiet.count() == 0
+
+
+def test_scan_changes_driver_route_prunes_both_sides(
+    spark, tmp_path, driver_reads
+):
+    """Driver-route twin: both keyed as-of sides of the CDF read on the
+    driver, with the same pruning — 2 of 4 files for b02 (early side
+    1, late side 2), 1 for a01."""
+    lh = _key_clustered_table(spark, tmp_path)
+    ch = lh.scan_changes("t", since=T0, keys=["b02"])
+    assert len(driver_reads) == 3
+    assert len({os.path.basename(f) for f in driver_reads}) == 2
+    rows = ch.collect()
+    assert [(r["key"], r["change_type"], r["value_early"], r["value_late"])
+            for r in rows] == [("b02", "update", "b2@01", "b2@02")]
+    driver_reads.clear()
+    quiet = lh.scan_changes("t", since=T0, keys=["a01"])
+    assert len(set(driver_reads)) == 1
     assert quiet.count() == 0
