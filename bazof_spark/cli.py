@@ -96,15 +96,6 @@ def main(argv: list[str] | None = None) -> int:
     p_val = sub.add_parser("validate", help="snapshot + data-file invariants")
     p_val.add_argument("--path", required=True)
     p_val.add_argument("--table", required=True)
-    p_val.add_argument(
-        "--engine",
-        choices=["spark", "arrow"],
-        default="spark",
-        help="data-check engine: 'spark' (one distributed job; falls "
-        "back to arrow automatically when the JVM lacks the root's "
-        "object-store connector) or 'arrow' (driver-side pyarrow — "
-        "force it for s3:// roots)",
-    )
 
     p_st = sub.add_parser(
         "stats",
@@ -581,11 +572,7 @@ def main(argv: list[str] | None = None) -> int:
     elif args.cmd == "validate":
         from bazof_spark.maintenance import validate_table
 
-        report = validate_table(
-            lh,
-            args.table,
-            data_checks="arrow" if args.engine == "arrow" else True,
-        )
+        report = validate_table(lh, args.table)
         for e in report.errors:
             print(f"ERROR: {e}")
         for w_ in report.warnings:

@@ -389,8 +389,13 @@ class Lakehouse:
         ranked = snapshot.ranked_data_files(as_of, key_range)
         out_cols = snapshot.schema.output_columns(projection)
         if not ranked:
+            # an empty Arrow table plans a LocalRelation (no Spark job at
+            # collect); an empty row list would plan an RDD scan
+            from pyspark.sql.pandas.types import to_arrow_schema
+
+            struct = snapshot.schema.to_struct_type(projection)
             return self.spark.createDataFrame(
-                [], snapshot.schema.to_struct_type(projection)
+                to_arrow_schema(struct).empty_table(), struct
             )
         # value columns we must read: projected ones (key/event_time are
         # always read — the merge needs them, as in the reference's

@@ -51,9 +51,12 @@ Spark job (scan → single shuffle merge → write), not a driver loop.
 Validation
 ----------
 ``validate_snapshot`` checks the structural invariants the pruning
-algorithm relies on; ``validate_table`` additionally checks data-file
-invariants (files exist; unique (key, event_time) within a file) with
-one Spark job per table, not per file.
+algorithm relies on; ``validate_table`` additionally checks that every
+data file exists and, per file, the invariants the merge relies on:
+unique (key, event_time) pairs, event_time DESC order, and key blooms
+that never deny a present key. The per-file check is one pyarrow task
+in the executors, all files in ONE Spark job on any root, local or
+object store; the driver gets back one row per file.
 """
 
 from __future__ import annotations
@@ -596,46 +599,140 @@ def validate_snapshot(snapshot: Snapshot) -> ValidationReport:
     return report
 
 
-def _arrow_data_checks(present: list[str], report: "ValidationReport"):
-    """Driver-side twin of validate_table's Spark data checks, reading
-    each file through the iofs-resolved pyarrow filesystem — the path
-    that makes FULL validation work on object-store roots the running
-    Spark JVM has no Hadoop connector for (the sandbox has no S3A; a
-    real cluster usually does, and then the one-job Spark path runs
-    instead). Same findings, same wording: per-file duplicate
-    (key, event_time) pairs → warning; a file not sorted event_time
-    DESC → error when it repeats keys (merge winner diverges from the
-    reference's first-row-wins), warning when clustered one-row-per-key
-    (order-independent). O(data) on the driver — a validation tool's
-    profile, streamed one file at a time."""
+_FILE_FINDINGS = (
+    "dupes long, unsorted boolean, repeats boolean, "
+    "unreadable long, denied long"
+)
+
+
+def _check_data_file(path: str) -> dict:
+    """One data file's invariant findings, read through ONE handle:
+    ``key``/``event_time`` via ``pq.ParquetFile``, the footer and each
+    key-column bloom blob by ranged reads.
+
+    - ``dupes``: (key, event_time) pairs occurring more than once;
+    - ``unsorted``: some adjacent non-null event_time pair ascends (the
+      file is not event_time DESC);
+    - ``repeats``: some key occurs more than once;
+    - ``unreadable``: key bloom blobs that do not parse;
+    - ``denied``: sampled keys (the first 64 of each row group) that
+      their group's own bloom denies.
+
+    A file pyarrow cannot read raises."""
+    import struct
+
+    import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
-    dupe_groups = 0
-    diverging = 0
-    clustered = 0
-    for path in present:
-        filesystem, rel = iofs.split(path)
-        t = pq.read_table(
-            rel, filesystem=filesystem, columns=[KEY_COL, EVENT_TIME_COL]
+    from bazof_spark.operators.parquetbloom import (
+        might_contain,
+        parse_bloom_blob,
+        plain_encoded,
+        xxh64,
+    )
+    from bazof_spark.operators.parquetmeta import parse_footer_blob
+    from bazof_spark.writer import arrow_duplicate_pairs
+
+    filesystem, rel = iofs.split(path)
+    with filesystem.open_input_file(rel) as fin:
+        t = pq.ParquetFile(fin).read(columns=[KEY_COL, EVENT_TIME_COL])
+        size = fin.size()
+        (meta_len,) = struct.unpack("<I", fin.read_at(4, size - 8))
+        try:
+            footer = parse_footer_blob(fin.read_at(meta_len, size - 8 - meta_len))
+        except Exception:
+            footer = {}  # footer problems are the structure checks' job
+        blooms = []  # (first row of the group, its row count, bloom blob)
+        first_row = 0
+        for rg in footer.get("row_groups", []):
+            for c in rg["columns"]:
+                off = c.get("bloom_filter_offset")
+                ln = c.get("bloom_filter_length")
+                if c.get("path_in_schema") == [KEY_COL] and off and ln:
+                    blooms.append((first_row, rg["num_rows"], fin.read_at(ln, off)))
+            first_row += rg["num_rows"]
+
+    keys, ts = t[KEY_COL], t[EVENT_TIME_COL]
+    unreadable = denied = 0
+    for first, n, blob in blooms:
+        try:
+            bitset = parse_bloom_blob(blob)
+        except Exception:
+            unreadable += 1
+            continue
+        denied += sum(
+            1
+            for k in keys.slice(first, min(n, 64)).to_pylist()
+            if k is not None
+            and not might_contain(bitset, xxh64(plain_encoded(k, "BYTE_ARRAY")))
         )
-        dupe_groups += arrow_duplicate_pairs(t)
-        keys = t[KEY_COL].to_pylist()
-        ts = t[EVENT_TIME_COL].to_pylist()
-        unsorted = any(
-            b is not None and a is not None and b > a
-            for a, b in zip(ts, ts[1:])
-        )
-        if unsorted:
-            if len(set(keys)) < len(keys):
-                diverging += 1
-            else:
-                clustered += 1
-    if dupe_groups:
+    return {
+        "dupes": arrow_duplicate_pairs(t),
+        "unsorted": bool(pc.any(pc.greater(ts[1:], ts[:-1])).as_py()),
+        "repeats": pc.count_distinct(keys, mode="all").as_py() < len(keys),
+        "unreadable": unreadable,
+        "denied": denied,
+    }
+
+
+def _data_file_checks(spark, present: list[str], report: ValidationReport):
+    """Check every present data file in ONE Spark job, one task per
+    file; the driver only sums the per-file rows into the report. The
+    path list and the driver's ``BAZOF_*`` env ride in the task closure,
+    as in ``datasource.file_range_task_reader``."""
+    env = iofs.env_snapshot()
+
+    def check(batches):
+        import pyarrow as pa
+
+        iofs.apply_env(env)
+        for b in batches:
+            for i in b.column(0).to_pylist():
+                yield pa.RecordBatch.from_pylist([_check_data_file(present[i])])
+
+    n = len(present)
+    rows = spark.range(0, n, 1, n).mapInArrow(check, _FILE_FINDINGS).collect()
+    unreadable = sum(r["unreadable"] for r in rows)
+    denied = sum(r["denied"] for r in rows)
+    dupes = sum(r["dupes"] for r in rows)
+    diverging = sum(1 for r in rows if r["unsorted"] and r["repeats"])
+    clustered = sum(1 for r in rows if r["unsorted"] and not r["repeats"])
+    # a bloom may lie POSITIVE, never negative: a denial of a present key
+    # makes every reader trusting the bloom (parquet-mr, the Data Source
+    # planner) skip the group and lose rows, so it is an error; an
+    # unreadable blob only stops pruning there
+    if unreadable:
         report.warnings.append(
-            f"{dupe_groups} duplicate (key, event_time) pairs within a "
-            "data file; ties resolve to the first physical row "
-            "(reference semantics)"
+            f"{unreadable} key bloom filters unreadable; readers "
+            "ignore them (no pruning from those groups)"
         )
+    if denied:
+        report.errors.append(
+            f"{denied} sampled keys are DENIED by their row group's "
+            "own bloom filter; readers probing it (parquet-mr, the "
+            "Data Source planner) would wrongly skip rows"
+        )
+    if dupes:
+        # warning, not error: at equal timestamps the scan's _row_idx
+        # tie-break keeps the first physical row — exactly the
+        # reference's first-row-wins — so reads stay well-defined and
+        # reference-identical. (The reference's own shipped financials
+        # table contains 5 such pairs.) Our writer still refuses to
+        # produce them (validate_data_file_invariants).
+        report.warnings.append(
+            f"{dupes} duplicate (key, event_time) pairs within a data "
+            "file; ties resolve to the first physical row (reference "
+            "semantics)"
+        )
+    # Intra-file winner selection (lakehouse._dedup_latest_per_key) picks
+    # max event_time with _row_idx as tie-break; the reference keeps the
+    # first physically-eligible row per key regardless of timestamp
+    # (lakehouse.rs:54-79). The two agree only when every file is sorted
+    # event_time DESC, an invariant our writer enforces but foreign azof
+    # files need not satisfy. Exception: a file where every key occurs
+    # ONCE (e.g. a Z-order-clustered checkpoint base) is
+    # order-independent, so unsortedness there is a layout deviation
+    # (warning), not a semantic divergence (error).
     if diverging:
         report.errors.append(
             f"{diverging} data files are not sorted event_time DESC "
@@ -650,101 +747,16 @@ def _arrow_data_checks(present: list[str], report: "ValidationReport"):
         )
 
 
-def _bloom_integrity_checks(present: list[str], report: "ValidationReport"):
-    """Split-block bloom integrity (operators/parquetbloom): for every
-    data file whose footer declares a key-column bloom, parse the blob
-    and probe it with up to 64 of that row group's own keys. A bloom
-    may lie POSITIVE, never negative — a denial of a present key means
-    any reader trusting it (parquet-mr, the Data Source planner) would
-    wrongly skip the group, so that is an ERROR; an unreadable blob is
-    a warning (every reader degrades to not pruning). Driver-side,
-    iofs-routed, bounded by the sample cap."""
-    import pyarrow.parquet as pq
-
-    from bazof_spark.operators.parquetbloom import (
-        might_contain,
-        parse_bloom_blob,
-        plain_encoded,
-        xxh64,
-    )
-    from bazof_spark.operators.parquetmeta import parse_parquet_footer
-
-    unreadable = 0
-    denials = 0
-    for path in present:
-        filesystem, rel = iofs.split(path)
-        try:
-            with filesystem.open_input_file(rel) as fin:
-                data = fin.read()
-            foot = parse_parquet_footer(data)
-        except Exception:
-            continue  # footer problems are the structure checks' job
-        pf = None
-        for gi, rg in enumerate(foot.get("row_groups", [])):
-            chunk = next(
-                (
-                    c
-                    for c in rg["columns"]
-                    if c.get("path_in_schema") == [KEY_COL]
-                ),
-                None,
-            )
-            if chunk is None:
-                continue
-            off = chunk.get("bloom_filter_offset")
-            ln = chunk.get("bloom_filter_length")
-            if not off or not ln:
-                continue
-            try:
-                bitset = parse_bloom_blob(data[off : off + ln])
-            except Exception:
-                unreadable += 1
-                continue
-            if pf is None:
-                import io
-
-                pf = pq.ParquetFile(io.BytesIO(data))
-            keys = (
-                pf.read_row_group(gi, columns=[KEY_COL])[KEY_COL]
-                .slice(0, 64)
-                .to_pylist()
-            )
-            denials += sum(
-                1
-                for k in keys
-                if k is not None
-                and not might_contain(
-                    bitset, xxh64(plain_encoded(k, "BYTE_ARRAY"))
-                )
-            )
-    if unreadable:
-        report.warnings.append(
-            f"{unreadable} key bloom filters unreadable; readers "
-            "ignore them (no pruning from those groups)"
-        )
-    if denials:
-        report.errors.append(
-            f"{denials} sampled keys are DENIED by their row group's "
-            "own bloom filter; readers probing it (parquet-mr, the "
-            "Data Source planner) would wrongly skip rows"
-        )
-
-
 def validate_table(
-    lakehouse, table_name: str, data_checks: bool | str = True
+    lakehouse, table_name: str, data_checks: bool = True
 ) -> ValidationReport:
-    """Snapshot structure + data-file invariants, checked with ONE Spark
-    job across all files (grouped by file via input_file_name), not a
-    job per file.
+    """Snapshot structure, file existence and data-file invariants.
 
-    ``data_checks=False`` stops after structure validation and the
-    (iofs-based) file-existence probe. ``data_checks="arrow"`` runs the
-    SAME invariant checks driver-side through the iofs-resolved pyarrow
-    filesystem — full validation on object-store roots whose scheme the
-    running Spark JVM cannot read (no S3A in this sandbox); with
-    ``True`` on such a root the Spark read's failure falls back to the
-    arrow path automatically, recorded as a report warning so a
-    misconfigured cluster connector can't hide."""
+    The data checks run in executors: ONE Spark job with one task per
+    present file (:func:`_check_data_file`), on local and object-store
+    roots alike, returning O(files) rows to the driver. The driver
+    itself opens no data file. ``data_checks=False`` stops after
+    structure validation and the (iofs-based) file-existence probe."""
     table: Table = lakehouse.table(table_name)
     snapshot = table.get_current_snapshot()
     report = validate_snapshot(snapshot)
@@ -764,99 +776,7 @@ def validate_table(
         report.errors.append(f"data file missing: {f}")
     present = [table.data_file_path(f) for f in sorted(files) if f not in missing]
     if present and data_checks:
-        # bloom integrity rides both data-check modes (driver-side,
-        # sample-bounded) — a false-negative bloom silently loses rows
-        # at read time, the worst failure class validation exists for
-        _bloom_integrity_checks(present, report)
-    if present and data_checks == "arrow":
-        _arrow_data_checks(present, report)
-        return report
-    if present and data_checks:
-        try:
-            df = lakehouse.spark.read.parquet(*present)
-            df.select(F.lit(1)).first()  # force plan resolution/IO probe
-        except Exception as exc:
-            report.warnings.append(
-                "spark cannot read the data files "
-                f"({type(exc).__name__}); data checks ran driver-side "
-                "via pyarrow instead — on a cluster, install the "
-                "object-store connector for the distributed path"
-            )
-            _arrow_data_checks(present, report)
-            return report
-        dupes = (
-            df.select(
-                F.expr("input_file_name()").alias("_f"), KEY_COL, EVENT_TIME_COL
-            )
-            .groupBy("_f", KEY_COL, EVENT_TIME_COL)
-            .count()
-            .filter(F.col("count") > 1)
-            .count()
-        )
-        if dupes:
-            # warning, not error: at equal timestamps the scan's
-            # _row_idx tie-break keeps the first physical row — exactly
-            # the reference's first-row-wins — so reads stay well-defined
-            # and reference-identical. (The reference's own shipped
-            # financials table contains 5 such pairs.) Our writer still
-            # refuses to produce them (validate_data_file_invariants).
-            report.warnings.append(
-                f"{dupes} duplicate (key, event_time) pairs within a data "
-                "file; ties resolve to the first physical row (reference "
-                "semantics)"
-            )
-        # Intra-file winner selection (lakehouse._dedup_latest_per_key)
-        # picks max event_time with _row_idx as tie-break; the reference
-        # keeps the first physically-eligible row per key regardless of
-        # timestamp (lakehouse.rs:54-79). The two agree only when every
-        # file is sorted event_time DESC — an invariant our writer
-        # enforces but foreign azof files need not satisfy. Detect the
-        # divergence instead of reading such files silently.
-        # Exception: a file where every key occurs ONCE (e.g. a
-        # Z-order-clustered checkpoint base) is order-independent —
-        # first-row-wins == only-row-wins — so unsortedness there is a
-        # layout deviation (warning), not a semantic divergence (error).
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("_f").orderBy("_ridx")
-        per_file = (
-            df.select(
-                F.expr("input_file_name()").alias("_f"),
-                F.col("_metadata.row_index").alias("_ridx"),
-                F.col(EVENT_TIME_COL).alias("_ts"),
-                F.col(KEY_COL).alias("_k"),
-            )
-            .withColumn("_prev", F.lag("_ts").over(w))
-            .groupBy("_f")
-            .agg(
-                F.max(
-                    (
-                        F.col("_prev").isNotNull()
-                        & (F.col("_ts") > F.col("_prev"))
-                    ).cast("int")
-                ).alias("_unsorted"),
-                (F.count(F.lit(1)) > F.count_distinct(F.col("_k"))).alias(
-                    "_dup_keys"
-                ),
-            )
-            .filter(F.col("_unsorted") == 1)
-            .select("_dup_keys")
-            .collect()
-        )
-        diverging = sum(1 for r in per_file if r["_dup_keys"])
-        clustered = len(per_file) - diverging
-        if diverging:
-            report.errors.append(
-                f"{diverging} data files are not sorted event_time DESC "
-                "and repeat keys; merge winner selection diverges from "
-                "the reference's first-row-wins on unsorted files"
-            )
-        if clustered:
-            report.warnings.append(
-                f"{clustered} data files are not sorted event_time DESC "
-                "but hold one row per key (clustered base layout); merge "
-                "is order-independent there"
-            )
+        _data_file_checks(lakehouse.spark, present, report)
     return report
 
 

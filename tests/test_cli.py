@@ -113,6 +113,35 @@ def test_upsert_restore_vacuum_history_validate(spark, lake, capsys):
     assert "would remove" in out
 
 
+def test_validate_exit_codes(spark, tmp_path, capsys):
+    """``validate`` on a table of its own: a clean table exits 0 and
+    prints OK; a removed data file exits 1 with the missing-file error."""
+    from datetime import datetime, timezone
+
+    from bazof_spark.schema import ColumnDef, ColumnType, TableSchema
+    from bazof_spark.writer import TableWriter
+
+    t1 = datetime(2024, 1, 1, tzinfo=timezone.utc)
+    schema = TableSchema((ColumnDef("value", ColumnType.STRING, False),))
+    w = TableWriter(spark, str(tmp_path / "t"), schema)
+    w.add_segment(
+        "s1", t1,
+        base_df=spark.createDataFrame(
+            [("k1", t1, "a"), ("k2", t1, "b")], schema.to_struct_type()
+        ),
+    )
+    w.commit()
+    out = run(capsys, "validate", "--path", str(tmp_path), "--table", "t")
+    assert out.strip().endswith("OK")
+
+    (victim,) = [f for f in os.listdir(tmp_path / "t") if f.endswith(".parquet")]
+    os.remove(tmp_path / "t" / victim)
+    assert main(["validate", "--path", str(tmp_path), "--table", "t"]) == 1
+    out = capsys.readouterr().out
+    assert f"ERROR: data file missing: {victim}" in out
+    assert out.strip().endswith("INVALID")
+
+
 def test_checkpoint_and_zorder(spark, lake, capsys):
     out = run(
         capsys,

@@ -553,17 +553,106 @@ def test_widen_after_distributed_append_still_scans(spark, tmp_path):
     ]
 
 
-def test_arrow_data_checks_match_spark_findings(spark, reference_data):
-    """data_checks='arrow' must report the SAME invariant findings as
-    the Spark path — pinned on the reference's own financials table,
-    whose shipped files contain 5 duplicate (key, event_time) pairs."""
-    lh = Lakehouse(spark, reference_data)
-    via_spark = validate_table(lh, "financials", data_checks=True)
-    via_arrow = validate_table(lh, "financials", data_checks="arrow")
-    assert via_spark.errors == via_arrow.errors == []
+def _write_plain(path, rows):
+    """Overwrite a data file with plain pyarrow, rows in the given order."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
 
-    def dupe_warn(report):
-        return [w for w in report.warnings if "duplicate (key" in w]
+    keys, times, values = zip(*rows)
+    pq.write_table(
+        pa.table(
+            {
+                "key": pa.array(keys, pa.string()),
+                "event_time": pa.array(times, pa.timestamp("us", tz="UTC")),
+                "value": pa.array(values, pa.string()),
+            }
+        ),
+        path,
+    )
 
-    assert dupe_warn(via_spark) == dupe_warn(via_arrow)
-    assert dupe_warn(via_arrow), "expected the known duplicate-pair warning"
+
+def test_validate_table_data_file_golden(spark, lakehouse):
+    """Exact findings on three files written by plain pyarrow: one holds
+    exactly 3 duplicate (key, event_time) pairs (sorted DESC), one is
+    unsorted with unique keys, one is unsorted and repeats a key."""
+    table = lakehouse.table("t")
+    dupes, clustered, diverging = [
+        table.data_file_path(f)
+        for f in sorted(table.get_current_snapshot().get_data_files())
+    ]
+    _write_plain(
+        dupes,
+        [(k, ts(d), f"{k}{i}") for d, k in ((5, "a"), (4, "b"), (3, "c"))
+         for i in (1, 2)],
+    )
+    _write_plain(clustered, [("x", ts(1), "x1"), ("y", ts(2), "y1")])
+    _write_plain(diverging, [("p", ts(1), "p1"), ("p", ts(2), "p2")])
+    report = validate_table(lakehouse, "t")
+    assert report.warnings == [
+        "3 duplicate (key, event_time) pairs within a data file; ties "
+        "resolve to the first physical row (reference semantics)",
+        "1 data files are not sorted event_time DESC but hold one row per "
+        "key (clustered base layout); merge is order-independent there",
+    ]
+    assert report.errors == [
+        "1 data files are not sorted event_time DESC and repeat keys; "
+        "merge winner selection diverges from the reference's "
+        "first-row-wins on unsorted files"
+    ]
+
+
+@pytest.mark.parametrize("root", ["local", "s3"])
+def test_validate_table_runs_one_job_and_reads_no_file_on_the_driver(
+    spark, tmp_path, monkeypatch, spark_jobs, root
+):
+    """The data checks are one Spark job on a local and an emulated
+    s3:// root, and the driver resolves no data file for reading: the
+    only data-file paths it resolves come from the existence probe."""
+    import sys
+
+    from bazof_spark import iofs, maintenance
+
+    lake = str(tmp_path)
+    if root == "s3":
+        monkeypatch.setenv("BAZOF_FS_EMULATE", "s3")
+        monkeypatch.setenv("BAZOF_FS_EMULATE_ROOT", str(tmp_path))
+        lake = "s3://bucket/lake"
+    w = TableWriter(spark, iofs.join(lake, "t"), SCHEMA)
+    seg = w.add_segment(
+        "s1", ts(1), base_df=rows(spark, ("k1", ts(1), "a1"), ("k2", ts(1), "b1"))
+    )
+    seg.add_delta(rows(spark, ("k1", ts(3), "a2")), start=ts(3), end=ts(5))
+    w.commit()
+    lh = Lakehouse(spark, lake)
+    table = lh.table("t")
+    data = {
+        table.data_file_path(f)
+        for f in table.get_current_snapshot().get_data_files()
+    }
+    opened: list[str] = []
+    split = iofs._split
+
+    def recording(path):
+        if path in data and sys._getframe(1).f_code.co_name != "exists":
+            opened.append(path)
+        return split(path)
+
+    monkeypatch.setattr(iofs, "_split", recording)
+    with spark_jobs() as jobs:
+        report = validate_table(lh, "t")
+    assert report.errors == [] and report.warnings == []
+    assert len(jobs) == 1, jobs
+    assert opened == []
+    # the recorder sees a driver-side read of the same check
+    maintenance._check_data_file(min(data))
+    assert opened == [min(data)]
+
+
+def test_validate_table_reference_financials_duplicate_pairs(
+    spark, reference_data
+):
+    """The reference's own financials table ships duplicate
+    (key, event_time) pairs: a warning, never an error."""
+    report = validate_table(Lakehouse(spark, reference_data), "financials")
+    assert report.errors == []
+    assert any("duplicate (key, event_time) pairs" in w for w in report.warnings)

@@ -301,11 +301,13 @@ def test_concurrent_writers_real_s3_with_lockserver(spark, s3_endpoint):
 
 
 def test_validate_full_data_checks_over_real_s3(spark, s3_endpoint):
-    """validate_table with FULL data checks on an s3:// root: the Spark
-    read cannot resolve the scheme (no S3A in this JVM), so the checks
-    fall back to the driver-side pyarrow twin — recorded as a warning,
-    never silently skipped — and the invariants still verify over the
-    real protocol. data_checks='arrow' forces the same path explicitly."""
+    """validate_table with FULL data checks on an s3:// root: the
+    executor-side per-file check reads every byte over the real
+    protocol (the JVM has no S3A and needs none). A delta overwritten
+    over HTTP with one duplicate (key, event_time) pair is reported."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
     uri = "s3://bazof-real/fullcheck"
     table_uri = iofs.join(uri, "t")
     t0 = dt.datetime(2024, 1, 1, tzinfo=UTC)
@@ -315,16 +317,36 @@ def test_validate_full_data_checks_over_real_s3(spark, s3_endpoint):
         base_df=_batch(spark, [("a", t0, "a1"), ("b", t0, "b1")]),
     )
     w.commit("1")
-    append_delta(
-        spark, table_uri,
-        _batch(spark, [("a", dt.datetime(2024, 2, 1, tzinfo=UTC), "a2")]),
-    )
+    t1 = dt.datetime(2024, 2, 1, tzinfo=UTC)
+    append_delta(spark, table_uri, _batch(spark, [("a", t1, "a2")]))
     lh = Lakehouse(spark, uri)
-    report = validate_table(lh, "t", data_checks=True)
-    assert not report.errors, report.errors
-    assert any("pyarrow" in w_ for w_ in report.warnings), report.warnings
-    explicit = validate_table(lh, "t", data_checks="arrow")
-    assert not explicit.errors, explicit.errors
+    report = validate_table(lh, "t")
+    assert report.errors == [] and report.warnings == []
+
+    table = lh.table("t")
+    (delta,) = [
+        d.file
+        for s in table.get_current_snapshot().segments
+        for d in s.delta
+    ]
+    filesystem, rel = iofs.split(table.data_file_path(delta))
+    pq.write_table(
+        pa.table(
+            {
+                "key": ["a", "a"],
+                "event_time": pa.array([t1, t1], pa.timestamp("us", tz="UTC")),
+                "value": ["a2", "a3"],
+            }
+        ),
+        rel,
+        filesystem=filesystem,
+    )
+    report = validate_table(lh, "t")
+    assert report.errors == []
+    assert report.warnings == [
+        "1 duplicate (key, event_time) pairs within a data file; ties "
+        "resolve to the first physical row (reference semantics)"
+    ]
 
 
 def test_http_responses_single_content_length(s3_endpoint):
@@ -546,7 +568,7 @@ def test_checkpoint_and_optimize_over_real_s3(spark, s3_endpoint):
     assert {
         r["key"]: r["value"] for r in lh.scan("t").collect()
     } == before_cur
-    report = validate_table(lh, "t", data_checks="arrow")
+    report = validate_table(lh, "t")
     assert not report.errors, report.errors
 
 

@@ -335,7 +335,7 @@ def _keyed_routes(spark, tmp, keys, as_of, cols=("value",)):
     ``mapInArrow`` read (broadcast threshold -1 turns the driver read
     off), and the Python Data Source (``read_table``). Each route's
     plan is checked to be the route it names, unless no file can hold
-    the keys (then every scan is the same empty relation)."""
+    the keys (then every scan is the same empty local relation)."""
     from pyspark.sql import functions as F
 
     from bazof_spark.datasource import read_table
@@ -348,7 +348,7 @@ def _keyed_routes(spark, tmp, keys, as_of, cols=("value",)):
 
     def run(route, df, node):
         plan = formatted_plan(df)
-        assert node in plan or "ExistingRDD" in plan, (route, plan)
+        assert node in plan or "Arguments: <empty>" in plan, (route, plan)
         out[route] = sorted(tuple(r) for r in df.select("key", *cols).collect())
 
     with pytest.MonkeyPatch.context() as mp:

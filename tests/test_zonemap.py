@@ -132,6 +132,26 @@ def test_scan_keys_driver_route_reads_pruned_files_without_a_job(
     assert jobs == []
 
 
+def test_scans_with_no_admitted_file_run_no_job(spark, tmp_path, spark_jobs):
+    """A keyed lookup whose key no file admits, and an as-of before the
+    first segment, plan no file at all: the empty result is a local
+    relation with the table's declared schema, and its collect runs no
+    Spark job."""
+    from bazof_spark.projection import Projection
+
+    lh = _key_clustered_table(spark, tmp_path)
+    snap = lh.table("t").get_current_snapshot()
+    declared = snap.schema.to_struct_type(Projection.all())
+    for df in (
+        lh.scan("t", keys=["zz"]),
+        lh.scan("t", as_of=T0 - dt.timedelta(days=1)),
+    ):
+        with spark_jobs() as jobs:
+            assert df.collect() == []
+        assert jobs == []
+        assert df.schema == declared
+
+
 def test_measured_event_time_bounds_prune_invisible_files(spark, tmp_path):
     """ts_min zone maps: a delta whose DECLARED start admits it at an
     as-of instant but whose MEASURED minimum event_time lies beyond it
