@@ -1,5 +1,5 @@
 """`spark.read.format("bazof")` — catalog-style integration via Spark 4's
-Python Data Source API.
+Python Data Source API, and the one driver-side scan planner.
 
 The reference exposes its tables to a SQL engine through a DataFusion
 ``TableProvider`` (crates/azof-datafusion/src/lib.rs:60-133); the
@@ -16,16 +16,20 @@ handle:
 
 What the source can and cannot do, honestly:
 
-- Snapshot resolution, segment-tree temporal FILE PRUNING and the
-  event-time row filter all run here (pruning driver-side on metadata,
-  the filter inside the Arrow reader) — the scan never touches files
-  or rows beyond the as-of bound.
+- Snapshot resolution, segment-tree temporal FILE PRUNING, zone-map
+  and bloom pruning by pushed key predicates and the event-time row
+  filter all run here (pruning driver-side on metadata, the filter
+  inside the Arrow reader) — the scan never touches files or rows
+  beyond the as-of bound. :func:`plan_scan` is that planning, and
+  ``Lakehouse.scan`` runs the same function: both surfaces read one
+  :class:`ScanPlan`, with the pushed ``(op, column, value)`` triples
+  as the only encoding of the key predicate.
 - The latest-per-key MERGE is a global shuffle, which no data source
   can perform; ``load()`` therefore returns the pruned *versioned*
   rows carrying ``(_rank, _row_idx)``, and :func:`read_table` applies
-  the identical ``max_by(payload, (-rank, ts, -row_idx))`` merge the
-  native scan uses. This split is exactly how Delta's CDF/log readers
-  layer over their file source.
+  the merge tail of ``Lakehouse.scan``
+  (``lakehouse._dedup_latest_per_key``). This split is exactly how
+  Delta's CDF/log readers layer over their file source.
 - Rows move worker→JVM as Arrow batches (pyarrow scan). That is an
   extra hop vs the native parquet reader, so this surface is for
   catalog-style compatibility; ``Lakehouse.scan``/``sql`` remain the
@@ -35,6 +39,7 @@ What the source can and cannot do, honestly:
 
 from __future__ import annotations
 
+import functools
 import os
 from dataclasses import dataclass
 from typing import Iterator
@@ -694,15 +699,12 @@ DEFAULT_MAX_PARTITION_BYTES = 128 << 20  # Spark's files.maxPartitionBytes
 
 
 def _max_partition_bytes(options: dict) -> int:
-    """The split threshold: reader option ``maxPartitionBytes``, env
-    override, or the Spark default (``Lakehouse.scan`` on object-store
-    roots uses the session's spark.sql.files.maxPartitionBytes)."""
-    import os as _os
-
+    """The split threshold: reader option ``maxPartitionBytes`` or the
+    Spark default (``Lakehouse.scan`` and :func:`read_table` use the
+    session's spark.sql.files.maxPartitionBytes)."""
     return _parse_byte_size(
         options.get("maxpartitionbytes")
         or options.get("maxPartitionBytes")
-        or _os.environ.get("BAZOF_MAX_PARTITION_BYTES")
         or DEFAULT_MAX_PARTITION_BYTES
     )
 
@@ -758,8 +760,9 @@ def plan_byte_ranges(files, known_sizes: dict[str, int], max_bytes: int,
                      env: dict, pushed=(), point_lookup: bool = False):
     """Read tasks ``[(path, rank, tombstone, start, length)]`` over
     already-pruned ``files`` ``[(path, rank, tombstone)]`` — the one
-    task planner behind the Data Source readers and the driver-planned
-    object-store scan (``Lakehouse.scan_snapshot``).
+    task planner behind :meth:`ScanPlan.tasks` (the batch Data Source
+    reader, and ``Lakehouse.scan``'s driver and object-store routes)
+    and the stream reader's micro-batches.
 
     Files larger than ``max_bytes`` split into balanced byte ranges
     (:func:`_byte_ranges`); each task reads the row groups whose first
@@ -812,15 +815,198 @@ def plan_byte_ranges(files, known_sizes: dict[str, int], max_bytes: int,
     return out
 
 
+#: provenance columns of a raw row (see :func:`raw_row_schema`)
+_PROVENANCE_COLS = ("_rank", "_row_idx", "_tombstone")
+
+
+def raw_row_schema(schema, columns=None, tombstone: bool = False) -> StructType:
+    """The raw-row contract of ``format("bazof")`` and of every
+    ``Lakehouse.scan`` read: the declared fields — key, event_time,
+    then the value columns in ``columns`` (all when None) — plus the
+    ``_rank``/``_row_idx`` provenance, and the per-row ``_tombstone``
+    marker when ``tombstone``. Declared fields are nullable like the
+    native scan's: spark.read.parquet always yields nullable fields,
+    and golden data does carry nulls in columns the snapshot declares
+    non-nullable — declaring them non-null would NPE the unsafe-row
+    writer."""
+    from bazof_spark.projection import Projection
+    from bazof_spark.schema import EVENT_TIME_COL, KEY_COL
+
+    projection = (
+        Projection.all()
+        if columns is None
+        else Projection.of([KEY_COL, EVENT_TIME_COL, *columns])
+    )
+    fields = [
+        StructField(f.name, f.dataType, True)
+        for f in schema.to_struct_type(projection).fields
+    ] + [
+        StructField("_rank", LongType(), False),
+        StructField("_row_idx", LongType(), False),
+    ]
+    if tombstone:
+        fields.append(StructField("_tombstone", BooleanType(), False))
+    return StructType(fields)
+
+
+def key_range_of(pushed):
+    """The KeyRange implied by the pushed ``key`` comparisons, or None —
+    the one place a scan's key predicate becomes file pruning. Strict
+    bounds are widened to inclusive — a superset is always safe (the
+    reader still row-filters), and zone maps only need may-contain
+    semantics. A pushed EQUALITY or IN-list additionally carries the
+    exact keys so planning can probe each file's bloom (every result
+    row must satisfy the conjunction, so those values are the only
+    keys the scan can return)."""
+    from bazof_spark.metadata import MAX_BLOOM_PROBE_KEYS, KeyRange
+
+    lo: str | None = None
+    hi: str | None = None
+    eq: set[str] = set()
+    seen = False
+    for op, col, value in pushed:
+        if col != "key":
+            continue
+        if op == "isin" and all(isinstance(v, str) for v in value):
+            # conservative under conjunction: the union of all
+            # equality/IN values is a superset of the satisfiable
+            # keys, and [min, max] of the list bounds the range
+            seen = True
+            eq.update(value)
+            vlo, vhi = min(value), max(value)
+            lo = vlo if lo is None else max(lo, vlo)
+            hi = vhi if hi is None else min(hi, vhi)
+            continue
+        if not isinstance(value, str):
+            continue
+        seen = True
+        if op == "equal":
+            eq.add(value)
+        if op in ("equal", "greater", "greater_equal"):
+            lo = value if lo is None else max(lo, value)
+        if op in ("equal", "less", "less_equal"):
+            hi = value if hi is None else min(hi, value)
+    if not seen:
+        return None
+    # past the probe budget the per-file bloom check is O(|keys|) per
+    # file — a key set that big is a join, not a point lookup, so fall
+    # back to range-only pruning
+    probe = (
+        tuple(sorted(eq))
+        if eq and len(eq) <= MAX_BLOOM_PROBE_KEYS
+        else None
+    )
+    return KeyRange(lo, hi, keys=probe)
+
+
+@dataclass(frozen=True)
+class ScanPlan:
+    """One point-in-time merge scan, planned on the driver from an
+    already-resolved snapshot (:func:`plan_scan`) — what every read
+    route of ``Lakehouse.scan`` and the ``format("bazof")`` reader
+    consume, so the two surfaces cannot plan the same scan differently.
+
+    ``files`` are the ranked ``(path, rank, tombstone)`` data files in
+    precedence order (rank = position in the pruned list, lower wins);
+    ``raw`` is the raw-row schema (:func:`raw_row_schema`) and
+    ``read_args`` the keyword arguments of :func:`read_file_range`
+    that produce it. Sizes are read on first use — a full scan on a
+    local root never needs them — and byte ranges are planned only
+    when a route asks for :meth:`tasks`."""
+
+    files: tuple[tuple[str, int, bool], ...]
+    tomb_ranks: tuple[int, ...]
+    raw: StructType
+    read_args: dict
+    point_lookup: bool
+    recorded_sizes: dict
+    env: dict
+
+    @functools.cached_property
+    def sizes(self) -> dict[str, int]:
+        """``{path: bytes}``: commit-recorded sizes first, then one
+        batched stat for the files the snapshot records none for."""
+        return sizes_of([p for p, _, _ in self.files], self.recorded_sizes, self.env)
+
+    @property
+    def bytes(self) -> int:
+        return sum(self.sizes.values())
+
+    def tasks(self, max_bytes: int):
+        """:func:`plan_byte_ranges` over the ranked files."""
+        return plan_byte_ranges(
+            self.files,
+            self.sizes,
+            max_bytes,
+            self.env,
+            self.read_args["pushed"],
+            point_lookup=self.point_lookup,
+        )
+
+
+def plan_scan(table, snapshot, as_of: AsOf, columns, pushed, env: dict,
+              tombstone: bool = False) -> ScanPlan:
+    """Plan the scan of ``table`` at ``snapshot``/``as_of``: the files
+    the segment tree ranks for the instant, minus those whose zone-map
+    bounds or key bloom exclude :func:`key_range_of` ``(pushed)``;
+    reads of ``columns`` (key and event_time are always read) with the
+    as-of bound and the ``pushed`` ``(op, column, value)`` predicates
+    applied in the reader; ``tombstone`` adds the per-row marker to the
+    raw rows (the merge can also hide tombstones by ``tomb_ranks``).
+    ``env`` is the driver's BAZOF_* snapshot the reads run under."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    key_range = key_range_of(pushed)
+    tombs = snapshot.tombstone_files()
+    files = tuple(
+        (table.data_file_path(f), r, f in tombs)
+        for f, r in snapshot.ranked_data_files(as_of, key_range)
+    )
+    raw = raw_row_schema(snapshot.schema, columns, tombstone)
+    return ScanPlan(
+        files=files,
+        tomb_ranks=tuple(r for _, r, tomb in files if tomb),
+        raw=raw,
+        read_args=dict(
+            columns=[n for n in raw.fieldNames() if n not in _PROVENANCE_COLS],
+            field_order=raw.fieldNames(),
+            # Spark's Arrow bridge accepts only µs timestamps (the
+            # format's parquet may carry ms/ns); nullable because
+            # arrow's cast refuses nulls into non-null fields
+            arrow_schema=pa.schema(
+                [f.with_nullable(True) for f in to_arrow_schema(raw)]
+            ),
+            # former spellings per declared column (RENAME COLUMN): the
+            # per-file reader resolves which spelling each file carries
+            formers={
+                c.name: c.formers for c in snapshot.schema.columns if c.formers
+            },
+            pushed=list(pushed),
+            as_of_dt=as_of.event_time_at,
+        ),
+        point_lookup=key_range is not None and key_range.keys is not None,
+        # commit-time-recorded file lengths: sizing stats ONLY files
+        # the snapshot predates (an unconditional stat pass adds
+        # planning latency on object stores with many small files)
+        recorded_sizes={
+            table.data_file_path(f): n for f, n in snapshot.file_sizes().items()
+        },
+        env=env,
+    )
+
+
 def read_file_range(path: str, rank: int, tombstone: bool, start: int,
                     length: int | None, *, columns, field_order,
                     arrow_schema, formers, pushed, as_of_dt) -> Iterator:
     """One batch read task: :func:`_file_batches` over one (file, byte
     range), with the as-of bound and the pushed ``(op, column, value)``
     predicates applied row-wise, so rows past the instant or outside
-    the predicates never cross into the JVM. Shared by
-    :meth:`BazofReader.read` and the driver-planned object-store scan
-    (``Lakehouse.scan_snapshot``); yields Arrow record batches."""
+    the predicates never cross into the JVM. The keyword arguments are
+    a :class:`ScanPlan`'s ``read_args``; the task is one of its
+    :meth:`ScanPlan.tasks`. Runs in :meth:`BazofReader.read`, in
+    ``Lakehouse.scan``'s object-store ``mapInArrow`` tasks and on the
+    driver for small keyed lookups; yields Arrow record batches."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
@@ -895,54 +1081,23 @@ def file_range_task_reader(tasks, env: dict, **read_args):
 
 
 class BazofReader(DataSourceReader):
-    def __init__(self, options: dict, schema: StructType, resolved=None):
-        _apply_env_option(options)
-        table, snapshot, as_of = resolved or _resolve(options)
-        stats = snapshot.file_key_stats()
-        tomb = snapshot.tombstone_files()
-        # commit-time-recorded file lengths: split planning uses these
-        # directly and stats ONLY files the snapshot predates (ADVICE
-        # r10: an unconditional stat pass added planning latency on
-        # object stores with many small files)
-        self._known_sizes = {
-            table.data_file_path(f): n
-            for f, n in snapshot.file_sizes().items()
-        }
-        self._files = [
-            (
-                table.data_file_path(f),
-                r,
-                *stats.get(f, (None, None, None)),
-                f in tomb,
-            )
-            for f, r in snapshot.ranked_data_files(as_of)
-        ]
-        self._columns = [
-            f.name
-            for f in schema.fields
-            if f.name not in ("_rank", "_row_idx", "_tombstone")
-        ]
-        self._field_order = [f.name for f in schema.fields]
-        # former spellings per declared column (RENAME COLUMN): the
-        # per-file reader resolves which spelling each file carries
-        self._formers = {
-            c.name: c.formers
-            for c in snapshot.schema.columns
-            if c.formers
-        }
-        # Spark's Arrow bridge accepts only µs timestamps; the format's
-        # parquet may carry ms/ns — cast every batch to the declared
-        # schema's exact Arrow types before handing it over
-        import pyarrow as pa
-        from pyspark.sql.pandas.types import to_arrow_schema
+    """Batch reader of the raw versioned rows. Partitions and per-task
+    reads both come from :func:`plan_scan` under the filters pushed so
+    far. Spark pickles the reader after ``pushFilters`` and before
+    ``partitions()``, so each task re-plans from the pickled snapshot
+    (metadata only; sizes and byte ranges are never computed there)."""
 
-        # nullable variants: arrow's cast refuses null values into
-        # non-nullable fields, and Spark does not enforce declared
-        # non-nullability on read anyway (the native scan behaves the same)
-        self._arrow_schema = pa.schema(
-            [f.with_nullable(True) for f in to_arrow_schema(schema)]
-        )
-        self._as_of_dt = as_of.event_time_at
+    def __init__(self, options: dict, schema: StructType, resolved=None):
+        from bazof_spark import iofs
+
+        _apply_env_option(options)
+        self._table, self._snapshot, self._as_of = resolved or _resolve(options)
+        self._types = {
+            f.name: f.dataType.typeName()
+            for f in schema.fields
+            if f.name not in _PROVENANCE_COLS
+        }
+        self._tombstone = "_tombstone" in schema.fieldNames()
         self._pushed: list[tuple[str, str, object]] = []
         # row-group splitting threshold — the JVM scan's
         # spark.sql.files.maxPartitionBytes counterpart
@@ -951,8 +1106,6 @@ class BazofReader(DataSourceReader):
         # executors inherit the JVM's LAUNCH-time env, so an endpoint
         # or emulation variable set after session start would
         # otherwise never reach the per-file iofs resolution
-        from bazof_spark import iofs
-
         self._env = iofs.env_snapshot()
 
     _COMPARATORS = {
@@ -961,6 +1114,15 @@ class BazofReader(DataSourceReader):
         GreaterThanOrEqual: "greater_equal",
         LessThan: "less",
         LessThanOrEqual: "less_equal",
+    }
+
+    #: filter value type → the column types the Arrow reader compares
+    #: it with exactly (no string/numeric coercion)
+    _PUSHABLE_TYPES = {
+        bool: {"boolean"},
+        int: {"byte", "short", "integer", "long"},
+        float: {"float", "double"},
+        str: {"string"},
     }
 
     def pushFilters(self, filters: list[Filter]):
@@ -972,21 +1134,11 @@ class BazofReader(DataSourceReader):
         (Spark re-checks accepted filters only if we mis-declare, so
         only comparisons with exact arrow-comparable semantics are
         accepted: no strings-vs-numeric coercions, no nested paths)."""
-        import pyarrow as pa
 
         def _acceptable(col: str | None, value) -> bool:
-            if col not in self._columns:
-                return False
-            ftype = self._arrow_schema.field(col).type
-            if isinstance(value, bool):
-                return pa.types.is_boolean(ftype)
-            if isinstance(value, int):
-                return pa.types.is_integer(ftype)
-            if isinstance(value, float):
-                return pa.types.is_floating(ftype)
-            if isinstance(value, str):
-                return pa.types.is_string(ftype) or pa.types.is_large_string(ftype)
-            return False
+            return self._types.get(col) in self._PUSHABLE_TYPES.get(
+                type(value), ()
+            )
 
         for f in filters:
             op = self._COMPARATORS.get(type(f))
@@ -1008,76 +1160,25 @@ class BazofReader(DataSourceReader):
             else:
                 yield f  # unsupported → Spark evaluates it
 
-    def _pushed_key_range(self):
-        """KeyRange implied by the pushed ``key`` comparisons, or None.
-        Strict bounds are widened to inclusive — a superset is always
-        safe (the reader still row-filters), and zone maps only need
-        may-contain semantics. A pushed EQUALITY additionally carries
-        the exact key so partition planning can probe each file's
-        bloom (every result row must satisfy the conjunction, so the
-        equality value is the only key the scan can return)."""
-        from bazof_spark.metadata import MAX_BLOOM_PROBE_KEYS, KeyRange
-
-        lo: str | None = None
-        hi: str | None = None
-        eq: set[str] = set()
-        seen = False
-        for op, col, value in self._pushed:
-            if col != "key":
-                continue
-            if op == "isin" and all(isinstance(v, str) for v in value):
-                # conservative under conjunction: the union of all
-                # equality/IN values is a superset of the satisfiable
-                # keys, and [min, max] of the list bounds the range
-                seen = True
-                eq.update(value)
-                vlo, vhi = min(value), max(value)
-                lo = vlo if lo is None else max(lo, vlo)
-                hi = vhi if hi is None else min(hi, vhi)
-                continue
-            if not isinstance(value, str):
-                continue
-            seen = True
-            if op == "equal":
-                eq.add(value)
-            if op in ("equal", "greater", "greater_equal"):
-                lo = value if lo is None else max(lo, value)
-            if op in ("equal", "less", "less_equal"):
-                hi = value if hi is None else min(hi, value)
-        if not seen:
-            return None
-        # mirror KeyRange.of_keys: past the probe budget the per-file
-        # bloom check is O(|keys|) per file — a pushed list that big is
-        # a join, not a point lookup, so fall back to range-only pruning
-        probe = (
-            tuple(sorted(eq))
-            if eq and len(eq) <= MAX_BLOOM_PROBE_KEYS
-            else None
+    def _plan(self) -> ScanPlan:
+        return plan_scan(
+            self._table,
+            self._snapshot,
+            self._as_of,
+            list(self._types),
+            self._pushed,
+            self._env,
+            tombstone=self._tombstone,
         )
-        return KeyRange(lo, hi, keys=probe)
 
     def partitions(self):
-        """Byte-range tasks (:func:`plan_byte_ranges`) over the ranked
-        data files — minus the files whose zone-map stats (snapshot
-        key_min/key_max bounds, key bloom) exclude the pushed key
-        predicate: a selective key lookup schedules O(matching files)
-        tasks, the Data-Source twin of Lakehouse.scan(keys=...)."""
-        kr = self._pushed_key_range()
-        surviving = [
-            (p, r, tomb)
-            for p, r, kmin, kmax, bloom, tomb in self._files
-            if kr is None or kr.admits(kmin, kmax, bloom)
-        ]
+        """The plan's byte-range tasks: a pushed key predicate drops
+        the files whose zone-map stats exclude it, so a selective key
+        lookup schedules O(matching files) tasks — the same files, in
+        the same precedence, as ``Lakehouse.scan(keys=...)``."""
         return [
-            _FilePartition(p, r, tomb, start=s0, length=ln)
-            for p, r, tomb, s0, ln in plan_byte_ranges(
-                surviving,
-                self._known_sizes,
-                self._max_part_bytes,
-                self._env,
-                self._pushed,
-                point_lookup=kr is not None and kr.keys is not None,
-            )
+            _FilePartition(*task)
+            for task in self._plan().tasks(self._max_part_bytes)
         ]
 
     def read(self, partition: _FilePartition) -> Iterator:
@@ -1095,12 +1196,7 @@ class BazofReader(DataSourceReader):
             partition.tombstone,
             partition.start,
             partition.length,
-            columns=self._columns,
-            field_order=self._field_order,
-            arrow_schema=self._arrow_schema,
-            formers=self._formers,
-            pushed=self._pushed,
-            as_of_dt=self._as_of_dt,
+            **self._plan().read_args,
         )
 
 
@@ -1459,7 +1555,7 @@ class BazofStreamReader(DataSourceStreamReader):
         if latest is not None and latest.schema.has_formers():
             stream_cols = [
                 n for n in self._schema.fieldNames()
-                if n not in ("_rank", "_row_idx", "_tombstone")
+                if n not in _PROVENANCE_COLS
             ]
             for c in latest.schema.columns:
                 chain = (c.name, *c.formers)
@@ -1553,7 +1649,7 @@ class BazofStreamReader(DataSourceStreamReader):
         cols = [
             f.name
             for f in self._schema.fields
-            if f.name not in ("_rank", "_row_idx", "_tombstone")
+            if f.name not in _PROVENANCE_COLS
         ]
         order = [f.name for f in self._schema.fields]
         for t in _file_batches(
@@ -1710,47 +1806,29 @@ class BazofDataSource(DataSource):
 
     def schema(self) -> StructType:
         _, snapshot, _ = self._resolved()
-        base = snapshot.schema.to_struct_type()
-        # nullable like the native scan: spark.read.parquet always
-        # yields nullable fields, and golden data does carry nulls in
-        # columns the snapshot declares non-nullable — declaring them
-        # non-null here would NPE the unsafe-row writer
-        fields = [
-            StructField(f.name, f.dataType, True) for f in base.fields
-        ]
         # projection pushdown: the Python Data Source API has no column
         # pruning hook, so callers narrow via .option("columns",
         # "a,b") — value columns outside the list never leave the
         # Arrow reader (key/event_time always read; the merge needs
         # them, exactly like the native scan's ReadSchema)
         wanted = self.options.get("columns")
+        keep = None
         if wanted is not None:
-            from bazof_spark.schema import EVENT_TIME_COL, KEY_COL
-
             keep = {c.strip() for c in wanted.split(",") if c.strip()}
-            declared = {f.name for f in fields}
+            declared = set(snapshot.schema.to_struct_type().fieldNames())
             missing = sorted(keep - declared)
             if missing:
                 raise ValueError(
                     f"columns option names unknown column(s) {missing}; "
                     f"declared: {sorted(declared)}"
                 )
-            fields = [
-                f
-                for f in fields
-                if f.name in (KEY_COL, EVENT_TIME_COL) or f.name in keep
-            ]
-        out = fields + [
-            StructField("_rank", LongType(), False),
-            StructField("_row_idx", LongType(), False),
-        ]
-        if snapshot.tombstone_files():
-            # delete-capable table: every raw row carries the marker so
-            # stream/raw consumers can fold deletes (delete-free tables
-            # keep the historical schema — nothing changes for them; a
-            # table's FIRST delete is a schema change, restart streams)
-            out.append(StructField("_tombstone", BooleanType(), False))
-        return StructType(out)
+        # delete-capable table: every raw row carries the marker so
+        # stream/raw consumers can fold deletes (delete-free tables
+        # keep the historical schema — nothing changes for them; a
+        # table's FIRST delete is a schema change, restart streams)
+        return raw_row_schema(
+            snapshot.schema, keep, tombstone=bool(snapshot.tombstone_files())
+        )
 
     def reader(self, schema: StructType) -> BazofReader:
         return BazofReader(self.options, schema, resolved=self._resolved())
@@ -1871,25 +1949,32 @@ def broadcast_hint_if_small(spark, table_path: str, df, version=None,
 def read_table(spark, root: str, name: str, as_of: str | None = None,
                version: str | None = None):
     """Merged point-in-time state through the registered source: the
-    same ``max_by(payload, struct(-rank, event_time, -row_idx))``
-    latest-per-key reduction as ``Lakehouse.scan`` (one shuffle of
-    map-side-combined winners), over the source's pruned scan."""
-    from pyspark.sql import functions as F
+    merge tail of ``Lakehouse.scan`` (``_dedup_latest_per_key``, one
+    shuffle of map-side-combined winners) over the source's pruned
+    scan. Tombstone rows ride in the merge payload through the
+    source's ``_tombstone`` marker, and keys whose winner is a
+    tombstone are dropped."""
+    import json
+
+    from bazof_spark import iofs
+    from bazof_spark.lakehouse import _dedup_latest_per_key
+    from bazof_spark.schema import EVENT_TIME_COL, KEY_COL
 
     spark.dataSource.register(BazofDataSource)
     # pushFilters() requires this capability flag (off by default in
     # Spark 4.1; pre-set in session.get_spark, repeated here for
     # sessions built elsewhere — runtime-settable)
     spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    import json
-
-    from bazof_spark import iofs
-
     reader = (
         spark.read.format("bazof")
         .option("path", root)
         .option("table", name)
         .option("bazofEnv", json.dumps(iofs.env_snapshot()))
+        # the session's split size, the one Lakehouse.scan reads
+        .option(
+            "maxPartitionBytes",
+            spark.conf.get("spark.sql.files.maxPartitionBytes"),
+        )
     )
     if as_of is not None:
         reader = reader.option("asOf", as_of)
@@ -1898,31 +1983,14 @@ def read_table(spark, root: str, name: str, as_of: str | None = None,
     df = reader.load()
     value_cols = [
         c for c in df.columns
-        if c not in ("key", "event_time", "_rank", "_row_idx", "_tombstone")
+        if c not in (KEY_COL, EVENT_TIME_COL, *_PROVENANCE_COLS)
     ]
-    from bazof_spark.ordering import latest_wins_agg
-
-    # tombstone deltas (the DELETE extension): same post-merge hide as
-    # Lakehouse.scan — the source exposes a per-row _tombstone marker on
-    # delete-capable tables; it rides in the payload and keys whose
-    # winner is a tombstone row are dropped. Delete-free tables (no
-    # marker column — every reference-authored table) keep the original
-    # plan. The aggregate is ONE parsed expression (ordering.py) so the
-    # merge costs a handful of py4j round trips, not hundreds.
-    has_tomb = "_tombstone" in df.columns
-    winner = df.groupBy("key").agg(
-        latest_wins_agg(
-            value_cols, "_tombstone" if has_tomb else None, "batch"
-        ).alias("_w")
+    merged = _dedup_latest_per_key(
+        df,
+        value_cols,
+        "_tombstone" if "_tombstone" in df.columns else None,
+        [KEY_COL, EVENT_TIME_COL, *value_cols],
     )
-    if has_tomb:
-        merged = (
-            winner.filter(~F.col("_w._tombstone"))
-            .select("key", "_w.*")
-            .drop("_tombstone")
-        )
-    else:
-        merged = winner.select("key", "_w.*")
     return broadcast_hint_if_small(
         spark, iofs.join(root, name), merged, version
     )

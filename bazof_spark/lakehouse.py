@@ -9,20 +9,23 @@ DataFrame operations and Catalyst/Tungsten execute them distributed:
 
 1. version + snapshot resolution, temporal and key file pruning —
    driver-side Python, O(metadata), no Spark jobs (like Delta log file
-   skipping, or Photon planning file skips from table metadata);
+   skipping, or Photon planning file skips from table metadata). This
+   is ``datasource.plan_scan``, the planner the ``format("bazof")``
+   reader runs too; its ``ScanPlan`` picks the read route before any
+   byte range is planned;
 2. ONE ``spark.read.parquet(*pruned_files)`` — vectorized reader,
    parallel across files/row-groups, column pruning pushed down from the
    projection, ``event_time <= t`` pushed to row-group stats. On an
    object-store root the JVM may lack the scheme's connector, so the
-   driver also splits the pruned files into byte ranges and ONE
+   driver instead splits the pruned files into byte ranges and ONE
    ``spark.range(n).mapInArrow`` reads them, a pyarrow read per range
    with the projection, as-of bound and key predicate applied in the
    reader (``datasource.read_file_range``, the Data Source reader's
    own per-task read) — executors get only the scan. A ``keys=``
-   lookup whose planned ranges fit the broadcast threshold skips
-   steps 2-4 on the cluster: the driver reads the ranges with the
-   same reader and merges them in Arrow (``_latest_per_key_arrow``),
-   so the lookup runs no Spark job;
+   lookup whose ranked files fit the broadcast threshold skips
+   steps 2-4 on the cluster: the driver reads the files' byte ranges
+   with the same reader and merges them in Arrow
+   (``_latest_per_key_arrow``), so the lookup runs no Spark job;
 3. file precedence (crates/azof/src/metadata.rs:47-73 — child segments
    shadow parents, newer deltas shadow older, deltas shadow base) is
    attached as a ``_rank`` column mapped from ``input_file_name()``;
@@ -65,7 +68,7 @@ from pyspark.sql import functions as F
 
 from bazof_spark import iofs
 from bazof_spark.asof import AsOf, coerce_as_of
-from bazof_spark.errors import TableNotFoundError
+from bazof_spark.errors import MetadataError, TableNotFoundError
 from bazof_spark.metadata import Snapshot
 from bazof_spark.projection import Projection, coerce_projection
 from bazof_spark.schema import EVENT_TIME_COL, KEY_COL
@@ -137,6 +140,16 @@ def _sql_str(s: str) -> str:
     (backslash and quote escaped — default parser semantics, i.e.
     ``spark.sql.parser.escapedStringLiterals=false``)."""
     return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+#: SQL spelling of each pushed comparison op (``isin`` renders as IN)
+_SQL_COMPARATORS = {
+    "equal": "=",
+    "greater": ">",
+    "greater_equal": ">=",
+    "less": "<",
+    "less_equal": "<=",
+}
 
 
 def _map_sql(entries: dict[str, int]) -> str:
@@ -218,7 +231,7 @@ class Lakehouse:
     ) -> DataFrame:
         """Point-in-time merge scan → DataFrame
         (reference: crates/azof/src/lakehouse.rs:29-86). Lazy, except
-        for a ``keys=`` lookup whose planned byte ranges fit
+        for a ``keys=`` lookup whose ranked files' bytes fit
         ``spark.sql.autoBroadcastJoinThreshold`` (``-1`` = never): that
         one is read and merged on the driver, here, and comes back as
         a local relation whose ``collect()`` runs no Spark job.
@@ -245,29 +258,29 @@ class Lakehouse:
         event_time, then declared value columns, each only if projected
         (crates/azof/src/schema.rs:148-171).
         """
-        from bazof_spark.metadata import KeyRange
-
         as_of = coerce_as_of(as_of)
         projection = coerce_projection(columns)
+        if keys is not None and key_range is not None:
+            raise ValueError("pass keys= or key_range=, not both")
+        # the key predicate as pushed (op, column, value) triples — the
+        # one encoding every route prunes, reads and filters by
+        pushed: list[tuple[str, str, object]] = []
+        if keys is not None:
+            key_values = tuple(sorted({str(k) for k in keys}))
+            if not key_values:
+                raise MetadataError("empty key set for scan(keys=...)")
+            pushed.append(("isin", KEY_COL, key_values))
+        elif key_range is not None:
+            for op, bound in zip(("greater_equal", "less_equal"), key_range):
+                if bound is not None:
+                    pushed.append((op, KEY_COL, bound))
         table = self.table(table_name)
         # ONE snapshot resolution per scan: pruning, task planning and
         # the broadcast-size decision all read this snapshot
         snapshot = table.get_snapshot(
             str(version) if version is not None else table.current_version()
         )
-        key_values: list[str] | None = None
-        kr: KeyRange | None = None
-        if keys is not None and key_range is not None:
-            raise ValueError("pass keys= or key_range=, not both")
-        if keys is not None:
-            key_values = sorted({str(k) for k in keys})
-            kr = KeyRange.of_keys(key_values)
-        elif key_range is not None:
-            kr = KeyRange(lo=key_range[0], hi=key_range[1])
-        return self.scan_snapshot(
-            table, snapshot, as_of, projection, key_range=kr,
-            key_values=key_values,
-        )
+        return self.scan_snapshot(table, snapshot, as_of, projection, pushed)
 
     def scan_changes(
         self,
@@ -383,20 +396,18 @@ class Lakehouse:
         snapshot: Snapshot,
         as_of: AsOf,
         projection: Projection,
-        key_range=None,
-        key_values: list[str] | None = None,
+        pushed=(),
     ) -> DataFrame:
-        ranked = snapshot.ranked_data_files(as_of, key_range)
-        out_cols = snapshot.schema.output_columns(projection)
-        if not ranked:
-            # an empty Arrow table plans a LocalRelation (no Spark job at
-            # collect); an empty row list would plan an RDD scan
-            from pyspark.sql.pandas.types import to_arrow_schema
+        """The merge scan of an already-resolved snapshot, restricted by
+        the ``pushed`` ``(op, column, value)`` key predicates. The route
+        is chosen from the :class:`datasource.ScanPlan` before any byte
+        range is planned: no ranked file → an empty local relation; a
+        keyed lookup whose files fit the broadcast threshold → the
+        driver read; an object-store root → ``mapInArrow``; otherwise
+        the JVM parquet scan."""
+        from bazof_spark.datasource import broadcast_threshold, plan_scan
 
-            struct = snapshot.schema.to_struct_type(projection)
-            return self.spark.createDataFrame(
-                to_arrow_schema(struct).empty_table(), struct
-            )
+        out_cols = snapshot.schema.output_columns(projection)
         # value columns we must read: projected ones (key/event_time are
         # always read — the merge needs them, as in the reference's
         # ProjectionMask, crates/azof/src/lakehouse.rs:98-109)
@@ -405,6 +416,27 @@ class Lakehouse:
             for c in snapshot.schema.columns
             if projection.contains(c.name)
         ]
+        plan = plan_scan(
+            table, snapshot, as_of, value_cols, pushed, iofs.env_snapshot()
+        )
+        if not plan.files:
+            # an empty Arrow table plans a LocalRelation (no Spark job at
+            # collect); an empty row list would plan an RDD scan
+            from pyspark.sql.pandas.types import to_arrow_schema
+
+            struct = snapshot.schema.to_struct_type(projection)
+            return self.spark.createDataFrame(
+                to_arrow_schema(struct).empty_table(), struct
+            )
+        # keyed lookup whose files are "small" by the session's
+        # broadcast threshold (-1 = off, Spark's meaning): read and
+        # merge on the driver — a bounded collect, and the lookup runs
+        # no Spark job at all. (An empty projection keeps the executor
+        # merge: a local relation needs at least one column.)
+        if out_cols and any(op == "isin" for op, _, _ in pushed):
+            limit = broadcast_threshold(self.spark)
+            if limit is not None and 0 < limit and plan.bytes <= limit:
+                return self._merge_on_driver(plan, out_cols)
         # object-store root: the JVM may lack the scheme's connector (no
         # S3A jars in this runtime), so the ranked files are read by
         # executor-side pyarrow through iofs — planned here, on the
@@ -413,36 +445,16 @@ class Lakehouse:
         remote = iofs.is_uri(table.path) and not table.path.startswith(
             "file://"
         )
-        tombs = snapshot.tombstone_files()
-        tomb_ranks = tuple(r for f, r in ranked if f in tombs)
-        # (an empty projection keeps the executor merge: a local
-        # relation needs at least one column)
-        keyed = key_values is not None and bool(out_cols)
-        if remote or keyed:
-            tasks, planned, raw, read_args = self._plan_ranked_ranges(
-                table, snapshot, ranked, as_of, value_cols,
-                key_range=key_range, key_values=key_values,
-            )
-        if keyed:
-            # keyed lookup whose planned byte ranges are "small" by the
-            # session's broadcast threshold (-1 = off, Spark's meaning):
-            # read and merge on the driver — a bounded collect, and the
-            # lookup runs no Spark job at all
-            from bazof_spark.datasource import broadcast_threshold
-
-            limit = broadcast_threshold(self.spark)
-            if limit is not None and 0 < limit and planned <= limit:
-                return self._merge_on_driver(
-                    tasks, raw, read_args, tomb_ranks, out_cols
-                )
         if remote:
-            df = self._read_ranked_arrow(tasks, raw, read_args)
+            df = self._read_ranked_arrow(plan)
         else:
-            df = self._read_ranked_parquet(
-                table, snapshot, ranked, as_of, value_cols,
-                key_range=key_range, key_values=key_values,
-            )
-        out = self._dedup_latest_per_key(df, value_cols, tomb_ranks, out_cols)
+            df = self._read_ranked_parquet(plan, snapshot, value_cols)
+        tomb_sql = (
+            "_rank IN (" + ", ".join(map(str, plan.tomb_ranks)) + ")"
+            if plan.tomb_ranks
+            else None
+        )
+        out = _dedup_latest_per_key(df, value_cols, tomb_sql, out_cols)
         if remote:
             # the mapInArrow leaf carries no statistics — attach the
             # broadcast decision Spark would have made from file sizes
@@ -455,23 +467,15 @@ class Lakehouse:
         return out
 
     def _read_ranked_parquet(
-        self,
-        table: Table,
-        snapshot: Snapshot,
-        ranked: list[tuple[str, int]],
-        as_of: AsOf,
-        value_cols: list[str],
-        key_range=None,
-        key_values: list[str] | None = None,
+        self, plan, snapshot: Snapshot, value_cols: list[str]
     ) -> DataFrame:
-        """Raw versioned rows of the ranked files through ONE JVM
+        """Raw versioned rows of the plan's files through ONE JVM
         parquet scan, with ``_rank``/``_row_idx`` provenance. Every
         expression is parsed from SQL text — one py4j round trip each
         instead of one per Column node; the parsed trees are the
         identical analyzed plan."""
         from bazof_spark.ordering import quote_sql_ident as _q
 
-        paths = [table.data_file_path(f) for f, _ in ranked]
         # explicit schema read: (a) skips schema inference/merging over
         # the file listing, (b) null-fills columns added by schema
         # evolution that predate a file (maintenance.evolve_table_schema).
@@ -485,10 +489,9 @@ class Lakehouse:
         # spellings (a file stores exactly one, so this is a disjoint
         # union). Never-renamed tables take the identical plan as before
         # (no extra fields, plain column refs — plan pins unaffected).
+        args = plan.read_args
         formers = {
-            c.name: c.formers
-            for c in snapshot.schema.columns
-            if c.formers and c.name in value_cols
+            c: f for c, f in args["formers"].items() if c in value_cols
         }
         value_exprs = [
             "coalesce({}) AS {}".format(
@@ -503,7 +506,9 @@ class Lakehouse:
             if formers
             else snapshot.schema.to_struct_type()
         )
-        df = self.spark.read.schema(read_schema).parquet(*paths).selectExpr(
+        df = self.spark.read.schema(read_schema).parquet(
+            *(p for p, _, _ in plan.files)
+        ).selectExpr(
             KEY_COL,
             EVENT_TIME_COL,
             *value_exprs,
@@ -511,118 +516,35 @@ class Lakehouse:
         )
         # as-of bound (pushed to row-group stats: rows with event_time
         # > t are invisible and do NOT shadow older versions,
-        # lakehouse.rs:62-67) and the key predicate (file-level zone
-        # maps bound WHICH files are read, the row filter bounds which
-        # rows survive; filter-on-key commutes with the groupBy(key)
-        # merge, so winners are unchanged)
+        # lakehouse.rs:62-67) and the pushed key predicate (file-level
+        # zone maps bound WHICH files are read, the row filter bounds
+        # which rows survive; filter-on-key commutes with the
+        # groupBy(key) merge, so winners are unchanged)
         conds = []
-        if not as_of.is_current:
+        if args["as_of_dt"] is not None:
             conds.append(
                 f"{EVENT_TIME_COL} <= TIMESTAMP "
-                + _sql_str(as_of.event_time_at.isoformat())
+                + _sql_str(args["as_of_dt"].isoformat())
             )
-        if key_values is not None:
-            conds.append(
-                f"{KEY_COL} IN ({', '.join(map(_sql_str, key_values))})"
-            )
-        elif key_range is not None:
-            if key_range.lo is not None:
-                conds.append(f"{KEY_COL} >= {_sql_str(key_range.lo)}")
-            if key_range.hi is not None:
-                conds.append(f"{KEY_COL} <= {_sql_str(key_range.hi)}")
+        for op, col, value in args["pushed"]:
+            if op == "isin":
+                conds.append(f"{_q(col)} IN ({', '.join(map(_sql_str, value))})")
+            else:
+                conds.append(f"{_q(col)} {_SQL_COMPARATORS[op]} {_sql_str(value)}")
         if conds:
             df = df.filter(" AND ".join(conds))
-        return self._with_rank(df, table, ranked)
+        return self._with_rank(df, plan.files)
 
-    def _plan_ranked_ranges(
-        self,
-        table: Table,
-        snapshot: Snapshot,
-        ranked: list[tuple[str, int]],
-        as_of: AsOf,
-        value_cols: list[str],
-        key_range=None,
-        key_values: list[str] | None = None,
-    ):
-        """Driver-side read plan of the ranked files: ``(tasks,
-        planned_bytes, raw, read_args)`` — the byte-range tasks
-        ``datasource.plan_byte_ranges`` splits the already-pruned files
-        into, the bytes those ranges cover, the raw-row schema
-        (projected columns + ``_rank``/``_row_idx``) and the keyword
-        arguments of ``datasource.read_file_range``, which applies the
-        as-of bound, the key predicate, page pruning, former spellings
-        and null fill IN the reader. Shared by the executor read
-        (:meth:`_read_ranked_arrow`) and the driver read
-        (:meth:`_merge_on_driver`)."""
-        import pyarrow as pa
-        from pyspark.sql.pandas.types import to_arrow_schema
-        from pyspark.sql.types import LongType, StructField, StructType
+    def _split_bytes(self) -> int:
+        """The session's spark.sql.files.maxPartitionBytes, in bytes."""
+        from bazof_spark.datasource import _parse_byte_size
 
-        from bazof_spark.datasource import (
-            _parse_byte_size,
-            plan_byte_ranges,
-            sizes_of,
+        return _parse_byte_size(
+            self.spark.conf.get("spark.sql.files.maxPartitionBytes")
         )
 
-        read_type = snapshot.schema.to_struct_type(
-            Projection.of([KEY_COL, EVENT_TIME_COL, *value_cols])
-        )
-        raw = StructType(
-            [StructField(f.name, f.dataType, True) for f in read_type.fields]
-            + [
-                StructField("_rank", LongType(), False),
-                StructField("_row_idx", LongType(), False),
-            ]
-        )
-        pushed: list[tuple[str, str, object]] = []
-        if key_values is not None:
-            pushed.append(("isin", KEY_COL, tuple(key_values)))
-        elif key_range is not None:
-            if key_range.lo is not None:
-                pushed.append(("greater_equal", KEY_COL, key_range.lo))
-            if key_range.hi is not None:
-                pushed.append(("less_equal", KEY_COL, key_range.hi))
-        env = iofs.env_snapshot()
-        # tombstone flag False: the merge hides tombstones by _rank (the
-        # raw rows carry no _tombstone column)
-        files = [(table.data_file_path(f), r, False) for f, r in ranked]
-        sizes = sizes_of(
-            [p for p, _, _ in files],
-            {table.data_file_path(f): n for f, n in snapshot.file_sizes().items()},
-            env,
-        )
-        tasks = plan_byte_ranges(
-            files,
-            sizes,
-            _parse_byte_size(
-                self.spark.conf.get("spark.sql.files.maxPartitionBytes")
-            ),
-            env,
-            pushed,
-            point_lookup=key_range is not None and key_range.keys is not None,
-        )
-        # the last range of a file is open-ended (to EOF)
-        planned = sum(
-            sizes[p] - s0 if ln is None else ln for p, _, _, s0, ln in tasks
-        )
-        read_args = dict(
-            columns=[KEY_COL, EVENT_TIME_COL, *value_cols],
-            field_order=raw.fieldNames(),
-            # Spark's Arrow bridge accepts only µs timestamps; nullable
-            # because arrow's cast refuses nulls into non-null fields
-            arrow_schema=pa.schema(
-                [f.with_nullable(True) for f in to_arrow_schema(raw)]
-            ),
-            formers={
-                c.name: c.formers for c in snapshot.schema.columns if c.formers
-            },
-            pushed=pushed,
-            as_of_dt=as_of.event_time_at,
-        )
-        return tasks, planned, raw, read_args
-
-    def _read_ranked_arrow(self, tasks, raw, read_args: dict) -> DataFrame:
-        """Raw versioned rows of the ranked files on an object-store
+    def _read_ranked_arrow(self, plan) -> DataFrame:
+        """Raw versioned rows of the plan's files on an object-store
         root, whose scheme the JVM may have no connector for (no S3A
         jars in this runtime): ``spark.range(n).mapInArrow`` runs one
         executor-side pyarrow read per planned task through iofs
@@ -632,20 +554,14 @@ class Lakehouse:
         backend (crates/azof/src/lakehouse.rs:19-27)."""
         from bazof_spark.datasource import file_range_task_reader
 
-        read = file_range_task_reader(tasks, iofs.env_snapshot(), **read_args)
+        tasks = plan.tasks(self._split_bytes())
+        read = file_range_task_reader(tasks, plan.env, **plan.read_args)
         # one partition per task (at least one: zero tasks — every byte
         # range page-pruned — must read as zero rows, not fail)
         n = len(tasks)
-        return self.spark.range(0, n, 1, max(n, 1)).mapInArrow(read, raw)
+        return self.spark.range(0, n, 1, max(n, 1)).mapInArrow(read, plan.raw)
 
-    def _merge_on_driver(
-        self,
-        tasks,
-        raw,
-        read_args: dict,
-        tomb_ranks: tuple[int, ...],
-        out_cols: list[str],
-    ) -> DataFrame:
+    def _merge_on_driver(self, plan, out_cols: list[str]) -> DataFrame:
         """Keyed lookup under the broadcast threshold: every planned
         task is read HERE through ``datasource.read_file_range``, merged
         latest-per-key in Arrow (:func:`_latest_per_key_arrow`) and
@@ -659,76 +575,31 @@ class Lakehouse:
         from bazof_spark.datasource import read_file_range
 
         rows = pa.Table.from_batches(
-            [b for task in tasks for b in read_file_range(*task, **read_args)],
-            schema=read_args["arrow_schema"],
+            [
+                b
+                for task in plan.tasks(self._split_bytes())
+                for b in read_file_range(*task, **plan.read_args)
+            ],
+            schema=plan.read_args["arrow_schema"],
         )
-        winners = _latest_per_key_arrow(rows, tomb_ranks)
+        winners = _latest_per_key_arrow(rows, plan.tomb_ranks)
         return self.spark.createDataFrame(
-            winners.select(out_cols), StructType([raw[c] for c in out_cols])
+            winners.select(out_cols), StructType([plan.raw[c] for c in out_cols])
         )
 
-    def _dedup_latest_per_key(
-        self,
-        df: DataFrame,
-        value_cols: list[str],
-        tomb_ranks: tuple[int, ...],
-        out_cols: list[str],
-    ) -> DataFrame:
-        """First-eligible-occurrence-in-file-order semantics
-        (crates/azof/src/lakehouse.rs:40,54-79 + metadata.rs:47-73),
-        encoded as max_by over (−rank, event_time): min rank wins, then
-        max event_time — exactly 'latest version ≤ t, file precedence
-        beats timestamp'. Output: ``out_cols`` of the winners.
-
-        ``tomb_ranks`` marks tombstone deltas (our DELETE extension):
-        their rows compete in the merge like any newer version, but a
-        winning tombstone row HIDES its key instead of surfacing. The
-        flag rides inside the max_by payload, so the filter costs one
-        post-aggregate predicate and nothing at all on delete-free
-        tables (the common case keeps the exact pre-extension plan)."""
-        from bazof_spark.ordering import latest_wins_agg
-        from bazof_spark.ordering import quote_sql_ident as _q
-
-        # whole merge aggregate as ONE parsed expression (opt round 1):
-        # the Column-by-Column struct/max_by build cost ~250 py4j round
-        # trips per scan; latest_wins_agg parses to the identical
-        # analyzed tree in a handful
-        tomb_sql = (
-            "_rank IN (" + ", ".join(str(r) for r in tomb_ranks) + ")"
-            if tomb_ranks
-            else None
-        )
-        winner = df.groupBy(KEY_COL).agg(
-            latest_wins_agg(value_cols, tomb_sql, "batch").alias("_w")
-        )
-        if tomb_ranks:
-            winner = winner.filter("NOT _w._tombstone")
-        if not out_cols:
-            return winner.select(KEY_COL).drop(KEY_COL)
-        return winner.selectExpr(
-            *(
-                KEY_COL if c == KEY_COL else f"_w.{_q(c)} AS {_q(c)}"
-                for c in out_cols
-            )
-        )
-
-    def _with_rank(
-        self, df: DataFrame, table: Table, ranked: list[tuple[str, int]]
-    ) -> DataFrame:
-        if len(ranked) <= 1:
+    def _with_rank(self, df: DataFrame, files) -> DataFrame:
+        """Attach each row's file precedence rank from the ranked
+        ``(path, rank, tombstone)`` files."""
+        if len(files) <= 1:
             return df.withColumn("_rank", F.lit(0))
-        pairs = {
-            _normalize_file_uri(table.data_file_path(f)): r for f, r in ranked
-        }
+        pairs = {_normalize_file_uri(p): r for p, r, _ in files}
         if len(pairs) <= _RANK_MAP_LITERAL_MAX:
             # fast path: exact-URI map lookup on raw input_file_name();
             # coalesce only evaluates the decode+regex normalization on a
             # miss (an unanticipated URI spelling), so per-row cost is
             # one hash probe, not three regexes
             fast_pairs = {
-                v: r
-                for f, r in ranked
-                for v in _uri_variants(table.data_file_path(f))
+                v: r for p, r, _ in files for v in _uri_variants(p)
             }
             # the whole rank expression as ONE parsed expression (opt
             # round 1): F.lit per key/value cost 2 py4j round trips
@@ -1439,6 +1310,48 @@ class Lakehouse:
             for v in (view, src_view, f"{src_view}__v", f"{src_view}__anti",
                       f"{src_view}__anti__v"):
                 self.spark.catalog.dropTempView(v)
+
+
+def _dedup_latest_per_key(
+    df: DataFrame,
+    value_cols: list[str],
+    tomb_sql: str | None,
+    out_cols: list[str],
+) -> DataFrame:
+    """The merge tail of every executor read of a scan — ``Lakehouse``'s
+    JVM and ``mapInArrow`` routes and ``datasource.read_table``:
+    first-eligible-occurrence-in-file-order semantics
+    (crates/azof/src/lakehouse.rs:40,54-79 + metadata.rs:47-73),
+    encoded as max_by over (−rank, event_time): min rank wins, then
+    max event_time — exactly 'latest version ≤ t, file precedence
+    beats timestamp'. Output: ``out_cols`` of the winners.
+
+    ``tomb_sql`` (SQL over the raw row, true on tombstone rows — our
+    DELETE extension) rides inside the max_by payload: tombstone rows
+    compete in the merge like any newer version, but a winning
+    tombstone row HIDES its key instead of surfacing. The filter costs
+    one post-aggregate predicate and nothing at all on delete-free
+    tables (None keeps the exact pre-extension plan)."""
+    from bazof_spark.ordering import latest_wins_agg
+    from bazof_spark.ordering import quote_sql_ident as _q
+
+    # whole merge aggregate as ONE parsed expression (opt round 1):
+    # the Column-by-Column struct/max_by build cost ~250 py4j round
+    # trips per scan; latest_wins_agg parses to the identical
+    # analyzed tree in a handful
+    winner = df.groupBy(KEY_COL).agg(
+        latest_wins_agg(value_cols, tomb_sql, "batch").alias("_w")
+    )
+    if tomb_sql:
+        winner = winner.filter("NOT _w._tombstone")
+    if not out_cols:
+        return winner.select(KEY_COL).drop(KEY_COL)
+    return winner.selectExpr(
+        *(
+            KEY_COL if c == KEY_COL else f"_w.{_q(c)} AS {_q(c)}"
+            for c in out_cols
+        )
+    )
 
 
 def _latest_per_key_arrow(raw, tomb_ranks: tuple[int, ...] = ()):

@@ -486,9 +486,8 @@ class Snapshot:
         self,
     ) -> dict[str, tuple[str | None, str | None, KeyBloom | None]]:
         """``file → (key_min, key_max, key_bloom)`` over the whole tree
-        (missing stats ⇒ Nones) — lets the Data Source reader prune its
-        partition list from pushed key predicates (ranges via the
-        bounds, point equalities via the bloom probe)."""
+        (missing stats ⇒ Nones) — the zone-map stats report of the CLI
+        ``stats`` command. Scans prune through :meth:`get_data_files`."""
         out: dict[str, tuple[str | None, str | None, KeyBloom | None]] = {}
 
         def walk(seg: Segment) -> None:

@@ -198,7 +198,7 @@ def test_stripped_blooms_never_lose_rows(spark, tmp_path):
 
     got = lh.scan_snapshot(
         table, stripped, Current, Projection.all(),
-        key_range=KeyRange.of_keys(["k101"]), key_values=["k101"],
+        [("isin", "key", ("k101",))],
     ).collect()
     assert [(r["key"], r["value"]) for r in got] == [("k101", "w1")]
 
@@ -312,3 +312,94 @@ def test_spark_pushed_isin_probes_bloom(spark, tmp_path):
     assert df.rdd.getNumPartitions() == 2
     got = sorted((r["key"], r["value"]) for r in df.collect())
     assert got == [("k101", "w1"), ("k202", "w2")]
+
+
+# ---------------------------------------------------------------------------
+# One scan plan: the Data Source schedules what Lakehouse.scan plans
+# ---------------------------------------------------------------------------
+
+
+@pytest.mark.parametrize(
+    "filters,scan_kwargs,cond",
+    [
+        ("equal", {"keys": ["k101"]}, "key = 'k101'"),
+        ("in", {"keys": ["k101", "k202"]}, "key IN ('k101', 'k202')"),
+        (
+            "range",
+            {"key_range": ("k100", "k150")},
+            "key >= 'k100' AND key <= 'k150'",
+        ),
+    ],
+)
+def test_datasource_partitions_follow_the_scan_plan(
+    spark, tmp_path, monkeypatch, filters, scan_kwargs, cond
+):
+    """On the scattered layout plus a later upsert wave, a pushed key
+    ``=``, ``IN`` or range filter makes ``BazofReader.partitions()``
+    schedule exactly the files ``Lakehouse.scan``'s plan ranks, in the
+    same precedence — at Current and at two as-of instants — and
+    ``read_table`` returns what ``lh.scan`` returns."""
+    from pyspark.sql.datasource import (
+        EqualTo,
+        GreaterThanOrEqual,
+        In,
+        LessThanOrEqual,
+    )
+
+    import bazof_spark.datasource as ds
+    from bazof_spark.asof import coerce_as_of
+
+    pushed_filters = {
+        "equal": [EqualTo(("key",), "k101")],
+        "in": [In(("key",), ("k101", "k202"))],
+        "range": [
+            GreaterThanOrEqual(("key",), "k100"),
+            LessThanOrEqual(("key",), "k150"),
+        ],
+    }[filters]
+    lh = _scattered_table(spark, tmp_path)
+    t1 = T0 + dt.timedelta(days=1)
+    lh.upsert("t", spark.createDataFrame([
+        Row(key="k101", event_time=t1, value="late"),
+        Row(key="k202", event_time=t1, value="late"),
+    ]))
+    table = lh.table("t")
+    snap = table.get_current_snapshot()
+    plans = []
+    real_plan_scan = ds.plan_scan
+
+    def recording(*args, **kwargs):
+        plans.append(real_plan_scan(*args, **kwargs))
+        return plans[-1]
+
+    monkeypatch.setattr(ds, "plan_scan", recording)
+    for as_of in (None, T0, t1):
+        reader = ds.BazofReader(
+            {}, snap.schema.to_struct_type(),
+            resolved=(table, snap, coerce_as_of(as_of)),
+        )
+        assert list(reader.pushFilters(pushed_filters)) == []
+        scheduled = [
+            p for _, p in sorted({(t.rank, t.path) for t in reader.partitions()})
+        ]
+        plans.clear()
+        want = lh.scan("t", as_of=as_of, **scan_kwargs)
+        (plan,) = plans
+        assert scheduled == [p for p, _, _ in plan.files], as_of
+        assert scheduled  # every case reads some file
+        got = ds.read_table(
+            spark, str(tmp_path), "t",
+            as_of=None if as_of is None else as_of.isoformat(),
+        ).filter(cond)
+        cols = ["key", "event_time", "value"]
+        assert sorted(map(tuple, got.select(*cols).collect())) == sorted(
+            map(tuple, want.select(*cols).collect())
+        ), as_of
+
+
+def test_scan_with_empty_key_set_raises(spark, tmp_path):
+    from bazof_spark.errors import MetadataError
+
+    lh = _scattered_table(spark, tmp_path)
+    with pytest.raises(MetadataError, match="empty key set"):
+        lh.scan("t", keys=[])

@@ -3,8 +3,10 @@ agree with Lakehouse.scan (the native fast path) on the reference's
 own golden tables, at Current and at every interesting as-of instant,
 including file-precedence ties resolved by (_rank, _row_idx)."""
 
+import contextlib
 import os
 import sys
+from datetime import datetime, timedelta, timezone
 
 import pytest
 
@@ -114,37 +116,118 @@ def test_pushed_key_probe_set_is_capped(spark, reference_data):
     MAX_BLOOM_PROBE_KEYS the pushed range falls back to range-only
     pruning (keys=None), mirroring KeyRange.of_keys; small lists keep
     the exact probe set."""
+    from bazof_spark.datasource import key_range_of
     from bazof_spark.metadata import MAX_BLOOM_PROBE_KEYS
 
     src = BazofDataSource(options={"path": reference_data, "table": "financials"})
     reader = src.reader(src.schema())
 
     reader._pushed = [("isin", "key", tuple(f"k{i:05d}" for i in range(5)))]
-    kr = reader._pushed_key_range()
+    kr = key_range_of(reader._pushed)
     assert kr.keys == tuple(f"k{i:05d}" for i in range(5))
 
     big = tuple(f"k{i:05d}" for i in range(MAX_BLOOM_PROBE_KEYS + 1))
     reader._pushed = [("isin", "key", big)]
-    kr = reader._pushed_key_range()
+    kr = key_range_of(reader._pushed)
     assert kr.keys is None  # range-only pruning
     assert (kr.lo, kr.hi) == (big[0], big[-1])
 
     # equality conjoined with the big IN stays capped too
     reader._pushed = [("isin", "key", big), ("equal", "key", "k00001")]
-    kr = reader._pushed_key_range()
+    kr = key_range_of(reader._pushed)
     assert kr.keys is None
 
 
-def test_row_group_split_partitions(spark, reference_data, tmp_path, monkeypatch):
+T0 = datetime(2024, 1, 1, tzinfo=timezone.utc)
+
+
+def _small_group_lake(root):
+    """Table ``t`` under ``root``, written with plain pyarrow: a base of
+    200 keys and a delta of 60 upserts, both in 16-row row groups, so
+    each file is many row groups over a few KiB. The delta holds two
+    rows of one (key, event_time) pair with different values, the
+    physically first winning — the intra-file tie-break split reads
+    must keep by rebuilding the file-global ``_row_idx``. The snapshot
+    records each file's size, as this library's writer does."""
+    import hashlib
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from bazof_spark.metadata import Delta, Segment, Snapshot
+    from bazof_spark.schema import ColumnDef, ColumnType, TableSchema
+
+    table = root / "t"
+    table.mkdir(parents=True)
+
+    def write(name, rows):
+        keys, times, values = zip(*rows)
+        pq.write_table(
+            pa.table({
+                "key": pa.array(keys),
+                "event_time": pa.array(times, pa.timestamp("ms", "UTC")),
+                "value": pa.array(values),
+            }),
+            table / name,
+            row_group_size=16,
+        )
+        return (table / name).stat().st_size
+
+    def digest(*parts):
+        return hashlib.sha256(repr(parts).encode()).hexdigest()
+
+    t1 = T0 + timedelta(days=10)
+    base = [(f"k{i:03d}", T0, digest("base", i)) for i in range(200)]
+    delta = [(f"k{i:03d}", t1 + timedelta(days=i % 3), digest("delta", i))
+             for i in range(0, 180, 3)]
+    delta.sort(key=lambda r: r[1], reverse=True)  # event_time DESC
+    dup = delta[0]
+    delta.insert(1, (dup[0], dup[1], "second-" + dup[2]))
+    base_size = write("base.parquet", base)
+    delta_size = write("delta.parquet", delta)
+    snapshot = Snapshot(
+        segments=(
+            Segment(
+                id="s1", start=T0, file="base.parquet", size=base_size,
+                delta=(
+                    Delta(
+                        file="delta.parquet", start=t1,
+                        end=t1 + timedelta(days=2), size=delta_size,
+                    ),
+                ),
+            ),
+        ),
+        schema=TableSchema(
+            (ColumnDef("value", ColumnType.STRING, nullable=False),)
+        ),
+    )
+    (table / "s1.json").write_text(snapshot.serialize())
+    (table / "version.txt").write_text("1")
+    return str(root)
+
+
+@contextlib.contextmanager
+def _split_size(spark, value):
+    """The session's spark.sql.files.maxPartitionBytes set to ``value``
+    for the block (``read_table`` and ``Lakehouse.scan`` read it)."""
+    conf = "spark.sql.files.maxPartitionBytes"
+    saved = spark.conf.get(conf)
+    spark.conf.set(conf, value)
+    try:
+        yield
+    finally:
+        spark.conf.set(conf, saved)
+
+
+def test_row_group_split_partitions(spark, tmp_path):
     """Files larger than maxPartitionBytes split into byte-range tasks
     (the JVM scan's FilePartition behavior, which the reference's
     one-partition-per-file provider lacks): a multi-row-group file
     plans >1 partition, every row group lands in exactly one task,
-    and the merged result — including the goldens' intra-file
+    and the merged result — including the intra-file
     (key, event_time) duplicate tie-break, which depends on the
     file-global _row_idx each split must reconstruct — is
     bit-identical to the unsplit JVM scan."""
-    import shutil
     from collections import Counter
     from pathlib import Path
 
@@ -153,19 +236,16 @@ def test_row_group_split_partitions(spark, reference_data, tmp_path, monkeypatch
     from bazof_spark.asof import Current
     from bazof_spark.datasource import BazofReader
 
-    root = tmp_path / "lake"
-    shutil.copytree(reference_data, root)
-    for p in Path(root, "financials").glob("*.parquet"):
-        t = pq.read_table(p)  # bit-identical rows, tiny row groups
-        pq.write_table(t, p, row_group_size=16)
+    root = _small_group_lake(tmp_path / "lake")
+    for p in Path(root, "t").glob("*.parquet"):
         assert pq.ParquetFile(p).metadata.num_row_groups > 1
 
-    lh = Lakehouse(spark, str(root))
-    snap = lh.table("financials").get_current_snapshot()
+    lh = Lakehouse(spark, root)
+    snap = lh.table("t").get_current_snapshot()
     reader = BazofReader(
         {"maxpartitionbytes": "8k"},
         snap.schema.to_struct_type(),
-        resolved=(lh.table("financials"), snap, Current),
+        resolved=(lh.table("t"), snap, Current),
     )
     parts = reader.partitions()
     per_file = Counter(p.path for p in parts)
@@ -183,42 +263,33 @@ def test_row_group_split_partitions(spark, reference_data, tmp_path, monkeypatch
             pos += length
         assert spans[-1][0] == pos and spans[-1][1] is None
 
-    monkeypatch.setenv("BAZOF_MAX_PARTITION_BYTES", "8k")
-    for as_of in (None, "2019-01-17T00:00:00.000Z", "2020-06-01T00:00:00.000Z"):
-        native = lh.scan("financials", as_of=as_of)
-        via = read_table(spark, str(root), "financials", as_of=as_of)
-        assert rows(via.select(*native.columns)) == rows(native), as_of
+    with _split_size(spark, "8k"):
+        for as_of in (None, "2024-01-05T00:00:00.000Z",
+                      "2024-01-12T00:00:00.000Z"):
+            native = lh.scan("t", as_of=as_of)
+            via = read_table(spark, root, "t", as_of=as_of)
+            assert rows(via.select(*native.columns)) == rows(native), as_of
 
 
-def test_row_group_split_row_idx_is_file_global(
-    spark, reference_data, tmp_path, monkeypatch
-):
+def test_row_group_split_row_idx_is_file_global(spark, tmp_path):
     """Raw source rows keep their file-global _row_idx under splitting:
     the split read's (key, event_time, _rank, _row_idx) set equals the
     whole-file read's exactly."""
-    import shutil
-    from pathlib import Path
-
-    import pyarrow.parquet as pq
-
-    root = tmp_path / "lake"
-    shutil.copytree(reference_data, root)
-    for p in Path(root, "financials").glob("*.parquet"):
-        pq.write_table(pq.read_table(p), p, row_group_size=16)
+    root = _small_group_lake(tmp_path / "lake")
 
     spark.dataSource.register(BazofDataSource)
 
     def raw(maxbytes):
-        monkeypatch.setenv("BAZOF_MAX_PARTITION_BYTES", maxbytes)
         import json
 
         from bazof_spark import iofs
 
         df = (
             spark.read.format("bazof")
-            .option("path", str(root))
-            .option("table", "financials")
+            .option("path", root)
+            .option("table", "t")
             .option("bazofEnv", json.dumps(iofs.env_snapshot()))
+            .option("maxPartitionBytes", maxbytes)
             .load()
         )
         got = df.select("key", "event_time", "_rank", "_row_idx").collect()
@@ -230,32 +301,20 @@ def test_row_group_split_row_idx_is_file_global(
     assert split == whole
 
 
-def test_recorded_sizes_skip_stat_pass(spark, reference_data, tmp_path, monkeypatch):
+def test_recorded_sizes_skip_stat_pass(spark, tmp_path, monkeypatch):
     """Tables committed by this writer record each file's byte length
     in the snapshot, so split planning needs ZERO stat/HEAD calls
     (r10 ADVICE: the unconditional stat pass added planning latency on
-    object stores); reference-authored snapshots — no sizes — still
-    fall back to the batched stat."""
+    object stores); snapshots without sizes (reference-authored ones)
+    still fall back to the batched stat."""
     import json
-    from datetime import datetime, timezone
 
     import bazof_spark.datasource as dsmod
+    from bazof_spark import Snapshot
     from bazof_spark.asof import Current
-    from bazof_spark.datasource import BazofReader, write_table
-    from bazof_spark.writer import append_delta
+    from bazof_spark.datasource import BazofReader
 
-    df = spark.createDataFrame(
-        [(str(i), datetime(2024, 1, 1, tzinfo=timezone.utc), float(i))
-         for i in range(30)],
-        "key string, event_time timestamp, value double",
-    )
-    write_table(df, str(tmp_path), "t", mode="overwrite")
-    append_delta(
-        spark,
-        str(tmp_path / "t"),
-        df.limit(5).withColumn("value", df.value + 1),
-    )
-    lh = Lakehouse(spark, str(tmp_path))
+    lh = Lakehouse(spark, _small_group_lake(tmp_path / "lake"))
     snap = lh.table("t").get_current_snapshot()
     sizes = snap.file_sizes()
     assert len(sizes) >= 2 and all(n > 0 for n in sizes.values())
@@ -276,14 +335,22 @@ def test_recorded_sizes_skip_stat_pass(spark, reference_data, tmp_path, monkeypa
     parts = reader.partitions()
     assert parts and calls == []  # every size came from the snapshot
 
-    # reference snapshot (no sizes) → stat fallback still happens
-    ref_lh = Lakehouse(spark, reference_data)
-    ref_snap = ref_lh.table("table0").get_current_snapshot()
+    # the same snapshot stripped of its sizes → stat fallback
+    doc = json.loads(snap.serialize())
+
+    def strip(node):
+        node.pop("size", None)
+        for child in (*node.get("segments", ()), *node.get("delta", ())):
+            strip(child)
+
+    for seg in doc["segments"]:
+        strip(seg)
+    ref_snap = Snapshot.deserialize(json.dumps(doc))
     assert ref_snap.file_sizes() == {}
     ref_reader = BazofReader(
         {"maxpartitionbytes": "128m"},
         ref_snap.schema.to_struct_type(),
-        resolved=(ref_lh.table("table0"), ref_snap, Current),
+        resolved=(lh.table("t"), ref_snap, Current),
     )
     assert ref_reader.partitions()
     assert calls and all(calls[0])

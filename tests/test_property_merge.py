@@ -403,6 +403,61 @@ def test_keyed_lookup_routes_match_spec(spark, tmp_path_factory, h, keys):
             assert got == want, (route, f"as_of offset {t_off}")
 
 
+def test_keyed_lookup_above_the_bound_plans_no_byte_ranges(
+    spark, tmp_path, monkeypatch, driver_reads
+):
+    """A keyed lookup on a local root whose files exceed the broadcast
+    threshold picks the JVM scan from the plan's file sizes alone: with
+    a file larger than maxPartitionBytes it still plans no byte range
+    and reads no page index, and nothing is read on the driver. The
+    result is the spec model's."""
+    import bazof_spark.datasource as ds
+    from bazof_spark.plans import formatted_plan
+
+    lh, spec = _mixed_table(spark, str(tmp_path), {
+        "base": [("k1", 1, "a"), ("k2", 1, "b"), ("k3", 2, "c")],
+        "batches": [
+            ("upsert", [("k1", 5, "a2"), ("k4", 5, "d")]),
+            ("delete", (["k2"], 6)),
+        ],
+    })
+    sizes = lh.table("t").get_current_snapshot().file_sizes().values()
+    split = max(sizes) // 2
+    calls = []
+    for name in ("plan_byte_ranges", "_page_prune_spans"):
+        def spy(*args, _name=name, _real=getattr(ds, name), **kwargs):
+            calls.append(_name)
+            return _real(*args, **kwargs)
+
+        monkeypatch.setattr(ds, name, spy)
+    saved = {
+        c: spark.conf.get(c)
+        for c in (
+            "spark.sql.autoBroadcastJoinThreshold",
+            "spark.sql.files.maxPartitionBytes",
+        )
+    }
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", str(min(sizes) - 1))
+    spark.conf.set("spark.sql.files.maxPartitionBytes", str(split))
+    try:
+        for t_off in (None, 3, 7):
+            df = lh.scan(
+                "t", as_of=None if t_off is None else _ts(t_off),
+                keys=["k1", "k2", "k4"],
+            )
+            assert "Scan parquet" in formatted_plan(df)
+            got = {r["key"]: r["value"] for r in df.collect()}
+            want = {
+                k: v for k, v in spec(t_off).items() if k in ("k1", "k2", "k4")
+            }
+            assert got == want, t_off
+    finally:
+        for c, v in saved.items():
+            spark.conf.set(c, v)
+    assert calls == []
+    assert driver_reads == []
+
+
 def _assert_routes(spark, tmp, keys, as_of, cols, want):
     for route, got in _keyed_routes(spark, tmp, keys, as_of, cols).items():
         assert got == want, route

@@ -283,6 +283,8 @@ def test_rank_broadcast_join_path_matches_literal_path(spark, tmp_path):
         )
         bogus = [("not/a/real/file.parquet", 0), ("also/fake.parquet", 1)]
         with _pytest.raises(Exception, match="no precedence rank"):
-            lh._with_rank(df, table, bogus).collect()
+            lh._with_rank(
+                df, [(table.data_file_path(f), r, False) for f, r in bogus]
+            ).collect()
     finally:
         lh_mod._RANK_MAP_LITERAL_MAX = orig

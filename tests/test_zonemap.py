@@ -223,7 +223,7 @@ def test_missing_stats_admit_everything(spark, tmp_path):
         r["key"]: r["value"]
         for r in lh.scan_snapshot(
             table, stripped, Current, Projection.all(),
-            key_range=KeyRange("b02", "b02"), key_values=["b02"],
+            [("isin", "key", ("b02",))],
         ).collect()
     }
     assert got == {"b02": "b2@02"}

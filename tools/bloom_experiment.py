@@ -28,7 +28,6 @@ from pyspark.sql import Row  # noqa: E402
 
 from bazof_spark import Lakehouse, Snapshot  # noqa: E402
 from bazof_spark.asof import Current  # noqa: E402
-from bazof_spark.metadata import KeyRange  # noqa: E402
 from bazof_spark.projection import Projection  # noqa: E402
 from bazof_spark.schema import ColumnDef, ColumnType, TableSchema  # noqa: E402
 from bazof_spark.session import get_spark  # noqa: E402
@@ -76,11 +75,10 @@ def main() -> None:
     probe = [_key(n_files // 2, 7)]
 
     def run(snapshot: Snapshot) -> tuple[float, int, int]:
-        kr = KeyRange.of_keys(probe)
         t0 = time.perf_counter()
         df = lh.scan_snapshot(
             table, snapshot, Current, Projection.all(),
-            key_range=kr, key_values=probe,
+            [("isin", "key", tuple(probe))],
         )
         n = df.count()
         return time.perf_counter() - t0, len(df.inputFiles()), n
